@@ -7,7 +7,7 @@ object Bench {
     // optional args: subset of query names to bench (fast local
     // iteration; the driver invokes with no args → full suite)
     val subset = args.toSet
-    def enrolled = SparkEntry.queries
+    val enrolled = SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -292,7 +292,15 @@ object Bench {
           s""""queries":${c.mkString("{", ",", "}")},"sf":"$sfDir"}""")
       }
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
+    // failed rows are named on the final line (capped so it stays far
+    // under the 2 000-char tail), and the run exits non-zero below:
+    // the headline total leaves them out, so a newly failing row would
+    // otherwise read as a faster suite
+    val failed = resultsFinal.collect { case (name, t) if t < 0 => name }
+      .toSeq.sorted
+    val failedJson = failed.take(20).map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"n_failed":${failed.size}}""")
     // The driver's artifact keeps only a bounded stdout TAIL, which
     // truncated the per-query map in past rounds and left perf claims
     // unreproducible from the repo — persist the full detailed line
@@ -308,5 +316,6 @@ object Bench {
         "SPARK_GRAFT_BENCH_OUT", defaultOut)), detailed + "\n")
     catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

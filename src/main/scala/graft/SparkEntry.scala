@@ -7,7 +7,7 @@ object SparkEntry {
     operators.Aggregates.pricingSummary(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.Scans.queries ++
     operators.Filters.queries ++
     operators.Joins.queries ++
@@ -34,7 +34,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     operators.Scans.oracle ++
     operators.Filters.oracle ++
     operators.Joins.oracle ++

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -16,7 +17,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale notes: the sink partitions by (batch_id, date) so downstream
   * reads prune on date; each micro-batch is one bulk columnar write
-  * instead of the reference's per-record round-trip. Effectively-once:
+  * instead of the reference's per-record round-trip. The write runs on
+  * n = ceil(estimated batch bytes / `spark.sql.files.openCostInBytes`)
+  * tasks when n is below the batch's partition count, and on the
+  * batch's own partitions otherwise. Readers pay the open cost once per
+  * OUTPUT file, while Spark's split packing charges it per INPUT file,
+  * so a batch of many tiny files would otherwise spread over every core
+  * and land as one small file per core in each partition directory. A
+  * batch whose size is unknown reads as `spark.sql.defaultSizeInBytes`,
+  * so n is huge and the batch is written as it is. Effectively-once:
   * the checkpoint (WAL + offsets — the analog of the reference's
   * `since=` resume bookkeeping, loggers.py ≈L35) guarantees each batch
   * id is re-executed at most from its last uncommitted point, and the
@@ -48,9 +57,25 @@ object EventIngest {
 
   def clearHandlers(): Unit = synchronized { handlerReg.clear() }
 
+  /** The raw foreachBatch frame, coalesced to the write parallelism its
+    * input size calls for (see "Scale notes"). The frame is a
+    * `LogicalRDD` over an RDD that already exists, so its partition
+    * count is read without starting a job; any other plan is left as
+    * it is. */
+  private def sizedForWrite(batch: DataFrame): DataFrame =
+    batch.queryExecution.logical match {
+      case r: LogicalRDD =>
+        val openCost =
+          batch.sparkSession.sessionState.conf.filesOpenCostInBytes
+        val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+        val n = ((bytes + openCost - 1) / openCost).max(1)
+        if (n < r.rdd.getNumPartitions) batch.coalesce(n.toInt) else batch
+      case _ => batch
+    }
+
   private def idempotentBatchWrite(storeDir: String,
       handlers: Seq[Handler])(batch: DataFrame, batchId: Long): Unit =
-    handlers.foldLeft(batch)((df, h) => h(df))
+    handlers.foldLeft(sizedForWrite(batch))((df, h) => h(df))
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -88,7 +113,7 @@ object EventIngest {
   // subtree, keeping the per-follower idempotent-rewrite contract.
   private def idempotentFollowerWrite(storeDir: String)(batch: DataFrame,
       batchId: Long): Unit =
-    batch.withColumn("batch_id", lit(batchId))
+    sizedForWrite(batch).withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("container_id", "batch_id", "date")

@@ -1340,6 +1340,78 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally EventIngest.clearHandlers()
   }
 
+  /** Parquet data files per leaf partition directory of a store,
+    * keyed by the directory's path relative to the store. */
+  private def parquetFilesPerDir(store: java.nio.file.Path)
+      : Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(store)
+    try walk.iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .groupBy(f => store.relativize(f.getParent).toString)
+      .map { case (dir, fs) => dir -> fs.size }
+    finally walk.close()
+  }
+
+  /** Four equal-sized small source files per pipeline, every record on
+    * 2024-01-01, ingested in one micro-batch by the event pipeline and
+    * by a log follower. At local[4] Spark's split packing charges the
+    * open cost per input file, so each file is its own input partition.
+    * Returns the files per partition directory of both stores. */
+  private def ingestFourSmallFiles(tag: String)
+      : (Map[String, Int], Map[String, Int]) = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_sized_${tag}_")
+    val evSrc = tmp.resolve("ev_src"); val logSrc = tmp.resolve("log_src")
+    Seq(evSrc, logSrc).foreach(java.nio.file.Files.createDirectories(_))
+    for (f <- 0 until 4) {
+      val events = (0 until 5).map { i =>
+        val id = s"c$f$i"
+        val nano = 1704067200000000000L + (f * 5 + i) * 1000000000L
+        s"""{"Type":"container","Action":"start","id":"$id","Actor":{"ID":"$id","Attributes":{"name":"$id"}},"time":${nano / 1000000000L},"timeNano":$nano}"""
+      }
+      java.nio.file.Files.writeString(evSrc.resolve(s"e$f.json"),
+        events.mkString("", "\n", "\n"))
+      val lines = (0 until 5).map(i =>
+        f"2024-01-01T10:$f%02d:$i%02d.000001Z GET /item/$f$i 200")
+      java.nio.file.Files.writeString(logSrc.resolve(s"l$f.log"),
+        lines.mkString("", "\n", "\n"))
+    }
+    val evStore = tmp.resolve("ev_store"); val logStore = tmp.resolve("log_store")
+    val qs = Seq(
+      EventIngest.start(spark, evSrc.toString, evStore.toString,
+        tmp.resolve("ev_ckpt").toString),
+      EventIngest.startLogFollower(spark, logSrc.toString, "c01",
+        logStore.toString, tmp.resolve("log_ckpt").toString))
+    qs.foreach(_.processAllAvailable()); qs.foreach(_.stop())
+    assert(spark.read.parquet(evStore.toString).count() == 20)
+    assert(spark.read.parquet(logStore.toString).count() == 20)
+    (parquetFilesPerDir(evStore), parquetFilesPerDir(logStore))
+  }
+
+  test("write sizing: a batch of small input files lands as ONE parquet " +
+      "file per batch_id/date directory, in event and follower stores") {
+    val (ev, logs) = ingestFourSmallFiles("one")
+    assert(ev == Map("batch_id=0/date=2024-01-01" -> 1), ev)
+    assert(logs == Map("container_id=c01/batch_id=0/date=2024-01-01" -> 1),
+      logs)
+  }
+
+  test("write sizing: with a tiny open cost the same batch keeps its " +
+      "input partitions and writes more than one file per directory") {
+    // the stream clones the session conf at start, so set it first
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val (ev, logs) = ingestFourSmallFiles("many")
+      assert(ev.keySet == Set("batch_id=0/date=2024-01-01"), ev)
+      assert(ev.values.forall(_ > 1), ev)
+      assert(logs.keySet ==
+        Set("container_id=c01/batch_id=0/date=2024-01-01"), logs)
+      assert(logs.values.forall(_ > 1), logs)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("streaming heavy hitters: MG sketch as streaming state honors " +
       "membership + error bounds across micro-batches") {
     import spark.implicits._
