@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 
 /** Ingestion-throughput harness (round 5): measures events/second
   * through the TWO reference-shaped write paths —
@@ -25,13 +26,14 @@ import java.nio.file.{Files, Paths}
   * cherry-picked transform. Backlog generation is NOT timed.
   *
   * Usage: runMain graft.IngestBench [nFiles] [eventsPerFile]
-  * Prints one JSON line: {"metric":"ingest_events_per_sec", ...}.
+  * Prints one JSON line: {"metric":"ingest_events_per_sec", ...}, which
+  * also carries each store's parquet file count (`parquet_files`). The
+  * temp tree holding sources and stores is deleted on exit.
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(32)
     val perFile = args.lift(1).map(_.toInt).getOrElse(25000)
-    val total = nFiles.toLong * perFile
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -40,10 +42,29 @@ object IngestBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // holds the sources and all three stores of every run
+    val root = Files.createTempDirectory("graft_ingest")
+    try run(spark, root.toString, nFiles, perFile)
+    finally { spark.stop(); deleteTree(root) }
+  }
 
-    val root = Files.createTempDirectory("graft_ingest").toString
+  private def deleteTree(root: Path): Unit = {
+    val walk = Files.walk(root)
+    try walk.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    finally walk.close()
+  }
+
+  private def run(spark: SparkSession, root: String, nFiles: Int,
+      perFile: Int): Unit = {
+    val total = nFiles.toLong * perFile
     def dir(s: String) = { val p = s"$root/$s"; Files.createDirectories(
       Paths.get(p)); p }
+    // parquet files a store holds: the small-file cost its readers pay
+    def parquetFiles(s: String): Long = {
+      val walk = Files.walk(Paths.get(dir(s)))
+      try walk.filter(_.toString.endsWith(".parquet")).count()
+      finally walk.close()
+    }
 
     // -------- backlog generation (untimed) --------
     // Deterministic synthetic Docker events: id drives everything, ts
@@ -128,7 +149,9 @@ object IngestBench {
       s""""catchup_rate_limited":{"n":$total,"sec":${
         f2(cuSec)},"events_per_sec":${r(total / cuSec)},""" +
       s""""micro_batches":$nFiles},""" +
+      s""""parquet_files":{"events_store":${parquetFiles("events_store")},""" +
+      s""""logs_store":${parquetFiles("logs_store")},""" +
+      s""""catchup_store":${parquetFiles("catchup_store")}},""" +
       s""""reference_ceiling_events_per_sec":1000}""")
-    spark.stop()
   }
 }

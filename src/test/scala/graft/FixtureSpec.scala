@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -91,6 +91,60 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     rm.foreach { case (id, ns, us) =>
       assert(ns == us * 1000L, s"event_id=$id: ts_ns=$ns unix_micros=$us")
       assert(micros.contains(us), s"event_id=$id: unexpected instant $us")
+    }
+  }
+
+  test("Tables.t memoizes a regular parquet file's schema: re-reads start no job") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_schema_memo")
+    // Spark writes a directory; move its one part file out so the fixture
+    // is a single regular file, as the driver-generated ones are
+    def writeFile(df: DataFrame, name: String): Unit = {
+      val out = tmp.resolve(s"$name.out")
+      df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+      val part = Files.list(out).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get()
+      Files.move(part, tmp.resolve(s"$name.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    // (jobs the read started, the frame): counted by job group, not timed
+    val sc = spark.sparkContext
+    var group = 0
+    def read(name: String): (Int, DataFrame) = {
+      group += 1
+      val g = s"schema-memo-$group"
+      sc.setJobGroup(g, g)
+      val df = try Tables.t(spark, tmp.toString, name) finally sc.clearJobGroup()
+      (sc.statusTracker.getJobIdsForGroup(g).length, df)
+    }
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+
+    writeFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "tbl")
+    val (firstJobs, first) = read("tbl")
+    val (secondJobs, second) = read("tbl")
+    assert(firstJobs == 1 && secondJobs == 0, s"jobs: $firstJobs, $secondJobs")
+    val plain = spark.read.parquet(tmp.resolve("tbl.parquet").toString)
+    for (df <- Seq(first, second)) {
+      assert(df.schema == plain.schema, df.schema.treeString)
+      assert(rows(df) == rows(plain))
+    }
+
+    // a rewrite at the same path changes size/mtime: the next read infers
+    writeFile(Seq((3, 4.5, true)).toDF("x", "y", "z"), "tbl")
+    val (_, rewritten) = read("tbl")
+    assert(rewritten.columns.toSeq == Seq("x", "y", "z"),
+      rewritten.schema.treeString)
+    assert(rows(rewritten) == Seq("[3,4.5,true]"))
+
+    // a directory is never memoized: every read infers, as before
+    Seq((5L, "e")).toDF("k", "v").write.mode("overwrite")
+      .parquet(tmp.resolve("dir.parquet").toString)
+    for (_ <- 1 to 2) {
+      val (n, d) = read("dir")
+      assert(n == 1, s"directory read started $n jobs")
+      assert(rows(d) == Seq("[5,e]"))
     }
   }
 
