@@ -34,14 +34,7 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(32)
     val perFile = args.lift(1).map(_.toInt).getOrElse(25000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // holds the sources and all three stores of every run
     val root = Files.createTempDirectory("graft_ingest")
     try run(spark, root.toString, nFiles, perFile)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 fixture builder (round 9): a deterministic 10× scale-up of the
@@ -38,14 +38,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "testdata-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def replicate(name: String, keys: Seq[String],
         tweak: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
@@ -57,7 +50,7 @@ object ScaleUp {
       }.reduce(_ unionAll _)
       // repartition so sf1 files parallelize like a real bigger fixture
       // (10 unioned single-file scans would serialize the read side)
-      ten.repartition(cpus.toInt)
+      ten.repartition(Sessions.cpus)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[scaleup] $name -> $out (${ten.columns.mkString(",")})")
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scaling-curve measurement (round 8): the "designed for 100 TB" claim
@@ -102,23 +101,10 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     def run(name: String, sfDir: String): Double = {
       val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }
+      def once(): Double = Sessions.timeNoop(spark)(fn(spark, sfDir))
       once() // warmup (JIT + codegen + parquet footers), not recorded
       System.gc()
       math.min(once(), once())

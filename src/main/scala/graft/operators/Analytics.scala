@@ -180,8 +180,8 @@ object Analytics {
     * cross-multiply (5·|∩| ≥ 3·|∪|). */
   /** Doc count below which the verify tail uses candidate-side
     * SHUFFLE_HASH builds instead of the planner's unhinted choice —
-    * between the two measured points of the round-15 order-alternating
-    * interleaved A/B (tools.AbPrefixJoin, one JVM): at sf0.1 (5,000
+    * between the two measured points of the one-JVM order-alternating
+    * A/B, round 15 (`OPTIMIZATION_r15.md`): at sf0.1 (5,000
     * docs) SHUFFLE_HASH wins all 6 rounds (median 3.10 s vs 3.89 —
     * the two doc-sized broadcast BUILDS dominate a small corpus), at
     * sf1 (50,000 docs) the unhinted form wins all 6 rounds (median

@@ -1854,9 +1854,9 @@ object LlmOps {
     * all-pairs; generation is a keyed equi-join on the shingle, the
     * fold is partial-aggregable, top-20 via TakeOrdered. */
   /** Doc count above which the pair join switches to hashed shingle
-    * keys — between the two measured points of the round-15
-    * order-alternating interleaved A/B (tools.AbRareShingle, one JVM,
-    * order bias cancelled): at sf0.1 (5,000 docs) STRINGS win every
+    * keys — between the two measured points of the one-JVM
+    * order-alternating A/B, round 15 (`OPTIMIZATION_r15.md`; order bias
+    * cancelled): at sf0.1 (5,000 docs) STRINGS win every
     * round (median 2.82 s vs hashed 3.90 — the md5 digest over the
     * corpus-sized explode outweighs the narrower shuffle), at sf1
     * (50,000 docs) HASHED wins 7 of 8 rounds (median 5.86 s vs 8.43,

@@ -1,22 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Ad-hoc plan/timing diagnostics: `runMain graft.tools.PlanDiag
   * <sfDir> <query...>` prints each query's formatted physical plan and
-  * three warm timings. Dev tool only — never invoked by the driver. */
+  * four timings, the first cold. Dev tool only — never invoked by the
+  * driver. */
 object PlanDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       val df = fn(spark, sfDir)
@@ -24,10 +18,7 @@ object PlanDiag {
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       (1 to 4).foreach { i =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
+        val dt = Sessions.timeNoop(spark)(fn(spark, sfDir))
         println(f"[$n iter$i] $dt%.3f s")
       }
     }
