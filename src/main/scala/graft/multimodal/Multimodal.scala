@@ -428,48 +428,48 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The one WAV decoder every audio row folds over: the blob's format
+    * and a view of its samples (no copy), or None when the blob is not
+    * a WAV AudioSystem can open or is not signed 16-bit PCM — an 8- or
+    * 24-bit WAV read two bytes at a time would fold to garbage stats
+    * that look valid. The view follows the format's byte order. */
+  private[graft] def decodePcm16(blob: Array[Byte]): Option[(
+      javax.sound.sampled.AudioFormat, java.nio.ShortBuffer)] =
+    try {
+      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(blob))
+      val fmt = ais.getFormat
+      if (fmt.getSampleSizeInBits != 16 || fmt.getEncoding !=
+          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) None
+      else Some((fmt, java.nio.ByteBuffer.wrap(ais.readAllBytes())
+        .order(if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+          else java.nio.ByteOrder.LITTLE_ENDIAN)
+        .asShortBuffer()))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
   /** Decode a WAV blob through AudioSystem: container metadata (rate,
     * channels) + exact integer signal stats over the PCM samples
     * (Σ s², max |s|) — the quality-gate numbers an audio curation
-    * pipeline thresholds on. Corrupt input → valid=false row. */
+    * pipeline thresholds on. A blob [[decodePcm16]] rejects → a
+    * valid=false row. */
   def decodeWavs(media: Dataset[Media]): Dataset[AudioDecoded] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map { m =>
-      try {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(m.blob))
-        val fmt = ais.getFormat
-        // the short-reader below is only correct for signed 16-bit PCM;
-        // an 8- or 24-bit WAV would "decode" to garbage stats with
-        // valid=true — reject anything else as invalid instead
-        if (fmt.getSampleSizeInBits != 16 ||
-            fmt.getEncoding !=
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED)
-          throw new javax.sound.sampled.UnsupportedAudioFileException(
-            s"not PCM_SIGNED 16-bit: $fmt")
-        val bytes = ais.readAllBytes()
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(
-          if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN)
-        var sumSq = 0L; var peak = 0L; var n = 0L
-        while (bb.remaining() >= 2) {
-          val s = bb.getShort.toLong
-          sumSq += s * s; peak = math.max(peak, math.abs(s)); n += 1
-        }
-        AudioDecoded(m.media_id, fmt.getSampleRate.toInt, fmt.getChannels,
-          n, sumSq, peak, valid = true)
-      } catch {
-        case scala.util.control.NonFatal(_) =>
+      decodePcm16(m.blob) match {
+        case Some((fmt, pcm)) =>
+          val n = pcm.remaining().toLong
+          var sumSq = 0L; var peak = 0L
+          while (pcm.hasRemaining) {
+            val s = pcm.get.toLong
+            sumSq += s * s; peak = math.max(peak, math.abs(s))
+          }
+          AudioDecoded(m.media_id, fmt.getSampleRate.toInt,
+            fmt.getChannels, n, sumSq, peak, valid = true)
+        case None =>
           AudioDecoded(m.media_id, -1, -1, 0L, 0L, 0L, valid = false)
       }
     })
   }
-
-  /** Metadata-only projection over a media DataFrame — demonstrates that
-    * blob-carrying tables support pruned scans (ReadSchema excludes the
-    * binary column entirely). */
-  def metaOnly(df: DataFrame): DataFrame =
-    df.select(col("media_id"), col("kind"), length(col("blob")).as("n_bytes"))
 
   /** Enrolled scoreboard query: the full multimodal pipeline — encode a
     * deterministic GRFT blob per document (payload = the ASCII text
@@ -588,21 +588,28 @@ object Multimodal {
     }.toDF().orderBy(col("media_id"))
   }
 
-  /** Enrolled (round 5): REAL WAV round-trip — per-char 16-bit PCM
-    * samples → WAV container via javax.sound → AudioSystem decode →
-    * exact integer signal stats (Σ s², peak). Lossless PCM ⇒ exact
-    * DuckDB twin from the same char-code sample formula. */
-  def mmAudioDecode(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+  /** The synthetic audio corpus the four audio rows decode, memoized
+    * like every codec fixture: one 16 kHz PCM16 WAV per ASCII doc,
+    * sample = (code − 64)·256 per char, so the oracle replays any
+    * lossless decode from char codes. */
+  private def wavMedia(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Dataset[Media] = {
     import spark.implicits._
-    val media = memoizedMedia(spark, dir, "wav") {
+    memoizedMedia(spark, dir, "wav") {
       asciiDocs(spark, dir).map { case (id, text) =>
         val samples = text.map(c => ((c - 64) * 256).toShort).toArray
         Media(id, "audio", encodeWavPcm16(samples, 16000f))
       }
     }.as[Media]
-    decodeWavs(media).toDF().orderBy(col("media_id"))
   }
+
+  /** REAL WAV round-trip — per-char 16-bit PCM samples → WAV container
+    * via javax.sound → AudioSystem decode → exact integer signal stats
+    * (Σ s², peak). Lossless PCM ⇒ exact DuckDB twin from the same
+    * char-code sample formula. */
+  def mmAudioDecode(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    decodeWavs(wavMedia(spark, dir)).toDF().orderBy(col("media_id"))
 
   /** Enrolled (round 5): perceptual aHash over really-decoded PNG
     * pixels — the image-near-dup fingerprint. All arithmetic after the
@@ -782,14 +789,14 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Enrolled (round 8): energy-based voice-activity detection over the
+  /** Energy-based voice-activity detection over the
     * REALLY-decoded WAV corpus — 160-sample (10 ms @ 16 kHz) frames, a
     * frame is "active" iff its mean square energy exceeds 1600·2⁵⁶²
     * (i.e. mean (code−64)² > 1600: letter-dense frames clear it,
     * space-heavy ones don't on the ASCII fixture) — the
     * silence-trimming pre-filter an audio curation pipeline runs
-    * before transcription. Shares the memoized "wav" media fixture
-    * with q_mm_audio_decode (one encode per application+sfDir).
+    * before transcription. Folds over [[wavMedia]] decoded by
+    * [[decodePcm16]], like every audio row.
     *
     * The last (short) frame is judged against its OWN length — the
     * threshold is per-sample, so no zero-pad bias. Lossless PCM ⇒ the
@@ -800,26 +807,8 @@ object Multimodal {
   def mmAudioVad(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val media = memoizedMedia(spark, dir, "wav") {
-      asciiDocs(spark, dir).map { case (id, text) =>
-        val samples = text.map(c => ((c - 64) * 256).toShort).toArray
-        Media(id, "audio", encodeWavPcm16(samples, 16000f))
-      }
-    }.as[Media]
-    media.mapPartitions(_.flatMap { m =>
-      try {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(m.blob))
-        val fmt = ais.getFormat
-        if (fmt.getSampleSizeInBits != 16 ||
-            fmt.getEncoding !=
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED)
-          throw new javax.sound.sampled.UnsupportedAudioFileException(
-            s"not PCM_SIGNED 16-bit: $fmt")
-        val bytes = ais.readAllBytes()
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(
-          if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN)
+    wavMedia(spark, dir).mapPartitions(_.flatMap { m =>
+      decodePcm16(m.blob).flatMap { case (_, pcm) =>
         var frames = 0L; var active = 0L; var maxE = 0L
         var e = 0L; var fLen = 0L
         def closeFrame(): Unit = if (fLen > 0) {
@@ -830,8 +819,8 @@ object Multimodal {
           if (e > maxE) maxE = e
           e = 0L; fLen = 0L
         }
-        while (bb.remaining() >= 2) {
-          val s = bb.getShort.toLong
+        while (pcm.hasRemaining) {
+          val s = pcm.get.toLong
           e += s * s; fLen += 1
           if (fLen == 160) closeFrame()
         }
@@ -839,72 +828,50 @@ object Multimodal {
         if (frames == 0) None
         else Some((m.media_id, frames, active,
           active * 10000L / frames, maxE))
-      } catch { case _: Exception => None }
+      }
     }).toDF("media_id", "n_frames", "n_active", "active_e4",
       "max_frame_energy")
       .orderBy(col("media_id"))
   }
 
-  /** Audio energy-band profile + zero-crossing rate (J84, round 11):
-    * per clip, the exact Σs² energy of the four equal time quarters
-    * (band of sample i = i·4 div n — the aHash chunk map on the time
-    * axis), the dominant quarter, and the adjacent-sample
-    * zero-crossing count — the cheap spectral-free audio feature pair
-    * (energy envelope + ZCR ≈ voiced/unvoiced split) every audio
-    * curation pipeline computes before any FFT, and the audio twin of
-    * the image stats/entropy family. All arithmetic after the REAL
+  /** Audio energy-band profile + zero-crossing rate: per clip, the
+    * exact Σs² energy of the four equal time quarters (band of sample
+    * i = i·4 div n — the aHash chunk map on the time axis), the
+    * dominant quarter, and the adjacent-sample zero-crossing count —
+    * the cheap spectral-free audio feature pair (energy envelope + ZCR ≈
+    * voiced/unvoiced split) every audio curation pipeline computes
+    * before any FFT, and the audio twin of the image stats/entropy
+    * family. All arithmetic after the REAL
     * WAV decode is exact integer, so the DuckDB twin replays it from
     * char codes (s = (code−64)·256, lossless PCM16).
     *
-    * Shape: one mapPartitions pass over the memoized WAV media frame
-    * (codec init amortized per partition, the decodeWavs batch shape);
-    * output one row per clip. */
+    * Shape: one mapPartitions pass over [[wavMedia]] (codec init
+    * amortized per partition, the decodeWavs batch shape); output one
+    * row per clip. */
   def mmAudioEnergyBands(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val media = memoizedMedia(spark, dir, "wav") {
-      asciiDocs(spark, dir).map { case (id, text) =>
-        val samples = text.map(c => ((c - 64) * 256).toShort).toArray
-        Media(id, "audio", encodeWavPcm16(samples, 16000f))
-      }
-    }.as[Media]
-    media.mapPartitions(_.flatMap { m =>
-      try {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(m.blob))
-        val fmt = ais.getFormat
-        if (fmt.getSampleSizeInBits != 16 ||
-            fmt.getEncoding !=
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED)
-          throw new javax.sound.sampled.UnsupportedAudioFileException(
-            s"not PCM_SIGNED 16-bit: $fmt")
-        val bytes = ais.readAllBytes()
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(
-          if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN)
-        val n = bytes.length / 2
-        if (n == 0) None
-        else {
-          val e = new Array[Long](4)
-          var zcr = 0L; var prev = 0L; var i = 0
-          while (bb.remaining() >= 2) {
-            val s = bb.getShort.toLong
-            e(((i.toLong * 4) / n).toInt) += s * s
-            if (i > 0 && prev * s < 0) zcr += 1
-            prev = s; i += 1
-          }
-          var dom = 0; var k = 1
-          while (k < 4) { if (e(k) > e(dom)) dom = k; k += 1 }
-          Some((m.media_id, n.toLong, e(0), e(1), e(2), e(3), zcr,
-            dom.toLong))
+    wavMedia(spark, dir).mapPartitions(_.flatMap { m =>
+      decodePcm16(m.blob).filter(_._2.hasRemaining).map { case (_, pcm) =>
+        val n = pcm.remaining()
+        val e = new Array[Long](4)
+        var zcr = 0L; var prev = 0L; var i = 0
+        while (pcm.hasRemaining) {
+          val s = pcm.get.toLong
+          e(((i.toLong * 4) / n).toInt) += s * s
+          if (i > 0 && prev * s < 0) zcr += 1
+          prev = s; i += 1
         }
-      } catch { case scala.util.control.NonFatal(_) => None }
+        var dom = 0; var k = 1
+        while (k < 4) { if (e(k) > e(dom)) dom = k; k += 1 }
+        (m.media_id, n.toLong, e(0), e(1), e(2), e(3), zcr, dom.toLong)
+      }
     }).toDF("media_id", "n_samples", "be0", "be1", "be2", "be3",
       "zcr", "dominant_band")
       .orderBy(col("media_id"))
   }
 
-  /** Clipping + DC-offset audit (J94, round 11): per clip off the
+  /** Clipping + DC-offset audit: per clip off the
     * REAL WAV decode — peak |sample|, the count and share of samples
     * at or beyond the 14000 loudness rail, and the DC offset (signed
     * mean sample ×100) — the two defects an audio ingest gate checks
@@ -912,53 +879,30 @@ object Multimodal {
     * bias breaks energy thresholds), completing the audio-QC trio
     * beside VAD (silence) and the energy/ZCR profile. The synthetic
     * PCM16 corpus rails at (126−64)·256 = 15872, so the 14000
-    * threshold binds on real rows (codes ≥ 119) — measured
-    * non-vacuous at enrollment.
+    * threshold binds on real rows (codes ≥ 119).
     *
     * Exactness: integer after the decode; the signed DC mean divides
     * with truncation toward zero in BOTH engines (the holt note) and
     * in the JVM's own Long division, so the three lanes agree with
     * no shift needed.
     *
-    * Shape: one mapPartitions pass over the memoized WAV frame (codec
-    * init amortized; zero extra encode work); one row per clip. */
+    * Shape: one mapPartitions pass over [[wavMedia]] (codec init
+    * amortized; zero extra encode work); one row per clip. */
   def mmAudioClipping(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val media = memoizedMedia(spark, dir, "wav") {
-      asciiDocs(spark, dir).map { case (id, text) =>
-        val samples = text.map(c => ((c - 64) * 256).toShort).toArray
-        Media(id, "audio", encodeWavPcm16(samples, 16000f))
-      }
-    }.as[Media]
-    media.mapPartitions(_.flatMap { m =>
-      try {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(m.blob))
-        val fmt = ais.getFormat
-        if (fmt.getSampleSizeInBits != 16 ||
-            fmt.getEncoding !=
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED)
-          throw new javax.sound.sampled.UnsupportedAudioFileException(
-            s"not PCM_SIGNED 16-bit: $fmt")
-        val bytes = ais.readAllBytes()
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(
-          if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN)
-        val n = bytes.length / 2
-        if (n == 0) None
-        else {
-          var sum = 0L; var peak = 0L; var clipped = 0L
-          while (bb.remaining() >= 2) {
-            val s = bb.getShort.toLong
-            sum += s
-            if (math.abs(s) > peak) peak = math.abs(s)
-            if (math.abs(s) >= 14000L) clipped += 1
-          }
-          Some((m.media_id, n.toLong, peak, sum * 100 / n, clipped,
-            clipped * 10000L / n))
+    wavMedia(spark, dir).mapPartitions(_.flatMap { m =>
+      decodePcm16(m.blob).filter(_._2.hasRemaining).map { case (_, pcm) =>
+        val n = pcm.remaining().toLong
+        var sum = 0L; var peak = 0L; var clipped = 0L
+        while (pcm.hasRemaining) {
+          val s = pcm.get.toLong
+          sum += s
+          if (math.abs(s) > peak) peak = math.abs(s)
+          if (math.abs(s) >= 14000L) clipped += 1
         }
-      } catch { case scala.util.control.NonFatal(_) => None }
+        (m.media_id, n, peak, sum * 100 / n, clipped, clipped * 10000L / n)
+      }
     }).toDF("media_id", "n_samples", "peak_abs", "dc_e2",
       "n_clipped", "clip_share_e4")
       .orderBy(col("media_id"))

@@ -524,9 +524,9 @@ object Curation {
       .orderBy(col("rule"))
   }
 
-  /** IVF cluster purity (round 7 part 4): per coarse bucket of the
-    * enrolled IVF quantizer (16 sampled centroids, max-cosine assign —
-    * the SAME asg chain as q_llm_ivf_ann), the majority `label` and
+  /** IVF cluster purity: per coarse bucket of the shared IVF quantizer
+    * ([[graft.functions.IvfQuantizer]], the one q_llm_ivf_ann
+    * searches), the majority `label` and
     * its fraction — the clustering-quality audit that says whether the
     * coarse quantizer's buckets align with semantic labels at all.
     * Scale: one broadcast centroid pass + a (bucket, label) count +
@@ -538,16 +538,9 @@ object Curation {
     val emb = embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       .withColumn("norm", expr("fvec_norm(v)"))
-    val cents = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-    val bucketed = emb.crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
-      .withColumn("arn", row_number().over(
-        w.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("c_id"))))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("label"), col("c_id").as("bucket"))
+    val bucketed = graft.functions.IvfQuantizer
+      .assign(emb, graft.functions.IvfQuantizer.sampledCentroids(emb))
+      .select(col("vec_id"), col("label"), col("bucket"))
     val votes = bucketed.groupBy(col("bucket"), col("label"))
       .agg(count(lit(1)).as("n"))
     val sizes = bucketed.groupBy(col("bucket"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.IvfQuantizer
 
 /** SURVEY.md §2-J — LLM-training-data-pipeline operators over the
   * `documents` and `embeddings` tables: dedup (exact, n-gram Jaccard,
@@ -29,7 +30,7 @@ import graft.Tables._
   */
 object LlmOps {
 
-  private val P = 1000000007L
+  private val P = graft.functions.MinHash.P
 
   /** 60-bit md5-based token hash — identical in DuckDB
     * (CAST('0x'||substr(md5(x),1,15) AS BIGINT)). md5 over sha256: half
@@ -115,21 +116,14 @@ object LlmOps {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** MinHash signatures: 16 md5-derived permutation minimums as 16
-    * parallel aggregates over ONE groupBy — no 16× row explosion (the
-    * naive perms-crossJoin pushed 16× the shingle count through a
-    * shuffle); shingle sets collected alongside so downstream verify
-    * steps need no second shuffle of the shingle table. Shared by the
-    * LSH near-dup path and the signature-estimate row (q_llm_minhash_est). */
-  private val perms = Seq(
-    (0, 7L, 3L), (1, 11L, 5L), (2, 13L, 17L), (3, 19L, 23L),
-    (4, 29L, 31L), (5, 37L, 41L), (6, 43L, 47L), (7, 53L, 59L),
-    (8, 61L, 67L), (9, 71L, 73L), (10, 79L, 83L), (11, 89L, 97L),
-    (12, 101L, 103L), (13, 107L, 109L), (14, 113L, 127L),
-    (15, 131L, 137L))
-
-  private def minExprs = perms.map { case (j, a, b) =>
-    min(expr(s"($a * h + $b) % $P")).as(s"m$j")
+  /** MinHash signatures: the 16 shared permutation minimums
+    * ([[graft.functions.MinHash.Perms]]) as 16 parallel aggregates over
+    * ONE groupBy — no 16× row explosion (a perms crossJoin would push
+    * 16× the shingle count through a shuffle); shingle sets are
+    * collected alongside so downstream verify steps need no second
+    * shuffle of the shingle table. */
+  private def minExprs = graft.functions.MinHash.Perms.zipWithIndex.map {
+    case ((a, b), j) => min(expr(s"($a * h + $b) % $P")).as(s"m$j")
   }
 
   /** Memoized per (application, sfDir) with an eager localCheckpoint
@@ -204,29 +198,41 @@ object LlmOps {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashLshFrom(minhashSigs(spark, dir))
 
-  /** Candidate-generation + exact-verify kernel of [[minhashLsh]] over a
-    * caller-owned signature frame (must carry ss/n alongside m0..m15) —
-    * factored out (round 8) so [[lshRecall]]'s LSH arm can run over the
-    * sampled corpus. */
-  private def minhashLshFrom(sigs: DataFrame): DataFrame = {
-    val cand = minhashCandidates(sigs)
-    // verify candidates only: join the (small) candidate set back to the
-    // cached shingle sets, |A∩B| via array_intersect — no all-pairs
-    // shingle self-join
-    val docsets = sigs.select(col("doc_id"), col("ss"), col("n"))
-    cand
+  /** The LSH exact verify over a caller-owned signature frame (doc_id,
+    * ss, n, m0..m15): the [[minhashCandidates]] pairs joined back to
+    * both documents' shingle sets, i = |A ∩ B| via array_intersect —
+    * candidate-sized work, never an all-pairs shingle self-join. Emits
+    * (a_id, b_id, i, na, nb), all BIGINT, so the e4 grids' `i * 10000`
+    * cannot overflow INT (ANSI mode throws from 214 749 shared
+    * shingles). [[lshRecall]] runs it over its sampled signatures. */
+  private[graft] def lshVerified(sigs: DataFrame): DataFrame = {
+    val docsets = sigs.select(col("doc_id"), col("ss"),
+      col("n").cast("long").as("n"))
+    minhashCandidates(sigs)
       .join(docsets.select(col("doc_id"), col("ss").as("sa"),
         col("n").as("na")), col("a_id") === col("doc_id")).drop("doc_id")
       .join(docsets.select(col("doc_id"), col("ss").as("sb"),
         col("n").as("nb")), col("b_id") === col("doc_id")).drop("doc_id")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("sa"), col("sb"))).cast("long").as("i"),
+        col("na"), col("nb"))
+  }
+
+  /** Integer Jaccard ×10⁴ over an [[lshVerified]] frame: truncating div
+    * (identical text in the oracle), guarded against an empty union. */
+  private[graft] val JaccardE4 = "i * 10000 div greatest(na + nb - i, 1)"
+
+  /** Verified τ = 0.8 pairs of [[minhashLsh]] over a caller-owned
+    * signature frame (so [[lshRecall]]'s LSH arm can run over the
+    * sampled corpus). */
+  private def minhashLshFrom(sigs: DataFrame): DataFrame =
+    lshVerified(sigs)
       .withColumn("raw_j", col("i") / (col("na") + col("nb") - col("i")))
       .filter(col("raw_j") >= 0.8)
       .select(col("a_id"), col("b_id"), r4(col("raw_j")).as("jaccard"))
       .orderBy(col("a_id"), col("b_id"))
-  }
 
-  /** Cross-modality dedup agreement census (J78, round 9): on the
+  /** Cross-modality dedup agreement census: on the
     * SAME LSH candidate pairs, does the text verdict (exact shingle
     * Jaccard ≥ 0.8 — the enrolled minhash_lsh gate) agree with the
     * embedding verdict (cosine ≥ 0.4 — the enrolled embed_neardup
@@ -245,22 +251,14 @@ object LlmOps {
     *
     * Exactness: Jaccard verdict on the integer grid (i·10⁴ div union ≥
     * 8000 ⟺ i/u ≥ 0.8 exactly — no float gate); cosine rides the
-    * house round-6 grid; per-cell means are guarded truncating divs.
+    * 6-digit grid; per-cell means are guarded truncating divs.
     *
     * Shape (100 TB): the banded candidate join (never all-pairs) +
     * keyed joins against the shingle-set and embedding stores; the
     * census is 4 rows. */
   def dedupModalityAgreement(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = minhashSigs(spark, dir)
-    val docsets = sigs.select(col("doc_id"), col("ss"), col("n"))
-    val withJ = minhashCandidates(sigs)
-      .join(docsets.select(col("doc_id"), col("ss").as("sa"),
-        col("n").as("na")), col("a_id") === col("doc_id")).drop("doc_id")
-      .join(docsets.select(col("doc_id"), col("ss").as("sb"),
-        col("n").as("nb")), col("b_id") === col("doc_id")).drop("doc_id")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("j_e4", expr("i * 10000 div greatest(na + nb - i, 1)"))
-      .select(col("a_id"), col("b_id"), col("j_e4"))
+    val withJ = lshVerified(minhashSigs(spark, dir))
+      .select(col("a_id"), col("b_id"), expr(JaccardE4).as("j_e4"))
     val emb = embWithNorm(spark, dir)
     withJ
       .join(emb.select(col("vec_id").as("a_id"), col("v").as("av"),
@@ -282,7 +280,7 @@ object LlmOps {
       .orderBy(col("cell"))
   }
 
-  /** N-gram CONTAINMENT on the LSH candidate pairs (round 8): the
+  /** N-gram CONTAINMENT on the LSH candidate pairs: the
     * asymmetric near-dup measure C(A→B) = |A∩B| / |A| over the same
     * df-capped 5-shingle sets as the Jaccard family. Jaccard misses
     * SUBSET duplication — a short document quoted whole inside a long
@@ -293,24 +291,14 @@ object LlmOps {
     * q_llm_minhash_lsh (no new pair machinery, no all-pairs), verified
     * with exact set intersection, kept when either direction ≥ 0.8.
     * Integer ×10⁴. */
-  def containment(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = minhashSigs(spark, dir)
-    val cand = minhashCandidates(sigs)
-    val docsets = sigs.select(col("doc_id"), col("ss"), col("n"))
-    cand
-      .join(docsets.select(col("doc_id"), col("ss").as("sa"),
-        col("n").as("na")), col("a_id") === col("doc_id")).drop("doc_id")
-      .join(docsets.select(col("doc_id"), col("ss").as("sb"),
-        col("n").as("nb")), col("b_id") === col("doc_id")).drop("doc_id")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
-      .select(col("a_id"), col("b_id"),
-        col("na").cast("long").as("na"), col("nb").cast("long").as("nb"),
-        col("i").cast("long").as("n_common"),
+  def containment(spark: SparkSession, dir: String): DataFrame =
+    lshVerified(minhashSigs(spark, dir))
+      .select(col("a_id"), col("b_id"), col("na"), col("nb"),
+        col("i").as("n_common"),
         expr("i * 10000 div na").as("cont_a_e4"),
         expr("i * 10000 div nb").as("cont_b_e4"))
       .filter(col("cont_a_e4") >= 8000 || col("cont_b_e4") >= 8000)
       .orderBy(col("a_id"), col("b_id"))
-  }
 
   /** Edit-distance near-dup verify on the LSH candidate pairs
     * (round 8): exact character-level Levenshtein similarity
@@ -1090,27 +1078,22 @@ object LlmOps {
     *   reliable `checkpoint` to that directory (HDFS/S3 at cluster
     *   scale — survives executor loss, which a 100 TB multi-hour CC job
     *   must). Same plan either way; a deploy flips one parameter.
-    * @param checkEvery run the changed-count convergence check every N
-    *   rounds instead of every round. Labels only ever decrease, so
-    *   "no change across the last N rounds" ⟺ "no change in any of
-    *   them". Round 12: the check carries the round-start label as a
-    *   `prev` column INSIDE the checkpointed frame, so each check is a
-    *   no-shuffle filter-count over already-materialized blocks (the
-    *   old form re-joined two label maps — a 2-shuffle job per check
-    *   that dominated at fixture scale). Checks being ~free, the
-    *   default is now 1: exact detection, zero overshoot rounds. */
+    *
+    * Convergence is checked after every round: the round-start label
+    * rides as a `prev` column INSIDE the checkpointed frame, so the
+    * check is a no-shuffle filter-count over already-materialized
+    * blocks — cheap enough to run every round: exact detection, zero
+    * overshoot rounds. */
   def connectedComponentsWithRounds(
       pairs: DataFrame,
-      checkpointDir: Option[String] = None,
-      checkEvery: Int = 1): (DataFrame, Int) = {
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val ckpt: DataFrame => DataFrame = checkpointDir match {
       case Some(dir) =>
         pairs.sparkSession.sparkContext.setCheckpointDir(dir)
         df => df.checkpoint()
       case None => df => df.localCheckpoint()
     }
-    // Eagerly FREE superseded round checkpoints (round 14): a local
+    // Eagerly FREE superseded round checkpoints: a local
     // checkpoint's blocks otherwise live until a JVM GC lets the
     // ContextCleaner notice the dropped RDD reference — a 50-round
     // 100 TB CC job would pin up to 50 node-sized frames in executor
@@ -1170,11 +1153,8 @@ object LlmOps {
       unpersistCkpt(labels)
       labels = next
       iter += 1
-      if (iter % checkEvery == 0 || iter == maxIter) {
-        // no-shuffle scan over the blocks the ckpt just materialized
-        converged =
-          next.filter(col("lbl") =!= col("prev")).count() == 0
-      }
+      // no-shuffle scan over the blocks the ckpt just materialized
+      converged = next.filter(col("lbl") =!= col("prev")).count() == 0
     }
     if (!converged) {
       throw new IllegalStateException(
@@ -1183,16 +1163,15 @@ object LlmOps {
     // the returned labels frame no longer references the edge blocks
     unpersistCkpt(edges)
     System.err.println(s"[graft] connectedComponents: $iter rounds " +
-      s"(checkEvery=$checkEvery, ${checkpointDir.fold("localCheckpoint")(
-        d => s"checkpoint@$d")})")
+      s"(${checkpointDir.fold("localCheckpoint")(d => s"checkpoint@$d")})")
     (labels.select(col("node"), col("lbl")), iter)
   }
 
-  /** IVF-bucketed ANN (round 2): the inverted-file counterpart to the
-    * sign-bucket lshAnn. Coarse quantizer = 16 sampled centroids (the
-    * first 16 vectors — random-sample init, the standard cheap
-    * quantizer start, and deterministic so the oracle can replicate
-    * it); every vector is assigned to its max-cosine centroid
+  /** IVF-bucketed ANN: the inverted-file counterpart to the
+    * sign-bucket lshAnn. Coarse quantizer = [[IvfQuantizer]]'s 16
+    * sampled centroids (the first 16 vectors — random-sample init, the
+    * standard cheap quantizer start, and deterministic so the oracle can
+    * replicate it); every vector is assigned to its max-cosine centroid
     * (broadcast join — centroids are always tiny), and a probe searches
     * its `nprobe` nearest centroids' inverted lists. At 100 TB: one
     * broadcast assign pass + an equi-join on bucket — linear, no pair
@@ -1222,16 +1201,8 @@ object LlmOps {
     * crossJoin + assignment window once instead of once per arm. */
   private[operators] def ivfAnnCandsPn(spark: SparkSession, dir: String,
       maxProbe: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val emb = embWithNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-    val ranked = emb.crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
-      .withColumn("arn", row_number().over(
-        w.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("c_id"))))
+    val ranked = IvfQuantizer.ranked(emb, IvfQuantizer.sampledCentroids(emb))
     val assigned = ranked.filter(col("arn") === 1)
       .select(col("vec_id"), col("c_id").as("bucket"))
     val probes = ranked.filter(col("vec_id") < 20 && col("arn") <= maxProbe)
@@ -1290,17 +1261,7 @@ object LlmOps {
     * lookups, ranked (adc asc, vec_id). */
   private def ivfPqAdcRanked(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val emb = embWithNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-    val buckets = emb.crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
-      .withColumn("arn", row_number().over(
-        w.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("c_id"))))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("c_id").as("bucket"))
+    val buckets = ivfAssigned(spark, dir)
     val codebook = pqSubs(embeddings(spark, dir)
         .filter(col("vec_id") < 8), "vec_id")
       .select(col("vec_id").as("cid"), col("sub"), col("v").as("cv"))
@@ -1954,9 +1915,8 @@ object LlmOps {
       .orderBy(col("load"))
   }
 
-  /** IVF list-balance audit (J80, round 10): the per-list size census
-    * of the SAME 16-centroid coarse quantizer every ivf_* row searches
-    * (assignment is bit-identical to ivfAnn's arn = 1 branch), with
+  /** IVF list-balance audit: the per-list size census of the shared
+    * coarse quantizer every ivf_* row searches ([[ivfAssigned]]), with
     * each list's share and its load vs uniform (load_e4 = size·nlists
     * ·10⁴ div n — 10⁴ = perfectly balanced). THE operational number
     * behind the nprobe cost model: ivf_ann_cost's "~24 % of brute at
@@ -1980,27 +1940,27 @@ object LlmOps {
       .orderBy(col("bucket"))
   }
 
-  /** The IVF coarse-quantizer assignment (vec_id, bucket), factored
-    * from [[ivfImbalance]] so the balance audit and the
-    * diversity-stratified sampler share one definition (bit-identical
-    * to ivfAnn's arn = 1 branch). */
+  /** The corpus's IVF coarse-quantizer assignment (vec_id, bucket):
+    * the list every ivf_* row searches, the balance audit counts and
+    * the diversity-stratified sampler stratifies by. */
   private def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val emb = embWithNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-    emb.crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
-      .withColumn("arn", row_number().over(
-        w.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("c_id"))))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("c_id").as("bucket"))
+    IvfQuantizer.assign(emb, IvfQuantizer.sampledCentroids(emb))
+      .select(col("vec_id"), col("bucket"))
   }
 
-  /** Dedup threshold sweep (J81, round 10): pairs surviving the exact
-    * Jaccard verify at τ ∈ {0.5, 0.7, 0.8, 0.9} over the SAME LSH
+  /** [[lshVerified]] over the corpus signatures, MEMOIZED: the τ-sweep
+    * and the Jaccard histogram both verify the SAME candidate set; at
+    * 100 TB this is the persisted verified-pairs table the dedup
+    * decision pipeline reads (candidate-sized — never all-pairs). */
+  private[graft] def minhashScored(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "minhash-scored")(
+      lshVerified(minhashSigs(spark, dir)))
+
+  /** Dedup threshold sweep: pairs surviving the exact Jaccard verify
+    * at each τ of [[graft.functions.MinHash.TausE4]] (0.5, 0.7, 0.8,
+    * 0.9 — the streamed τ monitor's grid too) over the SAME LSH
     * candidate set as q_llm_minhash_lsh, plus the docs each τ would
     * REMOVE (a doc is removed under smaller-id survivorship iff it
     * appears as the larger member of ≥ 1 surviving pair — exactly
@@ -2015,30 +1975,10 @@ object LlmOps {
     * i·10⁴ ≥ τ_e4·(na+nb−i) — no float Jaccard compare; absent τ rows
     * are restored by a LEFT join from the τ VALUES list in BOTH
     * engines (the mrl_recall empty-group idiom). */
-  /** Exact-intersection-scored LSH candidate pairs (a_id, b_id, i, na,
-    * nb) — MEMOIZED (round 11): the τ-sweep and the Jaccard histogram
-    * both verify the SAME candidate set; at 100 TB this is the
-    * persisted verified-pairs table the dedup decision pipeline reads
-    * (candidate-sized — never all-pairs). */
-  private[graft] def minhashScored(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "minhash-scored") {
-      val sigs = minhashSigs(spark, dir)
-      val docsets = sigs.select(col("doc_id"), col("ss"), col("n"))
-      minhashCandidates(sigs)
-        .join(docsets.select(col("doc_id"), col("ss").as("sa"),
-          col("n").as("na")), col("a_id") === col("doc_id")).drop("doc_id")
-        .join(docsets.select(col("doc_id"), col("ss").as("sb"),
-          col("n").as("nb")), col("b_id") === col("doc_id")).drop("doc_id")
-        .withColumn("i",
-          size(array_intersect(col("sa"), col("sb"))).cast("long"))
-        .select(col("a_id"), col("b_id"), col("i"), col("na"), col("nb"))
-    }
-
   def dedupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val scored = minhashScored(spark, dir) // feeds all four τ arms
-    val taus = Seq(5000L, 7000L, 8000L, 9000L).toDF("tau_e4")
+    val taus = graft.functions.MinHash.TausE4.toDF("tau_e4")
     val nd = documents(spark, dir).agg(count(lit(1)).as("ndocs"))
     val per = scored.crossJoin(broadcast(taus))
       .filter(expr("i * 10000 >= tau_e4 * (na + nb - i)"))
@@ -2053,9 +1993,9 @@ object LlmOps {
       .orderBy(col("tau_e4"))
   }
 
-  /** Exact-Jaccard HISTOGRAM over the LSH candidate pairs (J84, round
-    * 11): per 0.1-wide bucket (bucket 10 = exact duplicates at J = 1),
-    * pair count + min/max J(e4) — the full S-curve DATA behind the
+  /** Exact-Jaccard HISTOGRAM over the LSH candidate pairs: per 0.1-wide
+    * bucket (bucket 10 = exact duplicates at J = 1), pair count +
+    * min/max J(e4) — the full S-curve DATA behind the
     * τ-sweep's four points: the sweep says what each τ WOULD do, this
     * row shows the distribution those verdicts cut through (a bimodal
     * histogram licenses any τ in the valley; a flat one means the band
@@ -2068,8 +2008,7 @@ object LlmOps {
     * truncating div, identical text both engines. */
   def dedupJHist(spark: SparkSession, dir: String): DataFrame =
     minhashScored(spark, dir)
-      .withColumn("j_e4",
-        expr("i * 10000 div greatest(na + nb - i, 1)"))
+      .withColumn("j_e4", expr(JaccardE4))
       .groupBy(expr("j_e4 div 1000").as("bucket"))
       .agg(count(lit(1)).as("n_pairs"),
         min(col("j_e4")).as("min_j_e4"),
@@ -2164,19 +2103,19 @@ object LlmOps {
       .orderBy(col("bucket"), col("rank"))
   }
 
-  /** Greedy facility-location selection (J82, round 10 — the coreset/
-    * diversity-selection primitive): pick k = 3 exemplars from the
-    * 16-candidate pool maximizing the submodular coverage objective
-    * F(S) = Σ_n max_{c∈S} max(cos(n,c), 0) over the whole corpus —
-    * the standard data-subset-selection objective (facility location)
-    * behind exemplar-based curation, and the SET-coverage complement
-    * of q_llm_mmr_rerank's pairwise diversity. Output: (step, picked
-    * id, objective, marginal gain); the 1/e-approximation guarantee of
-    * greedy needs gains non-increasing — spec-pinned (submodularity
-    * made a test).
+  /** Greedy facility-location selection (the coreset/diversity-selection
+    * primitive): pick k = 3 exemplars from the 16-candidate pool — the
+    * IVF quantizer's sampled centroids — maximizing the submodular
+    * coverage objective F(S) = Σ_n max_{c∈S} max(cos(n,c), 0) over the
+    * whole corpus — the standard data-subset-selection objective
+    * (facility location) behind exemplar-based curation, and the
+    * SET-coverage complement of q_llm_mmr_rerank's pairwise diversity.
+    * Output: (step, picked id, objective, marginal gain); the
+    * 1/e-approximation guarantee of greedy needs gains non-increasing —
+    * spec-pinned (submodularity made a test).
     *
-    * Exactness: per-pair coverage integerizes ONCE from the house
-    * round-6 cosine grid (floor(cos·10⁶ + 0.5), clamped ≥ 0), so
+    * Exactness: per-pair coverage integerizes ONCE from the quantizer's
+    * 6-digit cosine grid (floor(cos·10⁶ + 0.5), clamped ≥ 0), so
     * every objective is an order-independent BIGINT sum — a float
     * Σ over the corpus would be partition-order-dependent.
     *
@@ -2188,12 +2127,7 @@ object LlmOps {
   def submodularSelect(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = embWithNorm(spark, dir)
-    val cand = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-    val cov = emb.crossJoin(broadcast(cand))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
+    val cov = IvfQuantizer.cosines(emb, IvfQuantizer.sampledCentroids(emb))
       .select(col("vec_id").as("n_id"), col("c_id"),
         expr("greatest(CAST(floor(cs * 1000000 + 0.5) AS BIGINT)," +
           " CAST(0 AS BIGINT))").as("cov"))
@@ -2231,7 +2165,7 @@ object LlmOps {
       .orderBy(col("step"))
   }
 
-  /** Dedup × quality-gate interaction census (J83, round 10): the 2×2
+  /** Dedup × quality-gate interaction census: the 2×2
     * table of (near-dup member?, above-median quality?) with per-class
     * shares and the odds ratio — the curation-ORDER question made a
     * number: if duplicates clear the quality gate at the same odds as
@@ -2240,12 +2174,11 @@ object LlmOps {
     * pipeline's stage order changes the output. Both flags compose
     * enrolled substrates so neither can drift: dup membership is the
     * SAME banded-LSH candidate set verified at the INTEGER Jaccard
-    * gate (j_e4 ≥ 8000, the dedup_modality_agreement lane — the first
-    * cut used EXACT text dups and the logreg-0.5 gate, and measured
-    * vacuous: this fixture has ZERO byte-identical dups and the 0.5
-    * gate keeps all 500 docs, so the census was one cell); the keep
-    * flag is a MEDIAN split of the logreg score (non-degenerate by
-    * construction at any corpus).
+    * gate (j_e4 ≥ 8000, the dedup_modality_agreement lane — exact text
+    * dups would leave this fixture, which has none, with one cell); the
+    * keep flag is a MEDIAN split of the logreg score (non-degenerate by
+    * construction at any corpus, where a fixed 0.5 gate keeps every
+    * doc here).
     *
     * Exactness: integer Jaccard gate, exact lower-median via the
     * value-census CDF, pure counts; the OR is one cleared e4
@@ -2257,15 +2190,8 @@ object LlmOps {
   def dedupQualityInteraction(spark: SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sigs = minhashSigs(spark, dir)
-    val docsets = sigs.select(col("doc_id"), col("ss"), col("n"))
-    val dupPairs = minhashCandidates(sigs)
-      .join(docsets.select(col("doc_id"), col("ss").as("sa"),
-        col("n").as("na")), col("a_id") === col("doc_id")).drop("doc_id")
-      .join(docsets.select(col("doc_id"), col("ss").as("sb"),
-        col("n").as("nb")), col("b_id") === col("doc_id")).drop("doc_id")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
-      .filter(expr("i * 10000 div greatest(na + nb - i, 1) >= 8000"))
+    val dupPairs = lshVerified(minhashSigs(spark, dir))
+      .filter(expr(s"$JaccardE4 >= 8000"))
     val dupDocs = dupPairs.select(col("a_id").as("doc_id"))
       .union(dupPairs.select(col("b_id").as("doc_id"))).distinct()
     val scores = ModelPrep.qualityLogreg(spark, dir)
@@ -2446,14 +2372,18 @@ object LlmOps {
           sum(when(col("tok") === t3, 1L).otherwise(0L)).as("tf3"))
     }
 
-  private def bm25ScoredBuild(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = bm25PerDoc(spark, dir)
-    val stats = perDoc.agg(
-      count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
+  /** The one-row BM25 corpus stats over a [[bm25PerDoc]] frame: n docs,
+    * avgdl and each query term's df (df1..df3) — the scalars every
+    * [[bm25Term]] reads, broadcast back by the caller. */
+  private def bm25Stats(perDoc: DataFrame): DataFrame =
+    perDoc.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
       sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
       sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
       sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
-    perDoc.crossJoin(broadcast(stats))
+
+  private def bm25ScoredBuild(spark: SparkSession, dir: String): DataFrame = {
+    val perDoc = bm25PerDoc(spark, dir)
+    perDoc.crossJoin(broadcast(bm25Stats(perDoc)))
       .filter(col("tf1") + col("tf2") + col("tf3") > 0)
       .withColumn("bm25", round(expr(
         s"${bm25Term(1, "D")} + ${bm25Term(2, "D")} + ${bm25Term(3, "D")}"),
@@ -2707,7 +2637,7 @@ object LlmOps {
     s"ln((n - df$i + 0.5D)/(df$i + 0.5D)) * " +
       s"tf$i*2.2D/(tf$i + 1.2D*(0.25D + 0.75D*dl/avgdl))"
 
-  /** BM25 idf-variant comparison (J94, round 11): "which BM25" is a
+  /** BM25 idf-variant comparison: "which BM25" is a
     * real deployment question — the enrolled rows use the
     * Lucene-style idf ln((N−df+0.5)/(df+0.5) + 1) (never negative);
     * classic Robertson–Sparck-Jones drops the +1 (negative for
@@ -2724,11 +2654,7 @@ object LlmOps {
     * top-10s are TakeOrderedAndProject; everything else is constant. */
   def idfVariants(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = bm25PerDoc(spark, dir)
-    val stats = perDoc.agg(count(lit(1)).as("n"),
-      avg(col("dl")).as("avgdl"),
-      sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
-      sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
-      sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
+    val stats = bm25Stats(perDoc)
       .localCheckpoint() // 1 row; feeds scoring + the term rows
     val scored = perDoc.crossJoin(broadcast(stats))
       .filter(col("tf1") + col("tf2") + col("tf3") > 0)
@@ -2993,7 +2919,7 @@ object LlmOps {
       .orderBy(col("rank"))
   }
 
-  /** BM25 parameter sensitivity sweep (J65): how much does the top-10
+  /** BM25 parameter sensitivity sweep: how much does the top-10
     * MOVE when (k1, b) leave the enrolled (1.2, 0.75) default — the
     * low-saturation (0.9, 0.4) and high-saturation (2.0, 0.9)
     * corners? Emits per config the top-10 overlap with the default
@@ -3007,18 +2933,13 @@ object LlmOps {
     * broadcast joins. */
   def bm25Sweep(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = bm25PerDoc(spark, dir)
-    val stats = perDoc.agg(
-      count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
-      sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
-      sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
-      sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
-    val base = perDoc.crossJoin(broadcast(stats))
+    val base = perDoc.crossJoin(broadcast(bm25Stats(perDoc)))
       .filter(col("tf1") + col("tf2") + col("tf3") > 0)
       .localCheckpoint()
     // term text comes from the SAME bm25Term generator the enrolled
-    // bm25 row and its oracle compose (ADVICE r8: an inline constant
-    // copy here would silently diverge from the shared definition if
-    // bm25Term's defaults ever moved); the default arm passes no
+    // bm25 row and its oracle compose (an inline constant copy here
+    // would silently diverge from the shared definition if bm25Term's
+    // defaults ever moved); the default arm passes no
     // constants at all, so it IS the enrolled scorer.
     def top10(f: Int => String) =
       base.withColumn("s", round(expr(
@@ -3513,7 +3434,7 @@ object LlmOps {
       .orderBy(col("rerank"))
   }
 
-  /** Block-max WAND pruning audit (J86, round 11): for the enrolled
+  /** Block-max WAND pruning audit: for the enrolled
     * three-term BM25 query, how much of each posting list could a
     * block-max index SKIP? Postings are blocked 32-at-a-time in doc_id
     * order with a per-block max impact (the BMW index layout); a block
@@ -3534,12 +3455,7 @@ object LlmOps {
   def wandPrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val perDoc = bm25PerDoc(spark, dir)
-    val stats = perDoc.agg(
-      count(lit(1)).as("n"), avg(col("dl")).as("avgdl"),
-      sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
-      sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
-      sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
-    val base = perDoc.crossJoin(broadcast(stats))
+    val base = perDoc.crossJoin(broadcast(bm25Stats(perDoc)))
     val postings = (1 to 3).map { i =>
       base.filter(col(s"tf$i") > 0)
         .select(lit(i.toLong).as("term"), col("doc_id"),

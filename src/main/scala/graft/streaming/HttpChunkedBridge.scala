@@ -53,6 +53,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   */
 object HttpChunkedBridge {
 
+  /** Most lines one landed file holds. A file also lands at every chunk
+    * boundary once a line is complete, so this bounds bursts only. */
+  private val LinesPerFile = 64
+
   final class Handle private[HttpChunkedBridge] (
       thread: Thread, stop0: AtomicBoolean, sock: java.io.Closeable) {
     /** Lines decoded and landed so far (complete files only). */
@@ -69,16 +73,16 @@ object HttpChunkedBridge {
 
   /** Dial `host:port`, request `path`, decode the chunked response and
     * land complete payload lines in `outDir` (created if missing) as
-    * `part-<uniqueN>.jsonl` files of at most `linesPerFile` lines,
+    * `part-<uniqueN>.jsonl` files of at most 64 lines,
     * each file appearing ATOMICALLY (temp + rename — a file stream
     * source must never list a half-written file). Returns immediately;
     * decoding runs on a daemon thread until the terminal chunk,
     * connection close, or `stop()`. */
-  def start(host: String, port: Int, path: String, outDir: String,
-      linesPerFile: Int = 64): Handle = {
+  def start(host: String, port: Int, path: String,
+      outDir: String): Handle = {
     val sock = new Socket(host, port)
     launch(sock, sock.getInputStream, sock.getOutputStream, host, path,
-      outDir, linesPerFile, s"tcp-$host:$port")
+      outDir, s"tcp-$host:$port")
   }
 
   /** Dial the Docker daemon's unix socket DIRECTLY (the reference's
@@ -87,12 +91,12 @@ object HttpChunkedBridge {
     * JDK: `SocketChannel.open(StandardProtocolFamily.UNIX)` (JDK 16+).
     * The Host header is `localhost` — what the Docker CLI itself sends
     * on the unix transport, where the header is vestigial. */
-  def startUnix(socketFile: String, path: String, outDir: String,
-      linesPerFile: Int = 64): Handle = {
+  def startUnix(socketFile: String, path: String,
+      outDir: String): Handle = {
     val ch = SocketChannel.open(StandardProtocolFamily.UNIX)
     ch.connect(UnixDomainSocketAddress.of(socketFile))
     launch(ch, Channels.newInputStream(ch), Channels.newOutputStream(ch),
-      "localhost", path, outDir, linesPerFile, s"unix-$socketFile")
+      "localhost", path, outDir, s"unix-$socketFile")
   }
 
   /** Shared pump: request, header sniff, chunked-or-plain decode, land.
@@ -100,7 +104,7 @@ object HttpChunkedBridge {
     * true for both `Socket` and AF_UNIX `SocketChannel`. */
   private def launch(conn: java.io.Closeable, rawIn: => InputStream,
       rawOut: => OutputStream, hostHeader: String, path: String,
-      outDir: String, linesPerFile: Int, label: String): Handle = {
+      outDir: String, label: String): Handle = {
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
     val stopFlag = new AtomicBoolean(false)
@@ -115,7 +119,7 @@ object HttpChunkedBridge {
         val chunked = readHeaders(in)
           .exists(h => h.toLowerCase.startsWith("transfer-encoding:") &&
             h.toLowerCase.contains("chunked"))
-        val sink = new LineSink(dir, linesPerFile, handle)
+        val sink = new LineSink(dir, handle)
         if (chunked) decodeChunked(in, sink, stopFlag)
         else plainLines(in, sink, stopFlag)
         sink.close()
@@ -214,8 +218,7 @@ object HttpChunkedBridge {
   /** Accumulates payload bytes across chunk boundaries, splits on
     * '\n' (stripping '\r'), and lands complete lines in atomically
     * renamed files. */
-  private final class LineSink(dir: Path, linesPerFile: Int,
-      handle: => Handle) {
+  private final class LineSink(dir: Path, handle: => Handle) {
     private val carry = new ByteArrayOutputStream(1 << 12)
     private val pending = scala.collection.mutable.ArrayBuffer[String]()
     private var fileNo = 0
@@ -231,7 +234,7 @@ object HttpChunkedBridge {
           val n = if (line.nonEmpty && line(line.length - 1) == '\r')
             line.length - 1 else line.length
           if (n > 0) pending += new String(line, 0, n, UTF_8)
-          if (pending.length >= linesPerFile) flush()
+          if (pending.length >= LinesPerFile) flush()
         } else carry.write(b)
         i += 1
       }

@@ -25,23 +25,19 @@ import org.apache.spark.sql.functions._
   * would-be NULL band strings must never match each other). */
 object StreamDedup {
 
-  private val P = 1000000007L
-  private val perms = Seq(
-    (7L, 3L), (11L, 5L), (13L, 17L), (19L, 23L), (29L, 31L), (37L, 41L),
-    (43L, 47L), (53L, 59L), (61L, 67L), (71L, 73L), (79L, 83L),
-    (89L, 97L), (101L, 103L), (107L, 109L), (113L, 127L), (131L, 137L))
+  import graft.functions.MinHash.{P, Perms => perms, TausE4}
 
   private def withMinsCols(df: DataFrame): DataFrame = {
     val withHs = df
       .withColumn("tk", split(col("text"), " "))
       .withColumn("hs", expr(
-        """transform(
+        s"""transform(
           |  CASE WHEN size(tk) >= 5
           |  THEN transform(sequence(1, size(tk) - 4),
           |         i -> concat_ws(' ', slice(tk, i, 5)))
           |  ELSE CAST(array() AS array<string>) END,
           |  s -> CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)
-          |       % 1000000007)""".stripMargin))
+          |       % $P)""".stripMargin))
     val withMins = perms.zipWithIndex.foldLeft(withHs) {
       case (acc, ((a, b), j)) =>
         acc.withColumn(s"m$j",
@@ -73,8 +69,9 @@ object StreamDedup {
       .withColumn("n", size(col("ss")).cast("long"))
       .drop("tk" +: "hs" +: perms.indices.map(j => s"m$j"): _*)
 
-  /** Streamed dedup-aggressiveness monitor (round 11, VERDICT r10 #5):
-    * the τ-sweep census maintained INCREMENTALLY over the band path.
+  /** Streamed dedup-aggressiveness monitor: the τ-sweep census over the
+    * shared τ grid ([[graft.functions.MinHash.TausE4]]), maintained
+    * INCREMENTALLY over the band path.
     * Incoming docs band-join the stored corpus's (static) band table —
     * the same LSH candidate generation as the batch τ-sweep — each
     * candidate pair passes the exact cross-multiplied integer Jaccard
@@ -92,8 +89,7 @@ object StreamDedup {
     * whose state is O(removed docs × |τ|), not O(stream). Production
     * adds a watermark on ingest time to age that state; the fixture
     * twin pins semantics. */
-  def tauSweepMonitor(docs: DataFrame, store: DataFrame,
-      tausE4: Seq[Long] = Seq(5000L, 7000L, 8000L, 9000L)): DataFrame = {
+  def tauSweepMonitor(docs: DataFrame, store: DataFrame): DataFrame = {
     val storeSide = withBandSets(store).filter(col("n_sh") > 0)
       .select(col("doc_id").as("s_id"), col("ss").as("s_ss"),
         col("n").as("s_n"), explode(col("bands")).as("b"))
@@ -104,24 +100,24 @@ object StreamDedup {
       .join(storeSide, "b")
       .withColumn("i",
         size(array_intersect(col("ss"), col("s_ss"))).cast("long"))
-      .withColumn("tau_e4", explode(typedlit(tausE4)))
+      .withColumn("tau_e4", explode(typedlit(TausE4)))
       .filter(expr("i * 10000 >= tau_e4 * (n + s_n - i)"))
       .select(col("tau_e4"), col("doc_id"))
       .dropDuplicates("tau_e4", "doc_id")
       .groupBy(col("tau_e4")).agg(count(lit(1)).as("n_removed"))
   }
 
-  /** One-row bloom sketch over a STATIC corpus's band signatures.
-    * Sized by the caller (estItems ≈ 8 × corpus docs; bits per the
-    * target FP rate — at 100 TB this sketch is MBs where the band
-    * table is TBs, which is the whole point of the gate). */
-  def bandBloom(store: DataFrame, estItems: Long = 100000L,
-      numBits: Long = 1L << 22): DataFrame = {
+  /** One-row bloom sketch over a STATIC corpus's band signatures,
+    * sized for 100 000 band items (≈ 8 × 12 500 docs) in 2²² bits
+    * (512 KiB). A larger corpus needs both raised for the same false
+    * positive rate — at 100 TB this sketch is MBs where the band table
+    * is TBs, which is the whole point of the gate. */
+  def bandBloom(store: DataFrame): DataFrame = {
     graft.functions.BloomFuncs.register(store.sparkSession)
     withBands(store)
       .filter(col("n_sh") > 0)
       .select(explode(col("bands")).as("b"))
-      .agg(expr(s"graft_bloom_agg(xxhash64(b), ${estItems}L, ${numBits}L)")
+      .agg(expr(s"graft_bloom_agg(xxhash64(b), 100000L, ${1L << 22}L)")
         .as("bloom"))
   }
 

@@ -28,22 +28,15 @@ case class Vec(vec_id: Long, ts: java.sql.Timestamp, v: Array[Float])
   */
 object VectorIngest {
 
-  /** Nearest-centroid assignment shared by every caller: top-1 cosine
-    * with c_id tie-break — bit-identical to `ivfAnn`'s quantizer
-    * (`arn = 1` branch). `cents` columns: (c_id, cv, cn). */
+  /** Nearest-centroid assignment of (vec_id, ts, v) rows: the shared
+    * [[graft.functions.IvfQuantizer.assign]] that every batch IVF row
+    * also runs (top-1 cosine, c_id tie-break), so the streamed store and
+    * `ivfAnn` agree vector-for-vector. `cents` columns: (c_id, cv, cn). */
   def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(vecs.sparkSession)
-    val w = org.apache.spark.sql.expressions.Window
-    vecs
-      .withColumn("nrm", expr("fvec_norm(v)"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("nrm") * col("cn")), 6))
-      .withColumn("arn", row_number().over(
-        w.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("c_id"))))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("ts"), col("v"),
-        col("c_id").as("bucket"))
+    graft.functions.IvfQuantizer
+      .assign(vecs.withColumn("norm", expr("fvec_norm(v)")), cents)
+      .select(col("vec_id"), col("ts"), col("v"), col("bucket"))
   }
 
   /** Start the ingest: stream of [[Vec]] rows → nearest-list assignment
@@ -109,14 +102,15 @@ object VectorIngest {
       .select(col("vec_id"), col("bucket"), col("cos"))
   }
 
-  /** Streamed retrieval SCOREBOARD (round 10, s_stream_rrf — the
-    * streaming twin of the round-9 q_llm_rrf_sweep/hybrid-RRF batch
-    * surface): RRF-fuse the dense arm served from the stream-maintained
-    * IVF store ([[probeStore]]) with a caller-supplied lexical ranking
+  /** Streamed retrieval SCOREBOARD (s_stream_rrf — the streaming twin
+    * of the q_llm_rrf_sweep/hybrid-RRF batch surface): RRF-fuse the
+    * dense arm served from the stream-maintained IVF store
+    * ([[probeStore]]) with a caller-supplied lexical ranking
     * (doc_id, lex_rank — e.g. the BM25 arm, which is corpus-statistics
     * work and stays a batch/periodic job at any scale). Scoring is the
     * EXACT integer idiom of the batch row: rrf_e12 = Σ 10¹² div
-    * (k + rank), missing-arm ranks contribute 0 via coalesce — so a
+    * (60 + rank) (the standard RRF k = 60), missing-arm ranks
+    * contribute 0 via coalesce, top 10 by score — so a
     * streamed scoreboard is bit-comparable to the batch one
     * (StreamingSpec proves parity against a batch brute-force twin).
     *
@@ -126,7 +120,7 @@ object VectorIngest {
     * control-plane work. */
   def rrfFromStore(spark: SparkSession, storeDir: String,
       probe: Array[Float], cents: DataFrame, nprobe: Int,
-      lex: DataFrame, kRrf: Int = 60, topN: Int = 10): DataFrame = {
+      lex: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cos").desc, col("vec_id"))
     val dense = probeStore(spark, storeDir, probe, cents, nprobe, k = 50)
@@ -134,10 +128,10 @@ object VectorIngest {
       .select(col("vec_id").as("doc_id"), col("dense_rank"))
     dense.join(lex, Seq("doc_id"), "full_outer")
       .withColumn("rrf_e12", expr(
-        s"coalesce(1000000000000 div ($kRrf + lex_rank), 0L) + " +
-          s"coalesce(1000000000000 div ($kRrf + dense_rank), 0L)"))
+        "coalesce(1000000000000 div (60 + lex_rank), 0L) + " +
+          "coalesce(1000000000000 div (60 + dense_rank), 0L)"))
       .orderBy(col("rrf_e12").desc, col("doc_id"))
-      .limit(topN)
+      .limit(10)
       .select(col("doc_id"), col("rrf_e12"))
   }
 }

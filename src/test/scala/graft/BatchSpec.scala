@@ -5065,6 +5065,31 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_._2).sum == nCand)
   }
 
+  test("LSH verify: 220 000 shared shingles score j_e4 = 10000 " +
+      "with no ANSI integer overflow") {
+    import org.apache.spark.sql.functions._
+    // two docs with equal m0..m15 collide in every band; i * 10000
+    // exceeds Int.MaxValue, so an INT i, na or nb would throw
+    // [ARITHMETIC_OVERFLOW] under Spark's default ANSI mode
+    val n = 220000
+    val sigs = (0 until 16).foldLeft(spark.range(2).select(
+        col("id").as("doc_id"),
+        expr(s"transform(sequence(1, $n), k -> CAST(k AS STRING))")
+          .as("ss"))) { (df, j) => df.withColumn(s"m$j", lit(7L)) }
+      .withColumn("n", size(col("ss")))
+    val rows = graft.operators.LlmOps.lshVerified(sigs)
+      .select(col("a_id"), col("b_id"), col("i"),
+        expr(graft.operators.LlmOps.JaccardE4).as("j_e4"),
+        expr("i * 10000 div na").as("cont_a_e4"),
+        expr("i * 10000 div nb").as("cont_b_e4"))
+      .collect()
+    assert(rows.length == 1, rows.toSeq)
+    val r = rows.head
+    assert(r.getLong(0) == 0L && r.getLong(1) == 1L && r.getLong(2) == n)
+    assert(r.getLong(3) == 10000L && r.getLong(4) == 10000L &&
+      r.getLong(5) == 10000L, r)
+  }
+
   test("llm_idf_drift (J84): drift is the share difference and rows " +
       "arrive in non-increasing |drift| order") {
     val rows = SparkEntry.queries("q_llm_idf_drift")(spark, sf)

@@ -140,6 +140,8 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val media = Seq(Media(9L, "audio", bos.toByteArray)).toDS()
     val d = Multimodal.decodeWavs(media).collect().head
     assert(!d.valid)
+    // the rejection comes from the one decoder all four audio rows use
+    assert(Multimodal.decodePcm16(bos.toByteArray).isEmpty)
   }
 
   test("aHash: identical images hash equal; small perturbation stays within Hamming 10; different images differ") {
