@@ -1,44 +1,31 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The pure-SQL surface of the engine (round 8, completing the
-  * "engine" story): one call registers every fixture table as a view
-  * and every graft custom function in the session catalog, so a user
-  * who speaks ONLY `spark.sql(...)` can run the entire suite — no
-  * DataFrame code, no imports. On a cluster the same surface comes up
-  * with zero application code via
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (which
-  * injects the functions session-wide; see [[plans.GraftExtensions]])
-  * plus external tables over the warehouse paths.
+/** The pure-SQL surface of the engine: [[init]] installs every graft
+  * SQL function and registers every fixture table as a view, so a user
+  * who speaks ONLY `spark.sql(...)` can run the suite — no DataFrame
+  * code, no imports. On a cluster the functions come instead from
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (both paths
+  * read the one table in [[plans.GraftExtensions.sqlFunctions]]) and the
+  * tables from external tables over the warehouse paths.
   *
-  * The enrolled `q_sql_cosine_topk` row proves the surface
-  * END-TO-END: its Spark arm is a single SQL string over the
-  * registered `embeddings` view using the codegen `fvec_dot` /
-  * `fvec_norm` expressions, and its oracle is the SAME oracle text the
-  * DataFrame-built `q_llm_cosine_topk` row already hash-matches — the
-  * two rows share one truth, reached through two APIs. */
+  * The enrolled `q_sql_*` rows prove the surface end to end: each Spark
+  * arm is one SQL string over these views, and its oracle is either the
+  * same text or the oracle of the DataFrame row it re-expresses
+  * (`q_sql_cosine_topk` uses `fvec_dot` / `fvec_norm` and shares
+  * `q_llm_cosine_topk`'s oracle) — one truth, reached through two APIs. */
 object GraftCatalog {
 
   /** Table names backed directly by `<sfDir>/<name>.parquet`. */
   val tableNames: Seq[String] = Seq("region", "nation", "customer",
     "supplier", "part", "orders", "lineitem", "documents", "embeddings")
 
-  /** Register all graft custom functions (codegen Catalyst
-    * expressions — none of these are UDFs): fvec_dot / fvec_norm /
-    * simhash60, nfc_normalize, graft_bloom_agg / graft_might_contain,
-    * freq_sketch. Idempotent. */
-  def registerFunctions(spark: SparkSession): Unit = {
-    functions.VectorExprs.register(spark)
-    functions.TextExprs.register(spark)
-    functions.BloomFuncs.register(spark)
-    functions.FreqSketch.register(spark)
-  }
-
-  /** Full SQL surface over one scale-factor directory: functions plus
-    * a temp view per fixture table (`events` through the
-    * schema-adaptive reader, like every enrolled query). */
+  /** Full SQL surface over one scale-factor directory: the graft
+    * functions the session lacks, plus a temp view per fixture table
+    * (`events` through the schema-adaptive reader, like every enrolled
+    * query). */
   def init(spark: SparkSession, sfDir: String): Unit = {
-    registerFunctions(spark)
+    plans.GraftExtensions.install(spark)
     tableNames.foreach(n =>
       Tables.t(spark, sfDir, n).createOrReplaceTempView(n))
     Tables.events(spark, sfDir).createOrReplaceTempView("events")

@@ -1,43 +1,30 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** SQL-surface registration for Spark's internal bloom-filter pair
-  * (`BloomFilterAggregate` / `BloomFilterMightContain`) — the exact
-  * machinery the optimizer injects for runtime semi-join filters
-  * (InjectRuntimeFilter), exposed here for EXPLICIT pre-filtering:
-  * build a bloom from a selective dim's join keys, broadcast the
-  * one-row sketch, and cheaply drop non-matching fact rows BEFORE the
-  * exact join (which then removes the bloom's false positives — the
-  * composite stays exact). At 100 TB this is the user-controlled
-  * version of the runtime filter: the fact side never shuffles rows
-  * whose keys cannot join.
+/** Typed constructors over Spark's internal bloom-filter pair
+  * (`BloomFilterAggregate` / `BloomFilterMightContain`), the machinery
+  * the optimizer injects for runtime semi-join filters, exposed for
+  * EXPLICIT pre-filtering: build a bloom from a selective side's join
+  * keys and drop non-matching rows before the exact join, which then
+  * removes the bloom's false positives, so the composite stays exact.
   *
-  * Mirrors the FreqSketch registration pattern
-  * (graft.functions.FreqSketch); tested by the enrolled
-  * `q_join_bloom_prefilter` row (exactness) and ScaleSpec (the
-  * optimizer-injected twin).
+  * `mightContain` needs its sketch as a constant or an uncorrelated
+  * scalar subquery (`Dataset.scalar()`); keys are `xxhash64` values.
+  * The SQL names `graft_bloom_agg` / `graft_might_contain` come from
+  * [[graft.plans.GraftExtensions]].
   */
 object BloomFuncs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => {
-        require(exprs.length == 3,
-          "graft_bloom_agg(xxhash64(key), estItems, numBits)")
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-          .toAggregateExpression()
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => {
-        require(exprs.length == 2,
-          "graft_might_contain(bloom, xxhash64(key))")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      },
-      "built-in")
-  }
+  def agg(key: Column, estItems: Long, numBits: Long): Column =
+    column(aggExpr(expression(key), Literal(estItems), Literal(numBits)))
+
+  def mightContain(sketch: Column, key: Column): Column =
+    column(BloomFilterMightContain(expression(sketch), expression(key)))
+
+  private[graft] def aggExpr(key: Expression, estItems: Expression,
+      numBits: Expression): Expression =
+    new BloomFilterAggregate(key, estItems, numBits).toAggregateExpression()
 }

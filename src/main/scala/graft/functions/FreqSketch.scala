@@ -4,7 +4,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -133,17 +134,10 @@ case class FreqItems(child: Expression, k: Int,
 }
 
 object FreqSketch {
-  /** Register `freq_sketch(col, k)` for use in expr("..."). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch",
-      exprs => {
-        require(exprs.length == 2,
-          s"freq_sketch(col, k) takes exactly 2 arguments, got ${exprs.length}")
-        require(exprs(1).foldable,
-          "freq_sketch: k must be a literal (foldable) integer")
-        val k = exprs(1).eval(null).asInstanceOf[Number].intValue()
-        FreqItems(exprs.head, k).toAggregateExpression()
-      },
-      "built-in")
+  /** `freq_sketch(c, k)`: k bounds the sketch state, so it is fixed
+    * when the plan is built. */
+  def agg(c: Column, k: Int): Column = column(aggExpr(expression(c), k))
+
+  private[graft] def aggExpr(child: Expression, k: Int): Expression =
+    FreqItems(child, k).toAggregateExpression()
 }

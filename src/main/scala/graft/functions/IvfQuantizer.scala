@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * every path.
   *
   * Every function takes a vector frame with (vec_id, v, norm) — `v` a
-  * float array, `norm` its `fvec_norm`, so the caller has already run
-  * [[VectorExprs.register]] — and keeps the caller's other columns.
+  * float array, `norm` its [[VectorExprs.norm]] — and keeps the
+  * caller's other columns.
   * Centroid frames carry (c_id, cv, cn).
   */
 object IvfQuantizer {
@@ -28,8 +28,8 @@ object IvfQuantizer {
     * any scale, so they broadcast. */
   def cosines(vecs: DataFrame, cents: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(cents))
-      .withColumn("cs",
-        round(expr("fvec_dot(v, cv)") / (col("norm") * col("cn")), 6))
+      .withColumn("cs", round(
+        VectorExprs.dot(col("v"), col("cv")) / (col("norm") * col("cn")), 6))
 
   /** [[cosines]] plus `arn`, each centroid's rank for its vector (cs
     * descending, c_id breaks ties): arn = 1 is the vector's list, and

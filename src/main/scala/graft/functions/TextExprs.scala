@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -62,14 +63,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object TextExprs {
-  /** Register `nfc_normalize(s)` for use in expr("..."). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => {
-        require(exprs.length == 1,
-          s"nfc_normalize(s) takes exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      },
-      "built-in")
+  /** `nfc_normalize(s)` as a typed Column. */
+  def nfc(s: Column): Column = column(NfcNormalize(expression(s)))
 }

@@ -3,7 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.PriorityQueue
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -98,17 +99,10 @@ case class TopKDoubles(child: Expression, k: Int,
 }
 
 object TopKAgg {
-  /** Register `topk_vals(col, k)` for use in expr("..."). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_vals",
-      exprs => {
-        require(exprs.length == 2,
-          s"topk_vals(col, k) takes exactly 2 arguments, got ${exprs.length}")
-        require(exprs(1).foldable,
-          "topk_vals: k must be a literal (foldable) integer")
-        val k = exprs(1).eval(null).asInstanceOf[Number].intValue()
-        TopKDoubles(exprs.head, k).toAggregateExpression()
-      },
-      "built-in")
+  /** `topk_vals(c, k)`: k bounds the heap, so it is fixed when the plan
+    * is built. */
+  def agg(c: Column, k: Int): Column = column(aggExpr(expression(c), k))
+
+  private[graft] def aggExpr(child: Expression, k: Int): Expression =
+    TopKDoubles(child, k).toAggregateExpression()
 }

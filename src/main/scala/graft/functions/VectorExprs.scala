@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -160,16 +161,12 @@ case class SimHash60(child: Expression) extends UnaryExpression {
     copy(c)
 }
 
+/** Typed Column constructors for the three vector expressions, so a
+  * DataFrame builder reaches them without the session's function
+  * registry; the SQL names come from [[graft.plans.GraftExtensions]]. */
 object VectorExprs {
-  /** Register `fvec_dot` / `fvec_norm` for use via expr("..."). Idempotent
-    * per session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("fvec_dot",
-      exprs => FloatVectorDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("fvec_norm",
-      exprs => FloatVectorNorm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash60",
-      exprs => SimHash60(exprs.head), "built-in")
-  }
+  def dot(a: Column, b: Column): Column =
+    column(FloatVectorDot(expression(a), expression(b)))
+  def norm(v: Column): Column = column(FloatVectorNorm(expression(v)))
+  def simhash60(hs: Column): Column = column(SimHash60(expression(hs)))
 }

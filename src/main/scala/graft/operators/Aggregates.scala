@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.TopKAgg
 
 /** SURVEY.md §2-D — aggregation operators.
   *
@@ -368,15 +369,16 @@ object Aggregates {
     * TypedImperativeAggregate (graft.functions.TopKDoubles): O(k) state
     * per group instead of collect-the-whole-group, map-side combinable. */
   def topkValues(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKAgg.register(spark)
     // Output serialized as CSV of DECIMAL(18,2) strings: decimal casts
     // render identically in Spark and DuckDB (no float-repr drift), so
-    // the driver's hash compare works on the scalar cell.
+    // the oracle's hash compare works on the scalar cell. The lambda
+    // stays SQL: functions.transform would mint a fresh x_N per build.
     events(spark, dir)
       .groupBy(col("event_type"))
-      .agg(expr("array_join(transform(topk_vals(value, 5)," +
+      .agg(TopKAgg.agg(col("value"), 5).as("top5"), count(lit(1)).as("n"))
+      .select(col("event_type"), expr("array_join(transform(top5," +
         " x -> cast(round(x, 2) as decimal(18,2))), ',')").as("top_values"),
-        count(lit(1)).as("n"))
+        col("n"))
       .orderBy(col("event_type"))
   }
 

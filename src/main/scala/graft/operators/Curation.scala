@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.VectorExprs
 
 /** SURVEY.md §2 round-7 widening (J9): the quality-gate / tokenizer /
   * retrieval-compression rows a production training-data pipeline runs
@@ -267,13 +268,12 @@ object Curation {
     * Same bounded-probe shape as every ANN row: the 20-probe side
     * broadcasts, candidates stream, nothing is all-pairs. */
   def mrlRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val emb = embeddings(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
     def top3(d: Option[Int]): DataFrame = {
       val vexpr = d.fold("embedding")(n => s"slice(embedding, 1, $n)")
       val e = emb.select(col("vec_id"), expr(vexpr).as("v"))
-        .withColumn("nrm", expr("fvec_norm(v)"))
+        .withColumn("nrm", VectorExprs.norm(col("v")))
       val probes = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("v").as("pv"),
           col("nrm").as("pn"))
@@ -281,7 +281,8 @@ object Curation {
           col("nrm").as("cn")))
         .filter(col("vec_id") =!= col("probe_id"))
         .withColumn("cos",
-          round(expr("fvec_dot(pv, cv)") / (col("pn") * col("cn")), 6))
+          round(VectorExprs.dot(col("pv"), col("cv"))
+            / (col("pn") * col("cn")), 6))
         .withColumn("rank", row_number().over(
           w.partitionBy(col("probe_id"))
             .orderBy(col("cos").desc, col("vec_id"))))
@@ -533,11 +534,10 @@ object Curation {
     * bucket-partitioned top-1 window — all bucket-sized after the
     * map-side assign. */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val w = org.apache.spark.sql.expressions.Window
     val emb = embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      .withColumn("norm", expr("fvec_norm(v)"))
+      .withColumn("norm", VectorExprs.norm(col("v")))
     val bucketed = graft.functions.IvfQuantizer
       .assign(emb, graft.functions.IvfQuantizer.sampledCentroids(emb))
       .select(col("vec_id"), col("label"), col("bucket"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.functions.BloomFuncs
 
 /** SURVEY.md §2-C — join operators (broadcast, SMJ, multiway, outer,
   * semi/anti, theta-range, as-of, cross).
@@ -78,27 +79,24 @@ object Joins {
   /** Explicit bloom-prefiltered join (round 4): build a bloom filter
     * over a SELECTIVE dim side's join keys (high-value orders, ~2% of
     * rows), broadcast the one-row sketch, and drop non-matching fact
-    * rows with `graft_might_contain` BEFORE the exact join — the
+    * rows with `BloomFuncs.mightContain` BEFORE the exact join — the
     * user-controlled twin of the optimizer's InjectRuntimeFilter
     * (ScaleSpec proves the injected form; this row proves the explicit
     * form stays EXACT, because the subsequent equi-join removes the
     * bloom's false positives). At 100 TB the fact side never shuffles
     * rows whose keys cannot join: the bloom prunes at the scan. */
   def joinBloomPrefilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomFuncs.register(spark)
     val sel = orders(spark, dir)
       .filter(col("o_totalprice") > 400000.0)
       .select(col("o_orderkey"), col("o_orderpriority"))
     // might_contain requires the sketch as a constant or scalar
     // subquery (the same contract the optimizer's injected form
     // satisfies) — a one-row subquery over the selective key set
-    sel.createOrReplaceTempView("graft_bloom_dim")
+    val sketch = sel
+      .agg(BloomFuncs.agg(xxhash64(col("o_orderkey")), 100000L, 800000L))
+      .scalar()
     lineitem(spark, dir)
-      .filter(expr(
-        """graft_might_contain(
-          |  (SELECT graft_bloom_agg(xxhash64(o_orderkey), 100000L, 800000L)
-          |   FROM graft_bloom_dim),
-          |  xxhash64(l_orderkey))""".stripMargin))
+      .filter(BloomFuncs.mightContain(sketch, xxhash64(col("l_orderkey"))))
       .join(sel, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"),

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.functions.IvfQuantizer
+import graft.functions.{FreqSketch, IvfQuantizer, VectorExprs}
 
 /** SURVEY.md §2-J — LLM-training-data-pipeline operators over the
   * `documents` and `embeddings` tables: dedup (exact, n-gram Jaccard,
@@ -265,7 +265,7 @@ object LlmOps {
         col("norm").as("an")), "a_id")
       .join(emb.select(col("vec_id").as("b_id"), col("v").as("bv"),
         col("norm").as("bn")), "b_id")
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .withColumn("cell", concat(
         when(col("j_e4") >= 8000, lit("text_dup"))
           .otherwise(lit("text_nodup")),
@@ -415,11 +415,10 @@ object LlmOps {
     * differently. */
   private def simhashCands(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val sim = documents(spark, dir)
       .withColumn("hs", expr(
         s"transform(array_distinct(split(text, ' ')), t -> ${h60("t")})"))
-      .withColumn("sim", expr("simhash60(hs)"))
+      .withColumn("sim", VectorExprs.simhash60(col("hs")))
       .select(col("doc_id"), col("sim"))
     // 4-way chunk fan-out as a generator (explode), not a join — keeps
     // the fan-out shuffle-free and BNLJ out of the plan
@@ -510,14 +509,14 @@ object LlmOps {
     * the native codegen'd expression (graft.functions.VectorExprs) —
     * same widen-then-accumulate semantics as the built-in HOF form, ~10×
     * less per-pair overhead in the O(n²) kernels below. */
-  private def embWithNorm(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
+  private def embWithNorm(spark: SparkSession, dir: String): DataFrame =
     embeddings(spark, dir)
       .withColumn("v", col("embedding"))
-      .withColumn("norm", expr("fvec_norm(embedding)"))
-  }
+      .withColumn("norm", VectorExprs.norm(col("embedding")))
 
-  private val dotExpr = "fvec_dot(av, bv)"
+  /** Probe-candidate cosine on the 6-digit grid over (av, an, bv, bn). */
+  private def cosAB: Column =
+    round(VectorExprs.dot(col("av"), col("bv")) / (col("an") * col("bn")), 6)
 
   /** Brute-force cosine top-5 neighbors for the first 20 vectors —
     * the ANN correctness baseline (lshAnn is the scale path). */
@@ -530,7 +529,7 @@ object LlmOps {
       col("norm").as("bn"))
     val scored = probes.crossJoin(cands)
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
     scored
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
@@ -565,8 +564,7 @@ object LlmOps {
       col("v").as("bv"), col("norm").as("bn"))
     val scored = probes.crossJoin(cands)
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .withColumn("global_rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("probe_id"))
@@ -611,7 +609,7 @@ object LlmOps {
       col("norm").as("bn"))
     val knn = probes.crossJoin(cands)
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
           .orderBy(col("cos").desc, col("vec_id"))))
@@ -674,7 +672,7 @@ object LlmOps {
       col("norm").as("bn"))
     val pairs = broadcast(probes).crossJoin(cands)
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
     val byProbe = Window.partitionBy(col("probe_id"))
     val pos = pairs.filter(col("label") === col("p_label"))
       .withColumn("rn", row_number().over(
@@ -771,7 +769,8 @@ object LlmOps {
     val emb = embWithNorm(spark, dir)
     val probe = emb.filter(col("vec_id") === 7)
       .select(col("v").as("av"), col("norm").as("an"))
-    val e6 = "CAST(floor(round(%s, 6) * 1000000 + 0.5) AS BIGINT)"
+    def e6(c: Column): Column =
+      floor(round(c, 6) * 1000000 + 0.5).cast("bigint")
     // localCheckpoint: the 5 unrolled steps each reference cand/sims,
     // and a TakeOrderedAndProject is not an Exchange — ReuseExchange
     // cannot dedupe it, so WITHOUT the checkpoint every step re-runs
@@ -783,7 +782,8 @@ object LlmOps {
     val cand = emb.filter(col("vec_id") =!= 7)
       .crossJoin(broadcast(probe))
       .select(col("vec_id").as("id"),
-        expr(e6.format("fvec_dot(av, v) / (an * norm)")).as("rel_e6"))
+        e6(VectorExprs.dot(col("av"), col("v")) / (col("an") * col("norm")))
+          .as("rel_e6"))
       .orderBy(col("rel_e6").desc, col("id")).limit(10)
       .localCheckpoint()
     val ce = cand
@@ -792,8 +792,8 @@ object LlmOps {
       .select(col("id"), col("rel_e6"), col("v"), col("norm"))
     val sims = ce.as("a").join(ce.as("b"), col("a.id") =!= col("b.id"))
       .select(col("a.id").as("sa"), col("b.id").as("sb"),
-        expr(e6.format("fvec_dot(a.v, b.v) / (a.norm * b.norm)"))
-          .as("sim_e6"))
+        e6(VectorExprs.dot(col("a.v"), col("b.v"))
+          / (col("a.norm") * col("b.norm"))).as("sim_e6"))
       .localCheckpoint()
     def step(sel: DataFrame, k: Int): DataFrame = {
       val simToSel = sims
@@ -841,7 +841,7 @@ object LlmOps {
     val b = emb.select(col("vec_id").as("b_id"), col("v").as("bv"),
       col("norm").as("bn"))
     broadcast(a).crossJoin(b).filter(col("a_id") < col("b_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .filter(col("cos") >= 0.4)
       .select(col("a_id"), col("b_id"), col("cos"))
       .orderBy(col("a_id"), col("b_id"))
@@ -856,7 +856,7 @@ object LlmOps {
     val b = emb.select(col("vec_id").as("b_id"), col("v").as("bv"),
       col("norm").as("bn"))
     a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .filter(col("cos") >= 0.4)
       .select(col("a_id"), col("b_id"), col("cos"))
       .orderBy(col("a_id"), col("b_id"))
@@ -874,7 +874,7 @@ object LlmOps {
         col("norm").as("an")), "probe_id")
       .join(emb.select(col("vec_id"), col("v").as("bv"),
         col("norm").as("bn")), "vec_id")
-      .withColumn("cos", round(expr(dotExpr) / (col("an") * col("bn")), 6))
+      .withColumn("cos", cosAB)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
           .orderBy(col("cos").desc, col("vec_id"))))
@@ -2043,14 +2043,15 @@ object LlmOps {
           " i -> struct(i AS ci, slice(v, i * 8 + 1, 8) AS cv))"))
           .as("c"))
       .select(col("vec_id"), col("c.ci").as("ci"), col("c.cv").as("cv"))
-      .withColumn("cn", expr("fvec_norm(cv)"))
+      .withColumn("cn", VectorExprs.norm(col("cv")))
     val pchunks = chunks.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("ci").as("qi"),
         col("cv").as("qv"), col("cn").as("qn"))
     val best = chunks.join(broadcast(pchunks),
         col("vec_id") =!= col("probe_id"))
       .withColumn("cc",
-        round(expr("fvec_dot(cv, qv)") / (col("cn") * col("qn")), 6))
+        round(VectorExprs.dot(col("cv"), col("qv")) / (col("cn") * col("qn")),
+          6))
       .groupBy(col("probe_id"), col("vec_id"), col("qi"))
       .agg(max(col("cc")).as("m"))
     val scoredMs = best.groupBy(col("probe_id"), col("vec_id"))
@@ -3391,7 +3392,8 @@ object LlmOps {
     emb.filter(col("vec_id") =!= 7)
       .crossJoin(broadcast(probe))
       .withColumn("cos",
-        round(expr("fvec_dot(av, v)") / (col("an") * col("norm")), 6))
+        round(VectorExprs.dot(col("av"), col("v")) / (col("an") * col("norm")),
+          6))
       .orderBy(col("cos").desc, col("vec_id")).limit(50)
       .withColumn("dense_rank", row_number()
         .over(Window.orderBy(col("cos").desc, col("vec_id")))
@@ -3425,7 +3427,8 @@ object LlmOps {
         col("norm")), Seq("doc_id"))
       .crossJoin(broadcast(probe))
       .withColumn("cos",
-        round(expr("fvec_dot(av, v)") / (col("an") * col("norm")), 6))
+        round(VectorExprs.dot(col("av"), col("v")) / (col("an") * col("norm")),
+          6))
       .withColumn("rerank", row_number().over(
         Window.orderBy(col("cos").desc, col("doc_id"))).cast("long"))
       .filter(col("rerank") <= 10)
@@ -4197,7 +4200,7 @@ object LlmOps {
   }
 
   /** Heavy-hitter tokens via the Misra-Gries sketch (round 3): per-lang
-    * frequent-token detection with `freq_sketch(tok, 64)` — O(k) state
+    * frequent-token detection with `FreqSketch.agg(tok, 64)` — O(k) state
     * per group instead of an exact full-token shuffle. The sketch's
     * counter content is input-order-dependent, so the enrolled output is
     * order-INVARIANT: the guaranteed-membership row set (true freq >
@@ -4206,14 +4209,13 @@ object LlmOps {
     * an overcount). The exact count join-back here plays the oracle's
     * role — at 100 TB it would run only on the tiny reported set. */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.FreqSketch.register(spark)
     val toks = documents(spark, dir)
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
     val cnts = toks.groupBy(col("lang"), col("tok"))
       .agg(count(lit(1)).as("true_cnt"))
     val totals = cnts.groupBy(col("lang")).agg(sum(col("true_cnt")).as("n"))
     val est = toks.groupBy(col("lang"))
-      .agg(expr("freq_sketch(tok, 64)").as("mg"))
+      .agg(FreqSketch.agg(col("tok"), 64).as("mg"))
       .select(col("lang"), explode(col("mg")).as(Seq("tok", "est")))
     cnts.join(broadcast(totals), "lang")
       .filter(col("true_cnt") * 65 > col("n"))

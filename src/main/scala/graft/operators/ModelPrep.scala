@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.VectorExprs
 
 /** SURVEY.md §2-J4 — model-preparation operators (round 4): the steps
   * between a curated corpus and a training run. Sketch-quality
@@ -146,13 +147,12 @@ object ModelPrep {
     * [[kmeansStep]]), plus the double vector and its norm for
     * cosine-based consumers. Shared by kmeansStep and semDedup. */
   private def embedAssigned(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val emb = embeddings(spark, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000.0) AS BIGINT))")
           .as("q"),
         col("embedding").as("v")) // raw float array for the codegen kernels
-      .withColumn("nrm", expr("fvec_norm(v)"))
+      .withColumn("nrm", VectorExprs.norm(col("v")))
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("q").as("cq"))
     emb.crossJoin(broadcast(cents))
@@ -192,14 +192,14 @@ object ModelPrep {
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
     val side = embedAssigned(spark, dir)
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    // fvec_dot is the codegen'd kernel — the lambda aggregate/zip_with
+    // VectorExprs.dot is the codegen'd kernel — the lambda aggregate/zip_with
     // form runs on the interpreted HOF path and measured ~2× slower
     // over the ~3M in-cluster pairs at sf0.1 (the zorder lesson again)
     val pairs = side.as("a")
       .join(side.as("b"), col("a.cluster") === col("b.cluster") &&
         col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos",
-        expr("fvec_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")))
+        VectorExprs.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
     val dropped = pairs.filter(col("cos") >= 0.3)
       .select(col("b.vec_id").as("drop_id")).distinct()
     side.join(dropped, col("vec_id") === col("drop_id"), "left_outer")

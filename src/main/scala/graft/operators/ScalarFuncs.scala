@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.TextExprs
 
 /** SURVEY.md §2-H — scalar function families: string, regex, date/time,
   * math, array, map, JSON.
@@ -248,18 +249,16 @@ object ScalarFuncs {
     * (both implement the Unicode standard; hashes compare the UTF-8
     * bytes). First step of any web-corpus cleaning pipeline: mixed
     * normalization forms break exact dedup and shingling. */
-  def nfcNorm(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(spark)
+  def nfcNorm(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
       .withColumn("dirty", concat(col("lang"), lit("e\u0301"),
         col("source"), lit("A\u030A"), col("doc_id")))
       .select(col("doc_id"),
         length(col("dirty")).as("n_raw"),
-        expr("length(nfc_normalize(dirty))").as("n_nfc"),
-        expr(s"CAST(conv(substring(md5(nfc_normalize(dirty)), 1, 15), 16, 10) AS BIGINT)")
-          .as("nfc_h"))
+        length(TextExprs.nfc(col("dirty"))).as("n_nfc"),
+        conv(substring(md5(TextExprs.nfc(col("dirty"))), 1, 15), 16, 10)
+          .cast("bigint").as("nfc_h"))
       .orderBy(col("doc_id"))
-  }
 
   /** Date arithmetic family (round 2): add days/months (month-end
     * clamped the same way in both engines), last_day, signed day diff,

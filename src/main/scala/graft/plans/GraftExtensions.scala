@@ -1,7 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, EqualNullSafe, EqualTo, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 
@@ -19,41 +22,74 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
   *  - [[CartesianGuard]] — a post-analysis check that REJECTS unbounded
   *    cartesian products before they execute;
   *  - [[LevenshteinBandRule]] — an optimizer rule conjoining the implied
-  *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates
-  *    (round 5).
+  *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates;
+  *  - every graft SQL function in [[GraftExtensions.sqlFunctions]], so a
+  *    `spark.sql`-only user gets them from the conf line alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private def fn(name: String, clazz: Class[_])(
-      b: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), b)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfStrategy)
     ext.injectCheckRule(spark => CartesianGuard(spark))
     ext.injectOptimizerRule(_ => LevenshteinBandRule)
-    // graft scalar functions session-wide (round 8): the codegen
-    // expressions behind the pure-SQL surface ([[graft.GraftCatalog]])
-    // come up with ZERO application code on an extensions-configured
-    // cluster — a spark.sql-only user gets fvec_dot and friends from
-    // the conf line alone. (The aggregate/sketch builders —
-    // graft_bloom_agg, freq_sketch — keep their per-session register()
-    // path via GraftCatalog.registerFunctions, which validates their
-    // literal-argument contracts.)
-    ext.injectFunction(fn("fvec_dot",
-      classOf[graft.functions.FloatVectorDot])(
-      es => graft.functions.FloatVectorDot(es(0), es(1))))
-    ext.injectFunction(fn("fvec_norm",
-      classOf[graft.functions.FloatVectorNorm])(
-      es => graft.functions.FloatVectorNorm(es.head)))
-    ext.injectFunction(fn("simhash60",
-      classOf[graft.functions.SimHash60])(
-      es => graft.functions.SimHash60(es.head)))
-    ext.injectFunction(fn("nfc_normalize",
-      classOf[graft.functions.NfcNormalize])(
-      es => graft.functions.NfcNormalize(es.head)))
+    GraftExtensions.sqlFunctions.foreach(ext.injectFunction)
+  }
+}
+
+/** The one table of graft SQL functions. DataFrame code never goes
+  * through it: operators build the same expressions with the typed
+  * constructors in `graft.functions` (`VectorExprs.dot`,
+  * `FreqSketch.agg`, ...), so building a frame leaves the session's
+  * registry alone. The builders check what SQL cannot type: argument
+  * count, and a literal `k` for the sketch aggregates, whose state it
+  * bounds. */
+object GraftExtensions {
+  import graft.functions._
+
+  private def fn(name: String, clazz: Class[_])(b: FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), b)
+
+  private def literalK(name: String, es: Seq[Expression]): Int = {
+    require(es.length == 2,
+      s"$name(col, k) takes exactly 2 arguments, got ${es.length}")
+    require(es(1).foldable, s"$name: k must be a literal (foldable) integer")
+    es(1).eval(null).asInstanceOf[Number].intValue()
+  }
+
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    Seq(
+      fn("fvec_dot", classOf[FloatVectorDot])(
+        es => FloatVectorDot(es(0), es(1))),
+      fn("fvec_norm", classOf[FloatVectorNorm])(
+        es => FloatVectorNorm(es.head)),
+      fn("simhash60", classOf[SimHash60])(es => SimHash60(es.head)),
+      fn("nfc_normalize", classOf[NfcNormalize]) { es =>
+        require(es.length == 1,
+          s"nfc_normalize(s) takes exactly 1 argument, got ${es.length}")
+        NfcNormalize(es.head)
+      },
+      fn("graft_bloom_agg", classOf[BloomFilterAggregate]) { es =>
+        require(es.length == 3,
+          "graft_bloom_agg(xxhash64(key), estItems, numBits)")
+        BloomFuncs.aggExpr(es(0), es(1), es(2))
+      },
+      fn("graft_might_contain", classOf[BloomFilterMightContain]) { es =>
+        require(es.length == 2, "graft_might_contain(bloom, xxhash64(key))")
+        BloomFilterMightContain(es(0), es(1))
+      },
+      fn("freq_sketch", classOf[FreqItems])(
+        es => FreqSketch.aggExpr(es.head, literalK("freq_sketch", es))),
+      fn("topk_vals", classOf[TopKDoubles])(
+        es => TopKAgg.aggExpr(es.head, literalK("topk_vals", es))))
+
+  /** Registers the table's functions in a session built without the
+    * extensions. Names the session already resolves are left alone, so
+    * repeated calls change nothing and log nothing. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, info, builder)
+    }
   }
 }
 

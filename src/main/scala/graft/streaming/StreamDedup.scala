@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.BloomFuncs
 
 /** Streaming near-dup GATE — the map-side first pass of a production
   * dedup pipeline, as real stream processors ship it: a bloom sketch of
@@ -112,14 +113,11 @@ object StreamDedup {
     * (512 KiB). A larger corpus needs both raised for the same false
     * positive rate — at 100 TB this sketch is MBs where the band table
     * is TBs, which is the whole point of the gate. */
-  def bandBloom(store: DataFrame): DataFrame = {
-    graft.functions.BloomFuncs.register(store.sparkSession)
+  def bandBloom(store: DataFrame): DataFrame =
     withBands(store)
       .filter(col("n_sh") > 0)
       .select(explode(col("bands")).as("b"))
-      .agg(expr(s"graft_bloom_agg(xxhash64(b), 100000L, ${1L << 22}L)")
-        .as("bloom"))
-  }
+      .agg(BloomFuncs.agg(xxhash64(col("b")), 100000L, 1L << 22).as("bloom"))
 
   /** The gate itself: stream in, stream minus probable-dups out.
     * `might_contain` demands a CONSTANT sketch, so the (static,
@@ -129,16 +127,11 @@ object StreamDedup {
     * stays a pure projection + filter. The membership test is an
     * `exists` lambda over the 8 band strings. */
   def dedupAgainstStore(docs: DataFrame, bloom: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{
-      BloomFilterMightContain, XxHash64}
     val sketch = lit(bloom.collect()(0).getAs[Array[Byte]]("bloom"))
     withBands(docs)
       .filter(col("n_sh") === 0 ||
-        !exists(col("bands"), b =>
-          GraftBridge.column(
-            BloomFilterMightContain(GraftBridge.expression(sketch),
-              new XxHash64(Seq(GraftBridge.expression(b)))))))
+        !exists(col("bands"),
+          b => BloomFuncs.mightContain(sketch, xxhash64(b))))
       .drop("bands", "n_sh")
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.FreqSketch
 
 /** Event-stream shape shared by batch (`events` table) and streaming
   * tests (FIXTURES.md §B). */
@@ -778,7 +779,7 @@ object StreamingOps {
         GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Streaming heavy hitters (round 4): the Misra-Gries `freq_sketch`
+  /** Streaming heavy hitters (round 4): the Misra-Gries `FreqSketch.agg`
     * TypedImperativeAggregate running as STREAMING state — per-group
     * token frequencies in O(k) memory per key regardless of stream
     * length. Complete output mode: the state store holds one serialized
@@ -789,9 +790,8 @@ object StreamingOps {
     * against exact counts accumulated across batches. Expects columns
     * (lang, tok). */
   def streamHeavyHitters(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.FreqSketch.register(docs.sparkSession)
     docs.groupBy(col("lang"))
-      .agg(expr(s"freq_sketch(tok, $k)").as("mg"))
+      .agg(FreqSketch.agg(col("tok"), k).as("mg"))
       .select(col("lang"), explode(col("mg")).as(Seq("tok", "est")))
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.functions.VectorExprs
 
 /** Incoming embedding row (the streaming twin of the `embeddings`
   * table's rows). */
@@ -32,12 +33,10 @@ object VectorIngest {
     * [[graft.functions.IvfQuantizer.assign]] that every batch IVF row
     * also runs (top-1 cosine, c_id tie-break), so the streamed store and
     * `ivfAnn` agree vector-for-vector. `cents` columns: (c_id, cv, cn). */
-  def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(vecs.sparkSession)
+  def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
     graft.functions.IvfQuantizer
-      .assign(vecs.withColumn("norm", expr("fvec_norm(v)")), cents)
+      .assign(vecs.withColumn("norm", VectorExprs.norm(col("v"))), cents)
       .select(col("vec_id"), col("ts"), col("v"), col("bucket"))
-  }
 
   /** Start the ingest: stream of [[Vec]] rows → nearest-list assignment
     * → list-partitioned idempotent parquet store. */
@@ -82,21 +81,19 @@ object VectorIngest {
   def probeStore(spark: SparkSession, storeDir: String,
       probe: Array[Float], cents: DataFrame, nprobe: Int,
       k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    import org.apache.spark.sql.functions.{call_function, typedLit}
     val pv = typedLit(probe)
     val pn = math.sqrt(probe.map(x => x.toDouble * x).sum)
     val lists = cents
       .withColumn("pc",
-        round(call_function("fvec_dot", col("cv"), pv)
+        round(VectorExprs.dot(col("cv"), pv)
           / (col("cn") * lit(pn)), 6))
       .orderBy(col("pc").desc, col("c_id"))
       .limit(nprobe)
       .select(col("c_id")).collect().map(_.getLong(0)).toSeq
     readLists(spark, storeDir, lists)
       .withColumn("cos",
-        round(call_function("fvec_dot", col("v"), pv)
-          / (call_function("fvec_norm", col("v")) * lit(pn)), 6))
+        round(VectorExprs.dot(col("v"), pv)
+          / (VectorExprs.norm(col("v")) * lit(pn)), 6))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
       .select(col("vec_id"), col("bucket"), col("cos"))

@@ -10,10 +10,9 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Column over a hand-built Catalyst Expression (the classic-API
-    * internal `ExpressionUtils.column`) — needed when an expression
-    * (e.g. `BloomFilterMightContain`, which demands a CONSTANT sketch
-    * argument) cannot be reached through the parser or a registered
-    * function with column inputs. */
+    * internal `ExpressionUtils.column`) — how the typed constructors in
+    * `graft.functions` reach their expressions without the session's
+    * function registry. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 

@@ -204,6 +204,41 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == plain)
   }
 
+  test("frame builders that use graft's functions leave the session's " +
+      "function registry and table list untouched") {
+    import org.apache.spark.sql.functions.{col, explode, lit, split}
+    val s = spark.newSession()
+    def state = (
+      s.sessionState.functionRegistry.listFunction().map(_.unquotedString)
+        .sorted,
+      s.catalog.listTables().collect().map(_.name).sorted.toSeq)
+    val before = state
+    // one row per graft function: bloom agg + might_contain, nfc,
+    // simhash60, fvec_dot/fvec_norm, freq_sketch, topk_vals
+    Seq("q_join_bloom_prefilter", "q_str_nfc_norm", "q_llm_simhash",
+      "q_llm_cosine_topk", "q_llm_heavy_hitters", "q_llm_mrl_recall",
+      "q_llm_cluster_purity", "q_agg_topk_values", "q_llm_kmeans_step")
+      .foreach(n => SparkEntry.queries(n)(s, sf).collect())
+    // the streaming builders, driven over static frames
+    val docs = graft.Tables.documents(s, sf).select(col("doc_id"), col("text"))
+    streaming.StreamDedup.dedupAgainstStore(docs,
+      streaming.StreamDedup.bandBloom(docs)).collect()
+    streaming.StreamingOps.streamHeavyHitters(docs.select(col("doc_id"),
+      lit("en").as("lang"), explode(split(col("text"), " ")).as("tok")), 8)
+      .collect()
+    val vecs = graft.Tables.embeddings(s, sf).filter(col("vec_id") < 40)
+      .select(col("vec_id"), lit(0L).as("ts"), col("embedding").as("v"))
+    val cents = functions.IvfQuantizer.sampledCentroids(
+      vecs.withColumn("norm", lit(1.0)))
+    val store = java.nio.file.Files.createTempDirectory("ivf_untouched")
+      .resolve("store").toString
+    streaming.VectorIngest.assign(vecs, cents).withColumn("batch_id", lit(0L))
+      .write.partitionBy("bucket", "batch_id").parquet(store)
+    streaming.VectorIngest.probeStore(s, store,
+      Array.fill(64)(0.1f), cents, nprobe = 2, k = 3).collect()
+    assert(state == before)
+  }
+
   test("full outer join plans a sort-merge FullOuter (cannot broadcast)") {
     val s = executedPlanString("q_join_full_outer")
     assert(s.contains("FullOuter"), s)

@@ -184,11 +184,53 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(r.getDouble(0) - 11.0) < 1e-6, r.toString)
     assert(r.getString(1) == "Caf\u00e9", r.getString(1))
     assert(r.getLong(2) == 7L, r.toString) // one hash: sign bits = its bits
+    // the sketch aggregates and the bloom pair come from the same line
+    val aggs = spark.sql(
+      "SELECT freq_sketch(t, 4)['a'] AS f, topk_vals(x, 2) AS k," +
+        " graft_might_contain(" +
+        "   (SELECT graft_bloom_agg(xxhash64(7L), 100L, 1024L))," +
+        "   xxhash64(7L)) AS m" +
+        " FROM VALUES ('a', 1.0D), ('a', 3.0D), ('b', 2.0D) AS v(t, x)")
+      .collect().head
+    assert(aggs.getLong(0) == 2L, aggs.toString)
+    assert(aggs.getSeq[Double](1) == Seq(3.0, 2.0), aggs.toString)
+    assert(aggs.getBoolean(2), aggs.toString)
     // and the full pure-SQL surface runs end to end through the views
     GraftCatalog.init(spark, sf)
     val topk = spark.sql("SELECT count(*) AS n FROM (" +
       "SELECT vec_id, fvec_norm(embedding) AS nrm FROM embeddings)" +
       " WHERE nrm > 0").collect().head.getLong(0)
     assert(topk > 0)
+    // a session without the functions gets every one from init alone
+    // (newSession() keeps this session's extensions, so drop the names
+    // first)
+    val plain = spark.newSession()
+    Seq("fvec_dot", "fvec_norm", "simhash60", "nfc_normalize",
+      "graft_bloom_agg", "graft_might_contain", "freq_sketch", "topk_vals")
+      .foreach(n => plain.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    val topkSql = "SELECT topk_vals(x, 2) AS k FROM VALUES (1.0D), (3.0D)," +
+      " (2.0D) AS v(x)"
+    intercept[AnalysisException](plain.sql(topkSql))
+    GraftCatalog.init(plain, sf)
+    assert(plain.sql(topkSql).collect().head.getSeq[Double](0) ==
+      Seq(3.0, 2.0))
+  }
+
+  test("SQL builders reject a non-literal k and a wrong argument count " +
+      "with their contract messages") {
+    def failure(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val nonLiteralK = failure("SELECT freq_sketch(tok, k_col) AS mg" +
+      " FROM VALUES ('a', 4), ('b', 4) AS v(tok, k_col)")
+    assert(nonLiteralK.contains(
+      "freq_sketch: k must be a literal (foldable) integer"), nonLiteralK)
+    val threeArgs = failure("SELECT topk_vals(x, 2, 3) AS k" +
+      " FROM VALUES (1.0D), (2.0D) AS v(x)")
+    assert(threeArgs.contains(
+      "topk_vals(col, k) takes exactly 2 arguments, got 3"), threeArgs)
   }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.sql.Timestamp
 
+import graft.functions.VectorExprs
 import graft.streaming._
 
 /** SURVEY §2-I — streaming operators, MemoryStream-driven (deterministic
@@ -863,9 +864,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming IVF ingest: assignment matches the batch quantizer " +
       "metric; probe read prunes to the requested list partitions") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.col
     implicit val sq = spark.sqlContext
-    graft.functions.VectorExprs.register(spark)
     val root = java.nio.file.Files.createTempDirectory("ivf_ingest")
     val store = s"$root/store"; val ckpt = s"$root/ckpt"
     // three axis-aligned centroids — nearest-by-cosine is unambiguous
@@ -873,7 +873,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L, Array(1f, 0f, 0f, 0f)),
       (1L, Array(0f, 1f, 0f, 0f)),
       (2L, Array(0f, 0f, 1f, 0f)))
-      .toDF("c_id", "cv").withColumn("cn", expr("fvec_norm(cv)"))
+      .toDF("c_id", "cv").withColumn("cn", VectorExprs.norm(col("cv")))
     val in = MemoryStream[Vec]
     val q = VectorIngest.startIvfIngest(spark, in.toDF(), cents, store, ckpt)
     in.addData(Vec(10, ts(0), Array(0.9f, 0.1f, 0f, 0f)),
@@ -900,16 +900,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("end-to-end streamed-store ANN probe: top-k from the pruned " +
       "lists equals brute force over the whole store") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, round, call_function, typedLit}
+    import org.apache.spark.sql.functions.{col, round, typedLit}
     implicit val sq = spark.sqlContext
-    graft.functions.VectorExprs.register(spark)
     val root = java.nio.file.Files.createTempDirectory("ivf_probe")
     val store = s"$root/store"; val ckpt = s"$root/ckpt"
     val cents = Seq(
       (0L, Array(1f, 0f, 0f, 0f)),
       (1L, Array(0f, 1f, 0f, 0f)),
       (2L, Array(0f, 0f, 1f, 0f)))
-      .toDF("c_id", "cv").withColumn("cn", expr("fvec_norm(cv)"))
+      .toDF("c_id", "cv").withColumn("cn", VectorExprs.norm(col("cv")))
     // 30 vectors, 10 tightly around each axis — a probe near axis 1
     // has ALL its true top-3 inside list 1, so pruned == brute force
     def axisVec(axis: Int, i: Int): Array[Float] = {
@@ -935,8 +934,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pv = typedLit(probeVec)
     val pn = math.sqrt(probeVec.map(x => x.toDouble * x).sum)
     val brute = VectorIngest.readLists(spark, store, Seq(0L, 1L, 2L))
-      .withColumn("cos", round(call_function("fvec_dot", col("v"), pv)
-        / (call_function("fvec_norm", col("v"))
+      .withColumn("cos", round(VectorExprs.dot(col("v"), pv)
+        / (VectorExprs.norm(col("v"))
           * org.apache.spark.sql.functions.lit(pn)), 6))
       .orderBy(col("cos").desc, col("vec_id")).limit(3)
       .select(col("vec_id"), col("cos")).collect()
@@ -951,17 +950,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "to a batch brute-force twin (VERDICT r9 #7 — streaming parity " +
       "for the round-9 retrieval surface)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, round,
-      call_function, typedLit, row_number}
+    import org.apache.spark.sql.functions.{col, expr, round, typedLit,
+      row_number}
     implicit val sq = spark.sqlContext
-    graft.functions.VectorExprs.register(spark)
     val root = java.nio.file.Files.createTempDirectory("ivf_rrf")
     val store = s"$root/store"; val ckpt = s"$root/ckpt"
     val cents = Seq(
       (0L, Array(1f, 0f, 0f, 0f)),
       (1L, Array(0f, 1f, 0f, 0f)),
       (2L, Array(0f, 0f, 1f, 0f)))
-      .toDF("c_id", "cv").withColumn("cn", expr("fvec_norm(cv)"))
+      .toDF("c_id", "cv").withColumn("cn", VectorExprs.norm(col("cv")))
     def vec(i: Int): Array[Float] = {
       val v = Array(0.07f * (i % 4), 0.07f * ((i + 1) % 4),
         0.07f * ((i + 2) % 4), 0.03f * (i % 5))
@@ -991,8 +989,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy(col("cos").desc, col("vec_id"))
     val denseB = (0 until 24).map(i => (i.toLong, vec(i)))
       .toDF("vec_id", "v")
-      .withColumn("cos", round(call_function("fvec_dot", col("v"), pv)
-        / (call_function("fvec_norm", col("v"))
+      .withColumn("cos", round(VectorExprs.dot(col("v"), pv)
+        / (VectorExprs.norm(col("v"))
           * org.apache.spark.sql.functions.lit(pn)), 6))
       .orderBy(col("cos").desc, col("vec_id")).limit(50)
       .withColumn("dense_rank", row_number().over(w).cast("long"))
