@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The local session every main builds, and the one definition of a
-  * timed query run they share. */
+/** The local session every main and every test suite builds, and the
+  * one definition of a timed query run they share. It is the documented
+  * cluster config: `spark.sql.extensions` installs [[plans.GraftExtensions]]. */
 object Sessions {
   /** `SPARK_GRAFT_CPUS` when set, else the cores this JVM can use. */
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -14,6 +15,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[plans.GraftExtensions].getName)
       // The codegen class cache holds 100 entries by default, far under
       // the suite's 572 plans: a reading taken more than ~100 plans
       // after its warmup re-pays janino compilation (~0.3–1 s per row).

@@ -148,11 +148,12 @@ object AsOfJoinDF {
     * `build` row per key (build.ts <= probe.ts), tie-broken by
     * `buildTieBreak` (a build-side column name). Column names are
     * resolved against each side explicitly — both sides may share
-    * names. Registers the planner strategy on first use. */
+    * names. Registers the planner strategy on first use in a session
+    * built without [[GraftExtensions]]. */
   def asofJoin(spark: SparkSession, probe: DataFrame, build: DataFrame,
       probeKey: String, buildKey: String, probeTs: String, buildTs: String,
       buildTieBreak: String): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
+    if (!spark.sessionState.planner.strategies.contains(AsOfStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfStrategy
     }

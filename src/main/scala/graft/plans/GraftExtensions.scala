@@ -5,8 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, EqualNullSafe, EqualTo, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.classic.Strategy
+import org.apache.spark.sql.execution.SparkPlan
 
 /** The engine's `spark.sql.extensions` entry point — how a cluster
   * deployment turns a stock SparkSession into a graft session:
@@ -16,10 +18,10 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
   * }}}
   *
   * Injects:
-  *  - [[AsOfStrategy]] — the native as-of join physical strategy (its
-  *    per-session `experimental.extraStrategies` registration in
-  *    [[AsOfJoinDF.asofJoin]] remains for ad-hoc sessions);
-  *  - [[CartesianGuard]] — a post-analysis check that REJECTS unbounded
+  *  - [[AsOfStrategy]] — the native as-of join physical strategy
+  *    ([[AsOfJoinDF.asofJoin]] appends it to `experimental.extraStrategies`
+  *    only in a session whose planner lacks it);
+  *  - [[CartesianGuard]] — a planner strategy that REJECTS unbounded
   *    cartesian products before they execute;
   *  - [[LevenshteinBandRule]] — an optimizer rule conjoining the implied
   *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates;
@@ -29,7 +31,7 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfStrategy)
-    ext.injectCheckRule(spark => CartesianGuard(spark))
+    ext.injectPlannerStrategy(spark => CartesianGuard(spark))
     ext.injectOptimizerRule(_ => LevenshteinBandRule)
     GraftExtensions.sqlFunctions.foreach(ext.injectFunction)
   }
@@ -96,8 +98,16 @@ object GraftExtensions {
 /** Guardrail for 100 TB clusters: an unconditioned inner/cross join
   * whose smaller side exceeds a size threshold is almost always a query
   * bug (the output is |L|×|R| rows), and on a large cluster it runs for
-  * hours before anyone notices. This check rule fails the query at
-  * analysis time instead.
+  * hours before anyone notices. This planner strategy fails the query
+  * when such a join is planned; it plans nothing itself (always `Nil`).
+  *
+  * It runs at planning, not as an analysis check, so it sees only the
+  * joins Spark will run. `Dataset.join(right, usingColumns)` first
+  * analyzes a join with NO condition to de-duplicate self-join
+  * attributes; a check rule would see that throwaway join and reject
+  * every USING join of two large sides. The optimized plan carries the
+  * USING equality, and the optimizer has folded each side's `broadcast()`
+  * hint into `Join.hint` (a hint inside a nested join stays there).
   *
   * Threshold: `graft.cartesianGuard.maxBytes` (default 64 MB) — a
   * cartesian is allowed when EITHER side's stats-estimated size is
@@ -109,36 +119,26 @@ object GraftExtensions {
   * small"; the hint makes that assertion visible to the guard. Set to
   * -1 to disable.
   */
-case class CartesianGuard(spark: org.apache.spark.sql.SparkSession)
-    extends (LogicalPlan => Unit) {
+case class CartesianGuard(spark: SparkSession) extends Strategy {
 
   private def maxBytes: Long =
     spark.conf.getOption("graft.cartesianGuard.maxBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
 
-  // A hint counts only when it governs one of THIS join's sides: walk
-  // down through unary nodes but stop at nested joins — a broadcast()
-  // deep inside an unrelated inner join must not waive the outer guard.
-  private def sideHasBroadcastHint(p: LogicalPlan): Boolean = p match {
-    case ResolvedHint(_, hints) => hints.strategy.contains(BROADCAST)
-    case _: Join => false
-    case other => other.children.exists(sideHasBroadcastHint)
-  }
-
-  override def apply(plan: LogicalPlan): Unit = {
-    val limit = maxBytes
-    if (limit < 0) return
-    plan.foreach {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+    plan match {
       // a join is cartesian-shaped when it has NO condition, or a
       // condition with no equality at all (pure theta joins plan as
       // nested-loop over the full pair space, same blow-up)
-      case j @ Join(left, right, Inner | Cross, cond, _)
+      case Join(left, right, Inner | Cross, cond, hint)
           if cond.forall(c => !c.exists(e =>
             e.isInstanceOf[EqualTo] || e.isInstanceOf[EqualNullSafe])) &&
-            !sideHasBroadcastHint(left) && !sideHasBroadcastHint(right) =>
+            !(hint.leftHint ++ hint.rightHint)
+              .exists(_.strategy.contains(BROADCAST)) =>
+        val limit = maxBytes
         val lSize = left.stats.sizeInBytes
         val rSize = right.stats.sizeInBytes
-        if (lSize > limit && rSize > limit) {
+        if (limit >= 0 && lSize > limit && rSize > limit) {
           throw new org.apache.spark.sql.AnalysisException(
             errorClass = "USER_RAISED_EXCEPTION",
             messageParameters = Map("errorMessage" ->
@@ -151,5 +151,6 @@ case class CartesianGuard(spark: org.apache.spark.sql.SparkSession)
         }
       case _ =>
     }
+    Nil
   }
 }

@@ -11,12 +11,7 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   // some operators (prefixJoin, LlmOps.shingles) cache a shared build
   // that Verify/Bench clear between queries — mirror that here so cached
@@ -208,6 +203,10 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       "function registry and table list untouched") {
     import org.apache.spark.sql.functions.{col, explode, lit, split}
     val s = spark.newSession()
+    // drop graft's SQL functions, which the extensions installed: a
+    // builder that registered one would then show up in the registry
+    plans.GraftExtensions.sqlFunctions.foreach { case (id, _, _) =>
+      s.sessionState.functionRegistry.dropFunction(id) }
     def state = (
       s.sessionState.functionRegistry.listFunction().map(_.unquotedString)
         .sorted,

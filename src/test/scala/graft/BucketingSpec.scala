@@ -10,16 +10,16 @@ import org.scalatest.BeforeAndAfterAll
   * the join needs NO shuffle exchange at query time. */
 class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val wh = java.nio.file.Files
-    .createTempDirectory("graft_warehouse_").toString
+  // tables are external (written under `dir`), so the shared session's
+  // warehouse is left alone; broadcast is off so the join plans as SMJ
+  private val dir = java.nio.file.Files
+    .createTempDirectory("graft_bucketed_").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", wh)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = Sessions.local().newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
@@ -27,10 +27,12 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sf = "/root/testdata/sf0.001"
     Tables.lineitem(spark, sf)
       .write.mode("overwrite").bucketBy(4, "l_orderkey")
-      .sortBy("l_orderkey").saveAsTable("li_bucketed")
+      .sortBy("l_orderkey").option("path", s"$dir/li")
+      .saveAsTable("li_bucketed")
     Tables.orders(spark, sf)
       .write.mode("overwrite").bucketBy(4, "o_orderkey")
-      .sortBy("o_orderkey").saveAsTable("o_bucketed")
+      .sortBy("o_orderkey").option("path", s"$dir/o")
+      .saveAsTable("o_bucketed")
     val joined = spark.table("li_bucketed")
       .join(spark.table("o_bucketed"),
         col("l_orderkey") === col("o_orderkey"))

@@ -12,12 +12,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   override def afterAll(): Unit = { spark.catalog.clearCache(); spark.stop() }
 

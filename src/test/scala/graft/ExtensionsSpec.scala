@@ -1,106 +1,102 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The `spark.sql.extensions=graft.plans.GraftExtensions` entry point:
-  * as-of strategy injection and the cartesian-product guard. */
+  * as-of strategy injection and the cartesian-product guard. The suite
+  * runs under [[Sessions.local]], which installs the extensions. */
 class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    // force a fresh session so the extensions conf is honored even when
-    // another suite's session was created first in this JVM
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = Sessions.local()
 
-  override def afterAll(): Unit = {
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-  }
+  override def afterAll(): Unit = spark.stop()
 
-  // Guard tests invoke the rule DIRECTLY on analyzed plans: suites run
-  // in parallel in one JVM, so getOrCreate can hand this suite a
-  // sibling's session without the extensions installed — session-level
-  // wiring is asserted separately below.
-  private def guard(plan: org.apache.spark.sql.DataFrame): Unit =
-    plans.CartesianGuard(spark)(plan.queryExecution.analyzed)
+  // The guard is a planner strategy: a frame is checked when it plans.
+  private def plan(df: DataFrame): Unit = df.queryExecution.sparkPlan
+
+  private def rejection(df: DataFrame): String =
+    intercept[AnalysisException](plan(df)).getMessage
+
+  // Frames are built before the threshold changes: builders may plan
+  // and run their own eager steps, which must not trip the tightened
+  // threshold instead of the join under test.
+  private def withMaxBytes(v: String)(body: => Unit): Unit = {
+    spark.conf.set("graft.cartesianGuard.maxBytes", v)
+    try body finally spark.conf.unset("graft.cartesianGuard.maxBytes")
+  }
 
   test("cartesian guard rejects big-by-big unconditioned joins") {
-    spark.conf.set("graft.cartesianGuard.maxBytes", "1000")
-    try {
-      val e = intercept[AnalysisException] {
-        guard(operators.LlmOps.embedNeardupAll(spark, sf))
+    val all = operators.LlmOps.embedNeardupAll(spark, sf)
+    // pure theta join (no equality): also cartesian-shaped
+    val emb = Tables.embeddings(spark, sf)
+    val theta = emb.as("x").join(emb.as("y"), col("x.vec_id") < col("y.vec_id"))
+    withMaxBytes("1000") {
+      for (df <- Seq(all, theta)) {
+        val msg = rejection(df)
+        assert(msg.contains("[graft] Unbounded cartesian"), msg)
       }
-      assert(e.getMessage.contains("[graft] Unbounded cartesian"),
-        e.getMessage)
-      // pure theta join (no equality): also cartesian-shaped
-      val emb = graft.Tables.embeddings(spark, sf)
-      val e2 = intercept[AnalysisException] {
-        guard(emb.as("x").join(emb.as("y"),
-          org.apache.spark.sql.functions.col("x.vec_id")
-            < org.apache.spark.sql.functions.col("y.vec_id")))
-      }
-      assert(e2.getMessage.contains("[graft] Unbounded cartesian"))
-    } finally spark.conf.unset("graft.cartesianGuard.maxBytes")
+    }
   }
 
   test("guard allows tiny crosses, hinted bounded probes, equi-joins") {
-    // Build every test plan under the DEFAULT threshold first: the
-    // session's own injected check rule runs at Dataset construction,
-    // so plans meant to trip the tightened threshold must exist before
-    // the conf changes — then the rule is exercised directly.
     val tinyCross = SparkEntry.queries("q_join_cross_small")(spark, sf)
     val hintedProbe = SparkEntry.queries("q_llm_embed_neardup")(spark, sf)
     val equiJoin = SparkEntry.queries("q_join_broadcast")(spark, sf)
-    import org.apache.spark.sql.functions.broadcast
-    val emb = graft.Tables.embeddings(spark, sf)
-    val dim = graft.Tables.region(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val dim = Tables.region(spark, sf)
     val inner = broadcast(dim).join(dim.withColumnRenamed("r_name", "n2"),
       "r_regionkey")
     // a broadcast hint buried in a NESTED join must NOT waive the
     // guard for an outer unhinted cartesian
     val outer = emb.crossJoin(inner.limit(1)).crossJoin(
-      emb.select(org.apache.spark.sql.functions.col("vec_id").as("v2")))
-    guard(tinyCross) // tiny dim cross passes the default threshold
-    spark.conf.set("graft.cartesianGuard.maxBytes", "1000")
-    try {
+      emb.select(col("vec_id").as("v2")))
+    plan(tinyCross) // tiny dim cross passes the default threshold
+    withMaxBytes("1000") {
       // hint = the user's smallness assertion (stats can't see through
       // the probe filter) — allowed even under an aggressive threshold
-      guard(hintedProbe)
-      guard(equiJoin) // ordinary equi-joins are untouched
-      intercept[AnalysisException] { guard(outer) }
-    } finally spark.conf.unset("graft.cartesianGuard.maxBytes")
+      plan(hintedProbe)
+      plan(equiJoin) // ordinary equi-joins are untouched
+      rejection(outer)
+    }
   }
 
   test("guard can be disabled with -1") {
-    spark.conf.set("graft.cartesianGuard.maxBytes", "-1")
-    try {
-      guard(operators.LlmOps.embedNeardupAll(spark, sf))
-    } finally spark.conf.unset("graft.cartesianGuard.maxBytes")
+    // two 80 MB ranges: rejected under the default threshold
+    val cross = spark.range(10000000L).crossJoin(spark.range(10000000L))
+    withMaxBytes("-1") { plan(cross) }
+  }
+
+  test("guard checks the planned join: a USING join of two sides over " +
+      "maxBytes runs; their cross and theta joins are rejected; a " +
+      "broadcast() side of the same size passes") {
+    // Range stats: 8 bytes a row, so both sides estimate over the
+    // default 64 MB. A USING join analyzes a condition-less join first,
+    // which a check rule would have rejected.
+    val l = spark.range(10000000L).toDF("k")
+    val r = spark.range(10000000L).selectExpr("id AS k", "id * 2 AS v")
+    assert(l.join(r, Seq("k")).filter(col("k") % 1000000 === 0).count() == 10)
+    for (df <- Seq(l.crossJoin(r), l.join(r, l("k") < r("k")))) {
+      val msg = rejection(df)
+      assert(msg.contains("[graft] Unbounded cartesian"), msg)
+    }
+    plan(l.join(broadcast(r), l("k") < r("k")))
   }
 
   test("levenshtein band rule: bounded 2-arg predicates gain the " +
       "implied length band; thresholded 3-arg form is untouched; " +
       "results unchanged and idempotent") {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
+    import org.apache.spark.sql.functions.expr
     import spark.implicits._
     // distances from "aaaa": aaab=1, zzzz=4, aaaaaa=2, aab=2
     val names = Seq((1L, "aaaa"), (2L, "aaab"), (3L, "zzzz"),
       (4L, "aaaaaa"), (5L, "aab")).toDF("id", "name")
-    // direct rule application (same pattern as the guard tests — suites
-    // share a JVM, so session-level wiring is asserted separately)
+    // direct rule application checks what the rule itself adds; the
+    // session-level wiring is asserted below
     val naive = broadcast(names.as("a")).join(names.as("b"),
       expr("levenshtein(a.name, b.name) <= 2") &&
         col("a.id") < col("b.id"))
@@ -129,7 +125,7 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("levenshtein band rule: bounds under OR / NOT imply no band — " +
       "rows satisfied by the other branch survive") {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
+    import org.apache.spark.sql.functions.expr
     import spark.implicits._
     val names = Seq((1L, "aaaa"), (2L, "aaab"), (3L, "zzzzzzzzzz"),
       (4L, "aaaaaa"), (5L, "aab")).toDF("id", "name")

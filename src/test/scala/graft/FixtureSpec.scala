@@ -13,9 +13,11 @@ import org.scalatest.BeforeAndAfterAll
   * and the reader threw at analysis time for every events consumer.
   * These tests make that class of failure loud and local:
   *
-  *  - the analyze-only guard runs `queryExecution.analyzed` on EVERY
+  *  - the plan-only guard runs `queryExecution.sparkPlan` on EVERY
   *    enrolled query against the live sf0.001 fixture — any fixture
-  *    schema drift fails the suite in seconds, without executing plans;
+  *    schema drift fails the suite in seconds, without executing plans,
+  *    and every row passes the extensions' planner checks (the
+  *    cartesian guard);
   *  - the dual-physical-type test pins BOTH branches of
   *    [[Tables.events]] against tiny self-written parquet, so the next
   *    regeneration (either direction) cannot break the reader.
@@ -24,23 +26,20 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   override def afterAll(): Unit = { spark.catalog.clearCache(); spark.stop() }
 
-  test("schema-drift guard: every enrolled query analyzes against sf0.001") {
+  test("schema-drift guard: every enrolled query plans against sf0.001") {
     // Analysis resolves every column reference against the live fixture
-    // schemas — a renamed/retyped fixture column fails here by name.
+    // schemas — a renamed/retyped fixture column fails here by name —
+    // and planning runs the extensions' strategies, the cartesian guard
+    // among them.
     // (Construction cost only: sink rows perform their small writes and
     // eager localCheckpoints run at sf0.001 scale, still seconds total.)
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        try { fn(spark, sf).queryExecution.analyzed; None }
+        try { fn(spark, sf).queryExecution.sparkPlan; None }
         catch {
           case e: Throwable =>
             Some(s"$name: ${String.valueOf(e.getMessage).take(200)}")
@@ -48,7 +47,7 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.catalog.clearCache()
     assert(failures.isEmpty,
-      s"${failures.size} queries no longer analyze:\n${failures.mkString("\n")}")
+      s"${failures.size} queries no longer plan:\n${failures.mkString("\n")}")
   }
 
   test("Tables.events reads both physical ts types with identical semantics") {

@@ -12,11 +12,7 @@ object GraftProps extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   // ---- pure-model vs engine: set algebra ----------------------------
 
@@ -45,7 +41,6 @@ object GraftProps extends Properties("graft") {
   property("fvec_dot matches sequential double-widened reference") =
     forAll(floatVecs) { case (a, b) =>
       import spark.implicits._
-      graft.plans.GraftExtensions.install(spark)
       val got = Seq((a, b)).toDF("a", "b")
         .selectExpr("fvec_dot(a, b) AS d").collect().head.getDouble(0)
       val want = a.zip(b).foldLeft(0.0) { case (acc, (x, y)) =>
@@ -59,7 +54,6 @@ object GraftProps extends Properties("graft") {
   property("simhash60 matches the reference bit-balance fold") =
     forAll(hashArrays) { hs =>
       import spark.implicits._
-      graft.plans.GraftExtensions.install(spark)
       val got = Seq(Tuple1(hs)).toDF("hs")
         .selectExpr("simhash60(hs) AS s").collect().head.getLong(0)
       val bal = new Array[Int](60)
@@ -99,7 +93,6 @@ object GraftProps extends Properties("graft") {
   property("topk_vals equals sort-desc-take-k of the group") =
     forAll(Gen.nonEmptyListOf(Gen.choose(-1000.0, 1000.0))) { xs =>
       import spark.implicits._
-      graft.plans.GraftExtensions.install(spark)
       val got = xs.map(Tuple1(_)).toDF("v")
         .repartition(4) // force partial buffers + merge across partitions
         .agg(org.apache.spark.sql.functions.expr("topk_vals(v, 5)"))
@@ -155,7 +148,6 @@ object GraftProps extends Properties("graft") {
   property("freq_sketch honors the Misra-Gries membership and error bounds") =
     forAll(tokenStreams) { toks =>
       import spark.implicits._
-      graft.plans.GraftExtensions.install(spark)
       val k = 16
       val n = toks.length
       val est = toks.toDF("tok").repartition(4)
@@ -181,7 +173,6 @@ object GraftProps extends Properties("graft") {
   property("nfc_normalize matches the JDK reference and is idempotent") =
     forAll(unicodeStrings) { s =>
       import spark.implicits._
-      graft.plans.GraftExtensions.install(spark)
       val got = Seq(s).toDF("s")
         .selectExpr("nfc_normalize(s) AS n", "nfc_normalize(nfc_normalize(s)) AS nn")
         .collect().head

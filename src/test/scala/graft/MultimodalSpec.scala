@@ -12,11 +12,7 @@ import graft.multimodal.Multimodal._
   * the schema, batching, and corrupt-input contracts are real). */
 class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   override def afterAll(): Unit = spark.stop()
 

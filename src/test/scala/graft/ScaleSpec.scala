@@ -14,12 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * `newSession()` without disturbing the shared context. */
 class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   override def afterAll(): Unit = spark.stop()
 

@@ -14,12 +14,7 @@ import graft.streaming._
   * event time, never wall clock; SURVEY §7.3-4). */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local()
 
   override def afterAll(): Unit = spark.stop()
 
