@@ -30,9 +30,9 @@ import graft.Tables._
   * constraint suite is ONE pass with conditional aggregates plus
   * broadcast-dim anti-join checks — no self-joins, no global sorts,
   * no driver materialization. countDistinct in the profiler is the
-  * exact-audit form; at 100 TB the same plan swaps in
-  * approx_count_distinct (HLL) per column, which this engine already
-  * ships (q_agg_approx_distinct / q_agg_hll_merge).
+  * exact-audit form; at 100 TB the same plan swaps in a DataSketches
+  * `hll_sketch_agg` per column, which this engine already ships
+  * (q_agg_approx_distinct / q_agg_hll_merge).
   */
 object Governance {
 
@@ -213,8 +213,12 @@ object Governance {
     * Shape: ONE scan, ONE aggregate row (24 measures), stack() to the
     * 6-row report. The multi-countDistinct expands the scan 6-way
     * (Spark's Expand) — the exact-profile cost; the 100 TB form swaps
-    * each countDistinct for approx_count_distinct and the Expand
-    * disappears into mergeable HLL sketches. */
+    * each countDistinct for `hll_sketch_estimate(hll_sketch_agg(c, 14))`
+    * and the Expand disappears into mergeable sketches. Not HLL++
+    * `approx_count_distinct`: its buffer can be neither stored nor
+    * merged across queries, and six of them at the default rsd carry
+    * 312 buffer fields, past `spark.sql.codegen.maxFields` (100), so
+    * the aggregate would run interpreted. */
   def dqProfile(spark: SparkSession, dir: String): DataFrame = {
     def prof(c: String, v: Column, tag: String): Seq[Column] = Seq(
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$tag"),

@@ -3737,13 +3737,17 @@ object LlmOps {
       .orderBy(col("lang"), col("rank"))
   }
 
-  /** Dataset card (round 4): the per-language summary sheet shipped
-    * with every released training corpus — doc/token/source counts,
-    * exact-dup rate, mean quality, dominant source. One partial-
-    * aggregable groupBy(lang) for the counts (count_distinct of the
-    * sha256 digest rides the same shuffle) + one tiny top-source rank;
-    * at 100 TB both shuffles key on the low-cardinality lang column and
-    * every aggregate is map-side combinable.
+  /** Dataset card: the per-language summary sheet shipped with every
+    * released training corpus — doc/token/source counts, exact-dup
+    * rate, mean quality, dominant source.
+    *
+    * Shape: no distinct aggregate, so no Expand. The counts fold in two
+    * levels over the `(lang, h)` de-duplication of the sha256 digest
+    * (`n_uniq` is the number of digests per lang); `n_sources` is a
+    * whole-partition count over the `(lang, source)` aggregate that the
+    * top-source rank already reads, so both come from one exchange. At
+    * 100 TB every aggregate is map-side combinable and the final
+    * shuffles key on the low-cardinality lang column.
     *
     * Determinism: mean quality is the exact BIGINT mean of the per-doc
     * e4-quantized score (floor(quality·10⁴) per row is fixed-order
@@ -3764,26 +3768,29 @@ object LlmOps {
           |  + 0.3 * least(n_tok / 100.0, 1.0)) * 10000.0) AS BIGINT)"""
           .stripMargin))
       .withColumn("h", sha2(lower(trim(col("text"))), 256))
-    val stats = docs.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok").cast("long")).as("n_tokens"),
-        countDistinct(col("source")).as("n_sources"),
-        countDistinct(col("h")).as("n_uniq"),
-        sum(col("q_e4")).as("q_sum"))
-      .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_sources"),
-        floor((lit(1.0) - col("n_uniq").cast("double") / col("n_docs"))
-          * 10000.0 + 0.5).cast("long").as("dup_rate_e4"),
-        floor(col("q_sum").cast("double") / col("n_docs") + 0.5)
-          .cast("long").as("mean_q_e4"))
+    val stats = docs.groupBy(col("lang"), col("h"))
+      .agg(count(lit(1)).as("n"), sum(col("n_tok").cast("long")).as("t"),
+        sum(col("q_e4")).as("q"))
+      .groupBy(col("lang"))
+      .agg(sum(col("n")).as("n_docs"), sum(col("t")).as("n_tokens"),
+        count(col("h")).as("n_uniq"), sum(col("q")).as("q_sum"))
     val topSource = docs.groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("src_cnt"))
+      .withColumn("n_sources",
+        count(col("source")).over(w.partitionBy(col("lang"))))
       .withColumn("rn", row_number().over(
         w.partitionBy(col("lang"))
           .orderBy(col("src_cnt").desc, col("source"))))
       .filter(col("rn") === 1)
-      .select(col("lang"), col("source").as("top_source"),
+      .select(col("lang"), col("n_sources"), col("source").as("top_source"),
         col("src_cnt").as("top_source_docs"))
     stats.join(topSource, Seq("lang"))
+      .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_sources"),
+        floor((lit(1.0) - col("n_uniq").cast("double") / col("n_docs"))
+          * 10000.0 + 0.5).cast("long").as("dup_rate_e4"),
+        floor(col("q_sum").cast("double") / col("n_docs") + 0.5)
+          .cast("long").as("mean_q_e4"),
+        col("top_source"), col("top_source_docs"))
       .orderBy(col("lang"))
   }
 

@@ -119,7 +119,7 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
   // every verdict is true AND the exact column matches an independent
   // computation — a false verdict would also fail the driver gate.
 
-  test("approx_count_distinct verdict true for every group, exact matches") {
+  test("agg_approx_distinct verdict true for every group, exact matches") {
     val rows = SparkEntry.queries("q_agg_approx_distinct")(spark, sf)
       .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2)))
     assert(rows.nonEmpty)
@@ -128,6 +128,48 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.foreach { case (k, within, n) =>
       assert(within, s"$k: HLL estimate outside 5% of exact $n")
       assert(n == exact(k), s"$k: exact col $n != ${exact(k)}")
+    }
+  }
+
+  test("agg_approx_distinct pin: sketches keyed by event_type, none per user") {
+    // Sketching beside a countDistinct would make the single-distinct
+    // rewrite carry a sketch buffer in every (event_type, user_id) group.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      HllSketchAgg, HyperLogLogPlusPlus}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val aggs = SparkEntry.queries("q_agg_approx_distinct")(spark, sf)
+      .queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a }
+    def keys(a: BaseAggregateExec): Set[String] =
+      a.groupingExpressions.map(_.name).toSet
+    def sketches(a: BaseAggregateExec) =
+      a.aggregateExpressions.map(_.aggregateFunction).filter {
+        case _: HllSketchAgg | _: HyperLogLogPlusPlus => true
+        case _ => false
+      }
+    aggs.filter(a => keys(a).contains("user_id")).foreach { a =>
+      assert(sketches(a).isEmpty, s"sketch grouped by ${keys(a)}:\n$a")
+    }
+    val sketched = aggs.filter(a => sketches(a).nonEmpty)
+    assert(sketched.nonEmpty, aggs.mkString("\n"))
+    sketched.foreach { a =>
+      assert(keys(a) == Set("event_type"), s"keys ${keys(a)}:\n$a")
+      assert(sketches(a).forall(_.isInstanceOf[HllSketchAgg]), a.toString)
+    }
+  }
+
+  test("dataset_card: no Expand in the optimized plan, card columns unchanged") {
+    // an Expand orders its distinct-aggregate slots by JVM history, so
+    // the same row could plan two ways
+    import org.apache.spark.sql.catalyst.plans.logical.Expand
+    val df = SparkEntry.queries("q_llm_dataset_card")(spark, sf)
+    val expands = df.queryExecution.optimizedPlan.collect { case e: Expand => e }
+    assert(expands.isEmpty, df.queryExecution.optimizedPlan.toString)
+    assert(df.columns.toSeq == Seq("lang", "n_docs", "n_tokens", "n_sources",
+      "dup_rate_e4", "mean_q_e4", "top_source", "top_source_docs"))
+    val rows = df.collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getLong(3) >= 1 && r.getLong(7) <= r.getLong(1), r.toString)
     }
   }
 

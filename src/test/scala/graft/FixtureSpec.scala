@@ -18,6 +18,9 @@ import org.scalatest.BeforeAndAfterAll
   *    schema drift fails the suite in seconds, without executing plans,
   *    and every row passes the extensions' planner checks (the
   *    cartesian guard);
+  *  - the codegen-width guard plans the same rows and fails on any
+  *    operator whose schema is wider than `spark.sql.codegen.maxFields`,
+  *    which whole-stage codegen would leave interpreted;
   *  - the dual-physical-type test pins BOTH branches of
   *    [[Tables.events]] against tiny self-written parquet, so the next
   *    regeneration (either direction) cannot break the reader.
@@ -48,6 +51,27 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.clearCache()
     assert(failures.isEmpty,
       s"${failures.size} queries no longer plan:\n${failures.mkString("\n")}")
+  }
+
+  test("codegen-width guard: no planned operator is wider than codegen.maxFields") {
+    // Whole-stage codegen skips any operator whose input or output
+    // schema has more nested fields than spark.sql.codegen.maxFields, so
+    // such an operator runs interpreted (an HLL++ aggregate buffer at
+    // rsd 0.02 has 410). Spark's own predicate; a child's output is its
+    // parent's input. Plan nodes only: `subqueries` of a pre-preparation
+    // plan are logical plans.
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val conf = spark.sessionState.conf
+    val wide = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        fn(spark, sf).queryExecution.sparkPlan.collect {
+          case p if WholeStageCodegenExec.isTooManyFields(conf, p.schema) =>
+            s"$name: ${p.nodeName} outputs ${p.schema.size} columns"
+        }
+    }
+    spark.catalog.clearCache()
+    assert(wide.isEmpty, s"operators past ${conf.wholeStageMaxNumFields}" +
+      s" fields:\n${wide.mkString("\n")}")
   }
 
   test("Tables.events reads both physical ts types with identical semantics") {
