@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
-/** Size-gated broadcast hints (round 10, the VERDICT r9 sweep).
+/** Size-gated broadcast hints: the one owner of the broadcast size gate.
   *
   * A forced `broadcast()` never falls back: past the broadcast cap or
   * executor memory it kills the job, so hinting a frame whose row count
   * GROWS with the data (per-node degree/rank/marginal tables, dimension
   * tables in TPC-H-style scaling) is a 100×-scale hazard even when the
-  * frame is tiny on the fixture. House rule after the round-9
-  * triBase/modularity sweep, finished across the graph/basket/textrank
-  * family this round:
+  * frame is tiny on the fixture. House rule:
   *
   *   - frames bounded by a CONSTANT (top-k rows, quantile thresholds,
   *     1-row scalar totals, fixed walker frontiers) keep an
@@ -24,23 +22,24 @@ import org.apache.spark.sql.functions.broadcast
   *   - data-sized frames inside ITERATED/unrolled loops, where the
   *     hint has a measured win (pagerank/hits/textrank: without the
   *     hint AQE left SortMergeJoins in later unrolled iterations —
-  *     57→8 exchanges measured on pagerank), are size-gated through
-  *     [[bcastIfAtMost]]: the gate count runs once per session against
-  *     a memoized substrate ([[FrameMemo.cachedCount]]), the hint
-  *     applies only below the row cap, and above the cap the SAME loop
-  *     runs hint-free with keyed co-partitioned joins — the scale plan
-  *     is code the engine executes, not a scaladoc promise.
+  *     57→8 exchanges measured on pagerank), and data-sized dimension
+  *     tables, are size-gated through [[gate]]: the gate count runs once
+  *     per session against a memoized substrate
+  *     ([[FrameMemo.cachedCount]]), the hint applies only below the row
+  *     cap, and above the cap the SAME plan runs hint-free with keyed
+  *     co-partitioned joins — the scale plan is code the engine
+  *     executes, not a scaladoc promise.
   */
 object Hints {
 
   /** Broadcast byte budget per executor copy: ~100 MB — comfortably
     * inside a 4–8 GiB executor and far under the 8 GB broadcast-table
-    * hard cap. The row gate below derives from this budget and a
+    * hard cap. The row gate derives from this budget and a
     * caller-supplied average row width, so wide rows tighten the row
-    * cap instead of sailing past a rows-only gate (round 11, ADVICE
-    * r10: the 4 M-row ≈ 100 MB arithmetic assumed ~24 B/row, which
-    * holds for narrow integer-keyed projections but not for
-    * string-keyed vocab tokens or full dimension rows). */
+    * cap instead of sailing past a rows-only gate: the 4 M-row ≈ 100 MB
+    * arithmetic assumes ~24 B/row, which holds for narrow integer-keyed
+    * projections but not for string-keyed vocab tokens or full
+    * dimension rows. */
   val BcastByteBudget: Long = 100L * 1024 * 1024
 
   /** Row cap below which a NARROW (≈24 B/row, integer-keyed projection)
@@ -50,15 +49,27 @@ object Hints {
     * `avgRowBytes` instead of relying on this default. */
   val NodeRowCap: Long = 4000000L
 
-  /** Apply the broadcast hint only when the caller-supplied row count
-    * (typically a session-memoized substrate count — edges bound nodes,
-    * so an edge count is a conservative gate for any node-sized
-    * derivative) is at most `cap` AND the estimated broadcast footprint
-    * `rows × avgRowBytes` fits [[BcastByteBudget]]; otherwise return
-    * the frame unhinted so the join plans as a keyed shuffle join that
-    * co-partitions. `avgRowBytes` defaults to the narrow-projection
-    * width the row cap was calibrated for; string-keyed or full-row
-    * frames pass their observed width (fixture-measured, conservative). */
+  /** The broadcast gate keyed on a session-memoized row count: reads the
+    * row count of `counted` once per (session, `dir`, `key`) through
+    * [[FrameMemo.cachedCount]] and returns the function that hints a
+    * frame by [[bcastIfAtMost]] on that count. `counted` is typically a
+    * memoized substrate whose size bounds every gated frame (edges bound
+    * nodes, so an edge count is a conservative gate for any node-sized
+    * derivative) or the gated table itself. */
+  def gate(spark: SparkSession, dir: String, key: String,
+      counted: => DataFrame, cap: Long = NodeRowCap,
+      avgRowBytes: Long = 24L): DataFrame => DataFrame = {
+    val rows = FrameMemo.cachedCount(spark, dir, key)(counted)
+    df => bcastIfAtMost(df, rows, cap, avgRowBytes)
+  }
+
+  /** Apply the broadcast hint only when `rows` is at most `cap` AND the
+    * estimated broadcast footprint `rows × avgRowBytes` fits
+    * [[BcastByteBudget]]; otherwise return the frame unhinted so the
+    * join plans as a keyed shuffle join that co-partitions.
+    * `avgRowBytes` defaults to the narrow-projection width the row cap
+    * was calibrated for; string-keyed or full-row frames pass their
+    * observed width (fixture-measured, conservative). */
   def bcastIfAtMost(df: DataFrame, rows: Long,
       cap: Long = NodeRowCap, avgRowBytes: Long = 24L): DataFrame =
     if (rows <= cap && rows <= BcastByteBudget / math.max(avgRowBytes, 1L))

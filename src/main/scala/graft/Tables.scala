@@ -74,22 +74,37 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
+  /** Session-memoized row count of fixture table `name`: one count job
+    * per session (a parquet-footer read) under the key `"$name-rows"`.
+    * The document-count gates, the skew-join sizing and [[rowsGate]]
+    * all read this one count. */
+  def rows(s: SparkSession, d: String, name: String): Long =
+    FrameMemo.cachedCount(s, d, rowsKey(name))(t(s, d, name))
+
+  /** The broadcast gate on [[rows]] of table `name`: hints a frame
+    * derived from the table (the table itself, or a projection of it)
+    * only while the table's row count and `avgRowBytes` fit
+    * [[Hints.bcastIfAtMost]]. */
+  def rowsGate(s: SparkSession, d: String, name: String,
+      avgRowBytes: Long): DataFrame => DataFrame =
+    Hints.gate(s, d, rowsKey(name), t(s, d, name),
+      avgRowBytes = avgRowBytes)
+
+  private def rowsKey(name: String): String = s"$name-rows"
+
   /** SIZE-GATED broadcast variants of the SCALING dimension tables:
     * part/supplier/customer grow linearly with SF in TPC-H-style
     * scaling, so a forced broadcast is the classic dim pattern on the
     * fixture and an executor-memory wall at 100× — the hint applies
-    * only while the table's row count
-    * (one memoized count job per session — a parquet footer read) sits
-    * under [[Hints.NodeRowCap]]; past it the keyed join co-partitions.
+    * only while the table's [[rows]] sit under [[Hints.NodeRowCap]];
+    * past it the keyed join co-partitions. Full dim rows carry strings
+    * (name/address/comment), so the gate assumes a measured-conservative
+    * ~256 B/row, not the narrow 24 B default.
     * `region`/`nation` keep plain `broadcast()` at call sites: their
     * cardinality is fixed by the schema spec (5/25 rows at EVERY SF),
     * not by the data volume. */
   private def dimB(s: SparkSession, d: String, name: String): DataFrame =
-    Hints.bcastIfAtMost(t(s, d, name),
-      FrameMemo.cachedCount(s, d, s"$name-rows")(t(s, d, name)),
-      // Full dim rows carry strings (name/address/comment): gate on a
-      // measured-conservative ~256 B/row, not the narrow 24 B default.
-      avgRowBytes = 256L)
+    rowsGate(s, d, name, avgRowBytes = 256L)(t(s, d, name))
   def partB(s: SparkSession, d: String): DataFrame = dimB(s, d, "part")
   def supplierB(s: SparkSession, d: String): DataFrame =
     dimB(s, d, "supplier")

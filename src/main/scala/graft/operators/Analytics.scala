@@ -181,7 +181,7 @@ object Analytics {
   /** Doc count below which the verify tail uses candidate-side
     * SHUFFLE_HASH builds instead of the planner's unhinted choice —
     * between the two measured points of the one-JVM order-alternating
-    * A/B, round 15 (`OPTIMIZATION_r15.md`): at sf0.1 (5,000
+    * A/B in `OPTIMIZATION_r15.md`: at sf0.1 (5,000
     * docs) SHUFFLE_HASH wins all 6 rounds (median 3.10 s vs 3.89 —
     * the two doc-sized broadcast BUILDS dominate a small corpus), at
     * sf1 (50,000 docs) the unhinted form wins all 6 rounds (median
@@ -191,15 +191,14 @@ object Analytics {
     * UNHINTED, which is also the 100 TB-safe shape: at real corpus
     * stats `sets` exceeds the broadcast threshold and the planner
     * falls back to a keyed join AQE can re-plan, instead of a forced
-    * strategy. Same session-memoized gate discipline as
-    * Hints.bcastIfAtMost / rareShinglePairs. */
+    * strategy. The gate reads the session-memoized document count
+    * [[graft.Tables.rows]], as rareShinglePairs does. */
   val PrefixJoinShjMaxDocs = 20000L
 
   def prefixJoin(spark: SparkSession, dir: String): DataFrame =
     prefixJoinImpl(spark, dir,
       shuffleHashVerify =
-        graft.FrameMemo.cachedCount(spark, dir, "documents-rows")(
-          documents(spark, dir)) < PrefixJoinShjMaxDocs)
+        graft.Tables.rows(spark, dir, "documents") < PrefixJoinShjMaxDocs)
 
   /** `shuffleHashVerify` switches the two verify joins between the
     * planner's unhinted choice (false — doc-sized `sets` broadcasts
@@ -556,7 +555,7 @@ object Analytics {
       .orderBy(col("user_id"), col("island_start"))
   }
 
-  /** TextRank keyword extraction (round 8, Mihalcea & Tarau 2004): the
+  /** TextRank keyword extraction (Mihalcea & Tarau 2004): the
     * corpus's top-20 keywords by PageRank over the token ADJACENCY graph
     * — undirected edges between tokens that appear next to each other
     * anywhere in the corpus (window = 1, unweighted, the paper's base
@@ -564,16 +563,16 @@ object Analytics {
     * connector words from merely frequent ones — the graph-native
     * complement to the count-native tf-idf and PMI rows.
     *
-    * Exactness + shape: the [[Graph.pagerank]] integer idiom verbatim
-    * (ranks ×10⁶, contrib = rank div outdeg, blend 150000 + 85·Σ div
-    * 100, two unrolled iterations). The only corpus-sized ops are the
-    * bigram explode and the edge-distinct shuffle; the word graph
-    * itself is vocabulary-sized (≪ corpus — Heaps' law, measured by
-    * q_llm_heaps_fit) but still DATA-sized, so the per-step rank/degree
-    * hint is SIZE-GATED (round 10, VERDICT r9): the word-edge frame is
-    * memoized (it feeds both unrolled steps plus the degree build —
-    * the checkpoint replaces ReuseExchange across those consumers) and
-    * its count gates the hint; past the cap the identical loop runs
+    * Exactness + shape: two unrolled [[Graph.pagerankStep]] updates —
+    * the [[Graph.pagerank]] integer idiom (ranks ×10⁶, contrib = rank
+    * div outdeg, blend 150000 + 85·Σ div 100). The only corpus-sized
+    * ops are the bigram explode and the edge-distinct shuffle; the word
+    * graph itself is vocabulary-sized (≪ corpus — Heaps' law, measured
+    * by q_llm_heaps_fit) but still DATA-sized, so the per-step
+    * rank/degree hint is SIZE-GATED: the word-edge frame is memoized
+    * (it feeds both unrolled steps plus the degree build — the
+    * checkpoint replaces ReuseExchange across those consumers) and its
+    * count gates the hint; past the cap the identical loop runs
     * hint-free co-partitioned. */
   def textrank(spark: SparkSession, dir: String): DataFrame = {
     val edges = graft.FrameMemo.cached(spark, dir, "textrank-edges") {
@@ -591,29 +590,15 @@ object Analytics {
         .union(bg.select(col("w2").as("src"), col("w1").as("dst")))
         .distinct()
     }
-    val nEdges = graft.FrameMemo.cachedCount(
-      spark, dir, "textrank-edges")(edges)
-    def bc(df: DataFrame): DataFrame =
-      // Rank/degree frames here are keyed by token STRINGS, not ints:
-      // gate on a wider ~64 B/row estimate (round 11, ADVICE r10).
-      graft.Hints.bcastIfAtMost(df, nEdges, avgRowBytes = 64L)
+    // rank/degree frames here are keyed by token STRINGS, not ints:
+    // the gate assumes a wider ~64 B/row
+    val gate = graft.Hints.gate(spark, dir, "textrank-edges", edges,
+      avgRowBytes = 64L)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outd"))
     val r0 = deg.select(col("src").as("nid"), lit(1000000L).as("rank"),
       col("outd"))
-    def step(ranks: DataFrame, last: Boolean): DataFrame = {
-      val msgs = edges
-        .join(bc(ranks.withColumn("contrib", expr("rank div outd"))
-          .select(col("nid"), col("contrib"))),
-          edges("src") === col("nid"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("msum"))
-        .select(col("dst").as("nid"),
-          (lit(150000L) + expr("(85 * msum) div 100")).as("rank"))
-      if (last) msgs
-      else msgs.join(bc(deg), col("nid") === deg("src"))
-        .select(col("nid"), col("rank"), col("outd"))
-    }
-    step(step(r0, last = false), last = true)
+    Graph.pagerankStep(edges, Graph.pagerankStep(edges, r0, Some(deg), gate),
+      None, gate)
       .select(col("nid").as("token"), col("rank").as("rank_e6"))
       .orderBy(col("rank_e6").desc, col("token"))
       .limit(20)

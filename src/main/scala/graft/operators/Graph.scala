@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -28,71 +28,84 @@ object Graph {
   /** 3 exact-integer PageRank iterations over the undirected (both
     * directions materialized) part↔supplier graph.
     *
-    * Node ids are BIGINT (part → 2k, supplier → 2k+1) through the whole
-    * loop — every shuffle and join keys on an 8-byte integer, never the
-    * "p:123" label string (string-keyed graph loops were measured ~2×
-    * slower; labels are minted once in the final projection).
+    * Node ids are BIGINT (part → 2k, supplier → 2k+1, [[psArcs]]) through
+    * the whole loop — every shuffle and join keys on an 8-byte integer,
+    * never the "p:123" label string (string-keyed graph loops were
+    * measured ~2× slower; labels are minted once in the final
+    * projection).
     *
-    * Perf (round 5, was the round-4 bench outlier at 15.8 s sf0.1):
-    * no `.cache()` — the whole 3-iteration loop is ONE declarative plan,
+    * No `.cache()`: the whole 3-iteration loop is ONE declarative plan,
     * so Catalyst's ReuseExchange dedupes the edge-distinct shuffle and
     * the degree aggregation across iterations for free, while an
     * explicit cache forced a blocking InMemoryRelation materialization
     * job plus a columnar round-trip on every read (measured: cache 4.9 s
-    * vs reuse 2.0 s, identical results). The per-node contribution
-    * `rank div outd` is folded into the node-sized table BEFORE the
-    * broadcast, so each iteration hash-joins the edge stream against ONE
-    * small table instead of two. An open-ended (driver-loop) variant
-    * would lose cross-iteration exchange reuse and then caching/
-    * checkpointing the graph IS the right call — that shape lives in
-    * LlmOps.connectedComponents. */
+    * vs reuse 2.0 s, identical results). An open-ended (driver-loop)
+    * variant loses cross-iteration exchange reuse, and then
+    * checkpointing the graph IS the right call — that shape is
+    * [[pagerankConverged]].
+    *
+    * The node-sized rank and degree frames are broadcast through the
+    * size gate on the memoized edge count (edges bound nodes, so it is a
+    * conservative bound for every node-sized frame here): without the
+    * hint AQE left SortMergeJoins in later iterations (measured: 57
+    * exchanges → 8); past the cap the SAME loop runs hint-free and the
+    * keyed equi-joins co-partition edges and ranks on the node key. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    // scaled-id view of the memoized bipartite edges (round 9)
-    val pairs = psEdges(spark, dir)
-      .select(expr("p * 2L").as("p"), expr("s * 2L + 1L").as("s"))
-    val edges = pairs.select(col("p").as("src"), col("s").as("dst"))
-      .union(pairs.select(col("s").as("src"), col("p").as("dst")))
+    val edges = psArcs(spark, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outd"))
     val r0 = deg.select(col("src").as("nid"), lit(1000000L).as("rank"),
       col("outd"))
-    // ranks are node-sized (≪ edges) — broadcast them so each iteration
-    // is scan-edges + one map-side hash join + ONE shuffle (the groupBy
-    // dst). Without the hint AQE left SortMergeJoins in later iterations
-    // (measured: 57 exchanges → 8). The hint is SIZE-GATED (round 10,
-    // VERDICT r9): a forced broadcast never falls back, so past the row
-    // cap the SAME loop runs hint-free and the keyed equi-joins
-    // co-partition edges and ranks on the node key — the gate count is
-    // the session-memoized edge count (edges bound nodes, so it is a
-    // conservative bound for every node-sized frame here; one cheap
-    // count job over the checkpointed substrate per session). `last`
-    // skips re-attaching the degree after the final iteration (the
-    // inner deg-join is semantically a no-op — every dst is also a src
-    // in the undirected graph — but Catalyst cannot prove that, so we
-    // elide it by construction).
-    val nEdges = graft.FrameMemo.cachedCount(spark, dir, "ps-edges")(
-      psEdges(spark, dir))
-    def bc(df: DataFrame): DataFrame =
-      graft.Hints.bcastIfAtMost(df, nEdges)
-    def step(ranks: DataFrame, last: Boolean): DataFrame = {
-      val msgs = edges
-        .join(bc(ranks.withColumn("contrib", expr("rank div outd"))
-          .select(col("nid"), col("contrib"))),
-          edges("src") === col("nid"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("msum"))
-        .select(col("dst").as("nid"),
-          (lit(150000L) + expr("(85 * msum) div 100")).as("rank"))
-      if (last) msgs
-      else msgs.join(bc(deg), col("nid") === deg("src"))
-        .select(col("nid"), col("rank"), col("outd"))
-    }
+    val gate = graft.Hints.gate(spark, dir, "ps-edges", psEdges(spark, dir))
+    // the final step skips the degree re-attach (the inner deg-join is
+    // semantically a no-op — every dst is also a src in the undirected
+    // graph — but Catalyst cannot prove that, so it is elided by
+    // construction)
+    def step(ranks: DataFrame, last: Boolean): DataFrame =
+      pagerankStep(edges, ranks, if (last) None else Some(deg), gate)
     step(step(step(r0, last = false), last = false), last = true)
-      .select(expr(
-        "CASE WHEN nid % 2 = 0 THEN 'p:' || (nid div 2)" +
-          " ELSE 's:' || (nid div 2) END").as("node"),
-        col("rank"))
+      .select(psLabel.as("node"), col("rank"))
       .orderBy(col("node"))
   }
+
+  /** One exact-integer PageRank update over the arc list `arcs`
+    * (src, dst) — shared by [[pagerank]], [[pagerankConverged]] and
+    * `Analytics.textrank`. Each node's contribution `rank div outd` is
+    * folded into the node-sized `ranks` (nid, rank, outd) BEFORE the
+    * join, so each step hash-joins the arc stream against ONE small
+    * table; each dst sums its contributions and blends to
+    * `150000 + (85 · Σ) div 100` (exact BIGINT, so the result is
+    * independent of aggregation order). With `deg` (src, outd) the
+    * out-degree is re-attached for the next step, giving
+    * (nid, rank, outd); without it the result is (nid, rank). `gate`
+    * hints the node-sized frames. */
+  private[operators] def pagerankStep(arcs: DataFrame, ranks: DataFrame,
+      deg: Option[DataFrame], gate: DataFrame => DataFrame): DataFrame = {
+    val msgs = arcs
+      .join(gate(ranks.withColumn("contrib", expr("rank div outd"))
+        .select(col("nid"), col("contrib"))),
+        arcs("src") === col("nid"))
+      .groupBy(col("dst"))
+      .agg(sum(col("contrib")).as("msum"))
+      .select(col("dst").as("nid"),
+        (lit(150000L) + expr("(85 * msum) div 100")).as("rank"))
+    deg.fold(msgs)(d => msgs.join(gate(d), col("nid") === d("src"))
+      .select(col("nid"), col("rank"), col("outd")))
+  }
+
+  /** Both directions of the memoized part↔supplier edges as scaled-id
+    * arcs (src, dst): part p → 2p, supplier s → 2s + 1, so one BIGINT
+    * key space holds both sides ([[psLabel]] maps back). */
+  private def psArcs(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = psEdges(spark, dir)
+      .select(expr("p * 2L").as("p"), expr("s * 2L + 1L").as("s"))
+    pairs.select(col("p").as("src"), col("s").as("dst"))
+      .union(pairs.select(col("s").as("src"), col("p").as("dst")))
+  }
+
+  /** The "p:k" / "s:k" label of a [[psArcs]] node id `nid`. */
+  private def psLabel: Column = expr(
+    "CASE WHEN nid % 2 = 0 THEN 'p:' || (nid div 2)" +
+      " ELSE 's:' || (nid div 2) END")
 
   /** Open-ended PageRank: iterate the SAME exact-integer update as
     * [[pagerank]] until the largest per-node rank change is ≤ `epsMicro`
@@ -101,17 +114,19 @@ object Graph {
     * not a constant in the query text. Returns (result, iterations run).
     *
     * Shape per iteration: one hash join of the edge stream against the
-    * node-sized rank table (broadcast here; co-partition at scales past
-    * broadcast) + one partial-aggregable groupBy(dst) + a scalar
-    * max-|Δrank| convergence job. Unlike the unrolled form, the driver
-    * loop CUTS cross-iteration exchange reuse, so the loop checkpoints:
+    * node-sized rank table (size-gated broadcast, as in [[pagerank]]) +
+    * one partial-aggregable groupBy(dst) + a scalar max-|Δrank|
+    * convergence job. Unlike the unrolled form, the driver loop CUTS
+    * cross-iteration exchange reuse, so the loop checkpoints:
     * `localCheckpoint` truncates lineage every round (same load-bearing
     * reason as LlmOps.connectedComponents — the plan would otherwise
     * grow geometrically and optimizer time would dominate), and the
     * eager checkpoint doubles as the materialization the Δ-check reads,
     * so each round computes the new ranks exactly once. A non-converged
     * exit at `maxIter` with `failOnMaxIter` THROWS rather than returning
-    * a silently-unconverged ranking.
+    * a silently-unconverged ranking. `bcastCap` is the gate's row cap:
+    * BatchSpec forces the over-cap, hint-free path (cap = 0) and proves
+    * both forms hash-identical on the fixture.
     *
     * Convergence-rate reality check: this graph is BIPARTITE
     * (part↔supplier), so the power iteration carries a period-2
@@ -132,11 +147,7 @@ object Graph {
       epsMicro: Long = 100L, maxIter: Int = 80,
       failOnMaxIter: Boolean = false,
       bcastCap: Long = graft.Hints.NodeRowCap): (DataFrame, Int) = {
-    val pairs = psEdges(spark, dir)
-      .select(expr("p * 2L").as("p"), expr("s * 2L + 1L").as("s"))
-    val edges = pairs.select(col("p").as("src"), col("s").as("dst"))
-      .union(pairs.select(col("s").as("src"), col("p").as("dst")))
-      .localCheckpoint()
+    val edges = psArcs(spark, dir).localCheckpoint()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outd"))
       .localCheckpoint()
     var ranks = deg
@@ -144,26 +155,10 @@ object Graph {
       .localCheckpoint()
     var iter = 0
     var converged = false
-    // same size-gated hint as [[pagerank]]: below the cap each round is
-    // a map-side hash join; above it the identical loop runs hint-free
-    // co-partitioned. `bcastCap` is exposed so BatchSpec can force the
-    // over-cap path (cap = 0) and prove both forms hash-identical on
-    // the fixture — the scale plan is executed code, not a promise.
-    val nEdges = graft.FrameMemo.cachedCount(spark, dir, "ps-edges")(
-      psEdges(spark, dir))
-    def bc(df: DataFrame): DataFrame =
-      graft.Hints.bcastIfAtMost(df, nEdges, bcastCap)
+    val gate = graft.Hints.gate(spark, dir, "ps-edges", psEdges(spark, dir),
+      bcastCap)
     while (!converged && iter < maxIter) {
-      val next = edges
-        .join(bc(ranks.withColumn("contrib", expr("rank div outd"))
-          .select(col("nid"), col("contrib"))),
-          edges("src") === col("nid"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("msum"))
-        .select(col("dst").as("nid"),
-          (lit(150000L) + expr("(85 * msum) div 100")).as("rank"))
-        .join(bc(deg), col("nid") === deg("src"))
-        .select(col("nid"), col("rank"), col("outd"))
+      val next = pagerankStep(edges, ranks, Some(deg), gate)
         .localCheckpoint() // eager: materializes once, Δ-check reuses it
       val deltaRow = next.as("n")
         .join(ranks.as("p"), col("n.nid") === col("p.nid"))
@@ -178,15 +173,12 @@ object Graph {
     if (!converged && failOnMaxIter)
       throw new IllegalStateException(
         s"pagerank did not converge to eps=$epsMicro in $maxIter iterations")
-    val out = ranks.select(expr(
-      "CASE WHEN nid % 2 = 0 THEN 'p:' || (nid div 2)" +
-        " ELSE 's:' || (nid div 2) END").as("node"),
-      col("rank"))
+    val out = ranks.select(psLabel.as("node"), col("rank"))
       .orderBy(col("node"))
     (out, iter)
   }
 
-  /** Degree-distribution diagnostic (round 4 part 2): log2-bucketed
+  /** Degree-distribution diagnostic: log2-bucketed
     * degree histogram per bipartite side — the first measurement before
     * ANY graph job at scale (it decides broadcast vs co-partition, skew
     * salting, and whether a super-node needs splitting). The bucket is
@@ -210,7 +202,7 @@ object Graph {
       .orderBy(col("side"), col("log2_bucket"))
   }
 
-  /** Bipartite projection / co-occurrence (round 5): supplier pairs
+  /** Bipartite projection / co-occurrence: supplier pairs
     * weighted by shared parts — the item-item co-occurrence matrix of
     * every recommender ("suppliers that stock the same parts"), plus an
     * integer Jaccard affinity (shared·10⁴ div (d₁+d₂−shared)). Top-50
@@ -223,8 +215,8 @@ object Graph {
     * call). The self-join is an equi-join on part (no cartesian); the
     * pair groupBy key space is ≤ |suppliers|²/2 but the aggregation is
     * partial-aggregable so map-side combine collapses it early; the
-    * degree lookups carry NO broadcast() hint (round 10, VERDICT r9):
-    * the frame is node-sized — data-sized, not constant — so AQE picks
+    * degree lookups carry NO broadcast() hint: the frame is
+    * node-sized — data-sized, not constant — so AQE picks
     * broadcast-hash at runtime while it is small and a keyed
     * co-partitioned join past that (plan-pinned in BatchSpec). */
   def coProjection(spark: SparkSession, dir: String): DataFrame = {
@@ -233,13 +225,13 @@ object Graph {
     // The pair fan-out is the row's irreducible cost (sf0.1 fixture:
     // 591 k edges, per-part degree ~30 → 8.7 M pair rows into a 500 k-
     // key exact aggregate — EVERY supplier pair co-occurs, the
-    // projection graph is complete; measured in PLANS.md round 12).
+    // projection graph is complete; measured in PLANS.md).
     // The groupBy key is PACKED into one long (s1·10⁶ + s2 — exact
     // through 10⁶ suppliers ≈ sf100) so the 8.7 M-row exchange carries
     // one 8-byte key instead of two, and partial/final hashing probes
     // a single-column map: measured 1.94 → 1.76 s min-of-3 at sf0.1.
-    // The range bound is ENFORCED, not just documented (round 13,
-    // ADVICE r12): an id ≥ 10⁶ would silently collide keys and
+    // The range bound is ENFORCED, not just documented: an id ≥ 10⁶
+    // would silently collide keys and
     // aggregate wrong — the guard is a per-row two-compare CASE inside
     // the same codegen'd projection (no extra job), raising loudly on
     // the first out-of-range fixture instead.
@@ -264,7 +256,126 @@ object Graph {
       .limit(50)
   }
 
-  /** Degree-oriented triangle counting (round 6) on the market-basket
+  /** Distinct (order, part) pairs — the basket substrate under
+    * cooccEdges, basketLift, and assocRules, MEMOIZED per
+    * (application, sfDir): each consumer re-ran the same
+    * corpus-sized distinct shuffle. At 100 TB this is the deduped
+    * order-lines projection every basket pipeline materializes
+    * first. */
+  private[operators] def opPairs(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "op-pairs") {
+      lineitem(spark, dir)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("pk"))
+        .distinct()
+    }
+
+  /** Distinct (part, supplier) bipartite edges — shared by pagerank
+    * (scaled-id view), degreeDist, coProjection, and hits, MEMOIZED
+    * for the same reason as [[opPairs]]. */
+  private[operators] def psEdges(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "ps-edges") {
+      lineitem(spark, dir)
+        .select(col("l_partkey").cast("long").as("p"),
+          col("l_suppkey").cast("long").as("s"))
+        .distinct()
+    }
+
+  /** Undirected distinct co-occurrence edges u < v (parts sharing an
+    * order) — the common substrate of FOUR enrolled graph rows
+    * (triangles, lpa, modularity, kcore), memoized per (application,
+    * sfDir) with an eager localCheckpoint. Each row
+    * previously re-ran the basket self-join + distinct; at 100 TB this
+    * frame is the persisted edge table every graph pipeline keeps
+    * anyway (the same argument as the MinHash fingerprint memo). */
+  private[operators] def cooccEdges(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "coocc-edges") {
+      val li = opPairs(spark, dir)
+      li.as("a")
+        .join(li.as("b"),
+          col("a.o") === col("b.o") && col("a.pk") < col("b.pk"))
+        .select(col("a.pk").as("u"), col("b.pk").as("v"))
+        .distinct()
+    }
+
+  /** Both directions of the memoized [[cooccEdges]] as arcs (u, v) —
+    * the symmetric edge list every walk, peel and neighbor join reads.
+    * Not memoized: the union is narrow work on top of the checkpointed
+    * frame, and a consumer that reads it in several jobs cuts it with
+    * its own `localCheckpoint`. */
+  private[operators] def cooccArcs(spark: SparkSession,
+      dir: String): DataFrame = {
+    val und = cooccEdges(spark, dir)
+    und.select(col("u"), col("v"))
+      .union(und.select(col("v").as("u"), col("u").as("v")))
+  }
+
+  /** Per-node degree census of the memoized co-occurrence graph —
+    * MEMOIZED: triangles' orientation,
+    * local bridges, rich club, transitivity, degree gini, modularity's
+    * community degrees, and the bfs2/closeness frontier seeds each
+    * re-ran the same union+groupBy degree shuffle over the edge frame.
+    * Node-sized — (n, d) — so the checkpoint is small by construction;
+    * at 100 TB this is the persisted degree table every graph audit
+    * reads (the coocc-edges argument one derivation further down). */
+  private[operators] def cooccDegrees(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "coocc-deg") {
+      val e0 = cooccEdges(spark, dir)
+      e0.select(col("u").as("n"))
+        .union(e0.select(col("v").as("n")))
+        .groupBy(col("n")).agg(count(lit(1)).as("d"))
+    }
+
+  /** Per-oriented-edge triangle-closing frame (ta, tb, cs): for each
+    * compact-forward-oriented edge a→b, cs = N⁺(a) ∩ N⁺(b) — every
+    * triangle appears exactly once at its base edge. MEMOIZED per
+    * (application, sfDir): its three consumers
+    * (q_graph_triangles, q_graph_transitivity via triangles,
+    * q_graph_local_bridges) each re-ran the orientation + adjacency
+    * build + intersection — the recompute was the whole cost of the
+    * local_bridges row when it ran over the driver bench's budget. At
+    * 100 TB this is the persisted triangle-incidence table.
+    *
+    * EDGE-ITERATOR closing, not wedge materialization. The first cut
+    * enumerated the ~20 M oriented wedges and joined them back to the
+    * edge list — measured 13.3–26.3 s inside the full bench (the wedge
+    * set dominated every data move, whether shuffled or probed against
+    * a broadcast). The adjacency-intersection form never materializes
+    * a wedge: out-degree is orientation-capped at O(√m), so each
+    * sorted neighbor array is small by construction. The only
+    * corpus-sized flow is the edge list streaming through two joins
+    * against the node-sized adjacency table. NO broadcast() hint on
+    * those joins: adjacency is per-node with arrays — a
+    * forced broadcast is an executor-memory wall at 100×; the keyed
+    * equi-join co-partitions at scale, and AQE still picks
+    * broadcast-hash at runtime while the frame is actually small
+    * (plan-pinned in BatchSpec). */
+  private[operators] def triBase(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.FrameMemo.cached(spark, dir, "tri-base") {
+      val e0 = cooccEdges(spark, dir)
+      val deg = cooccDegrees(spark, dir)
+      val fwd = col("du") < col("dv") ||
+        (col("du") === col("dv") && col("u") < col("v"))
+      val o = e0
+        .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
+        .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+        .select(when(fwd, col("u")).otherwise(col("v")).as("src"),
+          when(fwd, col("v")).otherwise(col("u")).as("dst"))
+      val adj = o.groupBy(col("src")).agg(
+        sort_array(collect_list(col("dst"))).as("nbrs"))
+      o.join(adj.select(col("src"), col("nbrs").as("na")), "src")
+        // a sink node has no adjacency row — left join + empty default
+        .join(adj.select(col("src").as("dst"), col("nbrs").as("nb")),
+          Seq("dst"), "left")
+        .select(col("src").as("ta"), col("dst").as("tb"),
+          expr("array_intersect(na, coalesce(nb, array()))").as("cs"))
+    }
+
+  /** Degree-oriented triangle counting on the market-basket
     * graph: parts co-purchased within the same order. All-integer, so
     * exact in both engines. Top-10 parts by triangle participation
     * (ties → part asc), with the global triangle total on every row.
@@ -289,123 +400,16 @@ object Graph {
     * (broadcast here, co-partition on the join key past broadcast
     * scale); the per-edge intersection runs inside one map stage; the
     * only explode is |triangles| rows for the c-role count. */
-  /** Distinct (order, part) pairs — the basket substrate under
-    * cooccEdges, basketLift, and assocRules, MEMOIZED per
-    * (application, sfDir) (round 9): each consumer re-ran the same
-    * corpus-sized distinct shuffle. At 100 TB this is the deduped
-    * order-lines projection every basket pipeline materializes
-    * first. */
-  private[operators] def opPairs(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "op-pairs") {
-      lineitem(spark, dir)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("pk"))
-        .distinct()
-    }
-
-  /** Distinct (part, supplier) bipartite edges — shared by pagerank
-    * (scaled-id view), degreeDist, coProjection, and hits, MEMOIZED
-    * (round 9) for the same reason as [[opPairs]]. */
-  private[operators] def psEdges(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "ps-edges") {
-      lineitem(spark, dir)
-        .select(col("l_partkey").cast("long").as("p"),
-          col("l_suppkey").cast("long").as("s"))
-        .distinct()
-    }
-
-  /** Undirected distinct co-occurrence edges u < v (parts sharing an
-    * order) — the common substrate of FOUR enrolled graph rows
-    * (triangles, lpa, modularity, kcore), memoized per (application,
-    * sfDir) with an eager localCheckpoint (round 8). Each row
-    * previously re-ran the basket self-join + distinct; at 100 TB this
-    * frame is the persisted edge table every graph pipeline keeps
-    * anyway (the same argument as the MinHash fingerprint memo). */
-  private[operators] def cooccEdges(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "coocc-edges") {
-      val li = opPairs(spark, dir)
-      li.as("a")
-        .join(li.as("b"),
-          col("a.o") === col("b.o") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("u"), col("b.pk").as("v"))
-        .distinct()
-    }
-
-  /** Per-oriented-edge triangle-closing frame (ta, tb, cs): for each
-    * compact-forward-oriented edge a→b, cs = N⁺(a) ∩ N⁺(b) — every
-    * triangle appears exactly once at its base edge. MEMOIZED per
-    * (application, sfDir) (round 9): its three consumers
-    * (q_graph_triangles, q_graph_transitivity via triangles,
-    * q_graph_local_bridges) each re-ran the orientation + adjacency
-    * build + intersection — the recompute was the whole cost of the
-    * local_bridges row the r8 driver bench flagged over budget. At
-    * 100 TB this is the persisted triangle-incidence table.
-    *
-    * EDGE-ITERATOR closing, not wedge materialization. The first cut
-    * enumerated the ~20 M oriented wedges and joined them back to the
-    * edge list — measured 13.3–26.3 s inside the full bench (the wedge
-    * set dominated every data move, whether shuffled or probed against
-    * a broadcast). The adjacency-intersection form never materializes
-    * a wedge: out-degree is orientation-capped at O(√m), so each
-    * sorted neighbor array is small by construction. The only
-    * corpus-sized flow is the edge list streaming through two joins
-    * against the node-sized adjacency table. NO broadcast() hint on
-    * those joins (round 9): adjacency is per-node with arrays — a
-    * forced broadcast is an executor-memory wall at 100×; the keyed
-    * equi-join co-partitions at scale, and AQE still picks
-    * broadcast-hash at runtime while the frame is actually small
-    * (plan-pinned in BatchSpec). */
-  /** Per-node degree census of the memoized co-occurrence graph —
-    * MEMOIZED (round 11, VERDICT r10 #1): triangles' orientation,
-    * local bridges, rich club, transitivity, degree gini, modularity's
-    * community degrees, and the bfs2/closeness frontier seeds each
-    * re-ran the same union+groupBy degree shuffle over the edge frame.
-    * Node-sized — (n, d) — so the checkpoint is small by construction;
-    * at 100 TB this is the persisted degree table every graph audit
-    * reads (the coocc-edges argument one derivation further down). */
-  private[operators] def cooccDegrees(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "coocc-deg") {
-      val e0 = cooccEdges(spark, dir)
-      e0.select(col("u").as("n"))
-        .union(e0.select(col("v").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    }
-
-  private[operators] def triBase(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.FrameMemo.cached(spark, dir, "tri-base") {
-      val e0 = cooccEdges(spark, dir)
-      val deg = cooccDegrees(spark, dir)
-      val fwd = col("du") < col("dv") ||
-        (col("du") === col("dv") && col("u") < col("v"))
-      val o = e0
-        .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-        .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-        .select(when(fwd, col("u")).otherwise(col("v")).as("src"),
-          when(fwd, col("v")).otherwise(col("u")).as("dst"))
-      val adj = o.groupBy(col("src")).agg(
-        sort_array(collect_list(col("dst"))).as("nbrs"))
-      o.join(adj.select(col("src"), col("nbrs").as("na")), "src")
-        // a sink node has no adjacency row — left join + empty default
-        .join(adj.select(col("src").as("dst"), col("nbrs").as("nb")),
-          Seq("dst"), "left")
-        .select(col("src").as("ta"), col("dst").as("tb"),
-          expr("array_intersect(na, coalesce(nb, array()))").as("cs"))
-    }
-
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     val base = triBase(spark, dir)
-    // SINGLE-PASS role counting (round 7): the r6 form consumed `base`
-    // FOUR times (ta-role agg + tb-role agg + c-role explode + total),
-    // and ReuseExchange does not dedupe across separate union branches —
-    // the edge self-join + distinct + adjacency build re-ran per
-    // consumer (measured 12.4 s in the r6 driver bench, the most
-    // expensive row in the suite). Each discovered triangle (ta,tb,c)
-    // now emits its three corners in ONE explode — 3·|triangles| rows,
-    // one groupBy — so `base` is evaluated exactly once. The node-sized
+    // SINGLE-PASS role counting: a form that consumed `base` FOUR
+    // times (ta-role agg + tb-role agg + c-role explode + total) re-ran
+    // the edge self-join + distinct + adjacency build per consumer, as
+    // ReuseExchange does not dedupe across separate union branches
+    // (measured 12.4 s in the driver bench, the most expensive row in
+    // the suite). Each discovered triangle (ta,tb,c) emits its three
+    // corners in ONE explode — 3·|triangles| rows, one groupBy — so
+    // `base` is evaluated exactly once. The node-sized
     // count table is localCheckpoint'd (~2 k rows) so the total-count
     // branch reuses it instead of re-deriving the whole edge pipeline.
     val roles = base
@@ -422,7 +426,7 @@ object Graph {
       .select(col("p_partkey"), col("n_tri"), col("total_tri"))
   }
 
-  /** Neighbor-set Jaccard similarity (round 6): top part pairs by
+  /** Neighbor-set Jaccard similarity: top part pairs by
     * |orders(p1) ∩ orders(p2)| / |orders(p1) ∪ orders(p2)| — the
     * co-occurrence similarity behind "bought together" and graph-based
     * near-dup scoring. Candidates come from the basket equi-join on
@@ -440,10 +444,10 @@ object Graph {
     * hot-key order would cap, pre-measured by q_graph_degree_dist),
     * and the degree frame explodes from the SAME collected baskets
     * (ReuseExchange dedupes the build). The degree joins carry NO
-    * broadcast() hint (round 10): node-sized is data-sized — AQE
+    * broadcast() hint: node-sized is data-sized — AQE
     * runtime-broadcasts while small, co-partitions past that. */
   def jaccardNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    // baskets off the memoized distinct (order, part) frame (round 9)
+    // baskets off the memoized distinct (order, part) frame
     val baskets = opPairs(spark, dir)
       .groupBy(col("o"))
       .agg(expr("sort_array(collect_set(pk))").as("ps"))
@@ -469,7 +473,7 @@ object Graph {
       .limit(100)
   }
 
-  /** Label propagation communities (round 6): two unrolled synchronous
+  /** Label propagation communities: two unrolled synchronous
     * LPA rounds on the basket graph — every node starts as its own
     * label, then repeatedly adopts its neighbors' MOST FREQUENT label
     * (deterministic tiebreak: min label), a linear-time community
@@ -485,48 +489,24 @@ object Graph {
     * the same fixed-unroll discipline (a driver-loop variant would
     * follow pagerankConverged). */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
-    lpaParts(spark, dir)._2
+    lpaLabels(spark, dir)
       .groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_nodes"), min(col("n")).as("min_node"))
       .orderBy(col("n_nodes").desc, col("community"))
       .limit(50)
 
-  /** The LPA building blocks, shared by [[labelProp]], [[modularity]]
-    * and [[communityEntropy]]: the directed-both-ways co-occurrence
-    * edge list and the labels after two synchronous rounds. Factored so
-    * the modularity/entropy audits score the SAME communities the LPA
-    * row reports — the three rows can never drift apart. */
-  private[operators] def lpaParts(spark: SparkSession, dir: String,
-      ckptEdges: Boolean = false): (DataFrame, DataFrame) = {
-    // both directions of the MEMOIZED undirected co-occurrence frame
-    // (round 8): the basket self-join + distinct now runs once per
-    // session across the four graph consumers instead of per row.
-    // `ckptEdges`: the directed union itself is narrow work on top of
-    // the memoized frame, but modularity's scoring plan reads it in a
-    // SEPARATE job where ReuseExchange cannot help — there the extra
-    // cut is still the right call (the pre-memo A/B: 6.98 → 6.13 s;
-    // plain q_graph_lpa measures better without it).
-    val und = cooccEdges(spark, dir)
-    val e0base = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
-    val e0 = if (ckptEdges) e0base.localCheckpoint() else e0base
-    (e0, lpaLabels(spark, dir))
-  }
-
-  /** Two-round LPA label frame, MEMOIZED per (application, sfDir)
-    * (round 9): its three consumers (q_graph_lpa, q_graph_modularity,
-    * q_graph_community_entropy) each re-ran two join+window rounds —
-    * the unmemoized recompute was the whole cost of the two rows the
-    * r8 driver bench flagged over budget. At 100 TB this frame is the
-    * persisted community-assignment table every downstream audit reads
-    * — the same argument as coocc-edges. Node-sized (one row per
-    * node), so the checkpoint is small by construction. */
+  /** Two-round LPA label frame (n, lab), MEMOIZED per (application,
+    * sfDir): its three consumers ([[labelProp]], [[modularity]],
+    * [[communityEntropy]]) score the SAME communities, so the three rows
+    * can never drift apart, and none re-runs the two join+window
+    * rounds. At 100 TB this frame is the persisted community-assignment
+    * table every downstream audit reads — the same argument as
+    * coocc-edges. Node-sized (one row per node), so the checkpoint is
+    * small by construction. */
   private[operators] def lpaLabels(spark: SparkSession,
       dir: String): DataFrame =
     graft.FrameMemo.cached(spark, dir, "lpa-labels") {
-      val und = cooccEdges(spark, dir)
-      val e0 = und.select(col("u"), col("v"))
-        .union(und.select(col("v").as("u"), col("u").as("v")))
+      val e0 = cooccArcs(spark, dir)
       val l0 = cooccDegrees(spark, dir).select(col("n"))
         .withColumn("lab", col("n"))
       def round(l: DataFrame): DataFrame = {
@@ -561,12 +541,15 @@ object Graph {
     * edge-stream join against it; everything after is community-sized. */
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     // labels arrive memoized+checkpointed from lpaLabels; feeds 3
-    // branches. NO broadcast() hint on the label joins (round 9): the
-    // frame is per-NODE, so a forced broadcast is an executor-memory
-    // wall at 100× — the keyed equi-join is the scale-safe shape, and
-    // AQE still picks broadcast-hash at runtime while the frame is
-    // actually small (plan-pinned in BatchSpec).
-    val (e0, lab) = lpaParts(spark, dir, ckptEdges = true)
+    // branches. NO broadcast() hint on the label joins: the frame is
+    // per-NODE, so a forced broadcast is an executor-memory wall at
+    // 100× — the keyed equi-join is the scale-safe shape, and AQE still
+    // picks broadcast-hash at runtime while the frame is actually small
+    // (plan-pinned in BatchSpec). The arc list is cut here: the scoring
+    // plan reads it in a SEPARATE job where ReuseExchange cannot help
+    // (measured 6.98 → 6.13 s; plain q_graph_lpa is faster without it).
+    val e0 = cooccArcs(spark, dir).localCheckpoint()
+    val lab = lpaLabels(spark, dir)
     val el = e0
       .join(lab.select(col("n").as("u"), col("lab").as("lu")),
         Seq("u"))
@@ -589,23 +572,7 @@ object Graph {
         sum(col("contrib_e6")).as("q_e6"))
   }
 
-  /** k-core peeling (round 6), two unrolled rounds at k=100: drop
-    * nodes with degree < k, recompute degrees on the induced subgraph,
-    * drop again — the dense-subgraph extractor (spam rings, co-citation
-    * cores) and the standard preprocessing before community detection.
-    * k=100 is fixture-calibrated so BOTH rounds bind (sf0.01:
-    * 2000 → 1512 → 749 nodes; degree medians are scale-stable, ~119 at
-    * sf0.1) — a k below the degree floor would make the row vacuous,
-    * the countmin w=16 principle. Output: surviving nodes with their
-    * in-core degree.
-    *
-    * Scale shape: edges build from basket arrays map-side (the
-    * jaccard/triangle shape — no edge self-join); each peel is one
-    * partial-aggregable degree count + two LeftSemi joins against the
-    * node-sized keep frame (broadcast here, co-partition at 100 TB).
-    * Full k-core runs peels to fixpoint — each round is this same
-    * bounded shape (pagerankConverged's driver-loop pattern). */
-  /** Degree assortativity of the basket graph (round 8): Pearson
+  /** Degree assortativity of the basket graph: Pearson
     * correlation of endpoint degrees over the DIRECTED edge list — do
     * hub parts co-occur with hubs (assortative, r > 0) or with leaves
     * (disassortative, r < 0)? The standard Newman mixing coefficient,
@@ -618,7 +585,7 @@ object Graph {
     * bounds |num| ≤ den, the dividend is non-negative, and Spark's
     * truncating div equals DuckDB's flooring //.
     *
-    * Overflow (round-8 lesson): the sf0.01 fixture fit the raw BIGINT
+    * Overflow: the sf0.01 fixture fit the raw BIGINT
     * moment products, but sf0.1 did NOT — n·Σ(dx·dy) and (Σd)² crossed
     * 2⁶³ and ANSI mode threw mid-bench. The cross moments therefore
     * accumulate in DECIMAL(38,0) (the engine-portable 128-bit lane —
@@ -628,12 +595,10 @@ object Graph {
     * truncate ≡ floor) and den_div_n = den div n. The e4 ratio itself
     * is computed on the full decimal values — unchanged. */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val dirEdges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val dirEdges = cooccArcs(spark, dir)
     val deg = dirEdges.groupBy(col("u").as("n"))
       .agg(count(lit(1)).as("d"))
-    // NO broadcast() hint on the node-sized degree joins (round 10):
+    // NO broadcast() hint on the node-sized degree joins:
     // AQE runtime-broadcasts while small, co-partitions past that
     val pairs = dirEdges
       .join(deg.select(col("n").as("u"), col("d").as("dx")),
@@ -660,20 +625,30 @@ object Graph {
           .as("assort_shift_e4"))
   }
 
+  /** k-core peeling, two unrolled rounds at k=100: drop
+    * nodes with degree < k, recompute degrees on the induced subgraph,
+    * drop again — the dense-subgraph extractor (spam rings, co-citation
+    * cores) and the standard preprocessing before community detection.
+    * k=100 is fixture-calibrated so BOTH rounds bind (sf0.01:
+    * 2000 → 1512 → 749 nodes; degree medians are scale-stable, ~119 at
+    * sf0.1) — a k below the degree floor would make the row vacuous,
+    * the countmin w=16 principle. Output: surviving nodes with their
+    * in-core degree.
+    *
+    * Scale shape: edges build from basket arrays map-side (the
+    * jaccard/triangle shape — no edge self-join); each peel is one
+    * partial-aggregable degree count + two LeftSemi joins against the
+    * node-sized keep frame (broadcast here, co-partition at 100 TB).
+    * Full k-core runs peels to fixpoint — each round is this same
+    * bounded shape (pagerankConverged's driver-loop pattern). */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     val k = 100
     // the symmetric edge list feeds SIX consumers through the two
     // nested peels (each peel: degree aggregate + two semi probes) and
     // the union-of-two-projections shape defeats ReuseExchange — keep
-    // the per-row cut (pre-memo A/B sf0.1 local[4]: 4.77 s plain
-    // → 2.72 s cut, outputs identical) on top of the session-memoized
-    // undirected frame (round 8), which replaces this row's own
-    // basket-explode build: same distinct u<v pair set, built once
-    // across the four graph consumers.
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    // the per-row cut (A/B sf0.1 local[4]: 4.77 s plain → 2.72 s cut,
+    // outputs identical) on top of the session-memoized arc list.
+    val edges = cooccArcs(spark, dir).localCheckpoint()
     def peel(e: DataFrame): DataFrame = {
       val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u"))
@@ -687,7 +662,7 @@ object Graph {
       .orderBy(col("p_partkey"))
   }
 
-  /** HITS hubs-and-authorities (round 8, Kleinberg 1999) on the DIRECTED
+  /** HITS hubs-and-authorities (Kleinberg 1999) on the DIRECTED
     * part→supplier graph: parts are pure hubs (only out-edges), suppliers
     * pure authorities — the bipartite case where HITS and simple degree
     * diverge only after mutual reinforcement kicks in (a hub's weight is
@@ -700,9 +675,9 @@ object Graph {
     *
     * Scale shape: the [[pagerank]] skeleton — each half-step is the edge
     * stream hash-joined against ONE node-sized score table (broadcast
-    * hint SIZE-GATED like pagerank's, round 10: below the memoized edge
-    * count cap it is a map-side hash join, above it the same plan runs
-    * hint-free co-partitioned) + one partial-aggregable groupBy; the
+    * hint SIZE-GATED like pagerank's: below the memoized edge count cap
+    * it is a map-side hash join, above it the same plan runs hint-free
+    * co-partitioned) + one partial-aggregable groupBy; the
     * normalizing Σ is a 1-row broadcast (constant-sized — unconditional
     * hint is correct there). Output is bounded top-10 per side. Overflow bound:
     * raw ≤ 10⁶·max-degree and Σraw ≤ 10⁶·|E|, so raw·10⁶ ≤ 10¹²·degree
@@ -711,19 +686,16 @@ object Graph {
     * unnormalized power iteration). */
   def hits(spark: SparkSession, dir: String): DataFrame = {
     val e = psEdges(spark, dir)
-    val nEdges = graft.FrameMemo.cachedCount(spark, dir, "ps-edges")(
-      psEdges(spark, dir))
-    def bc(df: DataFrame): DataFrame =
-      graft.Hints.bcastIfAtMost(df, nEdges)
+    val gate = graft.Hints.gate(spark, dir, "ps-edges", e)
     // L1-normalize a raw score frame: ×10⁶ div the 1-row broadcast total
     def norm(raw: DataFrame, key: String): DataFrame =
       raw.crossJoin(broadcast(raw.agg(sum(col("raw")).as("tot"))))
         .select(col(key), expr("raw * 1000000 div tot").as("sc"))
     // h⁰ ≡ 1 ⇒ a¹raw(s) = in-degree(s); the uniform start is folded in
     val a1 = norm(e.groupBy(col("s")).agg(count(lit(1)).as("raw")), "s")
-    val h1 = norm(e.join(bc(a1), Seq("s"))
+    val h1 = norm(e.join(gate(a1), Seq("s"))
       .groupBy(col("p")).agg(sum(col("sc")).as("raw")), "p")
-    val a2 = norm(e.join(bc(h1), Seq("p"))
+    val a2 = norm(e.join(gate(h1), Seq("p"))
       .groupBy(col("s")).agg(sum(col("sc")).as("raw")), "s")
     val hubs = h1.orderBy(col("sc").desc, col("p")).limit(10)
       .select(lit("hub").as("kind"), col("p").as("node_key"),
@@ -735,7 +707,7 @@ object Graph {
       .orderBy(col("kind"), col("score_e6").desc, col("node_key"))
   }
 
-  /** Two-hop BFS from the basket graph's hottest node (round 8): level
+  /** Two-hop BFS from the basket graph's hottest node: level
     * sizes and key checksums of the distance-0/1/2 frontiers from the
     * max-degree part (ties → smallest key) — the reachability /
     * neighborhood-growth profile that sizes any graph-sampling or
@@ -751,9 +723,7 @@ object Graph {
     * [[cooccEdges]] frame; the only corpus-sized work is already paid
     * there. Output is 3 aggregate rows. */
   def bfs2(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val d0 = cooccDegrees(spark, dir)
       .orderBy(col("d").desc, col("n")).limit(1)
       .select(col("n").cast("long").as("n"))
@@ -762,15 +732,13 @@ object Graph {
     // max degree, which on a Zipf graph is DATA-dependent (the hub's
     // neighborhood grows with the corpus), so every hint on f1 is
     // size-gated on the session-memoized edge count like the rest of
-    // this family (round 11, VERDICT r10 #4) — past the cap the same
-    // plan runs as keyed shuffle joins co-partitioned on the node key.
-    val nEdges = graft.FrameMemo.cachedCount(spark, dir, "coocc-edges")(
+    // this family — past the cap the same plan runs as keyed shuffle
+    // joins co-partitioned on the node key.
+    val gate = graft.Hints.gate(spark, dir, "coocc-edges",
       cooccEdges(spark, dir))
-    def bc(df: DataFrame): DataFrame =
-      graft.Hints.bcastIfAtMost(df, nEdges)
     def expand(frontier: DataFrame, gated: Boolean): DataFrame = {
       val f = frontier.select(col("n").as("fn"))
-      edges.join(if (gated) bc(f) else broadcast(f),
+      edges.join(if (gated) gate(f) else broadcast(f),
           col("u") === col("fn"))
         .select(col("v").cast("long").as("n")).distinct()
     }
@@ -778,7 +746,7 @@ object Graph {
       .join(broadcast(d0), Seq("n"), "left_anti")
     val f2 = expand(f1, gated = true)
       .join(broadcast(d0), Seq("n"), "left_anti")
-      .join(bc(f1), Seq("n"), "left_anti")
+      .join(gate(f1), Seq("n"), "left_anti")
     def lvl(d: Long, f: DataFrame): DataFrame =
       f.agg(count(lit(1)).as("n_nodes"),
           coalesce(sum(col("n")), lit(0L)).as("key_sum"))
@@ -802,9 +770,7 @@ object Graph {
     * hub frame (20 rows) and the hub-neighbor frame (20·deg rows) ride
     * broadcast; only the candidate distinct shuffles corpus-sized. */
   def closeness(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val hubs = cooccDegrees(spark, dir)
       .orderBy(col("d").desc, col("n")).limit(20)
       .select(col("n").as("s"), col("d").as("dg"))
@@ -840,9 +806,7 @@ object Graph {
     * over 20 hubs); the membership test is a semi-join against the
     * broadcast hub-neighbor frame — never an all-pairs of neighbors. */
   def localCC(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val hubs = cooccDegrees(spark, dir)
       .orderBy(col("d").desc, col("n")).limit(20)
       .select(col("n").as("s"), col("d").as("dg"))
@@ -877,9 +841,7 @@ object Graph {
     * walker frame (broadcast) against it — O(steps) tiny joins, the
     * Pregel frontier pattern at walker scale. */
   def walkSample(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val hubs = cooccDegrees(spark, dir)
       .orderBy(col("d").desc, col("n")).limit(5)
       .select(col("n").as("s"), col("n").as("cur"))
@@ -927,25 +889,9 @@ object Graph {
       .orderBy(col("start"))
   }
 
-  /** Market-basket LIFT over the part co-occurrence graph (round 8):
-    * lift(a,b) = P(a,b)/(P(a)·P(b)) over order baskets — the
-    * association-rule measure that separates "bought together because
-    * popular" from "bought together because related" (the co-occ EDGE
-    * set and q_graph_coproj's counts can't make that distinction —
-    * lift normalizes by both marginals). Exact ×10⁴ with ONE
-    * truncating division: n_ab·N·10⁴ div (n_a·n_b), the triple
-    * product in DECIMAL(38,0) (n_ab·N crosses 2⁶³ near N ~ 10⁸
-    * baskets). Support floor n_ab ≥ 2 — fixture-scaled (TPC-H-ish
-    * baskets are near-independent, so co-occurrence counts are thin;
-    * production floors sit at 10s-100s); top-20 by (lift desc, u, v).
-    *
-    * Shape: the coocc per-order pair join (per-basket fan-out bounded
-    * by basket size ≤ 7) with COUNT payloads, part-sized marginal
-    * joins (NO broadcast() hint, round 10 — part-sized is data-sized;
-    * AQE runtime-broadcasts while small), distributed top-k. */
   /** Weight-≥2 co-purchase pairs (u < v, n_ab) — the ROBUST backbone
     * of the basket graph (pairs sharing at least two orders; one
-    * shared order is noise), MEMOIZED (round 11): basketLift,
+    * shared order is noise), MEMOIZED: basketLift,
     * assocRules, and the components row each re-ran the same basket
     * self-join + pair census. At 100 TB this is the persisted weighted
     * edge table every market-basket pipeline keeps. */
@@ -961,6 +907,22 @@ object Graph {
         .filter(col("n_ab") >= 2L)
     }
 
+  /** Market-basket LIFT over the part co-occurrence graph:
+    * lift(a,b) = P(a,b)/(P(a)·P(b)) over order baskets — the
+    * association-rule measure that separates "bought together because
+    * popular" from "bought together because related" (the co-occ EDGE
+    * set and q_graph_coproj's counts can't make that distinction —
+    * lift normalizes by both marginals). Exact ×10⁴ with ONE
+    * truncating division: n_ab·N·10⁴ div (n_a·n_b), the triple
+    * product in DECIMAL(38,0) (n_ab·N crosses 2⁶³ near N ~ 10⁸
+    * baskets). Support floor n_ab ≥ 2 — fixture-scaled (TPC-H-ish
+    * baskets are near-independent, so co-occurrence counts are thin;
+    * production floors sit at 10s-100s); top-20 by (lift desc, u, v).
+    *
+    * Shape: the coocc per-order pair join (per-basket fan-out bounded
+    * by basket size ≤ 7) with COUNT payloads, part-sized marginal
+    * joins (NO broadcast() hint — part-sized is data-sized;
+    * AQE runtime-broadcasts while small), distributed top-k. */
   def basketLift(spark: SparkSession, dir: String): DataFrame = {
     val li = opPairs(spark, dir)
     val baskets = li.agg(countDistinct(col("o")).as("big_n"))
@@ -998,7 +960,7 @@ object Graph {
     *
     * Shape: the basketLift per-order bounded pair join, then BOTH
     * directions of each unordered pair via union — marginal joins
-    * unhinted like basketLift's (round 10), distributed top-k. */
+    * unhinted like basketLift's, distributed top-k. */
   def assocRules(spark: SparkSession, dir: String): DataFrame = {
     val li = opPairs(spark, dir)
     val baskets = li.agg(countDistinct(col("o")).as("big_n"))
@@ -1026,6 +988,15 @@ object Graph {
       .limit(10)
   }
 
+  /** The (p_partkey, p_brand) part dim of [[brandHomophily]] and
+    * [[communityEntropy]], broadcast through the part table's row gate:
+    * the part table grows with SF, so the hint applies only below the
+    * row cap; past it the keyed join co-partitions. ~48 B/row: a long
+    * key plus a short brand string. */
+  private def partBrand(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.rowsGate(spark, dir, "part", avgRowBytes = 48L)(
+      part(spark, dir).select(col("p_partkey"), col("p_brand")))
+
   /** Brand homophily (J72, Newman categorical assortativity): do
     * same-brand parts co-occur in baskets more than the degree
     * structure predicts? r = (Σe_ii − Σa_i²)/(1 − Σa_i²) over the
@@ -1039,18 +1010,11 @@ object Graph {
     * (4m² − Σa_cnt²) where e_ii_cnt = same-brand directed edges and
     * a_cnt = per-brand edge-ends; products in DECIMAL(38,0)/HUGEINT.
     *
-    * Shape (100 TB): the memoized edge frame + part-brand dim lookup —
-    * the dim broadcast is SIZE-GATED (round 10, VERDICT r9 #2): the
-    * part table grows with SF in TPC-H-style scaling, so the hint
-    * applies only below the row cap (one memoized count job); past it
-    * the keyed join co-partitions → one conditional census + 25-row
-    * margin fold. */
+    * Shape (100 TB): the memoized edge frame + the size-gated
+    * [[partBrand]] dim lookup → one conditional census + 25-row margin
+    * fold. */
   def brandHomophily(spark: SparkSession, dir: String): DataFrame = {
-    val nPart = graft.FrameMemo.cachedCount(spark, dir, "part-rows")(
-      part(spark, dir))
-    val bp = graft.Hints.bcastIfAtMost(part(spark, dir)
-      .select(col("p_partkey"), col("p_brand")), nPart,
-      avgRowBytes = 48L) // long key + short brand string
+    val bp = partBrand(spark, dir)
     val e = cooccEdges(spark, dir)
       .join(bp.withColumnRenamed("p_partkey", "u")
         .withColumnRenamed("p_brand", "bu"), "u")
@@ -1069,7 +1033,7 @@ object Graph {
         col("k_brands"),
         expr("same * 10000 div m").as("same_share_e4"),
         // greatest(...,1) guards the degenerate all-one-brand graph
-        // where 4m² = sa2 (house denominator discipline; ADVICE r8)
+        // where 4m² = sa2 (house denominator discipline)
         expr("""CAST((CAST(2 AS DECIMAL(38,0)) * m * (2 * same)
           | - sa2) * 10000 div greatest(CAST(4 AS DECIMAL(38,0)) * m * m
           | - sa2, 1) AS BIGINT)""".stripMargin).as("homophily_e4"))
@@ -1087,12 +1051,12 @@ object Graph {
     * triangles row's machinery — the compact-forward orientation caps
     * wedge volume at O(m^1.5); bridge set = edges anti-join closed
     * edges (three orientations of each triangle). The node-sized
-    * degree joins are unhinted (round 10) — AQE runtime-broadcasts
+    * degree joins are unhinted — AQE runtime-broadcasts
     * while small, co-partitions past the threshold. */
   def localBridges(spark: SparkSession, dir: String): DataFrame = {
     val e0 = cooccEdges(spark, dir)
     val deg = cooccDegrees(spark, dir)
-    // the MEMOIZED triangle-closing frame (round 9) — shared with
+    // the MEMOIZED triangle-closing frame — shared with
     // q_graph_triangles/transitivity, so the orientation + adjacency +
     // intersection pass runs once per session. Each discovered
     // triangle emits its THREE closed edges in one explode —
@@ -1139,7 +1103,7 @@ object Graph {
     val inc = e0.select(col("u").as("w"), col("v").as("x"))
       .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
     val deg = inc.groupBy(col("w")).agg(count(lit(1)).as("d"))
-    // value-filtered but still O(nodes) rows — unhinted (round 10)
+    // value-filtered but still O(nodes) rows — unhinted
     val cinc = inc.join(deg.filter(col("d") <= 64), "w")
     val pairs = cinc.as("a").join(cinc.as("b"),
         col("a.w") === col("b.w") && col("a.x") < col("b.x"))
@@ -1154,7 +1118,7 @@ object Graph {
       .limit(20)
   }
 
-  /** Preferential-attachment link prediction (J87, round 11): the
+  /** Preferential-attachment link prediction (J87): the
     * degree-only baseline score deg(u)·deg(v) over the SAME capped
     * distance-2 candidate pairs as [[adamicAdar]] — the two classic
     * link predictors enrolled side by side, so "AA's selectivity
@@ -1184,7 +1148,7 @@ object Graph {
       .limit(20)
   }
 
-  /** Rich-club coefficient (round 8): for the degree-distribution
+  /** Rich-club coefficient: for the degree-distribution
     * quantiles q ∈ {p50, p75, p90}, the edge density among nodes with
     * degree > k_q — φ = 2·E_club·10⁴ div (N_club·(N_club−1)) — the
     * "do the hubs form a club?" audit that degree distribution and
@@ -1197,7 +1161,7 @@ object Graph {
     * clubs strictly nested at any scale.
     *
     * Shape: the memoized coocc edge frame + node-sized degree joins
-    * on both endpoints (unhinted, round 10 — AQE runtime-broadcasts
+    * on both endpoints (unhinted — AQE runtime-broadcasts
     * while small); the quantile computation runs on the DEGREE-VALUE
     * census (≪ nodes); 3-row threshold broadcast (constant-sized, so
     * its hint stays), conditional sums. φ's N_club product stays in
@@ -1238,7 +1202,7 @@ object Graph {
       .orderBy(col("q_e4"))
   }
 
-  /** Global transitivity (round 8): 3·triangles / wedges — the one-
+  /** Global transitivity: 3·triangles / wedges — the one-
     * number closure summary that complements q_graph_local_cc
     * (per-node) and q_graph_triangles (per-node census + total). A
     * graph can have high mean LOCAL cc yet low transitivity when
@@ -1262,7 +1226,7 @@ object Graph {
           .as("transitivity_e4"))
   }
 
-  /** Two-path brokerage census (J75, round 9 — Burt's structural
+  /** Two-path brokerage census (J75 — Burt's structural
     * holes): per wedge CENTER w, how many of its 2-paths u–w–v connect
     * endpoints that are NOT directly linked? Those are the pairs whose
     * only short route runs THROUGH w — the broker positions a
@@ -1287,7 +1251,7 @@ object Graph {
     val inc = e0.select(col("u").as("w"), col("v").as("x"))
       .unionAll(e0.select(col("v").as("w"), col("u").as("x")))
     val deg = inc.groupBy(col("w")).agg(count(lit(1)).as("d"))
-    // value-filtered but still O(nodes) rows — unhinted (round 10)
+    // value-filtered but still O(nodes) rows — unhinted
     val cinc = inc.join(deg.filter(col("d") <= 64), "w")
     val wedges = cinc.as("a").join(cinc.as("b"),
         col("a.w") === col("b.w") && col("a.x") < col("b.x"))
@@ -1303,42 +1267,35 @@ object Graph {
       .limit(20)
   }
 
-  /** Community label entropy (round 8): are the LPA communities
+  /** Community label entropy: are the LPA communities
     * BRAND-coherent? Per community (top-10 by size): member count,
     * distinct brands, the modal brand (min-brand tie-break), and the
     * brand-mix Shannon entropy in e3 nats (the lnE3 floor-once
     * family) — the graph-community twin of q_llm_cluster_purity's
     * embedding-cluster purity. Low entropy = the co-purchase graph
     * recovers brand structure; high entropy = communities are
-    * cross-brand baskets. Consumes lpaParts' label frame (shared with
+    * cross-brand baskets. Consumes [[lpaLabels]] (shared with
     * q_graph_lpa/modularity, so the three rows can't disagree about
     * the partition).
     *
-    * Shape: label frame ⋈ part dim (broadcast SIZE-GATED like
-    * brandHomophily's, round 10 — the part table grows with SF) →
-    * (community, brand) census → community-sized folds; top-10 via
-    * TakeOrdered. */
+    * Shape: label frame ⋈ [[partBrand]] (broadcast SIZE-GATED — the
+    * part table grows with SF) → (community, brand) census →
+    * community-sized folds; top-10 via TakeOrdered. */
   def communityEntropy(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val labels = lpaParts(spark, dir)._2
-    val nPart = graft.FrameMemo.cachedCount(spark, dir, "part-rows")(
-      part(spark, dir))
-    val bc = labels
-      .join(graft.Hints.bcastIfAtMost(part(spark, dir)
-        .select(col("p_partkey"), col("p_brand")), nPart,
-        avgRowBytes = 48L), // long key + short brand string
-        col("p_partkey") === col("n"))
+    val census = lpaLabels(spark, dir)
+      .join(partBrand(spark, dir), col("p_partkey") === col("n"))
       .groupBy(col("lab"), col("p_brand"))
       .agg(count(lit(1)).as("c"))
-    val sz = bc.groupBy(col("lab"))
+    val sz = census.groupBy(col("lab"))
       .agg(sum(col("c")).as("n_nodes"),
         count(lit(1)).as("n_brands"))
-    val topb = bc.withColumn("rn", row_number().over(
+    val topb = census.withColumn("rn", row_number().over(
         Window.partitionBy(col("lab"))
           .orderBy(col("c").desc, col("p_brand"))))
       .filter(col("rn") === 1)
       .select(col("lab"), col("p_brand").as("top_brand"))
-    val h = bc.join(sz.select(col("lab"), col("n_nodes")), "lab")
+    val h = census.join(sz.select(col("lab"), col("n_nodes")), "lab")
       .groupBy(col("lab"))
       .agg(expr("""CAST(sum(c *
         | (CAST(floor(ln(n_nodes) * 1000 + 0.5) AS BIGINT)
@@ -1351,7 +1308,7 @@ object Graph {
       .orderBy(col("n_nodes").desc, col("community"))
   }
 
-  /** Basket-size distribution (round 8): the measured census behind
+  /** Basket-size distribution: the measured census behind
     * the claim every co-occurrence row leans on — "wedge volume is
     * bounded by order size". Size histogram with shares and the
     * cumulative curve; the observed max (13 at sf0.01) REFINES the
@@ -1376,7 +1333,7 @@ object Graph {
       .orderBy(col("basket_size"))
   }
 
-  /** Degree-distribution Gini (J83, round 10): inequality of the
+  /** Degree-distribution Gini (J83): inequality of the
     * basket-graph degree distribution — gini ≈ 0 means every part
     * co-occurs with a similar number of others (uniform load; hash
     * partitioning just works), gini → 1 means hub-dominated (the skew
@@ -1450,7 +1407,7 @@ object Graph {
       .orderBy(col("component_size").desc, col("min_component"))
   }
 
-  /** Eigenvector centrality (J85, round 11): two unrolled power-
+  /** Eigenvector centrality (J85): two unrolled power-
     * iteration rounds x ← A·x over the undirected co-occurrence
     * adjacency, L1-renormalized to the ×10⁶ integer grid each round —
     * prestige flows WHOLE along edges (no damping, no out-degree
@@ -1465,18 +1422,14 @@ object Graph {
     * against the node-sized rank frame (size-gated hint, the iterated-
     * plan class) + a 1-row total broadcast. */
   def eigenCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
-    val nEdges = graft.FrameMemo.cachedCount(spark, dir, "coocc-edges")(
+    val edges = cooccArcs(spark, dir)
+    val gate = graft.Hints.gate(spark, dir, "coocc-edges",
       cooccEdges(spark, dir))
-    def bc(df: DataFrame): DataFrame =
-      graft.Hints.bcastIfAtMost(df, nEdges)
     val x0 = cooccDegrees(spark, dir)
       .select(col("n"), lit(1000000L).as("x"))
     def step(x: DataFrame): DataFrame = {
       val raw = edges
-        .join(bc(x.select(col("n").as("v"), col("x"))), Seq("v"))
+        .join(gate(x.select(col("n").as("v"), col("x"))), Seq("v"))
         .groupBy(col("u").as("n")).agg(sum(col("x")).as("raw"))
       val tot = raw.agg(sum(col("raw")).as("tot"))
       raw.crossJoin(broadcast(tot)) // 1-row total — constant-sized
@@ -1488,7 +1441,7 @@ object Graph {
       .select(col("n").cast("long").as("node_key"), col("x").as("score_e6"))
   }
 
-  /** Personalized PageRank from the top hub (J91, round 11): random
+  /** Personalized PageRank from the top hub (J91): random
     * walk with restart — at every step half the mass teleports BACK to
     * the seed (the max-degree node from the memoized census), half
     * spreads over neighbors — the similarity-to-a-NODE member of the
@@ -1510,9 +1463,7 @@ object Graph {
     * keyed join co-partitions past it). Degrees ride the memoized
     * census. */
   def pprHub(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val deg = cooccDegrees(spark, dir)
     val seed = deg.orderBy(col("d").desc, col("n")).limit(1)
       .select(col("n").as("node"))
@@ -1536,7 +1487,7 @@ object Graph {
       .orderBy(col("ppr2_e6").desc, col("node")).limit(20)
   }
 
-  /** Edge-embeddedness census (J98, round 11): the tie-strength
+  /** Edge-embeddedness census (J98): the tie-strength
     * distribution — per co-purchase edge, how many triangles contain
     * it (|N(u) ∩ N(v)|), rolled into a capped histogram with the raw
     * incidence mass per bucket. Granovetter's weak/strong-tie split
@@ -1558,21 +1509,21 @@ object Graph {
     val e0 = cooccEdges(spark, dir)
     // The 3·|triangles| explode emits PACKED single-long edge keys
     // (u·10⁹ + v, u < v canonical — exact through 10⁹-node graphs, the
-    // coproj round-12 idiom): the fan-out rows are 8-byte longs
+    // coproj idiom): the fan-out rows are 8-byte longs
     // instead of 16-byte structs and both the groupBy and the edge
-    // join hash ONE column — the round-12 closing bench read the
+    // join hash ONE column — a driver bench read the
     // struct form at 4.80 s (the suite's closest row to the 5 s
     // budget); the packed form measures 2.9 s standalone-cold
     // including the triBase build, so the in-suite warm cost drops
     // well clear of the budget.
-    // Range enforcement sits INSIDE the key computation (round 14,
-    // ADVICE r13 — the previous guard lived only in the final share_e4
-    // projection, so a consumer pruning that column let Catalyst drop
-    // the CASE and silently accept colliding packed keys; coProjection
-    // already embeds its guard in the key itself). One two-compare
-    // CASE per (base-edge, apex) element, same codegen'd projection,
-    // no extra job; only triangle nodes flow through the pack, so this
-    // covers exactly the id universe that can collide.
+    // Range enforcement sits INSIDE the key computation (a guard only
+    // in the final share_e4 projection lets a consumer that prunes that
+    // column have Catalyst drop the CASE and silently accept colliding
+    // packed keys; coProjection embeds its guard in the key itself).
+    // One two-compare CASE per (base-edge, apex) element, same
+    // codegen'd projection, no extra job; only triangle nodes flow
+    // through the pack, so this covers exactly the id universe that can
+    // collide.
     val emb = triBase(spark, dir)
       .select(explode(expr(
         """flatten(transform(cs, c ->
@@ -1587,7 +1538,7 @@ object Graph {
           .stripMargin)).as("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("emb"))
     // Bucket 0 by ARITHMETIC, not by joining emb back onto the edge
-    // list (round 13): every emb key IS an edge, so the zero-
+    // list: every emb key IS an edge, so the zero-
     // embeddedness population is simply m − Σ nonzero-bucket edges —
     // the left join + coalesce over the full edge list only existed to
     // materialize zeros the histogram can compute from one 1-row
@@ -1615,7 +1566,7 @@ object Graph {
       .orderBy(col("emb_capped"))
   }
 
-  /** Average-neighbor-degree curve knn(k) (J101, round 11): per
+  /** Average-neighbor-degree curve knn(k) (J101): per
     * degree bucket, the ratio-of-sums mean neighbor degree — the
     * CURVE behind q_graph_assortativity's single number (Pastor-
     * Satorras et al.): a falling knn(k) is disassortative mixing
@@ -1630,9 +1581,7 @@ object Graph {
     * memoized degree census (never re-derived), one partial-
     * aggregable per-node fold, one ≤ 21-row rollup. */
   def knnCurve(spark: SparkSession, dir: String): DataFrame = {
-    val und = cooccEdges(spark, dir)
-    val edges = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
+    val edges = cooccArcs(spark, dir)
     val deg = cooccDegrees(spark, dir)
     val perNode = edges
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
@@ -1683,7 +1632,7 @@ object Graph {
 
   /** Two-round LPA CTE chain (e0 → l0 → l1 → l2) shared by the
     * q_graph_lpa and q_graph_modularity oracles — mirrors
-    * [[lpaParts]] exactly. */
+    * [[lpaLabels]] exactly. */
   private val lpaCtes: String =
     """e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
       |  FROM lineitem a JOIN lineitem b

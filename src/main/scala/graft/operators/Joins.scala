@@ -634,8 +634,7 @@ object Joins {
     * The aggregate itself is exact BIGINT (count + quantity sum). */
   def joinSkewAqe(spark: SparkSession, dir: String): DataFrame = {
     val s2 = spark.newSession()
-    val n = graft.FrameMemo.cachedCount(spark, dir, "lineitem-rows-skew")(
-      lineitem(spark, dir))
+    val n = graft.Tables.rows(spark, dir, "lineitem")
     // ~compressed-bytes/32 of the fact shuffle (~6 B/row lz4): the
     // zk=0 head splits into ~30 even pieces at every fixture scale
     val advisory = math.max(1024L, n / 6)

@@ -1816,22 +1816,22 @@ object LlmOps {
     * fold is partial-aggregable, top-20 via TakeOrdered. */
   /** Doc count above which the pair join switches to hashed shingle
     * keys — between the two measured points of the one-JVM
-    * order-alternating A/B, round 15 (`OPTIMIZATION_r15.md`; order bias
+    * order-alternating A/B in `OPTIMIZATION_r15.md` (order bias
     * cancelled): at sf0.1 (5,000 docs) STRINGS win every
-    * round (median 2.82 s vs hashed 3.90 — the md5 digest over the
+    * run (median 2.82 s vs hashed 3.90 — the md5 digest over the
     * corpus-sized explode outweighs the narrower shuffle), at sf1
-    * (50,000 docs) HASHED wins 7 of 8 rounds (median 5.86 s vs 8.43,
+    * (50,000 docs) HASHED wins 7 of 8 runs (median 5.86 s vs 8.43,
     * −30 % — shuffle bytes now dominate and the 8-byte keys cut the
-    * distinct + df census + self-join exchanges ~4×). The gate count
-    * is one session-memoized parquet-footer job, the same
-    * Hints.bcastIfAtMost discipline: the scale plan is code the
-    * engine executes, not a scaladoc promise. */
+    * distinct + df census + self-join exchanges ~4×). The gate reads
+    * the session-memoized document count [[graft.Tables.rows]] (one
+    * parquet-footer job per session), as prefixJoin does: the scale
+    * plan is code the engine executes, not a scaladoc promise. */
   val RareShingleHashKeysMinDocs = 20000L
 
   def rareShinglePairs(spark: SparkSession, dir: String): DataFrame =
     rareShinglePairsImpl(spark, dir,
-      hashKeys = graft.FrameMemo.cachedCount(spark, dir, "documents-rows")(
-        documents(spark, dir)) >= RareShingleHashKeysMinDocs)
+      hashKeys = graft.Tables.rows(spark, dir, "documents") >=
+        RareShingleHashKeysMinDocs)
 
   /** `hashKeys = true` replaces each ~25-char trigram string with its
     * 60-bit md5 prefix right after the explode, narrowing the distinct,
@@ -1839,9 +1839,9 @@ object LlmOps {
     * (guide §2.3/§2.4 — the prefixJoin/decontaminate hash-first rule);
     * size-gated via [[RareShingleHashKeysMinDocs]] (numbers there).
     * Output is IDENTICAL in both modes wherever h60 is collision-free
-    * on the trigram vocabulary — checked round 15: 27,213 distinct
-    * shingles at sf0.1 and 272,130 at sf1 map to as many distinct h60
-    * keys, and the string-keyed vs hash-keyed oracle SQL returned
+    * on the trigram vocabulary (`OPTIMIZATION_r15.md`: 27,213
+    * distinct shingles at sf0.1 and 272,130 at sf1 map to as many
+    * distinct h60 keys), and the string-keyed vs hash-keyed oracle SQL returned
     * bit-identical rows at sf0.001/0.01/0.1/sf1. At corpus scales
     * where 60-bit collisions become expected (~10¹² shingles) a
     * collision merges two shingles' df in the same way a hash-bucketed

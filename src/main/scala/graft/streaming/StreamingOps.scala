@@ -37,6 +37,23 @@ case class Attribution(user_id: Long, purchase_id: Long, channel: String)
 /** Integer-EWMA fold state held per user by the streaming smoother. */
 private case class EwmaSt(acc: Long, n: Long, last: Long)
 
+private object EwmaSt {
+  /** The integer EWMA fold of both stream forms
+    * ([[StreamingOps.ewmaStream]], [[StreamingOps.ewmaStreamV2]]): one
+    * micro-batch's events sorted by (ts, event_id) — the intra-batch
+    * order repair — then folded over centi values as the truncating
+    * `(acc + c) / 2` onto the user's previous state (none: the first
+    * value seeds it). Kept off `StreamingOps` so the state functions
+    * that call it capture no enclosing object. */
+  def fold(prev: Option[EwmaSt], evs: Iterator[Ev]): EwmaSt =
+    evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+      .foldLeft(prev.getOrElse(EwmaSt(0L, 0L, 0L))) { (s, e) =>
+        val c = math.floor(e.value * 100 + 0.5).toLong
+        if (s.n == 0L) EwmaSt(c, 1L, c)
+        else EwmaSt((s.acc + c) / 2, s.n + 1, c)
+      }
+}
+
 /** Per-user EWMA snapshot emitted each micro-batch by ewmaStream —
   * schema-identical to the batch q_ts_ewma row so parity is a direct
   * frame compare. */
@@ -198,18 +215,13 @@ object StreamingOps {
     events.groupBy(col("event_type"))
       .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("n_events"))
 
-  /** Stream enriched with a static dimension (broadcast at plan time —
-    * the reference's per-event container metadata lookup). The dim is
-    * caller-owned and can be USER-sized at scale, so callers that know
-    * its cardinality pass `dimRows` and the hint size-gates through
-    * [[graft.Hints.bcastIfAtMost]] (round-10 sweep); the default keeps
-    * the unconditional hint for genuinely static control-plane dims. */
-  def enrichWithStatic(events: DataFrame, dim: DataFrame,
-      dimRows: Long = -1L): DataFrame =
-    events.join(
-      if (dimRows < 0L) broadcast(dim)
-      else graft.Hints.bcastIfAtMost(dim, dimRows),
-      Seq("user_id"), "left")
+  /** Stream enriched with a static dimension on `user_id` (left join,
+    * so an event without a dim row keeps null dim columns) — the
+    * reference's per-event container metadata lookup. The dim is
+    * broadcast at plan time, so it must be a small static
+    * (control-plane) table, not one that grows with the data. */
+  def enrichWithStatic(events: DataFrame, dim: DataFrame): DataFrame =
+    events.join(broadcast(dim), Seq("user_id"), "left")
 
   /** Streaming twin of the batch curation pipeline (round 3,
     * `LlmOps.curationPipeline`): content-hash dedup WITHIN the watermark
@@ -298,7 +310,7 @@ object StreamingOps {
     * an already-processed purchase cannot retroactively re-attribute
     * it — the watermark bounds that reordering window exactly as it
     * does for every streaming aggregate. */
-  /** Streaming integer EWMA (round 8): the incremental twin of the
+  /** Streaming integer EWMA: the incremental twin of the
     * batch q_ts_ewma row — per user, the SAME `(acc + x) div 2`
     * BIGINT fold over centi values in event-time order, held as O(1)
     * state (acc, n, last) and snapshotted every micro-batch (Update
@@ -318,14 +330,7 @@ object StreamingOps {
     import events.sparkSession.implicits._
     def fn(userId: Long, evs: Iterator[Ev],
         state: GroupState[EwmaSt]): EwmaOut = {
-      val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var st = state.getOption.getOrElse(EwmaSt(0L, 0L, 0L))
-      sorted.foreach { e =>
-        val c = math.floor(e.value * 100 + 0.5).toLong
-        st =
-          if (st.n == 0L) EwmaSt(c, 1L, c)
-          else EwmaSt((st.acc + c) / 2, st.n + 1, c)
-      }
+      val st = EwmaSt.fold(state.getOption, evs)
       state.update(st)
       EwmaOut(userId, st.n, st.last, st.acc)
     }
@@ -352,9 +357,8 @@ object StreamingOps {
         OutputMode.Update())
   }
 
-  /** StatefulProcessor twin of [[ewmaStream]]'s fold — one ValueState
-    * per user, same (ts, event_id) intra-batch repair sort, same
-    * truncating (acc+x)/2 arithmetic. */
+  /** StatefulProcessor twin of [[ewmaStream]] — one ValueState per
+    * user, folded by the same [[EwmaSt.fold]]. */
   private class EwmaProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, Ev, EwmaOut] {
@@ -368,13 +372,7 @@ object StreamingOps {
     override def handleInputRows(key: Long, rows: Iterator[Ev],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[EwmaOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var s = Option(st.get()).getOrElse(EwmaSt(0L, 0L, 0L))
-      sorted.foreach { e =>
-        val c = math.floor(e.value * 100 + 0.5).toLong
-        s = if (s.n == 0L) EwmaSt(c, 1L, c)
-            else EwmaSt((s.acc + c) / 2, s.n + 1, c)
-      }
+      val s = EwmaSt.fold(Option(st.get()), rows)
       st.update(s)
       Iterator.single(EwmaOut(key, s.n, s.last, s.acc))
     }

@@ -1242,6 +1242,25 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toSeq == unrolled)
   }
 
+  test("both sides of the two 20 000-doc gates give the enrolled rows " +
+      "(unhinted prefix verify, hashed rare-shingle keys)") {
+    import graft.operators.{Analytics, LlmOps}
+    // the fixture sits below both gates, so the enrolled rows run one
+    // side; the side that runs at scale is forced here through *Impl
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val prefix = rows(SparkEntry.queries("q_llm_prefix_join")(spark, sf))
+    assert(prefix.nonEmpty)
+    for (shj <- Seq(true, false))
+      assert(rows(Analytics.prefixJoinImpl(spark, sf,
+        shuffleHashVerify = shj)) == prefix, s"shuffleHashVerify=$shj")
+    val rare =
+      rows(SparkEntry.queries("q_llm_rare_shingle_pairs")(spark, sf))
+    assert(rare.nonEmpty)
+    for (hashed <- Seq(true, false))
+      assert(rows(LlmOps.rareShinglePairsImpl(spark, sf,
+        hashKeys = hashed)) == rare, s"hashKeys=$hashed")
+  }
+
   test("textrank pin: memoized word-edge frame keeps the corpus bigram " +
       "explode out of the final plan") {
     val s = executedPlanString("q_llm_textrank")
