@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.collection.concurrent.TrieMap
 import scala.util.Try
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -146,4 +147,41 @@ object Tables {
           .withColumn("ts", expr("cast(ts as timestamp)"))
     }
   }
+
+  /** Event time in µs, `ts_ns div 1000`: the grain of the oracle's
+    * `epoch_us(ts)`. Callers bind it as `ts_us`. */
+  val tsUs: Column = expr("ts_ns div 1000")
+
+  /** [[events]] with [[tsUs]] appended as `ts_us`, the column
+    * [[userTimeline]] orders by. */
+  def eventsUs(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir).withColumn("ts_us", tsUs)
+
+  /** Epoch day of an event (day 0 = 1970-01-01, a Thursday), integer
+    * division of [[tsUs]] by 86 400 000 000 µs. */
+  val epochDay: Column = expr("(ts_ns div 1000) div 86400000000")
+
+  /** Epoch hour of an event, [[tsUs]] div 3 600 000 000 µs. */
+  val epochHour: Column = expr("(ts_ns div 1000) div 3600000000")
+
+  /** Day of week of [[epochDay]] as `epochDay % 7`: epoch arithmetic, so
+    * no calendar locale can make the two engines disagree. */
+  val epochDow: Column = expr("((ts_ns div 1000) div 86400000000) % 7")
+
+  /** One user's events in time order: the window every per-user
+    * lag/lead, running sum and first-event rule runs over. Ties on
+    * `ts_us` break on `event_id`, so the order is total and the oracle's
+    * `ORDER BY ts_us, event_id` agrees row for row. */
+  val userTimeline: WindowSpec =
+    Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
+
+  /** A money column in integer cents, rounded half up:
+    * `CAST(floor(c * 100 + 0.5) AS BIGINT)`, the form both engines
+    * evaluate identically. */
+  def cents(c: String): Column = expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")
+
+  /** The inactivity gap that closes a user session: the batch rule
+    * (`Reshape.sessionEvents`), `StreamingOps.sessionize`'s
+    * `session_window` and `TwsOps`' timers all read it. */
+  val SessionGap: java.time.Duration = java.time.Duration.ofMinutes(30)
 }

@@ -78,7 +78,7 @@ object Aggregates {
         col("n_users_exact"))
       .orderBy(col("event_type"))
 
-  /** Re-mergeable HLL sketches (round 4) — the 100 TB pre-aggregation
+  /** Re-mergeable HLL sketches — the 100 TB pre-aggregation
     * pattern `approx_count_distinct` alone cannot show: per-month
     * `hll_sketch_agg` sketches are built once (in a real pipeline:
     * stored in the daily rollup table), then ANY period rollup is a
@@ -107,7 +107,7 @@ object Aggregates {
       .orderBy(col("o_orderpriority"))
   }
 
-  /** Key-skew diagnostic (round 4): the measurement that decides
+  /** Key-skew diagnostic: the measurement that decides
     * whether a join/agg key needs salting BEFORE the job burns a day
     * discovering it — per-key counts, then one summary row: key count,
     * total, the heaviest key's share vs uniform (exact integer
@@ -131,7 +131,7 @@ object Aggregates {
         col("heavy_key"))
   }
 
-  /** Exchange-reuse evidence (J107, round 12): a report that reads the
+  /** Exchange-reuse evidence (J107): a report that reads the
     * SAME per-type aggregate twice — once as the detail rows, once
     * re-aggregated into the global total for the share column — must
     * pay the corpus shuffle ONCE: Spark's exchange/stage reuse matches
@@ -153,7 +153,7 @@ object Aggregates {
     val perType = events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents"))
     // The total branch consumes BOTH aggregates: a sum(n)-only total
     // lets ColumnPruning narrow its partial aggregate (count without
@@ -180,7 +180,7 @@ object Aggregates {
         "exchange_reused")
   }
 
-  /** Shuffle-metrics readout (J108, round 12): the engine's own
+  /** Shuffle-metrics readout (J108): the engine's own
     * SQLMetrics as queryable data — after running the per-type
     * census, read the aggregate exchange's `shuffleRecordsWritten` /
     * `shuffleBytesWritten` accumulators off the executed plan (walking
@@ -194,14 +194,14 @@ object Aggregates {
     *
     * records_bounded uses n_groups · numMappers read off the exchange
     * itself (each map partition emits at most one partial row per
-    * group) — a literal ceiling (32, round 12) went stale the moment a
+    * group) — a literal ceiling (32) went stale the moment a
     * fixture's scan split into more map tasks than the constant. */
   def diagShuffleMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val agg = events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents"))
       .orderBy(col("event_type"))
     val rows = agg.collect()
@@ -233,7 +233,7 @@ object Aggregates {
         "bytes_positive")
   }
 
-  /** Observation-API pipeline telemetry (J111, round 12): the
+  /** Observation-API pipeline telemetry (J111): the
     * `df.observe()` surface — EXACT pre-filter input metrics collected
     * DURING the one pass the query already makes (CollectMetricsExec
     * rides the plan; no second scan, no sampling), read back through
@@ -249,12 +249,12 @@ object Aggregates {
     val obs = org.apache.spark.sql.Observation()
     val agg = events(spark, dir)
       .observe(obs, count(lit(1)).as("n_in"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents_in"))
       .filter(col("value") >= 1.0)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_kept"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents_kept"))
       .orderBy(col("event_type"))
     val rows = agg.collect()
@@ -266,7 +266,7 @@ object Aggregates {
       .toDF("event_type", "n_kept", "cents_kept", "n_in", "cents_in")
   }
 
-  /** listagg WITHIN GROUP + mode (J116, round 12): the two Spark-4
+  /** listagg WITHIN GROUP + mode (J116): the two Spark-4
     * ordered-aggregate surfaces the suite lacked. `listagg(DISTINCT x,
     * ',') WITHIN GROUP (ORDER BY x)` is the report-friendly string
     * fold — the WITHIN GROUP clause is what makes it deterministic and
@@ -444,7 +444,7 @@ object Aggregates {
       .orderBy(col("lang"))
   }
 
-  /** Numeric histogram via width_bucket (round 2): fixed-width bucket
+  /** Numeric histogram via width_bucket: fixed-width bucket
     * assignment + per-bucket count/avg — the single-pass histogram shape
     * (7 buckets on an irrational-ish width so 2-decimal data never
     * lands on a boundary; the oracle reproduces Spark's exact
@@ -457,7 +457,7 @@ object Aggregates {
       .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_v"))
       .orderBy(col("bucket"))
 
-  /** Statistical aggregate family (round 2): stddev/variance/corr/covar
+  /** Statistical aggregate family: stddev/variance/corr/covar
     * — all single-pass partial+final hash aggregates (Welford-style
     * merge), no second scan. Skewness/kurtosis are deliberately absent:
     * Spark computes population moments, DuckDB sample-corrected ones, so
@@ -527,7 +527,7 @@ object Aggregates {
       .orderBy(col("event_type"))
   }
 
-  /** HLL set-ALGEBRA beyond union (round 8): estimate the
+  /** HLL set-ALGEBRA beyond union: estimate the
     * INTERSECTION of two user cohorts per event_type by
     * inclusion–exclusion over sketches — |A∩B| ≈ est(A) + est(B) −
     * est(A∪B), with A/B = even/odd-epoch-day actives and the union
@@ -549,7 +549,7 @@ object Aggregates {
     * two-level (type, user) census. Both are single-shuffle. */
   def hllIntersect(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .withColumn("u_even", when(col("day") % 2 === 0, col("user_id")))
       .withColumn("u_odd", when(col("day") % 2 === 1, col("user_id")))
     val sk = ev.groupBy(col("event_type")).agg(
@@ -575,7 +575,7 @@ object Aggregates {
       .orderBy(col("event_type"))
   }
 
-  /** Weighted percentiles (round 8): the quantity-weighted p25/50/75
+  /** Weighted percentiles: the quantity-weighted p25/50/75
     * of the unit price per return flag — "the price a MEDIAN UNIT
     * shipped at", not the median line item (a 50-unit line should
     * count 50×; the unweighted median row already exists as
@@ -590,7 +590,7 @@ object Aggregates {
     import org.apache.spark.sql.expressions.Window
     val g = lineitem(spark, dir)
       .select(col("l_returnflag").as("flag"),
-        expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
+        cents("l_extendedprice")
           .as("c"),
         expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").as("w"))
       .groupBy(col("flag"), col("c")).agg(sum(col("w")).as("w"))
@@ -605,7 +605,7 @@ object Aggregates {
       .orderBy(col("flag"))
   }
 
-  /** Geometric vs arithmetic mean (round 8): per source, the quality
+  /** Geometric vs arithmetic mean: per source, the quality
     * score's AM (e4) and log-GM (Σ lnE3(s) div n, e3 log-space — the
     * exact-components discipline: GM itself is irrational, its LOG is
     * a lnE3 sum both engines replay). GM is the right mean for
@@ -667,7 +667,7 @@ object Aggregates {
   def momentsMerge(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"),
+        cents("value").as("c"),
         expr("CAST(user_id % 2 AS INT)").as("chunk"))
     def nm2 = expr("""CAST(CAST(n AS DECIMAL(38,0)) * ss
       | - CAST(s AS DECIMAL(38,0)) * s AS BIGINT)""".stripMargin)
@@ -692,7 +692,7 @@ object Aggregates {
       .orderBy(col("event_type"))
   }
 
-  /** Exact 10% trimmed mean per order priority (J80, round 10): drop
+  /** Exact 10% trimmed mean per order priority (J80): drop
     * the k = n div 10 cheapest AND dearest orders, mean the middle —
     * the robust-location companion of q_agg_winsorized (winsorize
     * CLAMPS the tails into the estimate, trim EXCLUDES them; both
@@ -715,7 +715,7 @@ object Aggregates {
     val byP = Window.partitionBy(col("o_orderpriority"))
     val hist = orders(spark, dir)
       .select(col("o_orderpriority"),
-        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
+        cents("o_totalprice")
           .as("cents"))
       .groupBy(col("o_orderpriority"), col("cents"))
       .agg(count(lit(1)).as("cnt"))

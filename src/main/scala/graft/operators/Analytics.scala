@@ -36,8 +36,7 @@ object Analytics {
     * whole partition — no ordering dependence, no second shuffle. */
   def funnelStages(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
-    val staged = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val staged = eventsUs(spark, dir)
       .withColumn("s1",
         min(when(col("event_type") === "signup", col("ts_us"))).over(byUser))
       .withColumn("s2",
@@ -102,11 +101,8 @@ object Analytics {
     * partial-aggregable groupBy. This is the merge-as-of pattern at
     * aggregate granularity: no range join, no per-probe rescan. */
   def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val prevFrame = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val prevFrame = userTimeline.rowsBetween(Window.unboundedPreceding, -1)
+    eventsUs(spark, dir)
       .withColumn("prev_type",
         last(when(col("event_type") =!= "purchase", col("event_type")),
           ignoreNulls = true).over(prevFrame))
@@ -232,8 +228,7 @@ object Analytics {
       .cache()
     // sz rides the explode as size(ts) — the set size is already in
     // the cached array, so the per-doc count WINDOW (a second agg pass
-    // over the token frame) is pure waste (round 8: removed, one of
-    // the two per-doc window passes gone)
+    // over the token frame) is pure waste
     val toks = sets.select(col("doc_id"),
       size(col("ts")).cast("long").as("sz"), explode(col("ts")).as("tok"))
     val dfCounts = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -255,7 +250,7 @@ object Analytics {
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         col("a.sz").as("a_sz"), col("b.sz").as("b_sz"))
       .distinct()
-    // Verify tail (round 15, guide §3.1): below the doc-count gate the
+    // Verify tail: below the doc-count gate the
     // candidate side is the SHUFFLE_HASH build side of both verify
     // joins — the tiny post-distinct pair table hashes per partition,
     // `sets` streams through doc_id exchanges, and the two doc-sized
@@ -320,8 +315,7 @@ object Analytics {
     * sessionizer carries), and the regex runs map-side after the
     * aggregation — no joins, no window. */
   def seqPattern(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    eventsUs(spark, dir)
       .withColumn("ini", substring(col("event_type"), 1, 1))
       .groupBy(col("user_id"))
       .agg(expr("array_join(transform(array_sort(collect_list(" +
@@ -370,13 +364,10 @@ object Analytics {
     * sequence operator here uses) + a low-cardinality (≤125 paths)
     * count; top-10 via TakeOrderedAndProject. */
   def topPaths(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    eventsUs(spark, dir)
       .withColumn("ini", substring(col("event_type"), 1, 1))
-      .withColumn("i2", lead(col("ini"), 1).over(byUser))
-      .withColumn("i3", lead(col("ini"), 2).over(byUser))
+      .withColumn("i2", lead(col("ini"), 1).over(userTimeline))
+      .withColumn("i3", lead(col("ini"), 2).over(userTimeline))
       .filter(col("i3").isNotNull)
       .select(concat_ws(">", col("ini"), col("i2"), col("i3")).as("path"))
       .groupBy(col("path")).agg(count(lit(1)).as("n"))
@@ -479,14 +470,7 @@ object Analytics {
     * Scale shape: one lead() on the shared user_id ordering, then two
     * partial-aggregable rollups on the ≤|types|² transition key. */
   def markovTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val trans = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("dst", lead(col("event_type"), 1).over(byUser))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("n"))
+    val trans = markovTrans(spark, dir)
     val srcTot = trans.groupBy(col("src").as("s2"))
       .agg(sum(col("n")).as("n_src"))
     trans.join(srcTot, col("src") === col("s2")).drop("s2")
@@ -495,7 +479,7 @@ object Analytics {
       .orderBy(col("src"), col("dst"))
   }
 
-  /** 2-D skyline / Pareto frontier (round 6): per brand, the parts not
+  /** 2-D skyline / Pareto frontier: per brand, the parts not
     * dominated on (price ↓, size ↑) — the "best tradeoff" query
     * (cheapest part at every size tier). Sort-based formulation, not
     * the O(n²) dominance self-join: within a brand ordered by price, a
@@ -517,7 +501,7 @@ object Analytics {
       .rangeBetween(Window.unboundedPreceding, -1)
     part(spark, dir)
       .select(col("p_brand"), col("p_partkey"),
-        expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)")
+        cents("p_retailprice")
           .as("price_c"),
         col("p_size"))
       .withColumn("m_strict", max(col("p_size")).over(brandByPrice))
@@ -530,7 +514,7 @@ object Analytics {
       .orderBy(col("p_brand"), col("price_c"), col("p_partkey"))
   }
 
-  /** Gaps & islands (round 6): maximal runs of CONSECUTIVE active days
+  /** Gaps & islands: maximal runs of CONSECUTIVE active days
     * per user — the activity-streak segmentation behind retention and
     * engagement reporting. The classic difference trick: day minus the
     * per-user dense rank of day is constant exactly within a
@@ -627,10 +611,10 @@ object Analytics {
     import org.apache.spark.sql.expressions.Window
     val users = events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("user_id"))
       .agg(max(col("day")).as("last_day"), count(lit(1)).as("freq"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("mon_cents"))
     val gmax = users.agg(max(col("last_day")).as("gmax"))
     val scored = users.crossJoin(broadcast(gmax))
@@ -666,7 +650,7 @@ object Analytics {
     val ev = events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select((col("user_id") % 2).as("arm"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        cents("value").as("cents"))
     val mu = ev.groupBy(col("arm"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
       .withColumn("mu", expr("s div n"))
@@ -704,8 +688,7 @@ object Analytics {
     * per-type rollup. */
   def linearAttribution(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    eventsUs(spark, dir)
       .withColumn("first_purchase",
         min(when(col("event_type") === "purchase", col("ts_us")))
           .over(byUser))
@@ -735,15 +718,7 @@ object Analytics {
     * session boundary emit no row (the curve is constant there —
     * documented). */
   def concurrencyCurve(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val sess = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("gap_us").isNull || col("gap_us") > 30L * 60 * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_sess")).over(byUser))
+    val sess = Reshape.sessionEvents(spark, dir)
       .groupBy(col("user_id"), col("session_no"))
       .agg(min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"))
     val points = sess
@@ -776,21 +751,19 @@ object Analytics {
   def markovSteady(spark: SparkSession, dir: String): DataFrame =
     markovSteadyFrom(markovTrans(spark, dir).localCheckpoint())
 
-  /** The (src, dst, n) transition census both markov_steady and
-    * markov_entropy fold over — ONE corpus window pass, shared by
-    * text so the family cannot disagree on P. Callers that reuse the
-    * frame more than once materialize it (k²=25 rows) with
-    * `.localCheckpoint()` so the events window runs exactly once. */
-  private def markovTrans(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("dst", lead(col("event_type"), 1).over(byUser))
+  /** The (src, dst, n) transition census: each event and the next one
+    * on its user's timeline, counted per (type, next type). The markov,
+    * steady-state, entropy, reciprocity and absorption rows all fold
+    * over it, so the family cannot disagree on what a transition is.
+    * Callers that reuse the frame more than once materialize it
+    * (k²=25 rows) with `.localCheckpoint()` so the events window runs
+    * exactly once. */
+  private def markovTrans(spark: SparkSession, dir: String): DataFrame =
+    eventsUs(spark, dir)
+      .withColumn("dst", lead(col("event_type"), 1).over(userTimeline))
       .filter(col("dst").isNotNull)
       .groupBy(col("event_type").as("src"), col("dst"))
       .agg(count(lit(1)).as("n"))
-  }
 
   private def markovSteadyFrom(trans: DataFrame): DataFrame = {
     val p = trans
@@ -834,7 +807,7 @@ object Analytics {
   def stickiness(spark: SparkSession, dir: String): DataFrame = {
     val ud = events(spark, dir)
       .select(col("user_id"),
-        expr("(ts_ns div 1000) div 86400000000").as("day"))
+        epochDay.as("day"))
       .distinct()
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val mau = ud
@@ -857,15 +830,7 @@ object Analytics {
     * Shape: the sessionize window + a (user, session) rollup carrying
     * the event count, then a per-day partial-aggregable fold. */
   def bounceRate(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("gap_us").isNull || col("gap_us") > 30L * 60 * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_sess")).over(byUser))
+    Reshape.sessionEvents(spark, dir)
       .groupBy(col("user_id"), col("session_no"))
       .agg(min(col("ts_us")).as("start_us"), count(lit(1)).as("n_ev"))
       .withColumn("day", expr("start_us div 86400000000"))
@@ -876,7 +841,7 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** Kaplan–Meier hazard table (round 8) over user lifetimes: per
+  /** Kaplan–Meier hazard table over user lifetimes: per
     * observed lifetime t (days between a user's first and last event),
     * the at-risk count n(t) = users with lifetime ≥ t, the event count
     * d(t) = users whose lifetime is exactly t, and the discrete hazard
@@ -894,7 +859,7 @@ object Analytics {
     * the ~90-row census, never the fact table. */
   def kmSurvival(spark: SparkSession, dir: String): DataFrame = {
     val life = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("user_id"))
       .agg((max(col("day")) - min(col("day"))).as("lt"))
     val census = life.groupBy(col("lt")).agg(count(lit(1)).as("n_end"))
@@ -912,7 +877,7 @@ object Analytics {
       .orderBy(col("lifetime_days"))
   }
 
-  /** Weighted digraph reciprocity (round 8) of the event-type
+  /** Weighted digraph reciprocity of the event-type
     * transition graph: per unordered type pair {a, b}, the forward and
     * reverse transition weights and the pair-level reciprocity
     * 2·min(w_ab, w_ba)·10⁴ div (w_ab + w_ba) — 10⁴ means perfectly
@@ -927,14 +892,7 @@ object Analytics {
     * Missing directions contribute 0 via the conditional sum, not a
     * join's NULL. */
   def reciprocity(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val trans = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("dst", lead(col("event_type"), 1).over(byUser))
-      .filter(col("dst").isNotNull && col("dst") =!= col("event_type"))
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("n"))
+    val trans = markovTrans(spark, dir).filter(col("dst") =!= col("src"))
     trans
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),
@@ -949,7 +907,7 @@ object Analytics {
       .orderBy(col("a"), col("b"))
   }
 
-  /** Mann–Whitney U rank-sum test (round 8) on the SAME experiment as
+  /** Mann–Whitney U rank-sum test on the SAME experiment as
     * q_events_ab_ttest (purchase cents, user-parity arms) — the
     * distribution-free verdict the t-test approximation needs when
     * values are skewed (purchase amounts are). Computed EXACTLY and
@@ -968,7 +926,7 @@ object Analytics {
   def abUTest(spark: SparkSession, dir: String): DataFrame = {
     val sup = events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .select(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("v"),
+      .select(cents("value").as("v"),
         (col("user_id") % 2 === 0).as("in_a"))
       .groupBy(col("v"))
       .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("ca"),
@@ -989,7 +947,7 @@ object Analytics {
           " * (n_a + n_b + 1)").as("significant_95"))
   }
 
-  /** Exact inter-arrival latency percentiles per feed (round 8): the
+  /** Exact inter-arrival latency percentiles per feed: the
     * p50/p95/p99 gaps between consecutive events of each type — the
     * cadence SLO a feed monitor alerts on (q_dq_freshness says "the
     * feed stopped"; this says "the feed's tail latency moved").
@@ -1004,8 +962,7 @@ object Analytics {
   def interarrival(spark: SparkSession, dir: String): DataFrame = {
     val byType = Window.partitionBy(col("event_type"))
       .orderBy(col("ts_us"), col("event_id"))
-    val deltas = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val deltas = eventsUs(spark, dir)
       .withColumn("prev", lag(col("ts_us"), 1).over(byType))
       .filter(col("prev").isNotNull)
       .withColumn("d", col("ts_us") - col("prev"))
@@ -1028,8 +985,8 @@ object Analytics {
       .orderBy(col("event_type"))
   }
 
-  /** Herfindahl–Hirschman activity-concentration index per feed
-    * (round 8): HHI = Σ (user share)², computed with ONE division at
+  /** Herfindahl–Hirschman activity-concentration index per feed:
+    * HHI = Σ (user share)², computed with ONE division at
     * the end — Σ n_u²·10⁸ div N², the square sum in DECIMAL(38,0)
     * (the overflow-lane discipline). 10⁸/HHI is the "effective number
     * of equally-active users" — the abuse/bot-concentration signal a
@@ -1056,8 +1013,8 @@ object Analytics {
         expr("100000000 div greatest(hhi_e8, 1)"))
       .orderBy(col("event_type"))
 
-  /** CUPED variance-reduced experiment readout (round 8, Deng et al.
-    * 2013): the pre-period covariate adjustment every experimentation
+  /** CUPED variance-reduced experiment readout (Deng et al. 2013):
+    * the pre-period covariate adjustment every experimentation
     * platform ships — per user, pre-period purchase spend x and
     * post-period spend y (calendar midpoint split), θ = cov(x,y)/
     * var(x) pooled, adjusted effect = Δy − θ·Δx. When pre-period
@@ -1079,8 +1036,8 @@ object Analytics {
   def cuped(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .withColumn("cents", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("day", epochDay)
+      .withColumn("cents", cents("value"))
     val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
     val users = ev.crossJoin(broadcast(mid))
       .groupBy(col("user_id"))
@@ -1121,7 +1078,7 @@ object Analytics {
           .as("adj_diff_e4"))
   }
 
-  /** Funnel time-to-convert distribution (round 8): for users whose
+  /** Funnel time-to-convert distribution: for users whose
     * first signup is later followed by a purchase, the exact
     * p50/p90/max of the conversion lag — q_funnel_stages counts WHO
     * converts; this measures HOW LONG conversion takes (the number a
@@ -1136,7 +1093,7 @@ object Analytics {
   def funnelLag(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("user_id"), col("event_type"),
-        expr("ts_ns div 1000").as("ts_us"))
+        tsUs.as("ts_us"))
     val signup = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts_us")).as("s_us"))
     val conv = ev.filter(col("event_type") === "purchase")
@@ -1164,7 +1121,7 @@ object Analytics {
         col("p50_lag_us"), col("p90_lag_us"), col("max_lag_us"))
   }
 
-  /** Day-N retention curve (round 8): for N ∈ {1, 7, 14}, the share
+  /** Day-N retention curve: for N ∈ {1, 7, 14}, the share
     * of users active again exactly-or-after N days from their FIRST
     * day — the growth KPI headline ("D7 retention") that
     * q_cohort_retention's full cohort matrix summarizes away. An
@@ -1180,7 +1137,7 @@ object Analytics {
   def retentionCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val users = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("user_id"))
       .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
     val wm = users.agg(max(col("last_day")).as("wm_day"))
@@ -1197,7 +1154,7 @@ object Analytics {
       .orderBy(col("n_days"))
   }
 
-  /** Retention half-life (J84, round 11): fit ln(retention_d) over the
+  /** Retention half-life (J84): fit ln(retention_d) over the
     * daily offsets d = 1..7 with the closed-form least-squares slope
     * (Σ(d−4)·y_d / 28 — equally-spaced x, the Hurst/regr_slope idiom)
     * and report half-life = ln 2 / (−slope) in milli-days — the ONE
@@ -1216,7 +1173,7 @@ object Analytics {
   def retentionHalflife(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val users = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("user_id"))
       .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
     val wm = users.agg(max(col("last_day")).as("wm_day"))
@@ -1241,7 +1198,7 @@ object Analytics {
           .as("half_life_days_e3"))
   }
 
-  /** Activity-segment migration matrix (J85, round 11): split the
+  /** Activity-segment migration matrix (J85): split the
     * timeline at its midpoint day, segment each user per half as
     * high/low by the EXACT per-half median split (support census,
     * cum·2 ≥ n — the lead_time idiom; a fixed threshold measured
@@ -1257,7 +1214,7 @@ object Analytics {
     * ≤9-row matrix. */
   def rfmMigration(spark: SparkSession, dir: String): DataFrame = {
     val d = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
     val mm = d.agg(expr("(min(day) + max(day)) div 2").as("mid"))
     val perHalf = d.crossJoin(broadcast(mm))
       .withColumn("half",
@@ -1292,7 +1249,7 @@ object Analytics {
       .orderBy(col("seg_from"), col("seg_to"))
   }
 
-  /** ABC / Pareto revenue classification (round 8): parts classified
+  /** ABC / Pareto revenue classification: parts classified
     * by cumulative revenue share — A = the head covering 80% of
     * revenue, B = the next 15%, C = the tail 5% — then the census per
     * class (how many parts, what revenue). The inventory-management
@@ -1308,7 +1265,7 @@ object Analytics {
   def abcAnalysis(spark: SparkSession, dir: String): DataFrame = {
     val rev = lineitem(spark, dir)
       .groupBy(col("l_partkey"))
-      .agg(sum(expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
+      .agg(sum(cents("l_extendedprice"))
         .as("cents"))
     val w = Window.orderBy(col("cents").desc, col("l_partkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1327,7 +1284,7 @@ object Analytics {
       .orderBy(col("cls"))
   }
 
-  /** Markov entropy rate (round 8): completes the chain family —
+  /** Markov entropy rate: completes the chain family —
     * q_events_markov gives the transition matrix, q_events_markov_steady
     * the stationary distribution; this row gives the information rate:
     * H = Σ_i π_i H_i with H_i = Σ_j p_ij ln(1/p_ij), the expected
@@ -1371,7 +1328,7 @@ object Analytics {
       .orderBy(col("state"))
   }
 
-  /** Experiment power analysis (round 8): the question asked BEFORE
+  /** Experiment power analysis: the question asked BEFORE
     * q_events_ab_ttest's question — per event type, what lift could a
     * 50/50 split of the current population even detect? MDE² =
     * (z_{α/2} + z_β)²·2σ²/n_g with α = 5%, power = 80% ⇒ the constant
@@ -1389,7 +1346,7 @@ object Analytics {
   def powerMde(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"))
+        cents("value").as("c"))
     val mu = ev.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("s"))
       .withColumn("mu", expr("s div n"))
@@ -1409,7 +1366,7 @@ object Analytics {
       .orderBy(col("event_type"))
   }
 
-  /** Cumulative-user growth curve (round 8): per active day, new
+  /** Cumulative-user growth curve: per active day, new
     * users (first-ever appearance) and the running total — THE
     * top-left chart of every growth dashboard. Exact cumulative
     * DISTINCT without a distinct-over-window (which Spark can't do
@@ -1424,7 +1381,7 @@ object Analytics {
   def cumulativeUsers(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("user_id"),
-        expr("(ts_ns div 1000) div 86400000000").as("d"))
+        epochDay.as("d"))
     val nu = ev.groupBy(col("user_id")).agg(min(col("d")).as("first_day"))
       .groupBy(col("first_day").as("d"))
       .agg(count(lit(1)).as("new_users"))
@@ -1438,7 +1395,7 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** Markov absorption curve (round 8): from each behavior state, the
+  /** Markov absorption curve: from each behavior state, the
     * probability of reaching 'purchase' within 1 / 3 / 5 steps —
     * closing the chain family (transitions → steady state → entropy
     * rate → ABSORPTION): the "how close is this user to converting"
@@ -1452,14 +1409,7 @@ object Analytics {
     * five times — roster-sized frames, the bradleyTerry unrolled-
     * fixpoint discipline. */
   def absorptionCurve(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val trans = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("dst", lead(col("event_type"), 1).over(byUser))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("n"))
+    val trans = markovTrans(spark, dir)
     val tot = trans.groupBy(col("src")).agg(sum(col("n")).as("t"))
     val p = trans.join(tot, "src")
       .select(col("src"), col("dst"),
@@ -1487,7 +1437,7 @@ object Analytics {
       .orderBy(col("state"))
   }
 
-  /** Engagement–monetization curve (round 8): does activity convert
+  /** Engagement–monetization curve: does activity convert
     * to spend? Users in activity deciles (ntile(10) over event count,
     * user_id tie-break — the ntile parity discipline), per decile the
     * activity band and the mean purchase cents. The fixture curve
@@ -1501,7 +1451,7 @@ object Analytics {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"),
         sum(when(col("event_type") === "purchase",
-          expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+          cents("value"))
           .otherwise(0L)).as("buy_c"))
     u.withColumn("decile", ntile(10).over(
         Window.orderBy(col("n_ev"), col("user_id"))))
@@ -1513,7 +1463,7 @@ object Analytics {
       .orderBy(col("decile"))
   }
 
-  /** First-touch attribution (round 8): completes the attribution
+  /** First-touch attribution: completes the attribution
     * trio — last-touch (q_attr_last_touch) credits the closer,
     * linear (q_attr_linear_multi) splits evenly, first-touch credits
     * the DISCOVERY channel: the earliest click/view strictly before
@@ -1524,16 +1474,14 @@ object Analytics {
     * Shape: per-user first-purchase fold → touch filter → one rank
     * window → channel census. */
   def firstTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val e = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val e = eventsUs(spark, dir)
     val fp = e.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("ts_us")).as("p_ts"))
     e.join(fp, Seq("user_id"))
       .filter(col("ts_us") < col("p_ts") &&
         col("event_type").isin("click", "view"))
       .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us"), col("event_id"))))
+        userTimeline))
       .filter(col("rn") === 1)
       .groupBy(col("event_type").as("channel"))
       .agg(count(lit(1)).as("n_conversions"))
@@ -1559,7 +1507,7 @@ object Analytics {
     * one that must survive 100 TB. */
   def rollingDistinctUsers(spark: SparkSession, dir: String): DataFrame = {
     val ud = events(spark, dir)
-      .select(expr("(ts_ns div 1000) div 86400000000").as("d"),
+      .select(epochDay.as("d"),
         col("user_id"))
       .distinct()
     val days = ud.select(col("d")).distinct()
@@ -1590,7 +1538,7 @@ object Analytics {
     val o = orders(spark, dir).select(col("o_custkey").as("ck"),
       expr("CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1" +
         " AS BIGINT)").as("m"),
-      expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
+      cents("o_totalprice")
         .as("cents"))
     val cohort = o.groupBy(col("ck")).agg(min(col("m")).as("m0"))
     o.join(cohort, "ck")
@@ -1613,7 +1561,7 @@ object Analytics {
     * the join is user_id-keyed on both sides (co-located at scale). */
   def newVsReturning(spark: SparkSession, dir: String): DataFrame = {
     val ud = events(spark, dir)
-      .select(expr("(ts_ns div 1000) div 86400000000").as("d"),
+      .select(epochDay.as("d"),
         col("user_id"))
       .distinct()
     val first = ud.groupBy(col("user_id")).agg(min(col("d")).as("d0"))
@@ -1651,25 +1599,10 @@ object Analytics {
     * the spec test). */
   def cramersV(spark: SparkSession, dir: String): DataFrame = {
     val cells = events(spark, dir)
-      .select(col("event_type"),
-        expr("((ts_ns div 1000) div 86400000000) % 7").as("dow"))
+      .select(col("event_type"), epochDow.as("dow"))
       .groupBy(col("event_type"), col("dow"))
       .agg(count(lit(1)).as("n"))
-    val rowT = cells.groupBy(col("event_type")).agg(sum(col("n")).as("r"))
-    val colT = cells.groupBy(col("dow")).agg(sum(col("n")).as("c"))
-    val tot = cells.agg(sum(col("n")).as("nn"),
-      countDistinct(col("event_type")).as("k_types"),
-      countDistinct(col("dow")).as("k_dows"))
-    cells.join(broadcast(rowT), "event_type")
-      .join(broadcast(colT), "dow")
-      .crossJoin(broadcast(tot))
-      .agg(max(col("nn")).as("n"), max(col("k_types")).as("k_types"),
-        max(col("k_dows")).as("k_dows"),
-        sum(expr("""CAST((CAST(n AS DECIMAL(38,0)) * nn - CAST(r AS
-          | DECIMAL(38,0)) * c) * (CAST(n AS DECIMAL(38,0)) * nn -
-          | CAST(r AS DECIMAL(38,0)) * c) * 1000000
-          | div (CAST(nn AS DECIMAL(38,0)) * r * c) AS BIGINT)"""
-          .stripMargin)).as("chi2_e6"))
+    chi2Census(cells, "event_type" -> "k_types", "dow" -> "k_dows")
       .select(col("n"), col("k_types"), col("k_dows"),
         expr("(k_types - 1) * (k_dows - 1)").as("dof"),
         col("chi2_e6"),
@@ -1686,7 +1619,7 @@ object Analytics {
     * purchase-minus-error count difference centered at zero? The
     * EXACT-null nonparametric answer the parametric ab_ttest and the
     * rank-based ab_utest both approximate: under H₀ each day's
-    * difference is symmetric around 0, so flipping signs at random
+    * difference is symmetric about 0, so flipping signs at random
     * must produce statistics as extreme as the observed one about as
     * often as not. B = 100 deterministic sign patterns from the shared
     * md5-h60 residue (the Poisson-bootstrap discipline — no RNG, both
@@ -1702,7 +1635,7 @@ object Analytics {
     * table) → 100-row fold. */
   def permTest(spark: SparkSession, dir: String): DataFrame = {
     val daily = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("day"))
       .agg((sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
         - sum(when(col("event_type") === "error", 1L).otherwise(0L)))
@@ -1778,8 +1711,7 @@ object Analytics {
     * broadcast peak/trough fold. */
   def hourProfile(spark: SparkSession, dir: String): DataFrame = {
     val h = events(spark, dir)
-      .select(expr("((ts_ns div 1000) div 3600000000) % 24")
-        .as("hour"))
+      .select((epochHour % 24).as("hour"))
       .groupBy(col("hour")).agg(count(lit(1)).as("n"))
     val tot = h.agg(sum(col("n")).as("nn"), max(col("n")).as("mx"),
       min(col("n")).as("mn"))
@@ -1818,6 +1750,35 @@ object Analytics {
         expr("(n0 - n1) * (n0 - n1) * 1000000 div n_users >= 3841459")
           .as("srm_alarm"))
 
+  /** The chi-square independence census of a two-way contingency
+    * table `cells` (a, b, n), as one row: the total `n`, the level
+    * count of each key (`a` and `b` pair the key column with the name
+    * of its count; counted on the margins, so no distinct aggregate
+    * and no Expand is planned) and chi2_e6 =
+    * Σ (n·N − r·c)²·10⁶ div (N·r·c) over the cells — the expected-count
+    * division cleared by cross-multiplication, one truncating div per
+    * cell, the square in DECIMAL(38,0) (it passes 2⁶³ from N ≈ 10⁵).
+    * Margins and total are broadcast to the cell-sized fold. */
+  private def chi2Census(cells: DataFrame, a: (String, String),
+      b: (String, String)): DataFrame = {
+    val (ac, ka) = a
+    val (bc, kb) = b
+    val rowT = cells.groupBy(col(ac)).agg(sum(col("n")).as("r"))
+    val colT = cells.groupBy(col(bc)).agg(sum(col("n")).as("c"))
+    val tot = rowT.agg(sum(col("r")).as("nn"), count(lit(1)).as(ka))
+      .crossJoin(colT.agg(count(lit(1)).as(kb)))
+    cells.join(broadcast(rowT), ac)
+      .join(broadcast(colT), bc)
+      .crossJoin(broadcast(tot))
+      .agg(max(col("nn")).as("n"), max(col(ka)).as(ka),
+        max(col(kb)).as(kb),
+        sum(expr("""CAST((CAST(n AS DECIMAL(38,0)) * nn - CAST(r AS
+          | DECIMAL(38,0)) * c) * (CAST(n AS DECIMAL(38,0)) * nn -
+          | CAST(r AS DECIMAL(38,0)) * c) * 1000000
+          | div (CAST(nn AS DECIMAL(38,0)) * r * c) AS BIGINT)"""
+          .stripMargin)).as("chi2_e6"))
+  }
+
   /** Day-of-week × hour interaction test (J67): is the hourly shape
     * the SAME every weekday, or does (say) the weekend run a
     * different clock? Chi-square independence over the 7×24
@@ -1831,25 +1792,10 @@ object Analytics {
     * → broadcast margins → 168-row fold. */
   def dowHourInteraction(spark: SparkSession, dir: String): DataFrame = {
     val cells = events(spark, dir)
-      .select(expr("((ts_ns div 1000) div 86400000000) % 7").as("dow"),
-        expr("((ts_ns div 1000) div 3600000000) % 24").as("hour"))
+      .select(epochDow.as("dow"), (epochHour % 24).as("hour"))
       .groupBy(col("dow"), col("hour"))
       .agg(count(lit(1)).as("n"))
-    val rowT = cells.groupBy(col("dow")).agg(sum(col("n")).as("r"))
-    val colT = cells.groupBy(col("hour")).agg(sum(col("n")).as("c"))
-    val tot = cells.agg(sum(col("n")).as("nn"),
-      countDistinct(col("dow")).as("k_dows"),
-      countDistinct(col("hour")).as("k_hours"))
-    cells.join(broadcast(rowT), "dow")
-      .join(broadcast(colT), "hour")
-      .crossJoin(broadcast(tot))
-      .agg(max(col("nn")).as("n"), max(col("k_dows")).as("k_dows"),
-        max(col("k_hours")).as("k_hours"),
-        sum(expr("""CAST((CAST(n AS DECIMAL(38,0)) * nn - CAST(r AS
-          | DECIMAL(38,0)) * c) * (CAST(n AS DECIMAL(38,0)) * nn -
-          | CAST(r AS DECIMAL(38,0)) * c) * 1000000
-          | div (CAST(nn AS DECIMAL(38,0)) * r * c) AS BIGINT)"""
-          .stripMargin)).as("chi2_e6"))
+    chi2Census(cells, "dow" -> "k_dows", "hour" -> "k_hours")
       .select(col("n"), col("k_dows"), col("k_hours"),
         expr("(k_dows - 1) * (k_hours - 1)").as("dof"),
         col("chi2_e6"),
@@ -1873,7 +1819,7 @@ object Analytics {
     * census → broadcast fold. */
   def weekendLift(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .withColumn("we", (col("day") % 7).isin(2L, 3L))
     val days = ev.select(col("day"), col("we")).distinct()
       .agg(sum(when(col("we"), 1L).otherwise(0L)).as("we_days"),
@@ -1931,7 +1877,7 @@ object Analytics {
     * span-support census → window cum on the census → rank picks. */
   def userLifespan(spark: SparkSession, dir: String): DataFrame = {
     val sp = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("user_id"))
       .agg((max(col("day")) - min(col("day"))).as("span"))
     val cen = sp.groupBy(col("span")).agg(count(lit(1)).as("c"))
@@ -2006,8 +1952,8 @@ object Analytics {
       .limit(15)
   }
 
-  /** User-activity concentration curve (J80, round 10 — the Pareto
-    * "whale" census): users decile-ranked by event count (ntile 10
+  /** User-activity concentration curve (J80 — the Pareto "whale"
+    * census): users decile-ranked by event count (ntile 10
     * over (count desc, user_id) — the rfm quintile discipline: both
     * engines split first-buckets-larger over a TOTAL order, so the
     * decile boundaries are identical), then per decile: users, events,
@@ -2039,7 +1985,7 @@ object Analytics {
       .orderBy(col("decile"))
   }
 
-  /** Fano factor per event type (J93, round 11): variance-to-mean of
+  /** Fano factor per event type (J93): variance-to-mean of
     * the daily count series — THE dispersion index (Fano 1947): 1 ⇔
     * Poisson arrivals, > 1 overdispersed (bursty/clumped traffic),
     * < 1 regular — the per-TYPE answer the randomness family's global
@@ -2057,7 +2003,7 @@ object Analytics {
     * per-type moment fold → |types| rows. */
   def fanoFactor(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("d", epochDay)
       .groupBy(col("event_type"), col("d"))
       .agg(count(lit(1)).as("x"))
       .groupBy(col("event_type"))
@@ -2071,7 +2017,7 @@ object Analytics {
           | AS BIGINT)""".stripMargin).as("fano_e2"))
       .orderBy(col("event_type"))
 
-  /** Bot-regularity screen (J97, round 11): per user (≥ 10 events),
+  /** Bot-regularity screen (J97): per user (≥ 10 events),
     * the squared coefficient of variation of inter-event gaps in
     * SECONDS — machine traffic is metronomic (cv² → 0), humans are
     * bursty (cv² ≥ 1 for Poisson and beyond) — with the triage
@@ -2091,14 +2037,14 @@ object Analytics {
     * single-shuffle contract. */
   def botScreen(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
-      // Truncate each timestamp to the µs grid BEFORE differencing
-      // (round 12, ADVICE r11): the DuckDB oracle differences
+      // Truncate each timestamp to the µs grid BEFORE differencing:
+      // the DuckDB oracle differences
       // epoch_us-truncated stamps, so a raw-ns difference could
       // disagree by one second across a boundary on any future
       // fixture with sub-µs-aligned ts_ns; truncating first makes
       // both engines round identically regardless of ns residue.
-      // The window ORDER BY is on the SAME µs grid + event_id tiebreak
-      // (round 13, ADVICE r12): ordering by raw ts_ns while the oracle
+      // The window ORDER BY is on the SAME µs grid + event_id tiebreak:
+      // ordering by raw ts_ns while the oracle
       // orders by µs-resolution ts would let same-µs/different-ns peers
       // sort differently across engines and diverge the order-sensitive
       // lag chain.
@@ -2122,7 +2068,7 @@ object Analytics {
           .otherwise("bursty"))
       .orderBy(col("user_id"))
 
-  /** Sequential-peeking audit (J103, round 11): q_events_ab_ttest's
+  /** Sequential-peeking audit (J103): q_events_ab_ttest's
     * experiment re-read at four interim peeks (days 7/14/21/28 from
     * the first purchase) with BOTH decision rules — the naive
     * per-peek 95% cut (z² ≥ 3.84) and the Bonferroni-4 cut
@@ -2146,8 +2092,8 @@ object Analytics {
     val ev = events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select((col("user_id") % 2).as("arm"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
-        expr("(ts_ns div 1000) div 86400000000").as("d"))
+        cents("value").as("cents"),
+        epochDay.as("d"))
     val d0 = ev.agg(min(col("d")).as("d0"))
     val peeks = Seq(7L, 14L, 21L, 28L).toDF("peek_day")
     val upTo = ev.crossJoin(broadcast(d0)).crossJoin(broadcast(peeks))
@@ -2182,7 +2128,7 @@ object Analytics {
       .orderBy(col("peek_day"))
   }
 
-  /** Attribution-window sensitivity sweep (J104, round 11): the
+  /** Attribution-window sensitivity sweep (J104): the
     * last-touch model re-read at lookbacks of 1/3/7 days — the window
     * parameter every attribution deployment ARGUES about, measured:
     * per (lookback, channel), conversions attributed vs falling to
@@ -2196,11 +2142,8 @@ object Analytics {
     * purchases-only frame → (lookback, channel) rollup. */
   def attrWindowSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val prevFrame = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val base = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val prevFrame = userTimeline.rowsBetween(Window.unboundedPreceding, -1)
+    val base = eventsUs(spark, dir)
       .withColumn("prev_type",
         last(when(col("event_type") =!= "purchase", col("event_type")),
           ignoreNulls = true).over(prevFrame))

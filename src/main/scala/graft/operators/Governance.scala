@@ -36,8 +36,17 @@ import graft.Tables._
   */
 object Governance {
 
-  private def cents(c: String): Column =
-    expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")
+  /** The dp rows' replayable Laplace draw: `u`, a uniform on [0, 10⁶)
+    * from the md5 of the SQL expression `seed`, and `t_e3` =
+    * lnE3(1 − 2|u − ½|) + 13816, the inverse-CDF magnitude in the lnE3
+    * floor-once lane (13816 = lnE3(10⁶)). The caller scales `t_e3` and
+    * signs it by `u ≥ 500000`. The oracle replays the identical draw. */
+  private def laplaceDraw(seed: String)(df: DataFrame): DataFrame =
+    df.withColumn("u", expr(s"CAST(conv(substring(md5($seed), 1, 15)," +
+        " 16, 10) AS BIGINT) % 1000000"))
+      .withColumn("t_e3", expr(
+        "CAST(floor(ln(greatest(1000000 - 2 * abs(u - 500000), 1))" +
+          " * 1000 + 0.5) AS BIGINT) - 13816"))
 
   /** k-anonymity audit over customer. QI = (nation, market segment,
     * $1000 account-balance band); for k ∈ {2, 5, 10} report how many
@@ -77,7 +86,7 @@ object Governance {
       .orderBy(col("k"))
   }
 
-  /** Generalization ladder for k-anonymity (J77, round 9): how much
+  /** Generalization ladder for k-anonymity (J77): how much
     * COARSENING buys how much safety — the release-design question
     * the fixed-granularity [[kAnonymity]] sweep (which varies k, not
     * the QI) cannot answer. Three rungs over the same customer QI:
@@ -96,8 +105,7 @@ object Governance {
       .withColumn("band",
         expr("(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) + 100000000)" +
           " div 100000"))
-    def rung(name: String, cols: Seq[org.apache.spark.sql.Column])
-        : DataFrame =
+    def rung(name: String, cols: Seq[Column]): DataFrame =
       base.groupBy(cols: _*).agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("n_classes"),
           min(col("sz")).as("min_class"),
@@ -131,7 +139,7 @@ object Governance {
     * classic two-level distinct-count shape. */
   def lDiversity(spark: SparkSession, dir: String): DataFrame = {
     val cells = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("event_type"), col("day"), col("user_id"))
       .agg(count(lit(1)).as("c"))
     cells
@@ -210,44 +218,36 @@ object Governance {
     * as their length — one homogeneous output type, no engine-specific
     * value formatting in the output).
     *
-    * Shape: ONE scan, ONE aggregate row (24 measures), stack() to the
-    * 6-row report. The multi-countDistinct expands the scan 6-way
-    * (Spark's Expand) — the exact-profile cost; the 100 TB form swaps
-    * each countDistinct for `hll_sketch_estimate(hll_sketch_agg(c, 14))`
-    * and the Expand disappears into mergeable sketches. Not HLL++
-    * `approx_count_distinct`: its buffer can be neither stored nor
-    * merged across queries, and six of them at the default rsd carry
-    * 312 buffer fields, past `spark.sql.codegen.maxFields` (100), so
-    * the aggregate would run interpreted. */
+    * Shape: ONE scan, each row stacked into its 6 (column, value) pairs
+    * with the value's text as the distinct key, ONE aggregate grouped
+    * by column: a single distinct aggregate, so no Expand is planned
+    * (several distinct aggregates would plan one, whose slot order
+    * varies run to run). The 100 TB form swaps the countDistinct for
+    * `hll_sketch_estimate(hll_sketch_agg(k, 14))`, a mergeable sketch.
+    * Not HLL++ `approx_count_distinct`: its buffer can be neither
+    * stored nor merged across queries. */
   def dqProfile(spark: SparkSession, dir: String): DataFrame = {
-    def prof(c: String, v: Column, tag: String): Seq[Column] = Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$tag"),
-      countDistinct(col(c)).as(s"nd_$tag"),
-      min(v).as(s"mn_$tag"), max(v).as(s"mx_$tag"))
-    val aggs: Seq[Column] =
-      prof("o_orderkey", col("o_orderkey"), "ok") ++
-      prof("o_custkey", col("o_custkey"), "ck") ++
-      prof("o_orderstatus", length(col("o_orderstatus")).cast("long"),
-        "st") ++
-      prof("o_totalprice", cents("o_totalprice"), "tp") ++
+    // (name, value as BIGINT: keys as values, money as cents,
+    // timestamps as µs, strings as their length)
+    val cols = Seq(
+      "o_orderkey" -> col("o_orderkey"),
+      "o_custkey" -> col("o_custkey"),
+      "o_orderstatus" -> length(col("o_orderstatus")).cast("long"),
+      "o_totalprice" -> cents("o_totalprice"),
       // o_orderdate is TIMESTAMP_NTZ; the NTZ→TZ cast reads it in the
       // session zone, which every graft entrypoint pins to UTC — so
       // this equals DuckDB's epoch_us over the same naive value
-      prof("o_orderdate", expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))"),
-        "od") ++
-      prof("o_orderpriority", length(col("o_orderpriority")).cast("long"),
-        "op")
+      "o_orderdate" -> expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))"),
+      "o_orderpriority" -> length(col("o_orderpriority")).cast("long"))
     orders(spark, dir)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(expr(
-        "stack(6," +
-          " 'o_orderkey', nn_ok, nd_ok, mn_ok, mx_ok," +
-          " 'o_custkey', nn_ck, nd_ck, mn_ck, mx_ck," +
-          " 'o_orderstatus', nn_st, nd_st, mn_st, mx_st," +
-          " 'o_totalprice', nn_tp, nd_tp, mn_tp, mx_tp," +
-          " 'o_orderdate', nn_od, nd_od, mn_od, mx_od," +
-          " 'o_orderpriority', nn_op, nd_op, mn_op, mx_op)" +
-          " AS (col_name, n_null, n_distinct, min_v, max_v)"))
+      .select(explode(array(cols.map { case (c, v) =>
+        struct(lit(c).as("col_name"), col(c).cast("string").as("k"),
+          v.as("v"))
+      }: _*)).as("p"))
+      .groupBy(col("p.col_name").as("col_name"))
+      .agg(sum(when(col("p.k").isNull, 1L).otherwise(0L)).as("n_null"),
+        countDistinct(col("p.k")).as("n_distinct"),
+        min(col("p.v")).as("min_v"), max(col("p.v")).as("max_v"))
       .orderBy(col("col_name"))
   }
 
@@ -271,7 +271,7 @@ object Governance {
     * computed exactly, then summed). */
   def dqDrift(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .withColumn("cents", cents("value"))
     val mx = ev.agg(max(col("cents")).as("maxc"))
     val bands = ev.crossJoin(broadcast(mx))
@@ -350,7 +350,7 @@ object Governance {
       .orderBy(col("band"))
   }
 
-  /** t-closeness audit (round 8) — completes the privacy trio with
+  /** t-closeness audit — completes the privacy trio with
     * k-anonymity and l-diversity: per QI class (event_type × epoch
     * day, the lDiversity classes), the TOTAL-VARIATION distance
     * between the class's distribution of the sensitive attribute and
@@ -375,7 +375,7 @@ object Governance {
     * no global sorts. */
   def tCloseness(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .withColumn("cents", cents("value"))
     val mx = ev.agg(max(col("cents")).as("maxc"))
     val banded = ev.crossJoin(broadcast(mx))
@@ -407,7 +407,7 @@ object Governance {
       .orderBy(col("event_type"), col("day"))
   }
 
-  /** Benford's-law first-digit audit (round 8) over lineitem extended
+  /** Benford's-law first-digit audit over lineitem extended
     * prices — the classic forensic-accounting screen for fabricated or
     * truncated numeric feeds: the observed share of each leading
     * significant digit 1..9 vs Benford's log₁₀(1+1/d) expectation.
@@ -446,7 +446,7 @@ object Governance {
       .orderBy(col("digit"))
   }
 
-  /** Two-sample Kolmogorov–Smirnov drift test (round 8): the exact KS
+  /** Two-sample Kolmogorov–Smirnov drift test: the exact KS
     * D statistic between the order-total distributions of the even-
     * and odd-orderkey cohorts — the distribution-level data contract
     * check that chi-square banding (dqDrift) approximates; KS needs no
@@ -495,7 +495,7 @@ object Governance {
         col("d_at_cents"))
   }
 
-  /** Feed-freshness / arrival-rate audit (round 8): per event_type,
+  /** Feed-freshness / arrival-rate audit: per event_type,
     * the staleness of the latest record relative to the corpus
     * watermark (global max ts) AND the final-day arrival count vs the
     * type's prior daily average — the two alarms a data-contract
@@ -513,7 +513,7 @@ object Governance {
     * type-sized fold against the 1-row broadcast watermark. */
   def dqFreshness(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-      .select(col("event_type"), expr("ts_ns div 1000").as("ts_us"))
+      .select(col("event_type"), tsUs.as("ts_us"))
       .withColumn("day", expr("ts_us div 86400000000"))
     val wm = ev.agg(max(col("ts_us")).as("wm_us"),
       max(col("day")).as("wm_day"))
@@ -541,7 +541,7 @@ object Governance {
       .orderBy(col("event_type"))
   }
 
-  /** Functional-dependency audit (round 8): does LHS → RHS actually
+  /** Functional-dependency audit: does LHS → RHS actually
     * hold in the data? The schema-contract primitive Deequ/profiling
     * suites check beyond per-column stats — a silently broken FD
     * (one supplier in two nations, one source in five languages) is
@@ -582,7 +582,7 @@ object Governance {
       .orderBy(col("fd"))
   }
 
-  /** Temporal-order audit (round 8): the cross-table twin of the FD
+  /** Temporal-order audit: the cross-table twin of the FD
     * audit — does the EVENT ORDER contract "ordered before shipped"
     * hold between orders and lineitem? Census per order priority:
     * violation count and share, plus the exact lower-median and p90
@@ -593,7 +593,7 @@ object Governance {
     * this is the row that makes that visible instead of silently
     * feeding lag analytics garbage.
     *
-    * Shape (100 TB, round-14 rewrite — VERDICT r13 #4): fact⋈fact
+    * Shape (100 TB): fact⋈fact
     * equi-join on the order key (co-partitionable), then a
     * DISTRIBUTION-COUNTING census instead of a rank window: the lag
     * domain is bounded (integer DAYS — a few thousand distinct values
@@ -640,7 +640,7 @@ object Governance {
       .orderBy(col("pri"))
   }
 
-  /** Re-identification uniqueness curve (round 8): how fast does
+  /** Re-identification uniqueness curve: how fast does
     * record-level uniqueness escalate as quasi-identifier sets widen?
     * Four nested QI levels — {type} → {type, weekday} → {type, day} →
     * {type, day, exact centi value} — each reporting combo count,
@@ -656,9 +656,9 @@ object Governance {
   def uniquenessCurve(spark: SparkSession, dir: String): DataFrame = {
     val e = events(spark, dir)
       .select(col("event_type").as("t"),
-        expr("(ts_ns div 1000) div 86400000000").as("day"),
-        expr("((ts_ns div 1000) div 86400000000) % 7").as("dow"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"))
+        epochDay.as("day"),
+        epochDow.as("dow"),
+        cents("value").as("c"))
     val tot = e.agg(count(lit(1)).as("n"))
     def level(name: String, keys: Seq[String]): DataFrame =
       e.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
@@ -680,7 +680,7 @@ object Governance {
       .orderBy(col("ql"))
   }
 
-  /** Tukey-fence outlier audit (round 8): IQR fences (1.5×) over
+  /** Tukey-fence outlier audit: IQR fences (1.5×) over
     * supplier balances, with PLANTED contamination (every 97th
     * supplier's balance ×10 — the c4_rules/pii_scrub planting
     * discipline: the uniform synthetic balances contain no natural
@@ -726,7 +726,7 @@ object Governance {
           .as("n_planted_caught"))
   }
 
-  /** Order-independent table checksums (round 8): the replication /
+  /** Order-independent table checksums: the replication /
     * migration reconciliation primitive — per table, a row-content
     * fingerprint that any system computing the same per-row hash can
     * reproduce REGARDLESS of row order or partitioning: bit_xor of
@@ -835,8 +835,7 @@ object Governance {
   def seqInversion(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("event_id"))
-    val pu = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val pu = eventsUs(spark, dir)
       .withColumn("prev_ts", lag(col("ts_us"), 1).over(w))
       .filter(col("prev_ts").isNotNull)
       .groupBy(col("user_id"))
@@ -855,7 +854,7 @@ object Governance {
         col("worst_user"), col("worst_share_e4"))
   }
 
-  /** DP histogram with CALIBRATED Laplace noise (J85, round 11): the
+  /** DP histogram with CALIBRATED Laplace noise (J85): the
     * (event_type, epoch-dow) activity histogram released under
     * ε = 0.5 — per cell, Laplace(b = 1/ε = 2) noise drawn by the exact
     * inverse CDF on an md5-derived uniform (the sketch-hash
@@ -874,16 +873,10 @@ object Governance {
     * cell census; noise is a per-cell scalar expression. */
   def dpHistogram(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
-      .withColumn("dow",
-        expr("((ts_ns div 1000) div 86400000000) % 7"))
+      .withColumn("dow", epochDow)
       .groupBy(col("event_type"), col("dow"))
       .agg(count(lit(1)).as("n_true"))
-      .withColumn("u", expr(
-        "CAST(conv(substring(md5(concat(event_type, '|', dow)), 1, 15)," +
-          " 16, 10) AS BIGINT) % 1000000"))
-      .withColumn("t_e3", expr(
-        "CAST(floor(ln(greatest(1000000 - 2 * abs(u - 500000), 1))" +
-          " * 1000 + 0.5) AS BIGINT) - 13816"))
+      .transform(laplaceDraw("concat(event_type, '|', dow)"))
       .withColumn("noise_e3", expr(
         "CASE WHEN u >= 500000 THEN -2 * t_e3 ELSE 2 * t_e3 END"))
       .withColumn("n_noisy", expr(
@@ -893,7 +886,7 @@ object Governance {
         (col("n_noisy") < 10L).as("suppressed"))
       .orderBy(col("event_type"), col("dow"))
 
-  /** Candidate-key discovery over orders (J90, round 11): per column —
+  /** Candidate-key discovery over orders (J90): per column —
     * row count, nulls, exact distinct count, uniqueness share, and the
     * candidate-key verdict (distinct == rows AND null-free). The
     * DISCOVERY member of the profiling family: dq_profile reports
@@ -931,7 +924,7 @@ object Governance {
       .orderBy(col("column"))
   }
 
-  /** DP privacy-utility sweep (J92, round 11): the ε=0.5 release
+  /** DP privacy-utility sweep (J92): the ε=0.5 release
     * q_priv_dp_hist ships, re-released at ε ∈ {1/4, 1/2, 2} and scored
     * against the true (event_type × dow) histogram — L1 error, worst
     * cell, per-cell mean, and suppressed-cell count per arm. The
@@ -954,19 +947,13 @@ object Governance {
   def dpUtilitySweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cells = events(spark, dir)
-      .withColumn("dow",
-        expr("((ts_ns div 1000) div 86400000000) % 7"))
+      .withColumn("dow", epochDow)
       .groupBy(col("event_type"), col("dow"))
       .agg(count(lit(1)).as("n_true"))
     val arms = Seq((25L, 4L, 1L), (50L, 2L, 1L), (200L, 1L, 2L))
       .toDF("eps_e2", "sn", "sd")
     cells.crossJoin(broadcast(arms))
-      .withColumn("u", expr(
-        "CAST(conv(substring(md5(concat(event_type, '|', dow, '|'," +
-          " eps_e2)), 1, 15), 16, 10) AS BIGINT) % 1000000"))
-      .withColumn("t_e3", expr(
-        "CAST(floor(ln(greatest(1000000 - 2 * abs(u - 500000), 1))" +
-          " * 1000 + 0.5) AS BIGINT) - 13816"))
+      .transform(laplaceDraw("concat(event_type, '|', dow, '|', eps_e2)"))
       .withColumn("noise_e3", expr(
         "CASE WHEN u >= 500000 THEN -((sn * t_e3) div sd)" +
           " ELSE (sn * t_e3) div sd END"))
@@ -985,7 +972,7 @@ object Governance {
       .orderBy(col("eps_e2"))
   }
 
-  /** Per-column value entropy over orders (J103, round 11): Shannon
+  /** Per-column value entropy over orders (J103): Shannon
     * entropy of each column's value distribution in lnE3 nats, with
     * the ln(n) ceiling and the normalized share — the
     * INFORMATION-content axis q_dq_key_discovery's distinct counts
@@ -1023,7 +1010,7 @@ object Governance {
       .orderBy(col("column"))
   }
 
-  /** DP report-noisy-max (J104, round 11): release WHICH event type
+  /** DP report-noisy-max (J104): release WHICH event type
     * is most common without releasing the counts — Laplace noise on
     * every per-type count (the dp_hist ε = 0.5 lane, 'nm'-salted
     * md5 uniforms), emit per type the noisy score's argmax flag
@@ -1042,12 +1029,7 @@ object Governance {
   def noisyMax(spark: SparkSession, dir: String): DataFrame = {
     val base = events(spark, dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_true"))
-      .withColumn("u", expr(
-        "CAST(conv(substring(md5(concat(event_type, '|nm')), 1, 15)," +
-          " 16, 10) AS BIGINT) % 1000000"))
-      .withColumn("t_e3", expr(
-        "CAST(floor(ln(greatest(1000000 - 2 * abs(u - 500000), 1))" +
-          " * 1000 + 0.5) AS BIGINT) - 13816"))
+      .transform(laplaceDraw("concat(event_type, '|nm')"))
       .withColumn("noise_e3", expr(
         "CASE WHEN u >= 500000 THEN -2 * t_e3 ELSE 2 * t_e3 END"))
       .withColumn("n_noisy", expr(

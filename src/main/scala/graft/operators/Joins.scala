@@ -53,7 +53,7 @@ object Joins {
           .as("revenue"))
       .orderBy(col("o_orderpriority"))
 
-  /** Shuffled hash join (round 4): the third big-join strategy next to
+  /** Shuffled hash join: the third big-join strategy next to
     * SMJ and broadcast — right when both sides are large but one is
     * small enough to hash per-partition and sorting would dominate
     * (SMJ pays two sorts; SHJ builds a hash table on the smaller side
@@ -76,7 +76,7 @@ object Joins {
         col("n_lines"))
       .orderBy(col("o_orderpriority"))
 
-  /** Explicit bloom-prefiltered join (round 4): build a bloom filter
+  /** Explicit bloom-prefiltered join: build a bloom filter
     * over a SELECTIVE dim side's join keys (high-value orders, ~2% of
     * rows), broadcast the one-row sketch, and drop non-matching fact
     * rows with `BloomFuncs.mightContain` BEFORE the exact join — the
@@ -122,7 +122,7 @@ object Joins {
       .select(col("o_orderkey"), col("o_custkey"), col("c_name"))
       .orderBy(col("o_orderkey"))
 
-  /** Full outer (round 2): keep unmatched rows from BOTH sides — the
+  /** Full outer: keep unmatched rows from BOTH sides — the
     * one outer-join variant the surface was missing. Aggregated per
     * customer first so both null-sides occur and the output is compact.
     * Full outer cannot broadcast (both sides must see all partitions of
@@ -162,7 +162,7 @@ object Joins {
     * DuckDB truncates parquet ns-timestamps to µs, so ns-exact arithmetic
     * would diverge at window boundaries. */
   def joinThetaRange(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir).withColumn("ts_us", expr("ts_ns div 1000"))
+    val ev = eventsUs(spark, dir)
     val a = ev.select(col("event_id").as("a_id"),
       col("user_id"), col("ts_us").as("a_ts"))
     val b = ev.select(col("event_id").as("b_id"),
@@ -175,7 +175,7 @@ object Joins {
       .orderBy(col("user_id"), col("a_id"), col("b_id"))
   }
 
-  /** Binned interval join (round 3): point-in-interval join with NO
+  /** Binned interval join: point-in-interval join with NO
     * natural equi key — the case the theta-range join above avoids by
     * equi-joining on user first. The scale mechanism: quantize the
     * range dimension into width-100 bins, explode each interval across
@@ -210,7 +210,7 @@ object Joins {
   /** As-of join: each purchase matched to the same user's most recent
     * prior-or-equal signup; ties broken by max signup event_id. */
   def joinAsof(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir).withColumn("ts_us", expr("ts_ns div 1000"))
+    val ev = eventsUs(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
         col("ts_us").as("p_ts"))
@@ -234,7 +234,7 @@ object Joins {
     * state) — same semantics and oracle as joinAsof, which keeps the
     * composed-builtin formulation for comparison. */
   def joinAsofNative(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir).withColumn("ts_us", expr("ts_ns div 1000"))
+    val ev = eventsUs(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
         col("ts_us").as("p_ts"))
@@ -250,7 +250,7 @@ object Joins {
       .orderBy(col("user_id"), col("p_id"))
   }
 
-  /** As-of join with a staleness TOLERANCE (round 8): the production
+  /** As-of join with a staleness TOLERANCE: the production
     * knob the plain backward as-of lacks — a match older than 24 h is
     * worse than no match (stale features poison training rows; stale
     * quotes poison fills). LEFT semantics: every purchase survives,
@@ -265,8 +265,7 @@ object Joins {
     * Fixture split: 708 of 1981 purchases match — both verdict
     * directions are populated. */
   def joinAsofTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val ev = eventsUs(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
         col("ts_us").as("p_ts"))
@@ -294,7 +293,7 @@ object Joins {
       .crossJoin(nation(spark, dir).select(col("n_name")))
       .orderBy(col("r_name"), col("n_name"))
 
-  /** Null-safe equality join (round 4 part 2): `<=>` / IS NOT DISTINCT
+  /** Null-safe equality join: `<=>` / IS NOT DISTINCT
     * FROM — NULL keys match each other instead of vanishing, the
     * semantic every dim-lookup with optional attributes needs (plain
     * equality silently drops the "attribute absent" population). The
@@ -318,7 +317,7 @@ object Joins {
       .orderBy(col("k_str"))
   }
 
-  /** Interval-overlap join (round 8): which user pairs were active in
+  /** Interval-overlap join: which user pairs were active in
     * OVERLAPPING sessions — the interval×interval sibling of the
     * point-in-range [[joinRangeBinned]] row (concurrency detection,
     * co-presence analysis, meeting/contention windows). Sessions come
@@ -337,15 +336,7 @@ object Joins {
     * is the AQE-skew-split case, and the u<v guard halves the pair
     * space. Output bounded top-20. */
   def intervalOverlapJoin(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val sess = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("gap_us").isNull || col("gap_us") > 30L * 60 * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_sess")).over(byUser))
+    val sess = Reshape.sessionEvents(spark, dir)
       .groupBy(col("user_id"), col("session_no"))
       .agg(min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"))
     val binned = sess.select(col("user_id"), col("session_no"),
@@ -429,7 +420,7 @@ object Joins {
     * key-shuffle join. Users with no error event drop (inner). */
   def asofNearest(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir).select(col("user_id"), col("event_type"),
-      expr("ts_ns div 1000").as("ts_us"))
+      tsUs.as("ts_us"))
     val probes = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("ts_us")).as("probe_us"))
     ev.filter(col("event_type") === "error")
@@ -454,7 +445,7 @@ object Joins {
       .orderBy(col("user_id"))
   }
 
-  /** Salted skew join (round 8): the manual hot-key mitigation for the
+  /** Salted skew join: the manual hot-key mitigation for the
     * worst join distribution — a fact table whose join key has a
     * handful of giant values (event_type: 5 keys, ~N/5 rows EACH).
     * A plain shuffle join puts every row of a hot key in ONE task;
@@ -490,7 +481,7 @@ object Joins {
       .join(dimSalted.hint("merge"), Seq("event_type", "salt"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"), max(col("n_type")).as("n_type"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents_total"))
       .withColumn("match_ok", col("n_rows") === col("n_type"))
       .orderBy(col("event_type"))
@@ -520,10 +511,10 @@ object Joins {
   def mutualNn(spark: SparkSession, dir: String): DataFrame = {
     val c = customer(spark, dir).select(col("c_nationkey").as("nk"),
       col("c_custkey").as("ck"),
-      expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("cb"))
+      cents("c_acctbal").as("cb"))
     val s = supplier(spark, dir).select(col("s_nationkey").as("nk"),
       col("s_suppkey").as("sk"),
-      expr("CAST(floor(s_acctbal * 100 + 0.5) AS BIGINT)").as("sb"))
+      cents("s_acctbal").as("sb"))
     val sd = s.groupBy(col("nk"), col("sb")).agg(min(col("sk")).as("sk"))
     val cd = c.groupBy(col("nk"), col("cb")).agg(min(col("ck")).as("ck"))
     def bestFor(full: DataFrame, fk: String, fb: String,
@@ -567,7 +558,7 @@ object Joins {
       .orderBy(col("custkey"))
   }
 
-  /** Dynamic partition pruning (J97, round 11): the 100 TB join
+  /** Dynamic partition pruning (J97): the 100 TB join
     * optimization the static-pruning row (q_sink_partitioned_prune)
     * can't show — the fact table is partitioned by event_type, the
     * dim side filters on a NON-join column (per-type volume ≥ the
@@ -585,7 +576,7 @@ object Joins {
     * nothing. Write-once scratch table per session (the partitioned
     * sink's own discipline). */
   def joinDpp(spark: SparkSession, dir: String): DataFrame = {
-    // Scratch path keyed by the fixture dir (round 12, ADVICE r11):
+    // Scratch path keyed by the fixture dir:
     // the read below is lazy, so a fixed path could be overwritten by
     // an interleaved run against a different scale fixture between
     // plan and collect — keying by dir makes the pairing stable.
@@ -606,12 +597,12 @@ object Joins {
     fact.join(dim, "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        sum(cents("value"))
           .as("cents"))
       .orderBy(col("event_type"))
   }
 
-  /** AQE skew-join evidence (J105, round 12 — VERDICT r11 #6a): the
+  /** AQE skew-join evidence (J105): the
     * RUNTIME twin of q_join_salted_skew. That row proves the MANUAL
     * mitigation (salt the key, replicate the dim); this one proves the
     * engine's own: a deliberately Zipf-keyed fact (90 % of lineitem on
@@ -685,7 +676,7 @@ object Joins {
       //   never touch the caller's plans.
   }
 
-  /** Runtime bloom-filter injection evidence (J115, round 12): the
+  /** Runtime bloom-filter injection evidence (J115): the
     * OPTIMIZER's twin of the explicit q_join_bloom_prefilter row —
     * InjectRuntimeFilter sees a selective dim side (p_size ≤ 2, ~4 %
     * of parts) joined to a large fact and plants a bloom
@@ -727,7 +718,7 @@ object Joins {
       .toDF("p_size", "n_rows", "qty_sum", "runtime_filtered")
   }
 
-  /** AQE join-strategy switch evidence (J118, round 12): the canonical
+  /** AQE join-strategy switch evidence (J118): the canonical
     * adaptive-execution feature, pinned as data — a join whose STATIC
     * plan is sort-merge (the static broadcast floor is 1 KB in the
     * child session, and Catalyst's pre-execution size estimate for the

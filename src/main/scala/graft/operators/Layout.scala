@@ -57,7 +57,7 @@ object Layout {
       .sortWithinPartitions(col("zkey"))
       .write.mode("overwrite").parquet(path)
 
-  /** Small-file compaction (round 3): the other half of the layout
+  /** Small-file compaction: the other half of the layout
     * story. Streaming ingestion and fine-grained partitioning leave
     * thousands of KB-scale files; at 100 TB the scan cost becomes
     * task-scheduling + footer-read bound, not IO bound. The rewrite
@@ -99,7 +99,7 @@ object Layout {
     } finally fs.delete(tmpPath, true)
   }
 
-  /** Bucketed co-located join (round 4): the layout investment that
+  /** Bucketed co-located join: the layout investment that
     * pays for itself on every subsequent join. Both sides are written
     * `bucketBy(8, joinKey)` (+ in-bucket sort), so the bucketed scans
     * already satisfy the join's hash-partitioning requirement and the
@@ -151,9 +151,9 @@ object Layout {
     }
   }
 
-  /** Partitioned + bucketed hybrid sink (J106, round 12 — VERDICT r11
-    * #6b): ONE fact layout that serves BOTH axes of join optimization
-    * at once — `partitionBy(event_type)` gives dynamic partition
+  /** Partitioned + bucketed hybrid sink (J106): ONE fact layout that
+    * serves BOTH axes of join optimization at once —
+    * `partitionBy(event_type)` gives dynamic partition
     * pruning against a runtime-filtered dim (the q_join_dpp property),
     * `bucketBy(8, user_id)` + in-bucket sort gives an exchange-free
     * sort-merge join against a same-bucketed user dim (the
@@ -212,7 +212,7 @@ object Layout {
         .join(spark.table("graft_users_pb"), "user_id") // what's proven
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+          sum(cents("value"))
             .as("cents"))
         .orderBy(col("event_type"))
       val rows = agg.collect() // surviving-type rollup — control-plane
@@ -233,7 +233,7 @@ object Layout {
     }
   }
 
-  /** Bucket-PRUNING evidence (J110, round 12): the third payoff of the
+  /** Bucket-PRUNING evidence (J110): the third payoff of the
     * bucketed layout, completing the story beside the exchange-free
     * join (q_layout_bucketed_join) and the hybrid sink
     * (q_layout_part_bucket) — a literal equality predicate on the
@@ -272,7 +272,7 @@ object Layout {
         .filter(col("user_id") === 7L)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+          sum(cents("value"))
             .as("cents"))
         .orderBy(col("event_type"))
       val rows = agg.collect() // one user's rollup — control-plane
@@ -290,7 +290,7 @@ object Layout {
     }
   }
 
-  /** ANALYZE TABLE / CBO statistics evidence (J123, round 12): the
+  /** ANALYZE TABLE / CBO statistics evidence (J123): the
     * STATIC twin of q_join_aqe_switch — that row proves the runtime
     * rescue; this one proves the planned-right-the-first-time path:
     * a scratch dim is written, `ANALYZE TABLE ... COMPUTE STATISTICS`

@@ -49,7 +49,7 @@ object Maintenance {
       .orderBy(col("event_type"))
   }
 
-  /** Incremental JOIN maintenance (round 8) — the delta-join algebra
+  /** Incremental JOIN maintenance — the delta-join algebra
     * that lets a materialized join view absorb a batch without
     * rescanning either base table:
     * J(O∪ΔO, L∪ΔL) = J(O,L) ∪ (ΔO⋈L) ∪ (O⋈ΔL) ∪ (ΔO⋈ΔL).
@@ -72,7 +72,7 @@ object Maintenance {
   def ivmJoinDelta(spark: SparkSession, dir: String): DataFrame = {
     val o = orders(spark, dir).select(col("o_orderkey"))
     val l = lineitem(spark, dir).select(col("l_orderkey"),
-      expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
+      cents("l_extendedprice")
         .as("cents"))
     val ob = o.filter(col("o_orderkey") % 13 =!= 0)
     val od = o.filter(col("o_orderkey") % 13 === 0)
@@ -102,7 +102,7 @@ object Maintenance {
       .orderBy(col("term"))
   }
 
-  /** Pipeline observability (round 5): piggyback data-quality counters
+  /** Pipeline observability: piggyback data-quality counters
     * onto the SAME job via `Dataset.observe` — row counts, null rates,
     * value bounds ride the pipeline's one pass as accumulator-backed
     * aggregates, so a 100 TB job self-audits without a second scan (a

@@ -43,41 +43,47 @@ object Reshape {
         "metric", "val")
       // (l_orderkey, l_linenumber) is NOT unique in this synthetic data,
       // so val joins the sort to make the order total.
-      // A/B NEGATIVE (round 15, VERDICT r14 #7): packing the first
-      // three sort columns into one BIGINT (okey·32 + ln·4 + metric
-      // ordinal — exact, since l_linenumber is 1..7 by generator
-      // invariant and the four metric literals' ordinals match their
-      // ASC string order) measured a tie — isolated warm min 1.92 →
-      // 1.78 s, medians 2.23 → 2.08, under the >15 % keep bar and
-      // inside box scatter. The sort is range-partitioned 75 K rows/
-      // task at sf0.1; comparator width isn't where its time goes, and
-      // the packed key widens the exchange by 8 B/row. Oracle-verified
+      // A/B NEGATIVE: packing the first three sort columns into one BIGINT
+      // (okey·32 + ln·4 + metric ordinal — exact, since l_linenumber is
+      // 1..7 by generator invariant and the four metric literals' ordinals
+      // match their ASC string order) measured a tie — isolated warm min
+      // 1.92 → 1.78 s, medians 2.23 → 2.08, under the >15 % keep bar and
+      // inside box scatter. The sort is range-partitioned 75 K rows/task
+      // at sf0.1; comparator width isn't where its time goes, and the
+      // packed key widens the exchange by 8 B/row. Oracle-verified
       // identical both ways before reverting.
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"),
         col("val"))
 
-  /** Batch sessionization: per-user sessions split on >30 min gaps —
-    * the batch twin of streaming `session_window` (s_window_session).
-    * lag → new-session flag → running sum = session number, then one
-    * aggregate per session. All windows partition by user_id. */
-  def sessionizeBatch(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(byUser))
+  /** The batch session rule: every event with its `ts_us` and its
+    * user's `session_no`. A session closes when the next event comes
+    * more than [[graft.Tables.SessionGap]] later: lag on the
+    * [[graft.Tables.userTimeline]] → new-session flag → running sum.
+    * Both windows partition by user_id, so the rule costs one shuffle.
+    * The session rows (`sessionizeBatch`, `Analytics.bounceRate`,
+    * `Analytics.concurrencyCurve`, `Joins.intervalOverlapJoin`) group
+    * this frame by (user_id, session_no) and aggregate what they read. */
+  def sessionEvents(spark: SparkSession, dir: String): DataFrame =
+    eventsUs(spark, dir)
+      .withColumn("gap_us",
+        col("ts_us") - lag(col("ts_us"), 1).over(userTimeline))
       .withColumn("new_sess",
-        when(col("gap_us").isNull || col("gap_us") > 30L * 60 * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_sess")).over(byUser))
+        when(col("gap_us").isNull ||
+          col("gap_us") > SessionGap.toNanos / 1000, 1L).otherwise(0L))
+      .withColumn("session_no", sum(col("new_sess")).over(userTimeline))
+
+  /** Batch sessionization: per-user sessions of [[sessionEvents]], one
+    * aggregate per session — the batch twin of streaming
+    * `session_window` (s_window_session). */
+  def sessionizeBatch(spark: SparkSession, dir: String): DataFrame =
+    sessionEvents(spark, dir)
       .groupBy(col("user_id"), col("session_no"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts_us")).as("start_us"),
         max(col("ts_us")).as("end_us"))
       .orderBy(col("user_id"), col("session_no"))
-  }
 
-  /** SCD-2 dimension build (round 4): compress each user's event stream
+  /** SCD-2 dimension build: compress each user's event stream
     * into slowly-changing-dimension type-2 history rows — consecutive
     * runs of the same event_type collapse to one versioned row with a
     * [valid_from, valid_to] microsecond interval; the open (current)
@@ -89,18 +95,15 @@ object Reshape {
     * total, no self-join, no global sort. The identical plan processes
     * a 100 TB CDC feed; AQE skew-split covers hot keys. */
   def scd2Merge(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val changes = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("prev_state", lag(col("event_type"), 1).over(byUser))
+    val changes = eventsUs(spark, dir)
+      .withColumn("prev_state", lag(col("event_type"), 1).over(userTimeline))
       .filter(col("prev_state").isNull ||
         col("prev_state") =!= col("event_type"))
     changes
-      .withColumn("version", row_number().over(byUser))
+      .withColumn("version", row_number().over(userTimeline))
       .withColumn("valid_from_us", col("ts_us"))
       .withColumn("valid_to_us",
-        coalesce(lead(col("ts_us"), 1).over(byUser) - 1, lit(-1L)))
+        coalesce(lead(col("ts_us"), 1).over(userTimeline) - 1, lit(-1L)))
       .select(col("user_id"), col("version"),
         col("event_type").as("state"),
         col("valid_from_us"), col("valid_to_us"),
@@ -108,7 +111,7 @@ object Reshape {
       .orderBy(col("user_id"), col("version"))
   }
 
-  /** Point-in-time (as-of) lookup against the SCD-2 history (round 8):
+  /** Point-in-time (as-of) lookup against the SCD-2 history:
     * "what state was each user in at time T?" — the temporal-join read
     * side of [[scd2Merge]]'s write side, and the lookup every
     * training-data snapshot / feature-store pipeline runs to avoid
@@ -131,12 +134,9 @@ object Reshape {
     * user-sized probe frame, zero joins — the same single-exchange
     * budget as scd2Merge itself; AQE skew-split covers hot users. */
   def scd2PitLookup(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val ev = events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    val ev = eventsUs(spark, dir)
     val changes = ev
-      .withColumn("prev_state", lag(col("event_type"), 1).over(byUser))
+      .withColumn("prev_state", lag(col("event_type"), 1).over(userTimeline))
       .filter(col("prev_state").isNull ||
         col("prev_state") =!= col("event_type"))
       .select(col("user_id"), col("ts_us"),
@@ -191,7 +191,7 @@ object Reshape {
       .limit(10)
   }
 
-  /** TPC-H Q5-shaped composite (round 3): revenue by supplier nation for
+  /** TPC-H Q5-shaped composite: revenue by supplier nation for
     * one region-year, with the classic "local supplier" constraint
     * (customer and supplier share a nation). Exercises Catalyst's join
     * ordering across 6 tables: region→nation prune first (tiny,
@@ -225,7 +225,7 @@ object Reshape {
       .orderBy(col("revenue").desc, col("n_name"))
   }
 
-  /** TPC-H Q18-shaped composite (round 3): large-volume orders — the
+  /** TPC-H Q18-shaped composite: large-volume orders — the
     * group-filter-then-rejoin pattern (HAVING over the fact, semi-joined
     * back). The HAVING aggregation runs FIRST and is the only full fact
     * shuffle; the survivors (~0.1%) then drive bounded joins. Top-100 by
@@ -245,7 +245,7 @@ object Reshape {
       .limit(100)
   }
 
-  /** TPC-H Q10-shaped composite (round 8): top-20 customers by revenue
+  /** TPC-H Q10-shaped composite: top-20 customers by revenue
     * LOST to returned items in one quarter — the "who is returning
     * merchandise" report. Dim filters → 3 fact-dim joins → customer
     * rollup → bounded top-k. The only corpus-sized shuffle is
@@ -278,7 +278,7 @@ object Reshape {
       .limit(20)
   }
 
-  /** TPC-H Q14-shaped composite (round 8): promo revenue share — the
+  /** TPC-H Q14-shaped composite: promo revenue share — the
     * two-class conditional-aggregate-then-ratio shape. Floats leave
     * the plan PER ROW: each line's discounted price rounds to cents
     * with the identical floor(x*100+0.5) text in both engines (one
@@ -304,7 +304,7 @@ object Reshape {
         expr("promo_cents * 10000 div greatest(total_cents, 1)")
           .as("promo_e4"))
 
-  /** TPC-H Q16-shaped composite (round 8, adapted: supplier links come
+  /** TPC-H Q16-shaped composite (adapted: supplier links come
     * from lineitem — this schema has no partsupp): distinct supplier
     * count per (brand, type, size) for parts outside one brand — the
     * DISTINCT-aggregate-over-join shape. count(DISTINCT) here is the
@@ -322,8 +322,8 @@ object Reshape {
         col("p_size"))
       .limit(20)
 
-  /** Warehouse MERGE INTO semantics as one auditable batch row
-    * (round 8): target = the orders snapshot; source = a
+  /** Warehouse MERGE INTO semantics as one auditable batch row:
+    * target = the orders snapshot; source = a
     * deterministically derived delta (every 10th key flips to status
     * 'D' with a bumped price — MATCHED/UPDATE; every 17th key re-minted
     * +10⁹ — NOT MATCHED/INSERT). Latest-wins resolution is one
@@ -355,12 +355,12 @@ object Reshape {
         sum(col("k")).as("key_sum"),
         // per-row cents then BIGINT sum (the q14 rule): a float sum
         // rounded once at the end is aggregation-order-sensitive
-        sum(expr("CAST(floor(price * 100 + 0.5) AS BIGINT)"))
+        sum(cents("price"))
           .as("price_cents"))
       .orderBy(col("st"))
   }
 
-  /** TPC-H Q12-shaped composite (round 8, adapted: this schema has no
+  /** TPC-H Q12-shaped composite (adapted: this schema has no
     * l_shipmode, so l_linestatus plays the mode axis): per line status,
     * high- vs low-priority order counts for lines shipped in one year —
     * the fact⋈fact join feeding a two-class conditional aggregate. The
@@ -383,7 +383,7 @@ object Reshape {
           .otherwise(1L)).as("low_count"))
       .orderBy(col("l_linestatus"))
 
-  /** TPC-H Q13-shaped composite (round 8): customer order-count
+  /** TPC-H Q13-shaped composite: customer order-count
     * distribution — the OUTER-join-feeding-a-second-aggregation shape
     * (the filtered left join must preserve order-less customers as
     * count 0, not drop them; an inner join here is the classic Q13
@@ -401,7 +401,7 @@ object Reshape {
       .agg(count(lit(1)).as("custdist"))
       .orderBy(col("custdist").desc, col("c_count").desc)
 
-  /** TPC-H Q17-shaped composite (round 8): revenue from small-quantity
+  /** TPC-H Q17-shaped composite: revenue from small-quantity
     * outlier lines of one brand — the correlated-average shape
     * (l_quantity < 0.2 × avg(l_quantity) per part), decorrelated into
     * one per-part aggregate + a re-join. The threshold compare is
@@ -421,14 +421,13 @@ object Reshape {
     li.join(perPart, col("l_partkey") === col("pk"))
       .filter(expr("CAST(l_quantity AS BIGINT) * 5 * cnt_q < sum_q"))
       .agg(count(lit(1)).as("n_lines"),
-        coalesce(sum(expr(
-          "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")), lit(0L))
+        coalesce(sum(cents("l_extendedprice")), lit(0L))
           .as("price_cents"))
       .select(col("n_lines"), col("price_cents"),
         expr("price_cents div 7").as("avg_weekly_cents"))
   }
 
-  /** TPC-H Q19-shaped composite (round 8): disjunctive multi-column
+  /** TPC-H Q19-shaped composite: disjunctive multi-column
     * predicate — three (brand, size-range, quantity-range) arms OR-ed
     * across BOTH join sides, the shape that exercises CNF conversion
     * and partial pushdown (each arm's part-only conjuncts can reach the
@@ -453,7 +452,7 @@ object Reshape {
           "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)" +
             " AS BIGINT)")), lit(0L)).as("revenue_cents"))
 
-  /** TPC-H Q22-shaped composite (round 8, adapted: no c_phone — the
+  /** TPC-H Q22-shaped composite (adapted: no c_phone — the
     * nation key plays the country code): rich-but-idle customers in a
     * 5-country set, balance above the set's positive-balance average,
     * with NO urgent order — scalar-average subquery + anti join +
@@ -465,7 +464,7 @@ object Reshape {
     val cust = customer(spark, dir)
       .filter(col("c_nationkey").isin(3, 7, 11, 17, 23))
       .select(col("c_custkey"), col("c_nationkey"),
-        expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("bal_cents"))
+        cents("c_acctbal").as("bal_cents"))
     val pos = cust.filter(col("bal_cents") > 0)
       .agg(sum(col("bal_cents")).as("tot_cents"),
         count(lit(1)).as("n_pos"))
@@ -481,7 +480,7 @@ object Reshape {
       .orderBy(col("c_nationkey"))
   }
 
-  /** TPC-H Q4-shaped composite (round 8, adapted: no commit/receipt
+  /** TPC-H Q4-shaped composite (adapted: no commit/receipt
     * dates in this schema — "late" = a line shipped ≥ 60 days after
     * the order date): order counts per priority for one quarter,
     * counting an order once iff ANY of its lines shipped late — the
@@ -503,7 +502,7 @@ object Reshape {
       .orderBy(col("o_orderpriority"))
   }
 
-  /** TPC-H Q11-shaped composite (round 8, adapted: supplier links via
+  /** TPC-H Q11-shaped composite (adapted: supplier links via
     * lineitem — no partsupp): per-part inventory value for suppliers
     * of a 5-nation group, keeping parts whose value exceeds 0.1 % of
     * the group total — the HAVING-over-scalar-subquery shape. The
@@ -517,8 +516,7 @@ object Reshape {
         .select(col("s_suppkey"))),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("l_partkey"))
-      .agg(sum(expr(
-        "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
+      .agg(sum(cents("l_extendedprice"))
         .as("val_cents"))
     val tot = v.agg(sum(col("val_cents")).as("tot"))
     v.crossJoin(broadcast(tot))

@@ -95,7 +95,7 @@ object ScalarFuncs {
   /** JSON path extraction + to_json(struct) roundtrip. Each side is
     * parsed ONCE via `from_json` to a struct, then fields projected —
     * `get_json_object` re-parses the whole JSON string per call, which
-    * made this a top-8 bench query in round 2 at 3 calls/row. */
+    * cost 3 parses a row. */
   def jsonFuncs(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .withColumn("j", to_json(struct(col("event_id"), col("event_type"))))
@@ -110,7 +110,7 @@ object ScalarFuncs {
         col("js.event_id").as("rt_id"))
       .orderBy(col("event_id"))
 
-  /** VARIANT ordered-extraction census (J112, round 12): the
+  /** VARIANT ordered-extraction census (J112): the
     * min/max/sum companion of the round-5 q_scan_variant row — that
     * row pins typed + nested extraction and the try_variant_get miss;
     * this one pins that variant_get values ORDER and AGGREGATE like
@@ -131,7 +131,7 @@ object ScalarFuncs {
         count(col("miss")).as("n_missing_nonnull"))
       .orderBy(col("event_type"))
 
-  /** Collation-aware semantics (J113, round 12): Spark 4 string
+  /** Collation-aware semantics (J113): Spark 4 string
     * collations — `collate(s, 'UTF8_LCASE')` makes comparison,
     * DISTINCT, and GROUP BY case-insensitive WITHOUT rewriting every
     * predicate through lower() (and, unlike lower(), collation survives
@@ -141,19 +141,25 @@ object ScalarFuncs {
     * LCASE collation plus the per-normalized-segment census — the
     * dedup-relevant semantics: 10 binary-distinct values collapse to
     * the 5 real segments. DuckDB replays with lower() (its collation
-    * story differs; the SEMANTICS are what is pinned). */
+    * story differs; the SEMANTICS are what is pinned).
+    *
+    * The binary-distinct segments are de-duplicated first, so one
+    * plain count and one distinct count fold them: two distinct
+    * aggregates would plan an Expand whose slot order varies run to
+    * run. */
   def strCollation(spark: SparkSession, dir: String): DataFrame = {
-    val mixed = customer(spark, dir)
+    val segs = customer(spark, dir)
       .select(when(col("c_custkey") % 2 === 0, upper(col("c_mktsegment")))
         .otherwise(lower(col("c_mktsegment"))).as("seg"))
-    mixed
+      .distinct()
+    segs
       .agg(countDistinct(expr("collate(seg, 'UTF8_LCASE')")).as("n_ci"),
-        countDistinct(col("seg")).as("n_cs"))
+        count(col("seg")).as("n_cs"))
       .select(col("n_ci"), col("n_cs"),
         (col("n_ci") < col("n_cs")).as("collation_collapses"))
   }
 
-  /** Month-arithmetic clamping semantics (J120, round 12): `add_months`
+  /** Month-arithmetic clamping semantics (J120): `add_months`
     * over month-end dates — Jan 31 + 1 month must CLAMP to Feb 28/29,
     * the calendar contract every billing/retention job silently relies
     * on and the one date-arithmetic cell engines actually disagree on
@@ -175,7 +181,7 @@ object ScalarFuncs {
           .otherwise(0L)).as("n_clamped"))
       .orderBy(col("y"))
 
-  /** Array higher-order functions (J121, round 12): the lambda surface
+  /** Array higher-order functions (J121): the lambda surface
     * (filter / transform+aggregate folds / exists) over tokenized text
     * — per doc: long-token count, total char mass via a fold, and an
     * exists probe. HOFs run per-row inside the scan stage: no explode,
@@ -193,7 +199,7 @@ object ScalarFuncs {
         expr("exists(split(text, ' '), t -> t = 'the')").as("has_the"))
       .orderBy(col("doc_id"))
 
-  /** Seeded TABLESAMPLE (J122, round 12): Bernoulli row sampling with a
+  /** Seeded TABLESAMPLE (J122): Bernoulli row sampling with a
     * FIXED seed — the curation subsample contract: (a) REPRODUCIBLE
     * (two scans with the same seed pick the identical row set — pinned
     * as a verdict by re-running the sample and comparing exact id
@@ -222,7 +228,7 @@ object ScalarFuncs {
       .toDF("n_population", "reproducible", "within_band")
   }
 
-  /** URL parsing family (round 3): parse_url HOST/PATH/QUERY-param/
+  /** URL parsing family: parse_url HOST/PATH/QUERY-param/
     * PROTOCOL over URLs minted from document metadata — the domain
     * extraction + per-domain attribution step every web-corpus pipeline
     * runs. The oracle reconstructs each component from the same
@@ -241,7 +247,7 @@ object ScalarFuncs {
         parse_url(col("url"), lit("PROTOCOL")).as("proto"))
       .orderBy(col("doc_id"))
 
-  /** Unicode NFC normalization (round 3): the custom `nfc_normalize`
+  /** Unicode NFC normalization: the custom `nfc_normalize`
     * codegen expression over strings MINTED denormalized — combining
     * acute (U+0301) and ring (U+030A) sequences appended from doc
     * metadata — so the op demonstrably composes (length shrinks) and
@@ -260,7 +266,7 @@ object ScalarFuncs {
           .cast("bigint").as("nfc_h"))
       .orderBy(col("doc_id"))
 
-  /** Date arithmetic family (round 2): add days/months (month-end
+  /** Date arithmetic family: add days/months (month-end
     * clamped the same way in both engines), last_day, signed day diff,
     * quarter, day-of-year. */
   def dateArith(spark: SparkSession, dir: String): DataFrame =
@@ -276,7 +282,7 @@ object ScalarFuncs {
         dayofyear(col("od")).as("doy"))
       .orderBy(col("o_orderkey"))
 
-  /** String-distance/transform family (round 2): levenshtein, translate,
+  /** String-distance/transform family: levenshtein, translate,
     * reverse, repeat, position — all codegen'd builtins, no UDFs. */
   def strDistance(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
@@ -289,19 +295,18 @@ object ScalarFuncs {
         instr(col("text"), "data").as("pos"))
       .orderBy(col("doc_id"))
 
-  /** try_cast safety family (round 2): malformed input → NULL, never a
+  /** try_cast safety family: malformed input → NULL, never a
     * query-killing exception — the ANSI-mode ingestion-robustness
     * surface (Spark 4 defaults to ANSI, where a bare CAST throws).
     * BOTH fallible columns mix valid and malformed inputs (1 in 7 bad
-    * dates, 1 in 5 bad ints; round 9 — bad_int was all-malformed,
-    * which this scaladoc's own argument disclaims): a failed JVM
+    * dates, 1 in 5 bad ints): a failed JVM
     * parse is exception-driven and ~100× the cost of a successful
     * one, so an all-malformed column measures exception throughput,
     * not the operator — mixed input proves the NULL contract at
     * realistic dirty-data rates (measured: 1.92 → 0.78 s sf0.1, the
     * r7/r8 verdicts' carried perf ask). */
   def castSafety(spark: SparkSession, dir: String): DataFrame =
-    // Sort BEFORE the try_cast projection (round 8): the global sort's
+    // Sort BEFORE the try_cast projection: the global sort's
     // range-boundary sampling job re-executes its child plan, and with
     // the projection below the sort that meant paying the
     // exception-driven bad_int parse twice (measured sf0.1 min-of-3:

@@ -60,7 +60,7 @@ object TimeSeries {
       .orderBy(col("user_id"), col("day"))
   }
 
-  /** Linear interpolation on the resampled grid (round 4): gap days get
+  /** Linear interpolation on the resampled grid: gap days get
     * the straight line between the previous and next OBSERVED day's
     * value instead of LOCF — the estimator charting/forecasting
     * consumers actually want. Same single-shuffle shape as resample:
@@ -122,7 +122,7 @@ object TimeSeries {
       .orderBy(col("event_id"))
   }
 
-  /** Rolling median (round 4): per-user sliding 4-row median of
+  /** Rolling median: per-user sliding 4-row median of
     * `value` — the robust smoother for spiky telemetry (a single
     * outlier shifts a rolling MEAN but not the median). One shuffle on
     * user_id, then a bounded 4-row frame per row; frame order is
@@ -153,7 +153,7 @@ object TimeSeries {
       .orderBy(col("event_id"))
   }
 
-  /** Per-user trend slope (round 4 part 2): least-squares regression of
+  /** Per-user trend slope: least-squares regression of
     * value over time — the `regr_slope` family computed with EXACT
     * integer sums. Float regr_slope would hash-mismatch (Σxy over
     * doubles depends on aggregation order); here x = whole hours since
@@ -172,9 +172,9 @@ object TimeSeries {
       // hours from the µs epoch (not ns): DuckDB materializes ts at µs
       // precision, so the ns→hour division must round-trip through µs
       // on BOTH engines to bucket identically
-      .withColumn("ts_h", expr("(ts_ns div 1000) div 3600000000"))
+      .withColumn("ts_h", epochHour)
       .withColumn("x", col("ts_h") - min(col("ts_h")).over(byUser))
-      .withColumn("y", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("y", cents("value"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
@@ -187,7 +187,7 @@ object TimeSeries {
       .orderBy(col("user_id"))
   }
 
-  /** Integer EWMA (round 5): per-user exponentially weighted moving
+  /** Integer EWMA: per-user exponentially weighted moving
     * average with α = 1/2 over centi-unit values — every step is
     * `(acc + x) div 2` BIGINT arithmetic on the event-time-ordered
     * sequence (first element seeds the fold, matching DuckDB's
@@ -218,7 +218,7 @@ object TimeSeries {
       // differ; floor(+0.5) is the same IEEE op in both (regrSlope's
       // established centi-unit idiom)
       .withColumn("centi",
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        cents("value"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         expr("array_sort(collect_list(struct(ts_ns, event_id, centi)))")
@@ -231,7 +231,7 @@ object TimeSeries {
           .as("ewma_centi"))
       .orderBy(col("user_id"))
 
-  /** Holt linear-trend smoothing (round 6): per-user double exponential
+  /** Holt linear-trend smoothing: per-user double exponential
     * smoothing with α = β = 1/2 in centi-unit BIGINTs —
     * level' = ⌊(x + level + trend)/2⌋, trend' = ⌊(trend + Δlevel)/2⌋ —
     * plus the one-step forecast level+trend. EWMA's integer-fold
@@ -248,7 +248,7 @@ object TimeSeries {
   def holt(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .withColumn("centi",
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+        cents("value"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         expr("array_sort(collect_list(struct(ts_ns, event_id, centi)))")
@@ -267,7 +267,7 @@ object TimeSeries {
         (col("st.l") + col("st.b")).as("forecast_c"))
       .orderBy(col("user_id"))
 
-  /** CUSUM changepoint (round 6): per user, the index that maximizes the
+  /** CUSUM changepoint: per user, the index that maximizes the
     * |cumulative deviation from the mean| — the classic offline
     * single-changepoint estimator. The mean never materializes as a
     * float: CUSUM_i = S_i − i·S_n/n is scaled by n to
@@ -302,7 +302,7 @@ object TimeSeries {
       .orderBy(col("user_id"))
   }
 
-  /** Seasonal profile + deseasonalized anomalies (round 7): per
+  /** Seasonal profile + deseasonalized anomalies: per
     * (event_type, hour-of-day) mean value — the 24-slot seasonal
     * baseline an ops dashboard overlays — and the top-20 events by
     * absolute deviation FROM THEIR OWN SLOT's mean (an event that is
@@ -331,25 +331,29 @@ object TimeSeries {
       .limit(20)
   }
 
-  /** Per-user autocorrelation at lags 1–3 (round 8): the
-    * seasonality/momentum probe of the family — is a user's value
-    * series self-similar one, two, three events later? All arithmetic
-    * is integer-exact: centi values x = floor(value·100+0.5), integer
-    * mean (sum div n — x is non-negative so Spark's truncating div
-    * equals DuckDB's flooring //), centered products summed as BIGINT.
-    * The ratio is emitted SHIFTED: acf_shift_e4 = (num+den)·10⁴ div
-    * (2·den) ∈ [0, 10⁴] maps r ∈ [−1, 1] affinely — Cauchy–Schwarz
-    * gives |num| ≤ den, so the dividend is non-negative and the
-    * truncate-vs-floor divergence between the engines' integer
-    * divisions never fires (a raw negative num div would differ by 1).
-    * Shape: one window pass per user (the regrSlope/ewma per-key
-    * contract) + one partial-aggregable groupBy; lag fan-out is a
-    * 3-row stack of already-aggregated moments, not a row explosion. */
-  def acfLags(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-    val ordered = byUser.orderBy(col("ts_ns"), col("event_id"))
+  /** The daily event-count series: one row per epoch day (column `day`,
+    * default `d`) with its event count `x`. One partial-aggregable
+    * groupBy, so the series is span-sized (~90 rows on the fixture)
+    * whatever the corpus size; every global-series row below folds
+    * over it. */
+  private def dailyCounts(spark: SparkSession, dir: String,
+      day: String = "d"): DataFrame =
     events(spark, dir)
-      .withColumn("x", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn(day, epochDay)
+      .groupBy(col(day)).agg(count(lit(1)).as("x"))
+
+  /** The per-user lag-1..3 moments of the centi value series x, which
+    * the acf, ljung_box and pacf rows fold, so the three cannot
+    * disagree about what r_k is: n, den = Σc², num_k = Σ c·c_{+k} with
+    * c = x − mean_x. x = floor(value·100+0.5) is non-negative, so the
+    * integer mean (sum div n) agrees with DuckDB's flooring //; the
+    * centered products sum as BIGINT. Shape: one window pass per user
+    * ordered by (ts_ns, event_id) + one partial-aggregable groupBy. */
+  private def acfMoments(spark: SparkSession, dir: String): DataFrame = {
+    val ordered = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_ns"), col("event_id"))
+    events(spark, dir)
+      .withColumn("x", cents("value"))
       .withColumn("mean_x",
         expr("sum(x) OVER (PARTITION BY user_id)" +
           " div count(1) OVER (PARTITION BY user_id)"))
@@ -363,6 +367,20 @@ object TimeSeries {
         coalesce(sum(col("c") * col("c1")), lit(0L)).as("num1"),
         coalesce(sum(col("c") * col("c2")), lit(0L)).as("num2"),
         coalesce(sum(col("c") * col("c3")), lit(0L)).as("num3"))
+  }
+
+  /** Per-user autocorrelation at lags 1–3: the seasonality/momentum
+    * probe of the family — is a user's value series self-similar one,
+    * two, three events later? Folds [[acfMoments]]. The ratio is
+    * emitted SHIFTED: acf_shift_e4 = (num+den)·10⁴ div (2·den) ∈
+    * [0, 10⁴] maps r ∈ [−1, 1] affinely — Cauchy–Schwarz gives
+    * |num| ≤ den, so the dividend is non-negative and the
+    * truncate-vs-floor divergence between the engines' integer
+    * divisions never fires (a raw negative num div would differ by 1).
+    * Lag fan-out is a 3-row stack of already-aggregated moments, not a
+    * row explosion. */
+  def acfLags(spark: SparkSession, dir: String): DataFrame =
+    acfMoments(spark, dir)
       .selectExpr("user_id", "n", "den",
         "stack(3, 1, num1, 2, num2, 3, num3) AS (lag, num)")
       .withColumn("acf_shift_e4",
@@ -370,7 +388,6 @@ object TimeSeries {
       .select(col("user_id"), col("lag"), col("n"), col("den"),
         col("num"), col("acf_shift_e4"))
       .orderBy(col("user_id"), col("lag"))
-  }
 
   /** M4 downsampling (Jugel et al., VLDB'14): per event_type series,
     * 32 equal-width time buckets ("pixels"), each reduced to min, max,
@@ -390,8 +407,8 @@ object TimeSeries {
   def m4Downsample(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("event_type"), col("event_id"),
-        expr("ts_ns div 1000").as("ts_us"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        tsUs.as("ts_us"),
+        cents("value").as("cents"))
     val span = ev.agg(min(col("ts_us")).as("t0"), max(col("ts_us")).as("t1"))
     val bucketed = ev.crossJoin(broadcast(span))
       .withColumn("bucket", expr("(ts_us - t0) * 32 div (t1 - t0 + 1)"))
@@ -425,8 +442,8 @@ object TimeSeries {
       .orderBy(col("ts_us"), col("event_id"))
     events(spark, dir)
       .select(col("event_type"), col("event_id"),
-        expr("ts_ns div 1000").as("ts_us"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        tsUs.as("ts_us"),
+        cents("value").as("cents"))
       .withColumn("nxt", lead(col("ts_us"), 1).over(w))
       .filter(col("nxt").isNotNull)
       .withColumn("dt", col("nxt") - col("ts_us"))
@@ -455,7 +472,7 @@ object TimeSeries {
     import spark.implicits._
     def daily(t: String, cnt: String) = events(spark, dir)
       .filter(col("event_type") === t)
-      .groupBy(expr("(ts_ns div 1000) div 86400000000").as("day"))
+      .groupBy(epochDay.as("day"))
       .agg(count(lit(1)).as(cnt))
     val x = daily("purchase", "x").withColumnRenamed("day", "xday")
     val y = daily("error", "y").withColumnRenamed("day", "yday")
@@ -469,7 +486,7 @@ object TimeSeries {
       .orderBy(col("lag"))
   }
 
-  /** Spearman rank-correlation trend test (round 8): per event_type,
+  /** Spearman rank-correlation trend test: per event_type,
     * the rank correlation between `value` and event time — the
     * distribution-free monotone-trend detector (the Mann–Kendall
     * question answered with ranks): is this feed's value drifting up
@@ -493,7 +510,7 @@ object TimeSeries {
   def spearmanTrend(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
       .select(col("event_type"), col("event_id"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
+        cents("value").as("cents"),
         col("ts_ns"))
     val wv = Window.partitionBy(col("event_type"))
       .orderBy(col("cents"), col("event_id"))
@@ -510,7 +527,7 @@ object TimeSeries {
       .orderBy(col("event_type"))
   }
 
-  /** Single changepoint by binary segmentation (round 8) on the daily
+  /** Single changepoint by binary segmentation on the daily
     * event-count series: the split that maximizes the between-segment
     * contrast — equivalently minimizes total within-segment SSE, via
     * the identity argmin SSE ≡ argmax (S₁n₂ − S₂n₁)²/(n₁n₂) (the
@@ -526,9 +543,7 @@ object TimeSeries {
     * cumulative pass + 1-row broadcast totals → argmax filter. Every
     * window runs on the ~90-row census. */
   def changepoint(spark: SparkSession, dir: String): DataFrame = {
-    val daily = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, dir, "day")
     val wIdx = Window.orderBy(col("day"))
     val wCum = wIdx.rowsBetween(Window.unboundedPreceding,
       Window.currentRow)
@@ -544,8 +559,8 @@ object TimeSeries {
       .withColumn("s2", col("s_tot") - col("s1"))
       // greatest-guard: the filter above makes n1·n2 ≥ 1, but ANSI
       // mode + predicate inlining can evaluate this expression on the
-      // idx = t_days row BEFORE the guard conjunct (seen in round 8:
-      // DIVIDE_BY_ZERO from inside a collapsed filter) — a total
+      // idx = t_days row BEFORE the guard conjunct (DIVIDE_BY_ZERO
+      // from inside a collapsed filter) — a total
       // expression is the only safe form under optimizer reordering
       .withColumn("score", expr(
         "CAST(CAST(s1 * n2 - s2 * n1 AS DECIMAL(38,0))" +
@@ -565,7 +580,7 @@ object TimeSeries {
         col("best_score").as("score"))
   }
 
-  /** One-way ANOVA for day-of-week seasonality (round 8): does the
+  /** One-way ANOVA for day-of-week seasonality: does the
     * daily event count differ by weekday more than within-weekday
     * noise explains? F = (SSB/(k−1)) / (SSW/(n−k)) over the daily
     * census grouped by epoch-day mod 7 (no calendar functions — the
@@ -584,9 +599,7 @@ object TimeSeries {
     * Shape: fact scan → day census (≤ span days) → 7-group fold →
     * 1-row verdict. */
   def anovaDow(spark: SparkSession, dir: String): DataFrame = {
-    val daily = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, dir, "day")
       .withColumn("dow", col("day") % 7)
     val mu = daily.groupBy(col("dow"))
       .agg(count(lit(1)).as("ng"), sum(col("x")).as("sg"))
@@ -606,7 +619,7 @@ object TimeSeries {
       .withColumn("seasonal_95", col("f_e4") >= 22500L)
   }
 
-  /** Theil–Sen robust slope (round 8): per-user median of all pairwise
+  /** Theil–Sen robust slope: per-user median of all pairwise
     * day-slopes over the daily centi-value series — the estimator that
     * survives up to 29% outlier days where q_ts_regr_slope's least
     * squares is dragged by a single corrupt batch. Completes the robust
@@ -629,8 +642,8 @@ object TimeSeries {
     * window pass for the rank → per-user fold. */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
     val daily = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .withColumn("c", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("d", epochDay)
+      .withColumn("c", cents("value"))
       .groupBy(col("user_id"), col("d"))
       .agg(sum(col("c")).as("y"))
     val slopes = daily.as("a")
@@ -651,7 +664,7 @@ object TimeSeries {
       .orderBy(col("user_id"))
   }
 
-  /** Mann–Kendall trend test (round 8): the significance test whose
+  /** Mann–Kendall trend test: the significance test whose
     * point estimator IS Theil–Sen — S = Σ sign(y_j − y_i) over day
     * pairs i<j, Var(S) = n(n−1)(2n+5)/18 (ties contribute 0 to S; the
     * tie-correction term is omitted and documented — daily centi sums
@@ -669,8 +682,8 @@ object TimeSeries {
     * this row needs NO rank window at all. */
   def mannKendall(spark: SparkSession, dir: String): DataFrame = {
     val daily = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .withColumn("c", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("d", epochDay)
+      .withColumn("c", cents("value"))
       .groupBy(col("user_id"), col("d"))
       .agg(sum(col("c")).as("y"))
     val nd = daily.groupBy(col("user_id"))
@@ -694,7 +707,7 @@ object TimeSeries {
       .orderBy(col("user_id"))
   }
 
-  /** Kendall τ-b concordance (round 8): do the two GLOBAL daily
+  /** Kendall τ-b concordance: do the two GLOBAL daily
     * metrics — event count x and centi-value sum y — move together?
     * Pair census over day pairs (concordant / discordant / tie_x /
     * tie_y / tie_both), then the tie-corrected squared correlation
@@ -714,8 +727,8 @@ object TimeSeries {
     * broadcast nested loop on a frame of tens of rows) → 1-row fold. */
   def kendallTau(spark: SparkSession, dir: String): DataFrame = {
     val daily = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .withColumn("c", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("d", epochDay)
+      .withColumn("c", cents("value"))
       .groupBy(col("d"))
       .agg(count(lit(1)).as("x"), sum(col("c")).as("y"))
     val census = daily.as("a")
@@ -747,7 +760,7 @@ object TimeSeries {
           .as("taub2_e8"))
   }
 
-  /** STL-lite decomposition (round 8): trend = centered 7-day moving
+  /** STL-lite decomposition: trend = centered 7-day moving
     * average (floored; edge days use their available window — the
     * rows-frame is over OBSERVED days, a documented simplification vs
     * calendar STL), seasonal = floored per-weekday mean of the
@@ -769,9 +782,7 @@ object TimeSeries {
     * 1-row census. */
   def stlLite(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d")).rowsBetween(-3, 3)
-    val det = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val det = dailyCounts(spark, dir)
       .withColumn("sw", sum(col("x")).over(w))
       .withColumn("cw", count(lit(1)).over(w))
       .withColumn("det", col("x") - expr("sw div cw"))
@@ -820,9 +831,7 @@ object TimeSeries {
     * window pass for the lags → 1-row fold → 3 stacked rows. */
   def stlResidAcf(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d")).rowsBetween(-3, 3)
-    val det = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val det = dailyCounts(spark, dir)
       .withColumn("sw", sum(col("x")).over(w))
       .withColumn("cw", count(lit(1)).over(w))
       .withColumn("det", col("x") - expr("sw div cw"))
@@ -854,7 +863,7 @@ object TimeSeries {
       .orderBy(col("k"))
   }
 
-  /** Forecast-baseline backtest (round 8): the M-competition rule —
+  /** Forecast-baseline backtest: the M-competition rule —
     * before trusting any model forecast, beat naive (ŷ_t = y_{t−1})
     * and seasonal-naive (ŷ_t = y_{t−7}) on held-in one-step errors.
     * MAE×100 for both on the global daily count series, plus the
@@ -868,9 +877,7 @@ object TimeSeries {
     * first 1 resp. 7 days have no forecast — emitted, not hidden). */
   def forecastBaselines(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d"))
-    events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    dailyCounts(spark, dir)
       .withColumn("f1", lag(col("x"), 1).over(w))
       .withColumn("f7", lag(col("x"), 7).over(w))
       .agg(count(col("f1")).as("n1"),
@@ -885,7 +892,7 @@ object TimeSeries {
           "sae1 * 100 div greatest(n1, 1)").as("snaive_better"))
   }
 
-  /** Max drawdown of the daily activity level (round 8): the largest
+  /** Max drawdown of the daily activity level: the largest
     * peak-to-trough decline of the daily event count — the KPI-
     * monitoring standard for "how bad did the dip get" (the finance
     * drawdown applied to the LEVEL series; the cumulative-sum variant
@@ -898,9 +905,7 @@ object TimeSeries {
   def maxDrawdown(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dd = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val dd = dailyCounts(spark, dir)
       .withColumn("peak", max(col("x")).over(w))
       .withColumn("dd", col("peak") - col("x"))
     val mx = dd.agg(max(col("dd")).as("max_dd"))
@@ -919,7 +924,7 @@ object TimeSeries {
         max(col("trough_day")).as("trough_day"))
   }
 
-  /** Anomaly attribution (round 8): q_ts_anomaly_mad finds WHEN the
+  /** Anomaly attribution: q_ts_anomaly_mad finds WHEN the
     * stream misbehaved; this row answers WHAT drove it — on the day
     * whose global count deviates most from the global lower median
     * (earliest such day), each event type's deviation from ITS OWN
@@ -936,7 +941,7 @@ object TimeSeries {
     * frames → broadcast argmax day → 5-row fold. */
   def anomalyAttribution(spark: SparkSession, dir: String): DataFrame = {
     val td = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("d", epochDay)
       .groupBy(col("event_type").as("t"), col("d"))
       .agg(count(lit(1)).as("c"))
     val byT = Window.partitionBy(col("t"))
@@ -977,7 +982,7 @@ object TimeSeries {
       .orderBy(col("event_type"))
   }
 
-  /** Ljung–Box white-noise test (round 8): the SIGNIFICANCE layer on
+  /** Ljung–Box white-noise test: the SIGNIFICANCE layer on
     * q_ts_acf — per user, Q = n(n+2)·Σ_{k≤3} r_k²/(n−k) against
     * χ²(3, 95%) = 7.815 (the authored 78150 e4 literal). Q·10⁴ folds
     * from the SAME integer moments the acf row emits, with r_k
@@ -993,8 +998,6 @@ object TimeSeries {
     * Shape: identical to acfLags (mean window + three leads + one
     * grouped fold) — one extra 1-row-per-user projection. */
   def ljungBox(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-    val ordered = byUser.orderBy(col("ts_ns"), col("event_id"))
     // r_k is quantized to e4 BEFORE squaring (a shared definition:
     // both engines run this exact text) — the raw num²/den² form needs
     // 10²²-scale products that fought Spark's decimal planning; the
@@ -1010,28 +1013,14 @@ object TimeSeries {
       |      * (num3 * 10000 div greatest(den, 1))
       |      div greatest(n - 3, 1))
       | div 10000""".stripMargin
-    events(spark, dir)
-      .withColumn("x", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-      .withColumn("mean_x",
-        expr("sum(x) OVER (PARTITION BY user_id)" +
-          " div count(1) OVER (PARTITION BY user_id)"))
-      .withColumn("c", col("x") - col("mean_x"))
-      .withColumn("c1", lead(col("c"), 1).over(ordered))
-      .withColumn("c2", lead(col("c"), 2).over(ordered))
-      .withColumn("c3", lead(col("c"), 3).over(ordered))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("c") * col("c")).as("den"),
-        coalesce(sum(col("c") * col("c1")), lit(0L)).as("num1"),
-        coalesce(sum(col("c") * col("c2")), lit(0L)).as("num2"),
-        coalesce(sum(col("c") * col("c3")), lit(0L)).as("num3"))
+    acfMoments(spark, dir)
       .select(col("user_id"), col("n"),
         expr(s"CAST($q AS BIGINT)").as("q_e4"),
         expr(s"$q > 78150").as("white_noise_rejected"))
       .orderBy(col("user_id"))
   }
 
-  /** Period detection (round 8): which cycle length does the daily
+  /** Period detection: which cycle length does the daily
     * series actually carry? Integer ACF of the global day census at
     * candidate lags 2..10 (the acf shifted-e4 form), detected period
     * = the argmax lag (earliest on ties). At sf0.01 and sf0.1 the
@@ -1046,9 +1035,7 @@ object TimeSeries {
     * Shape: day census → span-sized lag self-join (≤9·span rows) →
     * 9-row fold + broadcast argmax. */
   def periodDetect(spark: SparkSession, dir: String): DataFrame = {
-    val daily = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(spark, dir)
     val mu = daily.agg(expr("sum(x) div count(1)").as("m"))
     val c = daily.crossJoin(broadcast(mu))
       .select(col("d"), (col("x") - col("m")).as("c"))
@@ -1075,7 +1062,7 @@ object TimeSeries {
       .orderBy(col("lag"))
   }
 
-  /** Rolling 7-day trend slope (round 8): per day, the least-squares
+  /** Rolling 7-day trend slope: per day, the least-squares
     * slope of the trailing 7-day window of the daily count — the
     * live "is it trending up RIGHT NOW" monitor (q_ts_regr_slope is
     * the global fit; this is its windowed twin, one row per day).
@@ -1087,9 +1074,7 @@ object TimeSeries {
     * slope. */
   def rollingSlope(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d")).rowsBetween(-6, 0)
-    events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    dailyCounts(spark, dir)
       .withColumn("n", count(lit(1)).over(w))
       .withColumn("sd", sum(col("d")).over(w))
       .withColumn("sx", sum(col("x")).over(w))
@@ -1102,7 +1087,7 @@ object TimeSeries {
       .orderBy(col("day"))
   }
 
-  /** Week-over-week revenue growth (round 8): the business twin of
+  /** Week-over-week revenue growth: the business twin of
     * q_ts_forecast_baselines' lag-7 — per day, daily revenue cents,
     * the same weekday last week, and the WoW ratio e4 (NULL for the
     * first seven days and for a zero base — emitted, not dropped, so
@@ -1115,8 +1100,8 @@ object TimeSeries {
   def wowGrowth(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("d"))
     events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .withColumn("c", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+      .withColumn("d", epochDay)
+      .withColumn("c", cents("value"))
       .groupBy(col("d")).agg(sum(col("c")).as("rev"))
       .withColumn("prev", lag(col("rev"), 7).over(w))
       .select(col("d").as("day"), col("rev").as("rev_cents"),
@@ -1149,7 +1134,7 @@ object TimeSeries {
   def runsTest(spark: SparkSession, dir: String): DataFrame = {
     val byU = Window.partitionBy(col("user_id")).orderBy(col("d"))
     val sg = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("d", epochDay)
       .groupBy(col("user_id"), col("d"))
       .agg(count(lit(1)).as("y"))
       .withColumn("dy", col("y") - lag(col("y"), 1).over(byU))
@@ -1192,7 +1177,7 @@ object TimeSeries {
   def turningPoints(spark: SparkSession, dir: String): DataFrame = {
     val byU = Window.partitionBy(col("user_id")).orderBy(col("d"))
     events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("d", epochDay)
       .groupBy(col("user_id"), col("d"))
       .agg(count(lit(1)).as("y"))
       .withColumn("pv", lag(col("y"), 1).over(byU))
@@ -1232,24 +1217,8 @@ object TimeSeries {
     *
     * Shape: identical to ljung_box — one windowed lead pass per user
     * + one partial-aggregable fold; everything after is map-only. */
-  def pacf(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-    val ordered = byUser.orderBy(col("ts_ns"), col("event_id"))
-    events(spark, dir)
-      .withColumn("x", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-      .withColumn("mean_x",
-        expr("sum(x) OVER (PARTITION BY user_id)" +
-          " div count(1) OVER (PARTITION BY user_id)"))
-      .withColumn("c", col("x") - col("mean_x"))
-      .withColumn("c1", lead(col("c"), 1).over(ordered))
-      .withColumn("c2", lead(col("c"), 2).over(ordered))
-      .withColumn("c3", lead(col("c"), 3).over(ordered))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("c") * col("c")).as("den"),
-        coalesce(sum(col("c") * col("c1")), lit(0L)).as("num1"),
-        coalesce(sum(col("c") * col("c2")), lit(0L)).as("num2"),
-        coalesce(sum(col("c") * col("c3")), lit(0L)).as("num3"))
+  def pacf(spark: SparkSession, dir: String): DataFrame =
+    acfMoments(spark, dir)
       .filter(col("den") > 0)
       .withColumn("r1", expr("num1 * 10000 div den"))
       .withColumn("r2", expr("num2 * 10000 div den"))
@@ -1270,7 +1239,6 @@ object TimeSeries {
         expr("CAST(CAST(num3p AS DECIMAL(38,0)) * 10000 div den3p" +
           " AS BIGINT)").as("pacf3_e4"))
       .orderBy(col("user_id"))
-  }
 
   /** Permutation entropy, order 3 (J54, Bandt–Pompe 2002): the
     * complexity of the daily event-count series measured by the
@@ -1295,9 +1263,7 @@ object TimeSeries {
     * changepoint/acf family contract. */
   def permEntropy(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("day"))
-    val pat = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    val pat = dailyCounts(spark, dir, "day")
       .withColumn("x1", lead(col("x"), 1).over(w))
       .withColumn("x2", lead(col("x"), 2).over(w))
       .filter(col("x2").isNotNull)
@@ -1338,9 +1304,7 @@ object TimeSeries {
     * (span/7-sized); the two windows run on THAT bounded frame, never
     * the fact table — the changepoint/perm-entropy family contract. */
   def saxMotifs(spark: SparkSession, dir: String): DataFrame = {
-    val blocks = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    val blocks = dailyCounts(spark, dir, "day")
       .groupBy(expr("day div 7").as("blk"))
       .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
       .select(col("blk"), expr("s div c").as("paa"))
@@ -1378,9 +1342,7 @@ object TimeSeries {
     * (ROWS 6 PRECEDING) — the rolling-median family contract. */
   def bollinger(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("day")).rowsBetween(-6, 0)
-    events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    dailyCounts(spark, dir, "day")
       .withColumn("n", count(col("x")).over(w))
       .withColumn("s", sum(col("x")).over(w))
       .withColumn("ss", sum(expr("x * x")).over(w))
@@ -1411,9 +1373,7 @@ object TimeSeries {
     * 1-row moment fold → 3 stacked rows. */
   def varianceRatio(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("day"))
-    val lagged = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+    val lagged = dailyCounts(spark, dir, "day")
       .withColumn("d1", col("x") - lag(col("x"), 1).over(w))
       .withColumn("d2", col("x") - lag(col("x"), 2).over(w))
       .withColumn("d4", col("x") - lag(col("x"), 4).over(w))
@@ -1455,7 +1415,7 @@ object TimeSeries {
     * → algebraic LOO. */
   def slopeInfluence(spark: SparkSession, dir: String): DataFrame = {
     val daily0 = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("day")).agg(count(lit(1)).as("y"))
     val dmin = daily0.agg(min(col("day")).as("d0"))
     val daily = daily0.crossJoin(broadcast(dmin))
@@ -1480,7 +1440,7 @@ object TimeSeries {
         (col("slope_loo_e6") - col("slope_e6")).as("shift_e6"))
   }
 
-  /** Hurst exponent via the aggregated-variance method (J75, round 9):
+  /** Hurst exponent via the aggregated-variance method (J75):
     * is the event stream long-range dependent? Block-sum the ranked
     * HOURLY counts at scales m ∈ {1,2,4,8} (hourly, not daily: the
     * 30-day fixture span gives a DAILY census only 3 blocks at m=8 —
@@ -1510,7 +1470,7 @@ object TimeSeries {
   def hurst(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val hourly = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 3600000000"))
+      .withColumn("d", epochHour)
       .groupBy(col("d")).agg(count(lit(1)).as("n"))
     val rk = hourly.withColumn("r",
       row_number().over(Window.orderBy(col("d"))).cast("long"))
@@ -1519,8 +1479,8 @@ object TimeSeries {
       .crossJoin(broadcast(Seq(1L, 2L, 4L, 8L).toDF("m")))
       .groupBy(col("m"), expr("(r - 1) div m").as("blk"))
       .agg(sum(col("n")).as("s"))
-    // the moment lane accumulates in DECIMAL(38,0)/HUGEINT (round 10,
-    // ADVICE r9): at large SF the hourly block sums push s² and n·Σs²
+    // the moment lane accumulates in DECIMAL(38,0)/HUGEINT: at large
+    // SF the hourly block sums push s² and n·Σs²
     // past 2⁶³ — the assortativity/ebShrinkage overflow lesson. The
     // REPORTING column var_e4 stays BIGINT: it re-overflows only when
     // the block-sum std exceeds ~3×10⁷ events/hour (var·10⁴ > 2⁶³), a
@@ -1548,7 +1508,7 @@ object TimeSeries {
       .orderBy(col("m"))
   }
 
-  /** SMA crossover regime census (J85, round 11): 7-day vs 28-day
+  /** SMA crossover regime census (J85): 7-day vs 28-day
     * trailing moving averages over the daily event census — golden
     * crosses (short rises above long), death crosses, the last
     * crossing day, and the current regime: the trend-reversal detector
@@ -1565,7 +1525,7 @@ object TimeSeries {
   def smaCrossover(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = events(spark, dir)
-      .withColumn("day", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("day", epochDay)
       .groupBy(col("day")).agg(count(lit(1)).as("c"))
     val ord = Window.orderBy(col("day"))
     val scored = daily
@@ -1586,7 +1546,7 @@ object TimeSeries {
       expr("max_by(above, day)").as("regime_now"))
   }
 
-  /** Per-event-type weekday seasonal strength (J88, round 11): the
+  /** Per-event-type weekday seasonal strength (J88): the
     * Hyndman strength 1 − SS(resid)/SS(detrended) computed PER TYPE —
     * WHICH event types are weekday-driven, where q_ts_stl_lite reports
     * one global number (a flat aggregate census can hide one strongly
@@ -1610,7 +1570,7 @@ object TimeSeries {
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(-3, 3)
     val det = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
+      .withColumn("d", epochDay)
       .groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("x"))
       .withColumn("sw", sum(col("x")).over(w))
       .withColumn("cw", count(lit(1)).over(w))
@@ -1634,7 +1594,7 @@ object TimeSeries {
       .orderBy(col("event_type"))
   }
 
-  /** Holt–Winters additive seasonal smoothing (J91, round 11): the
+  /** Holt–Winters additive seasonal smoothing (J91): the
     * SEASONAL member that completes the exponential-smoothing family —
     * q_ts_ewma (level), q_ts_holt (level+trend), this row
     * (level+trend+weekday seasonality) — over the global daily
@@ -1658,9 +1618,7 @@ object TimeSeries {
     * here the key is global, the series is span-days long — constant
     * per corpus-year, not corpus-sized). */
   def holtWinters(spark: SparkSession, dir: String): DataFrame = {
-    val pts = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val pts = dailyCounts(spark, dir)
       .agg(expr("array_sort(collect_list(struct(d, x)))").as("pts"))
     val lp = "((p.x - element_at(acc.s, CAST(p.d % 7 + 1 AS INT)))" +
       " + acc.l + acc.b) div 2"
@@ -1686,7 +1644,7 @@ object TimeSeries {
       .orderBy(col("dow"))
   }
 
-  /** SES α-sweep by one-step MAE (J92, round 11): simple exponential
+  /** SES α-sweep by one-step MAE (J92): simple exponential
     * smoothing over the daily activity series at α ∈ {1/4, 1/2, 3/4},
     * scored by the one-step-ahead mean absolute error — the
     * TUNING member of the smoothing family (ewma/holt/holt_winters
@@ -1701,9 +1659,7 @@ object TimeSeries {
     * div for the final MAE. Shape: one day census → three constant
     * folds over the span-sized series (the holt_winters contract). */
   def sesAlphaSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pts = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val pts = dailyCounts(spark, dir)
       .agg(expr("transform(array_sort(collect_list(struct(d, x)))," +
         " r -> r.x)").as("vals"))
       .localCheckpoint() // 1 row; feeds three arms
@@ -1719,7 +1675,7 @@ object TimeSeries {
           col("st.l").as("level_c"),
           // greatest(n-1, 1): on a degenerate single-day series both
           // engines then emit mae=0 instead of diverging (Spark div 0
-          // → NULL vs DuckDB // 0 → error) — round 12, ADVICE r11
+          // → NULL vs DuckDB // 0 → error)
           expr("st.e * 100 div greatest(n_days - 1, 1)").as("mae_e2"))
     arm(25L, "(3 * acc.l + x) div 4")
       .unionAll(arm(50L, "(acc.l + x) div 2"))
@@ -1727,7 +1683,7 @@ object TimeSeries {
       .orderBy(col("alpha_e2"))
   }
 
-  /** Binary-segmentation changepoints (J96, round 11): the
+  /** Binary-segmentation changepoints (J96): the
     * multi-changepoint extension q_ts_cusum's scaladoc promises —
     * executed. Level 1 finds the global CUSUM argmax over the daily
     * activity series; level 2 re-runs the identical statistic inside
@@ -1746,9 +1702,7 @@ object TimeSeries {
     * frame — the corpus-sized work is the one partial-aggregable
     * census, exactly like cusum. */
   def changepoint2(spark: SparkSession, dir: String): DataFrame = {
-    val dc = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val dc = dailyCounts(spark, dir)
       .withColumn("i", row_number().over(
         Window.orderBy(col("d"))).cast("long"))
       .localCheckpoint() // span-sized; feeds all three level searches
@@ -1782,7 +1736,7 @@ object TimeSeries {
       .orderBy(col("level"))
   }
 
-  /** One-sided CUSUM control chart (J99, round 11): the SEQUENTIAL
+  /** One-sided CUSUM control chart (J99): the SEQUENTIAL
     * monitor the offline changepoint rows are not — S_t = max(0,
     * S_{t−1} + (x_t − μ₀ − k)) with slack k = μ₀/20 and decision
     * threshold h = μ₀, S resetting after each alarm (the Page 1954
@@ -1801,9 +1755,7 @@ object TimeSeries {
     * span-sized series (the holt_winters contract); μ₀ is a 1-row
     * broadcast. */
   def cusumControl(spark: SparkSession, dir: String): DataFrame = {
-    val pts = events(spark, dir)
-      .withColumn("d", expr("(ts_ns div 1000) div 86400000000"))
-      .groupBy(col("d")).agg(count(lit(1)).as("x"))
+    val pts = dailyCounts(spark, dir)
       .agg(expr("transform(array_sort(collect_list(struct(d, x)))," +
         " r -> r.x)").as("vals"))
     pts

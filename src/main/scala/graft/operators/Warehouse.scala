@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
-/** SURVEY.md §2-J15 — the TPC-H completion batch (round 8): the eight
+/** SURVEY.md §2-J15 — the TPC-H completion batch: the eight
   * remaining decision-support query SHAPES this schema can express
   * (Q2, Q6, Q7, Q8, Q9, Q15, Q20, Q21 — adapted where the fixture
   * lacks a column: no partsupp, no commit/receipt dates, no comments).
@@ -28,9 +28,6 @@ import graft.Tables._
   * per-key aggregates.
   */
 object Warehouse {
-
-  private def cents(c: String): org.apache.spark.sql.Column =
-    expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")
 
   /** TPC-H Q6: the pure scan-aggregate forecast — predicate pushdown
     * is the whole story (date band + quantity + discount band reach
@@ -250,7 +247,7 @@ object Warehouse {
       .limit(30)
   }
 
-  /** Grouped discount elasticity (round 8): per part type, the least-
+  /** Grouped discount elasticity: per part type, the least-
     * squares slope of quantity on discount percentage points — "does
     * discounting move volume for this category?" — the grouped twin of
     * q_ts_regr_slope's per-user fit, on the sales fact instead of the
@@ -269,7 +266,7 @@ object Warehouse {
         .select(col("p_partkey"), col("p_type"))),
         col("p_partkey") === col("l_partkey"))
       .select(col("p_type"),
-        expr("CAST(floor(l_discount * 100 + 0.5) AS BIGINT)").as("x"),
+        cents("l_discount").as("x"),
         expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").as("y"))
       .groupBy(col("p_type"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
@@ -285,7 +282,7 @@ object Warehouse {
           | ELSE 0 END AS BIGINT)""".stripMargin).as("slope_e6"))
       .orderBy(col("p_type"))
 
-  /** Repurchase-interval profile (round 8): per market segment, how
+  /** Repurchase-interval profile: per market segment, how
     * often do customers come back? One-time-customer share plus the
     * exact lower-median and p90 of consecutive-order gaps (days) —
     * the retention economics readout behind every LTV model, built
@@ -338,7 +335,7 @@ object Warehouse {
       .orderBy(col("segment"))
   }
 
-  /** Open-order aging (round 8): the operational WIP census — orders
+  /** Open-order aging: the operational WIP census — orders
     * not yet finalized (status ≠ 'F'), bucketed by age against the
     * corpus max date (authored bucket edges 30/90/365), with share of
     * the open book per (status, bucket). The "what's stuck and how
@@ -668,7 +665,7 @@ object Warehouse {
         col("n_orders"), col("rev_cents"))
       .orderBy(col("region"), col("nation"))
 
-  /** Open-order backlog sweep (J76, round 9): the WIP level over
+  /** Open-order backlog sweep (J76): the WIP level over
     * calendar time — each order enters the backlog on its order date
     * and leaves the day after its LAST lineitem ships; the running
     * net of +1/−1 deltas is the backlog curve, and the emitted top-10
@@ -715,7 +712,7 @@ object Warehouse {
       .limit(10)
   }
 
-  /** Supplier-concentration risk per part (J82, round 10): the
+  /** Supplier-concentration risk per part (J82): the
     * procurement single-source audit — per part, the supplier count
     * and the quantity-share Herfindahl (HHI_e8 = Σ share², cleared to
     * Σq_s²·10⁸ div (Σq)² with the square sum in DECIMAL(38,0) — the
@@ -742,7 +739,7 @@ object Warehouse {
       .limit(20)
   }
 
-  /** Croston's intermittent-demand forecast per part (J90, round 11):
+  /** Croston's intermittent-demand forecast per part (J90):
     * the FORECASTER the q_parts_demand_class quadrants route to —
     * Croston 1972 smooths demand SIZES and inter-demand INTERVALS
     * separately (plain EWMA of sparse series biases toward zero right
@@ -795,7 +792,7 @@ object Warehouse {
       .orderBy(col("pk"))
   }
 
-  /** ANSI-mode semantics posture (J119, round 12): the correctness
+  /** ANSI-mode semantics posture (J119): the correctness
     * stance a 100 TB pipeline has to CHOOSE — under
     * `spark.sql.ansi.enabled=true` (the Spark 4 default posture this
     * engine recommends) silent-corruption classes become loud errors:

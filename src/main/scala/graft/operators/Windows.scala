@@ -48,11 +48,9 @@ object Windows {
     * µs, not ns: DuckDB truncates parquet TIMESTAMP(NANOS) to µs on read,
     * so µs is the finest cross-engine-comparable granularity. */
   def lagDelta(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
+    eventsUs(spark, dir)
+      .withColumn("gap_us",
+        col("ts_us") - lag(col("ts_us"), 1).over(userTimeline))
       .select(col("user_id"), col("event_id"), col("gap_us"))
       .orderBy(col("user_id"), col("event_id"))
   }
@@ -84,18 +82,21 @@ object Windows {
     * bare `Window.orderBy` plans.
     *
     * Two-pass range-partitioned ranking: (1) range-repartition on the
-    * ranking key (parallel sampled exchange), count rows per range
-    * partition — a K-row control-plane collect; (2) global rank = local
-    * row_number within the range partition + broadcast prefix-sum offset
-    * of the partitions before it; ntile(4) is then closed-form from the
-    * global rank and total count (first n%4 tiles hold n/4+1 rows).
-    * Output is bit-identical to ntile(4) OVER (ORDER BY …) — the DuckDB
-    * oracle is unchanged — but every stage is parallel at any scale.
-    * The ranged DataFrame is persisted so the counts job and the final
-    * job see identical partition bounds; the pin is released by the
+    * ranking key (parallel sampled exchange) and count rows per range
+    * partition; a conditional sum over those ≤ `numShufflePartitions`
+    * counts gives each partition's offset and the total n; (2) global
+    * rank = local row_number within the range partition + its
+    * partition's offset, joined on `part` from the broadcast offsets
+    * frame; ntile(4) is then closed-form from the global rank and n
+    * (first n%4 tiles hold n/4+1 rows). Output is bit-identical to
+    * ntile(4) OVER (ORDER BY …) — the DuckDB oracle is unchanged —
+    * every stage is parallel at any scale, and the build runs no job:
+    * the offsets are a frame, not literals, so the plan does not depend
+    * on the sampled bounds.
+    * The ranged DataFrame is persisted so the counts and the ranking
+    * read identical partition bounds; the pin is released by the
     * session's `clearCache` (Verify/Bench do this per query — callers
-    * composing this operator should too), since the returned lazy
-    * DataFrame still needs the cache at execution time. */
+    * composing this operator should too). */
   def ntileShare(spark: SparkSession, dir: String): DataFrame = {
     val wCust = Window.partitionBy(col("o_custkey"))
     val withShare = orders(spark, dir)
@@ -109,32 +110,28 @@ object Windows {
         col("o_orderkey"))
       .withColumn("part", spark_partition_id())
       .persist()
-    val cnts = ranged.groupBy(col("part")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val n = cnts.values.sum
-    val offsets = {
-      var acc = 0L
-      cnts.keys.toSeq.sorted.map { p =>
-        val pair = p -> acc; acc += cnts(p); pair
-      }.toMap
-    }
-    val offCol = offsets.foldLeft(lit(0L)) { case (e, (p, o)) =>
-      when(col("part") === p, lit(o)).otherwise(e)
-    }
-    val tileBase = n / 4
-    val tileBig = n % 4
-    val cut = tileBig * (tileBase + 1)
+    // per partition: the rows of the partitions before it (its offset)
+    // and of all partitions (n), a ≤ nParts² conditional sum — a
+    // running-sum window would move the counts to one partition
+    val cnts = ranged.groupBy(col("part")).agg(count(lit(1)).as("cnt"))
+    val offsets = cnts
+      .crossJoin(broadcast(cnts.select(col("part").as("p2"),
+        col("cnt").as("c2"))))
+      .groupBy(col("part"))
+      .agg(sum(when(col("p2") < col("part"), col("c2")).otherwise(0L))
+        .as("off"), sum(col("c2")).as("n"))
     val wLocal = Window.partitionBy(col("part"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     ranged
-      .withColumn("r", offCol + row_number().over(wLocal))
-      .withColumn("quartile",
-        when(lit(tileBase) === 0L, col("r"))
-          .when(col("r") <= cut,
-            expr(s"(r + $tileBase) div (${tileBase + 1})"))
-          .otherwise(expr(s"$tileBig + (r - $cut + $tileBase - 1)" +
-            s" div $tileBase"))
-          .cast("int"))
+      .join(broadcast(offsets), "part")
+      .withColumn("r", col("off") + row_number().over(wLocal))
+      .withColumn("tb", expr("n div 4"))
+      .withColumn("cut", expr("n % 4 * (n div 4 + 1)"))
+      .withColumn("quartile", expr(
+        """CASE WHEN tb = 0 THEN r
+          |  WHEN r <= cut THEN (r + tb) div (tb + 1)
+          |  ELSE n % 4 + (r - cut + tb - 1) div tb END""".stripMargin)
+        .cast("int"))
       .select(col("o_orderkey"), col("quartile"), col("cust_share"))
       .orderBy(col("o_orderkey"))
   }
@@ -142,24 +139,22 @@ object Windows {
   /** lead + first_value/last_value with explicit frames (the remaining
     * navigation-function family). */
   def leadFirstLast(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    eventsUs(spark, dir)
       .select(col("user_id"), col("event_id"),
-        lead(col("value"), 1).over(w).as("next_value"),
-        first_value(col("event_type")).over(w).as("first_type"),
+        lead(col("value"), 1).over(userTimeline).as("next_value"),
+        first_value(col("event_type")).over(userTimeline).as("first_type"),
         last_value(col("event_type")).over(
-          w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+          userTimeline.rowsBetween(Window.currentRow,
+            Window.unboundedFollowing))
           .as("last_type"))
       .orderBy(col("user_id"), col("event_id"))
   }
 
-  /** percent_rank + cume_dist per nation (round 2) — the remaining
+  /** percent_rank + cume_dist per nation — the remaining
     * relative-ranking family; both are rational functions of integer
     * rank/count so IEEE division is bit-identical cross-engine, rounded
     * 6 anyway for belt-and-braces. */
-  /** Gaps-and-islands (round 4): longest run of CONSECUTIVE active
+  /** Gaps-and-islands: longest run of CONSECUTIVE active
     * days per user. The classic constant-offset trick — day −
     * dense-run index is constant within an island — turns streak
     * detection into two windows over ONE user partitioning plus a
@@ -195,32 +190,30 @@ object Windows {
       .orderBy(col("s_nationkey"), col("s_suppkey"))
   }
 
-  /** Forward-fill (LOCF) + nth_value (round 2): carry the last non-null
+  /** Forward-fill (LOCF) + nth_value: carry the last non-null
     * label forward per user — the gap-fill staple of event/feature
     * pipelines — via `last(ignoreNulls)` over a running frame; plus the
     * positional nth_value over the full frame. */
   def fillNth(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    events(spark, dir)
-      .withColumn("ts_us", expr("ts_ns div 1000"))
+    eventsUs(spark, dir)
       .withColumn("k",
         element_at(from_json(col("props"), MapType(StringType, IntegerType)),
           "k"))
       .select(col("user_id"), col("event_id"),
         last(col("k"), ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          .over(userTimeline.rowsBetween(Window.unboundedPreceding,
+            Window.currentRow))
           .as("k_ffill"),
         nth_value(col("k"), 2)
-          .over(w.rowsBetween(Window.unboundedPreceding,
+          .over(userTimeline.rowsBetween(Window.unboundedPreceding,
             Window.unboundedFollowing))
           .as("second_k"))
       .orderBy(col("user_id"), col("event_id"))
   }
 
   /** Exact discrete quartiles (percentile_disc semantics) per event
-    * type via DISTRIBUTION COUNTING (round 8): value histogram →
+    * type via DISTRIBUTION COUNTING: value histogram →
     * cumulative counts over DISTINCT values → smallest value whose
     * cumulative count reaches rank ⌈q·n⌉. The naive form is a
     * row_number over each type's full partition — with 5 event types
@@ -234,7 +227,7 @@ object Windows {
     val byType = Window.partitionBy(col("event_type"))
     val hist = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        cents("value").as("cents"))
       .groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("cnt"))
     hist
@@ -267,7 +260,7 @@ object Windows {
     val byType = Window.partitionBy(col("event_type"))
     val ev = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        cents("value").as("cents"))
     val th = ev.groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum(col("cnt")).over(byType.orderBy(col("cents"))))
@@ -313,7 +306,7 @@ object Windows {
     val byType = Window.partitionBy(col("event_type"))
     val hist = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        cents("value").as("cents"))
       .groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("c"))
     hist
@@ -330,7 +323,7 @@ object Windows {
       .orderBy(col("event_type"))
   }
 
-  /** RANGE vs ROWS frame semantics (round 8): the window-frame
+  /** RANGE vs ROWS frame semantics: the window-frame
     * distinction that silently corrupts rolling metrics when a series
     * has GAPS — a 3-ROW frame reaches back over missing days while a
     * 3-day RANGE frame does not. Both trailing sums per (user, day)
@@ -346,7 +339,7 @@ object Windows {
       .partitionBy(col("user_id")).orderBy(col("day"))
     events(spark, dir)
       .select(col("user_id"),
-        expr("(ts_ns div 1000) div 86400000000").as("day"))
+        epochDay.as("day"))
       .groupBy(col("user_id"), col("day"))
       .agg(count(lit(1)).as("x"))
       .withColumn("s_range",
@@ -382,7 +375,7 @@ object Windows {
   def pctlContVsDisc(spark: SparkSession, dir: String): DataFrame = {
     val v = events(spark, dir)
       .select(col("event_type"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"))
+        cents("value").as("c"))
     val cen = v.groupBy(col("event_type"), col("c"))
       .agg(count(lit(1)).as("cnt"))
     val tot = v.groupBy(col("event_type")).agg(count(lit(1)).as("n"))

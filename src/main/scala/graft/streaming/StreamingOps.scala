@@ -149,10 +149,12 @@ object StreamingOps {
         col("n_errors"),
         round(col("n_errors") / col("n_total"), 4).as("error_rate"))
 
-  /** Per-user sessions with a 30 min inactivity gap. */
+  /** Per-user sessions closed by an inactivity gap of
+    * [[graft.Tables.SessionGap]], the batch rule's gap. */
   def sessionize(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .groupBy(session_window(col("ts"),
+        s"${graft.Tables.SessionGap.toMinutes} minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("session_value"))
       .select(col("session_window.start").as("s_start"),
@@ -173,7 +175,7 @@ object StreamingOps {
     events.withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Streaming twin of the batch q_events_dedup_window row (round 7):
+  /** Streaming twin of the batch q_events_dedup_window row:
     * FIRST event per (user, type, 10-min tumbling window), emitted
     * when the watermark closes the window. `min_by` on the
     * (ts, event_id) struct is the same total tie-break as the batch
@@ -201,8 +203,8 @@ object StreamingOps {
       .select(col("first.event_id").as("event_id"), col("user_id"),
         col("event_type"), col("window.start").as("w_start"))
 
-  /** Streaming twin of the batch q_dq_freshness audit's core signal
-    * (round 8): per event_type, the latest event time and running
+  /** Streaming twin of the batch q_dq_freshness audit's core signal:
+    * per event_type, the latest event time and running
     * count — ONE tiny state row per type (max/count are mergeable
     * partial aggregates, so state never grows with the stream).
     * The batch row answers "how stale was each feed in this corpus";
@@ -274,7 +276,7 @@ object StreamingOps {
       .select(col("user_id"), col("p_id"), col("s_id"))
   }
 
-  /** Stream-stream LEFT OUTER join (round 4): like [[streamStreamJoin]]
+  /** Stream-stream LEFT OUTER join: like [[streamStreamJoin]]
     * but purchases with no signup in the 1 h window survive — their row
     * is emitted with a NULL s_id only once BOTH watermarks pass the
     * window bound, when the engine can prove no future match can
@@ -296,7 +298,7 @@ object StreamingOps {
       .select(col("user_id"), col("p_id"), col("s_id"))
   }
 
-  /** Streaming last-touch attribution (round 4 part 2): the incremental
+  /** Streaming last-touch attribution: the incremental
     * twin of the batch q_attr_last_touch — state per user is O(1) (just
     * the most recent non-purchase touch), each purchase emits its
     * attribution immediately instead of waiting for a batch rebuild.
@@ -529,7 +531,7 @@ object StreamingOps {
     }
   }
 
-  /** Streaming Holt–Winters (round 11): the incremental twin of the
+  /** Streaming Holt–Winters: the incremental twin of the
     * batch q_ts_holt_winters fold — ONE global key holding
     * (level, trend, s[7], n) as O(1) state, the SAME integer halvings
     * with weekday-keyed slots, snapshotted every micro-batch (Update
@@ -565,7 +567,7 @@ object StreamingOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Streaming bot-regularity screen (round 11): the incremental twin
+  /** Streaming bot-regularity screen: the incremental twin
     * of batch q_events_bot_screen — per user, O(1) state
     * (gap count, Σg, Σg², last ts) maintained across micro-batches,
     * the same cross-multiplied cv² and authored verdict cuts,
@@ -638,7 +640,7 @@ object StreamingOps {
         GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
-  /** Streaming funnel FSM (round 4 part 2): the incremental twin of
+  /** Streaming funnel FSM: the incremental twin of
     * q_funnel_stages — per-user state is the highest stage reached
     * (O(1): a stage number + two timestamps), and a FunnelConversion
     * row is emitted the moment the signup → purchase → error sequence
@@ -742,7 +744,7 @@ object StreamingOps {
         GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
-  /** Streaming SCD-2 (round 4): the incremental twin of the batch
+  /** Streaming SCD-2: the incremental twin of the batch
     * `Reshape.scd2Merge` — per-user state tracks the OPEN dimension row
     * (current attribute value + its valid_from + version); when an
     * event changes the value, the closed version row is EMITTED with
@@ -777,7 +779,7 @@ object StreamingOps {
         GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Streaming heavy hitters (round 4): the Misra-Gries `FreqSketch.agg`
+  /** Streaming heavy hitters: the Misra-Gries `FreqSketch.agg`
     * TypedImperativeAggregate running as STREAMING state — per-group
     * token frequencies in O(k) memory per key regardless of stream
     * length. Complete output mode: the state store holds one serialized

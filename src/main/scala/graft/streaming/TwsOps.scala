@@ -33,7 +33,7 @@ case class TwsSession(firstMs: Long, lastMs: Long, n: Int)
   * older rows were already dropped by the watermark.
   */
 class SessionProcessor extends StatefulProcessor[Long, Ev, SessionSummary] {
-  private val gapMs = 30L * 60 * 1000
+  private val gapMs = graft.Tables.SessionGap.toMillis
 
   @transient private var sess: ValueState[TwsSession] = _
 

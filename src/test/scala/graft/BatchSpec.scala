@@ -173,6 +173,47 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("str_collation, dq_profile, cramers_v, dow_hour: no Expand in " +
+      "the optimized plan") {
+    // each counts distinct values of more than one column; planned as
+    // several distinct aggregates, the Expand slot order would vary
+    // with JVM history
+    import org.apache.spark.sql.catalyst.plans.logical.Expand
+    for (name <- Seq("q_str_collation", "q_dq_profile", "q_events_cramers_v",
+        "q_events_dow_hour")) {
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution
+        .optimizedPlan
+      assert(plan.collect { case e: Expand => e }.isEmpty, s"$name\n$plan")
+    }
+    val Array(r) = SparkEntry.queries("q_str_collation")(spark, sf).collect()
+    assert(r.getLong(0) < r.getLong(1) && r.getBoolean(2), r)
+  }
+
+  test("ntile_share: no per-partition offset literal in the optimized " +
+      "plan, and the quartiles are ntile(4) over the same order") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo, Literal}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val df = SparkEntry.queries("q_win_ntile_share")(spark, sf)
+    val plan = df.queryExecution.optimizedPlan
+    val partLiterals = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e @ EqualTo(a: AttributeReference, _: Literal)
+          if a.name == "part" => e
+      case e @ EqualTo(_: Literal, a: AttributeReference)
+          if a.name == "part" => e
+    }))
+    assert(partLiterals.isEmpty, plan.toString)
+    val got = df.select("o_orderkey", "quartile").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val want = Tables.orders(spark, sf)
+      .select(col("o_orderkey"), ntile(4).over(
+        Window.orderBy(col("o_totalprice").desc, col("o_orderkey")))
+        .as("q"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got.nonEmpty && got == want)
+  }
+
   test("approx_percentile verdict true for every group") {
     val rows = SparkEntry.queries("q_agg_approx_percentile")(spark, sf)
       .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2)))
@@ -1485,10 +1526,13 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val conc = SparkEntry.queries("q_events_concurrency")(spark, sf)
       .collect()
-    // both rows derive from the SAME 30-min rule: total sessions in
-    // the bounce census = half the sweep's point census
-    assert(2L * rows.map(_.getLong(1)).sum ==
-      conc.map(_.getLong(1)).sum)
+    // all three rows derive from the SAME 30-min rule: total sessions
+    // in the bounce census = half the sweep's point census = the batch
+    // sessionizer's row count
+    val nSessions = rows.map(_.getLong(1)).sum
+    assert(2L * nSessions == conc.map(_.getLong(1)).sum)
+    assert(SparkEntry.queries("q_sessionize_batch")(spark, sf).count() ==
+      nSessions)
   }
 
   test("lang_overlap: all unordered lang pairs present, jaccard " +
