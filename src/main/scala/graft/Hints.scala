@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.internal.SQLConf
 
-/** Size-gated broadcast hints: the one owner of the broadcast size gate.
+/** Size-gated physical choices: the one owner of the broadcast size gate
+  * and of the served row's final-sort gate ([[finalSort]]).
   *
   * A forced `broadcast()` never falls back: past the broadcast cap or
   * executor memory it kills the job, so hinting a frame whose row count
@@ -75,4 +78,32 @@ object Hints {
     if (rows <= cap && rows <= BcastByteBudget / math.max(avgRowBytes, 1L))
       broadcast(df)
     else df
+
+  /** The global `Sort` at the root of `plan` or under `Project`s only. */
+  private def topSort(plan: LogicalPlan): Option[Sort] = plan match {
+    case Project(_, child) => topSort(child)
+    case s: Sort if s.global => Some(s)
+    case _ => None
+  }
+
+  /** The final sort of a served row, sized to its input. When the
+    * analyzed plan is a global `Sort`, at the root or under `Project`s
+    * only, and Catalyst estimates its input (`stats.sizeInBytes` of the
+    * analyzed plan: no job, no optimizer pass) at or below
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the row sorts in
+    * one partition, `Sort(global = false)` over `Repartition(1, shuffle =
+    * false)`: the same total order with no range exchange, no
+    * `RangePartitioner` sampling job and no AQE re-plan of its shuffle.
+    * Above the size the range sort stays. The estimate grows with the
+    * data, so at scale every row keeps its range sort. */
+  def finalSort(df: DataFrame): DataFrame = {
+    val maxBytes = df.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val plan = df.queryExecution.analyzed
+    topSort(plan).filter(_.child.stats.sizeInBytes <= maxBytes)
+      .fold(df)(s => GraftBridge.ofRows(df.sparkSession, plan.transformDown {
+        case n if n eq s =>
+          s.copy(global = false, child = Repartition(1, shuffle = false, s.child))
+      }))
+  }
 }

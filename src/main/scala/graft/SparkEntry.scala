@@ -6,8 +6,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Aggregates.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Every row
+    * is served through [[Hints.finalSort]], which sizes its final sort. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = (
     operators.Scans.queries ++
     operators.Filters.queries ++
     operators.Joins.queries ++
@@ -31,6 +32,9 @@ object SparkEntry {
     operators.Governance.queries ++
     multimodal.Multimodal.queries ++
     GraftCatalog.queries
+  ).map { case (name, build) =>
+    name -> ((spark: SparkSession, dir: String) => Hints.finalSort(build(spark, dir)))
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -14,10 +14,12 @@ import graft.{FrameMemo, Sessions, SparkEntry}
 object PlanDiag {
 
   /** Strips what differs between two builds of the same plan: expression
-    * ids (`#N`), Spark Connect `plan_id` tags, object identity hashes and
-    * JVM lambda class names. */
+    * ids (`#N`), generated alias counters (`_common_expr_N`,
+    * `_gen_alias_N`), Spark Connect `plan_id` tags, object identity hashes
+    * and JVM lambda class names. */
   def normalize(plan: String): String = plan
     .replaceAll("#\\d+", "#N")
+    .replaceAll("\\b(_common_expr|_gen_alias)_\\d+", "$1_N")
     .replaceAll("plan_id=\\d+", "plan_id=N")
     .replaceAll("\\$+Lambda[$/\\w.]*", "\\$Lambda")
     .replaceAll("@[0-9a-f]{4,}\\b", "@H")

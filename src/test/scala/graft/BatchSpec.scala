@@ -1302,6 +1302,45 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
         hashKeys = hashed)) == rare, s"hashKeys=$hashed")
   }
 
+  test("both sides of the final-sort gate give the same ordered rows; " +
+      "the one-partition side plans no range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object walk extends AdaptiveSparkPlanHelper
+    // perfbench's query_small rows, then one row each from the graph,
+    // join, TPC-H and time-series families
+    val querySmall = Seq("q_agg_approx_distinct", "q_events_bot_screen",
+      "q_intersect", "q_llm_cosine_topk", "q_llm_lang_id",
+      "q_llm_span_corrupt", "q_pivot_counts", "q_tpch_q6_forecast")
+    val others = Seq("q_graph_degree_dist", "q_join_full_outer",
+      "q_tpch_q13_custdist", "q_ts_m4_downsample")
+    // the query_small rows whose final sort input fits one partition
+    val oneSorted = Set("q_agg_approx_distinct", "q_events_bot_screen",
+      "q_intersect", "q_pivot_counts")
+    // at an advisory size of 1 byte no input fits: every row range-sorts
+    val ranged = spark.newSession()
+    ranged.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    def run(s: SparkSession, name: String) = {
+      val df = SparkEntry.queries(name)(s, sf)
+      val rows = df.collect().toSeq
+      s.catalog.clearCache()
+      val rangeExchanges = walk.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.size
+      (rows, rangeExchanges)
+    }
+    for (name <- querySmall ++ others) {
+      val (one, oneRanges) = run(spark, name)
+      val (range, rangeRanges) = run(ranged, name)
+      assert(one.nonEmpty && one == range, name)
+      if (oneSorted(name))
+        assert(oneRanges == 0 && rangeRanges > 0,
+          s"$name: $oneRanges vs $rangeRanges range exchanges")
+    }
+  }
+
   test("textrank pin: memoized word-edge frame keeps the corpus bigram " +
       "explode out of the final plan") {
     val s = executedPlanString("q_llm_textrank")

@@ -2,10 +2,12 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.PlanDiag
 import scala.jdk.CollectionConverters._
 
-/** Bench's pure parts, with no Spark session: the end-of-run confirm pass
-  * and the stdout tail the driver parses. */
+/** The tools' pure parts, with no Spark session: Bench's end-of-run
+  * confirm pass and closing stdout lines, and PlanDiag's plan
+  * normalization. */
 class BenchSpec extends AnyFunSuite {
   private val budget = 5.0
 
@@ -46,5 +48,21 @@ class BenchSpec extends AnyFunSuite {
     assert(total.get("n_failed").asInt == 25)
     assert(total.get("failed").elements.asScala.size == 20)
     assert(total.get("value").asDouble == math.rint(names.size * 9.999 * 1000) / 1000)
+  }
+
+  test("PlanDiag.normalize: two builds of one plan normalize alike") {
+    // three builds of one aggregate in one JVM differ only in counters
+    def build(id: Int, alias: Int) =
+      s"Aggregate [user_id#$id], [sum(_common_expr_$alias#${id + 7}) AS " +
+        s"n#${id + 9}L, _gen_alias_${alias + 40}#${id + 3}] plan_id=$id\n" +
+        s"+- Project [graft.Foo$$$$Lambda$$$alias/0x7f3a@1a2b3c4d]"
+    val plans = Seq(build(11, 1), build(52, 3), build(97, 5))
+    assert(plans.map(PlanDiag.normalize).distinct.size == 1)
+    assert(PlanDiag.normalize(plans.head) ==
+      "Aggregate [user_id#N], [sum(_common_expr_N#N) AS n#NL, " +
+        "_gen_alias_N#N] plan_id=N\n+- Project [graft.Foo$Lambda@H]")
+    // a user column that merely ends in digits keeps them
+    assert(PlanDiag.normalize("[x_common_expr_2#5, day_7#6]") ==
+      "[x_common_expr_2#N, day_7#N]")
   }
 }
