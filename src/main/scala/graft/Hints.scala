@@ -90,15 +90,16 @@ object Hints {
     * analyzed plan is a global `Sort`, at the root or under `Project`s
     * only, and Catalyst estimates its input (`stats.sizeInBytes` of the
     * analyzed plan: no job, no optimizer pass) at or below
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the row sorts in
-    * one partition, `Sort(global = false)` over `Repartition(1, shuffle =
-    * false)`: the same total order with no range exchange, no
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, the size
+    * AQE packs into one partition under `parallelismFirst`, the row sorts
+    * in one partition, `Sort(global = false)` over `Repartition(1,
+    * shuffle = false)`: the same total order with no range exchange, no
     * `RangePartitioner` sampling job and no AQE re-plan of its shuffle.
     * Above the size the range sort stays. The estimate grows with the
     * data, so at scale every row keeps its range sort. */
   def finalSort(df: DataFrame): DataFrame = {
     val maxBytes = df.sparkSession.sessionState.conf
-      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
     val plan = df.queryExecution.analyzed
     topSort(plan).filter(_.child.stats.sizeInBytes <= maxBytes)
       .fold(df)(s => GraftBridge.ofRows(df.sparkSession, plan.transformDown {

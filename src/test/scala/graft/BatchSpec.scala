@@ -1318,9 +1318,10 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the query_small rows whose final sort input fits one partition
     val oneSorted = Set("q_agg_approx_distinct", "q_events_bot_screen",
       "q_intersect", "q_pivot_counts")
-    // at an advisory size of 1 byte no input fits: every row range-sorts
+    // at a minimum partition size of 1 byte no input fits: every row
+    // range-sorts
     val ranged = spark.newSession()
-    ranged.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    ranged.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
     def run(s: SparkSession, name: String) = {
       val df = SparkEntry.queries(name)(s, sf)
       val rows = df.collect().toSeq

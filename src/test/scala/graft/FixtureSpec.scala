@@ -21,9 +21,6 @@ import org.scalatest.BeforeAndAfterAll
   *  - the codegen-width guard plans the same rows and fails on any
   *    operator whose schema is wider than `spark.sql.codegen.maxFields`,
   *    which whole-stage codegen would leave interpreted;
-  *  - the final-sort guard plans the same rows and fails on any row whose
-  *    final sort input is estimated at one AQE partition but still plans
-  *    a global sort;
   *  - the dual-physical-type test pins BOTH branches of
   *    [[Tables.events]] against tiny self-written parquet, so the next
   *    regeneration (either direction) cannot break the reader.
@@ -75,43 +72,6 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.clearCache()
     assert(wide.isEmpty, s"operators past ${conf.wholeStageMaxNumFields}" +
       s" fields:\n${wide.mkString("\n")}")
-  }
-
-  test("final-sort guard: no row whose final sort input fits one " +
-      "partition plans a global sort") {
-    // A served row's top sort (under Projects only) whose input Catalyst
-    // estimates at or below the advisory partition size sorts in one
-    // partition (Hints.finalSort); a global SortExec there would pay a
-    // range exchange and its sampling job for nothing.
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
-    import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
-    import org.apache.spark.sql.internal.SQLConf
-    val maxBytes =
-      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    def topSort(p: LogicalPlan): Option[Sort] = p match {
-      case Project(_, child) => topSort(child)
-      case s: Sort => Some(s)
-      case _ => None
-    }
-    def topSortExec(p: SparkPlan): Option[SortExec] = p match {
-      case ProjectExec(_, child) => topSortExec(child)
-      case s: SortExec => Some(s)
-      case _ => None
-    }
-    // a served one-partition sort's input is Repartition(1) over the
-    // original input, which Catalyst estimates at the same size
-    val ranged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val qe = fn(spark, sf).queryExecution
-        for {
-          sort <- topSort(qe.analyzed)
-          bytes = sort.child.stats.sizeInBytes if bytes <= maxBytes
-          exec <- topSortExec(qe.sparkPlan) if exec.global
-        } yield s"$name: input estimated at $bytes B"
-    }
-    spark.catalog.clearCache()
-    assert(ranged.isEmpty, s"${ranged.size} rows range-sort an input of at " +
-      s"most $maxBytes B:\n${ranged.mkString("\n")}")
   }
 
   test("Tables.events reads both physical ts types with identical semantics") {
