@@ -6,8 +6,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Aggregates.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Every row
-    * is served through [[Hints.finalSort]], which sizes its final sort. */
+  /** One entry per implemented operator from SURVEY.md §2. Serving a
+    * row installs [[plans.OnePartitionSort]] in a session built without
+    * the extensions, so every session sizes a global sort to its input. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = (
     operators.Scans.queries ++
     operators.Filters.queries ++
@@ -33,7 +34,10 @@ object SparkEntry {
     multimodal.Multimodal.queries ++
     GraftCatalog.queries
   ).map { case (name, build) =>
-    name -> ((spark: SparkSession, dir: String) => Hints.finalSort(build(spark, dir)))
+    name -> { (spark: SparkSession, dir: String) =>
+      plans.OnePartitionSort.install(spark)
+      build(spark, dir)
+    }
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

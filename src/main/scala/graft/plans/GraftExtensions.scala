@@ -23,6 +23,9 @@ import org.apache.spark.sql.execution.SparkPlan
   *    only in a session whose planner lacks it);
   *  - [[CartesianGuard]] — a planner strategy that REJECTS unbounded
   *    cartesian products before they execute;
+  *  - [[OnePartitionSort]] — a global sort over an input AQE packs into
+  *    one partition sorts in that partition (`SparkEntry.queries`
+  *    installs it in a session whose planner lacks it);
   *  - [[LevenshteinBandRule]] — an optimizer rule conjoining the implied
   *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates;
   *  - every graft SQL function in [[GraftExtensions.sqlFunctions]], so a
@@ -32,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfStrategy)
     ext.injectPlannerStrategy(spark => CartesianGuard(spark))
+    ext.injectPlannerStrategy(_ => OnePartitionSort)
     ext.injectOptimizerRule(_ => LevenshteinBandRule)
     GraftExtensions.sqlFunctions.foreach(ext.injectFunction)
   }

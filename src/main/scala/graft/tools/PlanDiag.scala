@@ -10,7 +10,10 @@ import graft.{FrameMemo, Sessions, SparkEntry}
   * code (`diff -r`) show which rows a change re-planned; a row that fails
   * to build gets its exception as the file body. Rows are built in
   * `SparkEntry.queries` order, as `graft.Verify` runs them. Timing a
-  * subset of rows is `graft.Bench <query...>`. */
+  * subset of rows is `graft.Bench <query...>`. Whether a global sort
+  * runs as a range sort or in one partition is a physical-planning
+  * choice ([[graft.plans.OnePartitionSort]]), so it does not show here:
+  * read it in the executed plan. */
 object PlanDiag {
 
   /** Strips what differs between two builds of the same plan: expression

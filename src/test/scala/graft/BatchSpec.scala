@@ -1314,10 +1314,14 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q_intersect", "q_llm_cosine_topk", "q_llm_lang_id",
       "q_llm_span_corrupt", "q_pivot_counts", "q_tpch_q6_forecast")
     val others = Seq("q_graph_degree_dist", "q_join_full_outer",
-      "q_tpch_q13_custdist", "q_ts_m4_downsample")
-    // the query_small rows whose final sort input fits one partition
+      "q_tpch_q13_custdist", "q_ts_m4_downsample", "q_filter_compound")
+    // the rows whose final sort input fits one partition: the query_small
+    // rows, two of them (cosine_topk, lang_id) only once AQE has measured
+    // the stages under the sort, and one sort over a filtered scan, with
+    // no exchange under it, which only the first planning pass sizes
     val oneSorted = Set("q_agg_approx_distinct", "q_events_bot_screen",
-      "q_intersect", "q_pivot_counts")
+      "q_intersect", "q_pivot_counts", "q_llm_cosine_topk", "q_llm_lang_id",
+      "q_filter_compound")
     // at a minimum partition size of 1 byte no input fits: every row
     // range-sorts
     val ranged = spark.newSession()
@@ -1340,6 +1344,31 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(oneRanges == 0 && rangeRanges > 0,
           s"$name: $oneRanges vs $rangeRanges range exchanges")
     }
+  }
+
+  test("serving rows leaves the one-partition sort strategy in the " +
+      "planner exactly once, with or without the extensions") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.classic
+    import graft.plans.OnePartitionSort
+    // a session built without the extensions, as perfbench's and users'
+    // own sessions are: the constructor that takes the extensions is
+    // private, so it is called by reflection
+    val plain = classOf[classic.SparkSession].getDeclaredConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(spark.sparkContext,
+        Some(spark.asInstanceOf[classic.SparkSession].sharedState), None,
+        new SparkSessionExtensions, Map.empty[String, String],
+        Map.empty[String, String]).asInstanceOf[classic.SparkSession]
+    def held(s: SparkSession) =
+      s.sessionState.planner.strategies.count(_ == OnePartitionSort)
+    assert(held(spark) == 1 && held(plain) == 0)
+    for (s <- Seq(spark, plain); _ <- 1 to 3)
+      SparkEntry.queries("q_intersect")(s, sf)
+    assert(held(spark) == 1, "extensions session")
+    assert(held(plain) == 1, "plain session")
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(plain.experimental.extraStrategies == Seq(OnePartitionSort))
   }
 
   test("textrank pin: memoized word-edge frame keeps the corpus bigram " +
