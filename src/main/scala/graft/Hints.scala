@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /** The one owner of the broadcast size gate. The size-gated form of a
-  * global sort is a planner strategy, [[graft.plans.OnePartitionSort]],
-  * because it reads the sizes AQE measures at runtime.
+  * global sort, and of a one-split file scan, is a planner strategy,
+  * [[graft.plans.OnePartition]], because it reads the sizes AQE measures
+  * at runtime and the files a scan lists.
   *
   * A forced `broadcast()` never falls back: past the broadcast cap or
   * executor memory it kills the job, so hinting a frame whose row count

@@ -7,8 +7,9 @@ object SparkEntry {
     operators.Aggregates.pricingSummary(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Serving a
-    * row installs [[plans.OnePartitionSort]] in a session built without
-    * the extensions, so every session sizes a global sort to its input. */
+    * row installs [[plans.OnePartition]] in a session built without
+    * the extensions, so every session sizes a global sort to its input
+    * and plans a one-split file scan as the one partition it is. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = (
     operators.Scans.queries ++
     operators.Filters.queries ++
@@ -35,7 +36,7 @@ object SparkEntry {
     GraftCatalog.queries
   ).map { case (name, build) =>
     name -> { (spark: SparkSession, dir: String) =>
-      plans.OnePartitionSort.install(spark)
+      plans.OnePartition.install(spark)
       build(spark, dir)
     }
   }

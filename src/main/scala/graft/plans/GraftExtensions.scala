@@ -23,8 +23,10 @@ import org.apache.spark.sql.execution.SparkPlan
   *    only in a session whose planner lacks it);
   *  - [[CartesianGuard]] — a planner strategy that REJECTS unbounded
   *    cartesian products before they execute;
-  *  - [[OnePartitionSort]] — a global sort over an input AQE packs into
-  *    one partition sorts in that partition (`SparkEntry.queries`
+  *  - [[OnePartition]] — a global sort over an input AQE packs into
+  *    one partition sorts in that partition, and a scan of one file of
+  *    at most that size, which is one split anyway, reports its one
+  *    partition, so no exchange is planned above it (`SparkEntry.queries`
   *    installs it in a session whose planner lacks it);
   *  - [[LevenshteinBandRule]] — an optimizer rule conjoining the implied
   *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates;
@@ -35,7 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfStrategy)
     ext.injectPlannerStrategy(spark => CartesianGuard(spark))
-    ext.injectPlannerStrategy(_ => OnePartitionSort)
+    ext.injectPlannerStrategy(_ => OnePartition)
     ext.injectOptimizerRule(_ => LevenshteinBandRule)
     GraftExtensions.sqlFunctions.foreach(ext.injectFunction)
   }

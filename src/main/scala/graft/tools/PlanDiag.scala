@@ -1,6 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import graft.{FrameMemo, Sessions, SparkEntry}
 
 /** The plan-equality check: `runMain graft.tools.PlanDiag <sfDir>
@@ -11,9 +15,16 @@ import graft.{FrameMemo, Sessions, SparkEntry}
   * to build gets its exception as the file body. Rows are built in
   * `SparkEntry.queries` order, as `graft.Verify` runs them. Timing a
   * subset of rows is `graft.Bench <query...>`. Whether a global sort
-  * runs as a range sort or in one partition is a physical-planning
-  * choice ([[graft.plans.OnePartitionSort]]), so it does not show here:
-  * read it in the executed plan. */
+  * runs as a range sort or in one partition, and whether a scan reports
+  * one partition, are physical-planning choices
+  * ([[graft.plans.OnePartition]]), so they do not show here: read them in
+  * the executed plan, or take the census below.
+  *
+  * The executed-plan census: `runMain graft.tools.PlanDiag --exchanges
+  * <sfDir> <outDir> [query...]` runs each row once (`collect`) and writes
+  * `<outDir>/exchanges.tsv`, one line per row with the [[exchanges]] of
+  * its final adaptive plan; a row that fails gets `FAILED` and its
+  * exception. */
 object PlanDiag {
 
   /** Strips what differs between two builds of the same plan: expression
@@ -27,21 +38,62 @@ object PlanDiag {
     .replaceAll("\\$+Lambda[$/\\w.]*", "\\$Lambda")
     .replaceAll("@[0-9a-f]{4,}\\b", "@H")
 
+  val exchangeKinds = Seq("range", "hash", "single", "other", "broadcast")
+
+  private object walk extends AdaptiveSparkPlanHelper
+
+  /** Counts of each of [[exchangeKinds]] in an executed plan, subqueries
+    * included: shuffle exchanges by their output partitioning (`other` is
+    * round-robin and the rest), then broadcast exchanges. A reused
+    * exchange is not counted again. */
+  def exchanges(plan: SparkPlan): Seq[Int] = {
+    val kinds = walk.collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case _: RangePartitioning => "range"
+        case _: HashPartitioning => "hash"
+        case SinglePartition => "single"
+        case _ => "other"
+      }
+      case _: BroadcastExchangeExec => "broadcast"
+    }
+    exchangeKinds.map(k => kinds.count(_ == k))
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1)
-    val subset = args.drop(2).toSet
+    val census = args.headOption.contains("--exchanges")
+    val rest = if (census) args.tail else args
+    val sfDir = rest(0); val outDir = rest(1)
+    val subset = rest.drop(2).toSet
     val spark = Sessions.local()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries
+    val lines = SparkEntry.queries.toSeq
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-        val text =
-          try fn(spark, sfDir).queryExecution.optimizedPlan.toString
-          catch { case e: Throwable =>
-            s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}\n" }
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), normalize(text))
+      .flatMap { case (name, fn) =>
+        def failed(e: Throwable) =
+          s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}"
+        val line =
+          if (census) {
+            val counts =
+              try {
+                val df = fn(spark, sfDir)
+                df.collect()
+                exchanges(df.queryExecution.executedPlan).mkString("\t")
+              } catch { case e: Throwable => failed(e).replaceAll("\\s+", " ") }
+            Some(s"$name\t$counts")
+          } else {
+            val text =
+              try fn(spark, sfDir).queryExecution.optimizedPlan.toString
+              catch { case e: Throwable => failed(e) + "\n" }
+            Files.writeString(Paths.get(s"$outDir/$name.txt"), normalize(text))
+            None
+          }
         spark.catalog.clearCache()
+        line
       }
+    if (census)
+      Files.writeString(Paths.get(s"$outDir/exchanges.tsv"),
+        (("name" +: exchangeKinds).mkString("\t") +: lines)
+          .mkString("", "\n", "\n"))
     FrameMemo.release(spark)
     spark.stop()
   }

@@ -893,10 +893,18 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       "(three chained stage minima add no extra shuffle)") {
     // formatted explain prints the plan once (executedPlan.toString under
     // AQE repeats the pre-adaptive subtree and double-counts exchanges)
-    val s = planString("q_funnel_stages")
-    val userExchanges = "hashpartitioning\\(user_id".r
-      .findAllIn(s).size
-    assert(userExchanges == 1, s"expected 1 user_id exchange:\n${s.take(2000)}")
+    def plan(s: SparkSession) = SparkEntry.queries("q_funnel_stages")(s, sf)
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    def userExchanges(p: String) = "hashpartitioning\\(user_id".r
+      .findAllIn(p).size
+    // where the events scan splits, as a large input does, the windows
+    // and the aggregate share one exchange; the one-split fixture scan
+    // already reports the one partition, so it plans none
+    val s = plan(plans.OnePartition.splitScans(spark))
+    assert(userExchanges(s) == 1, s"expected 1 user_id exchange:\n${s.take(2000)}")
+    val one = plan(spark)
+    assert(userExchanges(one) == 0, s"one-split scan:\n${one.take(2000)}")
     val row = SparkEntry.queries("q_funnel_stages")(spark, sf).collect().head
     // funnel is monotone: users ≥ signup ≥ purchase-after ≥ error-after
     assert(row.getLong(0) >= row.getLong(1) && row.getLong(1) >= row.getLong(2)
@@ -1326,31 +1334,110 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // range-sorts
     val ranged = spark.newSession()
     ranged.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    // the rows whose every scan is one split and whose joins, if any, are
+    // broadcast: no shuffle is left once the scans report one partition
+    val unshuffled = Set("q_agg_approx_distinct", "q_pivot_counts",
+      "q_events_bot_screen", "q_tpch_q6_forecast")
     def run(s: SparkSession, name: String) = {
       val df = SparkEntry.queries(name)(s, sf)
       val rows = df.collect().toSeq
       s.catalog.clearCache()
-      val rangeExchanges = walk.collect(df.queryExecution.executedPlan) {
-        case e: ShuffleExchangeExec
-            if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
-      }.size
-      (rows, rangeExchanges)
+      val shuffles = walk.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+      (rows, shuffles.count(_.isInstanceOf[RangePartitioning]), shuffles.size)
     }
     for (name <- querySmall ++ others) {
-      val (one, oneRanges) = run(spark, name)
-      val (range, rangeRanges) = run(ranged, name)
+      val (one, oneRanges, oneShuffles) = run(spark, name)
+      val (range, rangeRanges, rangeShuffles) = run(ranged, name)
       assert(one.nonEmpty && one == range, name)
       if (oneSorted(name))
         assert(oneRanges == 0 && rangeRanges > 0,
           s"$name: $oneRanges vs $rangeRanges range exchanges")
+      if (unshuffled(name))
+        assert(oneShuffles == 0 && rangeShuffles > 0,
+          s"$name: $oneShuffles vs $rangeShuffles shuffle exchanges")
     }
+  }
+
+  test("the one-split scan form skips a multi-file directory and a " +
+      "streaming file source; a join of one- and multi-split scans " +
+      "gives the forced side's rows") {
+    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.functions.col
+    object walk extends AdaptiveSparkPlanHelper
+    def coalesces(p: SparkPlan) =
+      walk.collect(p) { case c: CoalesceExec => c }.size
+    def shuffles(p: SparkPlan) =
+      walk.collect(p) { case e: ShuffleExchangeExec => e }.size
+    def scanPartitions(p: SparkPlan) =
+      walk.collect(p) { case s: FileSourceScanExec =>
+        s.inputRDDs().head.getNumPartitions }
+    val root = java.nio.file.Files.createTempDirectory("graft_one_split")
+    val oneFile = s"$root/one"; val twoFiles = s"$root/two"
+    val data = spark.range(0, 2000).select(
+      (col("id") % 37).as("k"), col("id").as("v"))
+    data.coalesce(1).write.parquet(oneFile)
+    data.repartition(2).write.parquet(twoFiles)
+    assert(new java.io.File(twoFiles).list().count(_.endsWith(".parquet")) == 2)
+    // at a minimum partition size of 1 byte no scan takes the form, and
+    // broadcasts are off on both sides so the join keeps its shuffles
+    val forced = spark.newSession()
+    forced.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    val default = spark.newSession()
+    for (s <- Seq(forced, default))
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def counts(s: SparkSession, dir: String) = {
+      val df = s.read.parquet(dir).groupBy("k").count()
+      val rows = df.collect().sortBy(_.getLong(0)).toSeq
+      (rows, df.queryExecution.executedPlan)
+    }
+    // the control: the one-file directory takes the form
+    val (oneRows, onePlan) = counts(default, oneFile)
+    assert(coalesces(onePlan) == 1 && shuffles(onePlan) == 0, onePlan)
+    // two files: the splits of the forced side, and the exchange stays
+    val (twoRows, twoPlan) = counts(default, twoFiles)
+    val (_, forcedTwoPlan) = counts(forced, twoFiles)
+    assert(coalesces(twoPlan) == 0 && shuffles(twoPlan) > 0, twoPlan)
+    assert(scanPartitions(twoPlan) == scanPartitions(forcedTwoPlan),
+      s"$twoPlan\n$forcedTwoPlan")
+    assert(twoRows == oneRows)
+    // the same one file as a streaming source keeps its stateful exchange
+    val q = default.readStream.schema(data.schema).parquet(oneFile)
+      .groupBy("k").count()
+      .writeStream.format("memory").queryName("one_split_stream")
+      .outputMode("complete").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      assert(coalesces(plan) == 0 && shuffles(plan) > 0, plan)
+    } finally q.stop()
+    assert(default.table("one_split_stream").collect()
+      .sortBy(_.getLong(0)).toSeq == oneRows)
+    // a one-split side meets a two-split side: it is shuffled to the
+    // other side's partitioning, and the rows are the forced side's
+    def joined(s: SparkSession) = {
+      val df = s.read.parquet(oneFile).as("a")
+        .join(s.read.parquet(twoFiles).as("b"), col("a.v") === col("b.v"))
+        .groupBy(col("a.k")).count()
+      (df.collect().sortBy(_.getLong(0)).toSeq, df.queryExecution.executedPlan)
+    }
+    val (joinRows, joinPlan) = joined(default)
+    val (forcedJoinRows, forcedJoinPlan) = joined(forced)
+    assert(coalesces(joinPlan) == 1 && shuffles(joinPlan) > 0, joinPlan)
+    assert(coalesces(forcedJoinPlan) == 0, forcedJoinPlan)
+    assert(joinRows.nonEmpty && joinRows == forcedJoinRows)
   }
 
   test("serving rows leaves the one-partition sort strategy in the " +
       "planner exactly once, with or without the extensions") {
     import org.apache.spark.sql.SparkSessionExtensions
     import org.apache.spark.sql.classic
-    import graft.plans.OnePartitionSort
+    import graft.plans.OnePartition
     // a session built without the extensions, as perfbench's and users'
     // own sessions are: the constructor that takes the extensions is
     // private, so it is called by reflection
@@ -1361,14 +1448,14 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
         new SparkSessionExtensions, Map.empty[String, String],
         Map.empty[String, String]).asInstanceOf[classic.SparkSession]
     def held(s: SparkSession) =
-      s.sessionState.planner.strategies.count(_ == OnePartitionSort)
+      s.sessionState.planner.strategies.count(_ == OnePartition)
     assert(held(spark) == 1 && held(plain) == 0)
     for (s <- Seq(spark, plain); _ <- 1 to 3)
       SparkEntry.queries("q_intersect")(s, sf)
     assert(held(spark) == 1, "extensions session")
     assert(held(plain) == 1, "plain session")
     assert(spark.experimental.extraStrategies.isEmpty)
-    assert(plain.experimental.extraStrategies == Seq(OnePartitionSort))
+    assert(plain.experimental.extraStrategies == Seq(OnePartition))
   }
 
   test("textrank pin: memoized word-edge frame keeps the corpus bigram " +
