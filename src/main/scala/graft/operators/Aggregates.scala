@@ -145,14 +145,12 @@ object Aggregates {
     * stage id appears under both branches; a non-AQE run shows
     * ReusedExchange) and the oracle pins `true`. Detection looks at
     * the FINAL adaptive plan only (the initial-plan echo repeats
-    * Exchange nodes textually and would false-positive). The report runs
-    * in a [[graft.plans.OnePartition.splitScans]] session: a one-split
-    * fixture scan is planned with no exchange to reuse.
+    * Exchange nodes textually and would false-positive).
     *
     * Exact BIGINT rollup (count, cents, share×10⁴ truncating div). */
   def diagExchangeReuse(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val perType = events(graft.plans.OnePartition.splitScans(spark), dir)
+    val perType = events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(cents("value"))
@@ -197,12 +195,18 @@ object Aggregates {
     * records_bounded uses n_groups · numMappers read off the exchange
     * itself (each map partition emits at most one partial row per
     * group) — a literal ceiling (32) went stale the moment a
-    * fixture's scan split into more map tasks than the constant. The
-    * census runs in a [[graft.plans.OnePartition.splitScans]] session: a
-    * one-split fixture scan is planned with no exchange to read. */
+    * fixture's scan split into more map tasks than the constant.
+    *
+    * The census first spreads the corpus over the session's cores
+    * (`repartition`, round-robin), so the aggregate always has map tasks
+    * to combine in and an exchange to read: a fixture file is one split,
+    * and [[graft.plans.OnePartition]] plans its scan as the one partition
+    * it is, with no exchange above it. The spread costs one round-robin
+    * shuffle of the corpus; the verdicts read the aggregate's own. */
   def diagShuffleMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val agg = events(graft.plans.OnePartition.splitScans(spark), dir)
+    val agg = events(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
         sum(cents("value"))

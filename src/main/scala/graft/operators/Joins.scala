@@ -729,12 +729,9 @@ object Joins {
     * mid-query. Verdict columns: the INITIAL plan section carries
     * SortMergeJoin, the FINAL carries BroadcastHashJoin — at 100 TB
     * this is the optimizer rescuing every join whose dim selectivity
-    * only becomes known at runtime (no manual hint, no stats job). The
-    * child session is a [[graft.plans.OnePartition.splitScans]] one: two
-    * one-split fixture scans would join in one partition, with no stage
-    * for AQE to measure. */
+    * only becomes known at runtime (no manual hint, no stats job). */
   def joinAqeSwitch(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = graft.plans.OnePartition.splitScans(spark)
+    val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
     s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
     val dim = orders(s2, dir).filter(col("o_totalprice") > 499000.0)

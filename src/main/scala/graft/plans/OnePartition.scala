@@ -1,8 +1,10 @@
 package graft.plans
 
+import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.planning.ScanOperation
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, ReturnAnswer, Sort}
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
@@ -42,22 +44,61 @@ import org.apache.spark.sql.internal.SQLConf
   * scale the measured input is large and the range sort stays.
   *
   * `CoalesceExec` runs the sort's input stage, back to the previous
-  * exchange, in one task too, and a one-split scan carries its single
-  * task up to the first exchange. A `Generate` can make that stage much
-  * larger than the input bytes say.
+  * exchange, in one task too. A one-split scan carries its single task up
+  * to the first exchange, which is why the scan case also reads the shape
+  * of the plan above the scan ([[oneTaskReads]]): an exchange that
+  * spreads a `Generate` over the cores, that runtime reuse shares between
+  * two reads of the same scan, or where AQE re-plans a shuffled join, is
+  * worth more than the task it costs.
   */
-object OnePartition extends Strategy {
+object OnePartition extends Strategy with JoinSelectionHelper {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case ReturnAnswer(root) =>
+      oneTask.set(oneTaskReads(root))
+      Nil
     case Sort(order, true, child, _) if child.stats.sizeInBytes <= gate =>
       SortExec(order, global = false, CoalesceExec(1, planLater(child))) :: Nil
-    case ScanOperation(_, _, _, LogicalRelation(fs: HadoopFsRelation, _, _, false, _))
-        if oneSplit(fs) =>
+    case ScanOperation(_, _, _, r @ LogicalRelation(fs: HadoopFsRelation, _, _, false, _))
+        if oneTask.get.exists(_ eq r) && oneSplit(fs) =>
       FileSourceStrategy(plan).map(CoalesceExec(1, _))
     case _ => Nil
   }
 
   private def gate: Long =
     SQLConf.get.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** The scans of the plan being planned on this thread that may report
+    * one partition. A planning pass starts at the `ReturnAnswer` that
+    * `QueryExecution` and each AQE re-plan wrap the plan in, and the
+    * planner hands that node to the strategies before any node under it. */
+  private val oneTask = ThreadLocal.withInitial[Seq[LogicalRelation]](() => Nil)
+
+  /** The file relations `root` reads once, from a scan with no `Generate`
+    * above it and no join above it that broadcasts neither side.
+    * Reads are compared as whole scans (the relation with the projections
+    * and filters over it), canonicalized: two equal scans are where
+    * runtime reuse makes one exchange serve both. Subqueries are planned
+    * in passes of their own and read as plans of their own. */
+  private def oneTaskReads(root: LogicalPlan): Seq[LogicalRelation] = {
+    val scans = mutable.ArrayBuffer.empty[(LogicalPlan, LogicalRelation, Boolean)]
+    def visit(p: LogicalPlan, spread: Boolean): Unit = p match {
+      case ScanOperation(_, _, _, r @ LogicalRelation(_: HadoopFsRelation, _, _, _, _)) =>
+        scans += ((p.canonicalized, r, spread))
+      case _: Generate => p.children.foreach(visit(_, spread = true))
+      case j: Join if !broadcast(j) => p.children.foreach(visit(_, spread = true))
+      case _ => p.children.foreach(visit(_, spread))
+    }
+    visit(root, spread = false)
+    val reads = scans.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val kept = scans.collect { case (s, r, spread) if spread || reads(s) > 1 => r }
+    scans.collect { case (_, r, _) if !kept.exists(_ eq r) => r }.toSeq
+  }
+
+  /** A side of `j` is broadcast, by hint or by size, as `JoinSelection`
+    * picks it: an equi-join as a broadcast-hash join, any other as a
+    * broadcast nested-loop join. */
+  private def broadcast(j: Join): Boolean =
+    Seq(true, false).exists(getBroadcastBuildSide(j, _, SQLConf.get).isDefined)
 
   /** One file within the gate, the open cost and the split size. The
     * size is read first: it is the index's cached total, while a catalog
@@ -68,17 +109,6 @@ object OnePartition extends Strategy {
       fs.location.sizeInBytes <=
         (gate min conf.filesOpenCostInBytes min conf.filesMaxPartitionBytes) &&
       fs.location.inputFiles.length == 1
-  }
-
-  /** A child session of `spark` in which a file costs nothing to open
-    * (`spark.sql.files.openCostInBytes` 0): no non-empty file is within
-    * the scan case's gate, and Spark spreads each file over the cores, as
-    * it splits any large input. For the rows that report, as data, what
-    * an exchange above a fixture scan does. */
-  def splitScans(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set(SQLConf.FILES_OPEN_COST_IN_BYTES.key, "0")
-    s
   }
 
   /** Appends the strategy to a session built without [[GraftExtensions]];

@@ -59,41 +59,48 @@ object PlanDiag {
     exchangeKinds.map(k => kinds.count(_ == k))
   }
 
-  def main(args: Array[String]): Unit = {
-    val census = args.headOption.contains("--exchanges")
-    val rest = if (census) args.tail else args
-    val sfDir = rest(0); val outDir = rest(1)
-    val subset = rest.drop(2).toSet
+  def main(args: Array[String]): Unit = args match {
+    case Array("--exchanges", sfDir, outDir, subset @ _*) =>
+      census(sfDir, outDir, subset.toSet)
+    case Array(sfDir, outDir, subset @ _*) =>
+      val spark = Sessions.local()
+      Files.createDirectories(Paths.get(outDir))
+      rows(subset.toSet).foreach { case (name, fn) =>
+        val text =
+          try fn(spark, sfDir).queryExecution.optimizedPlan.toString
+          catch { case e: Throwable =>
+            s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}\n" }
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), normalize(text))
+        spark.catalog.clearCache()
+      }
+      FrameMemo.release(spark)
+      spark.stop()
+  }
+
+  /** The enrolled rows named in `subset`, all of them when it is empty. */
+  private def rows(subset: Set[String]) = SparkEntry.queries
+    .filter { case (name, _) => subset.isEmpty || subset(name) }
+
+  /** Runs each row once and writes its [[exchanges]] to
+    * `<outDir>/exchanges.tsv`. */
+  def census(sfDir: String, outDir: String, subset: Set[String]): Unit = {
     val spark = Sessions.local()
     Files.createDirectories(Paths.get(outDir))
-    val lines = SparkEntry.queries.toSeq
-      .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .flatMap { case (name, fn) =>
-        def failed(e: Throwable) =
+    val lines = rows(subset).map { case (name, fn) =>
+      val counts =
+        try {
+          val df = fn(spark, sfDir)
+          df.collect()
+          exchanges(df.queryExecution.executedPlan).mkString("\t")
+        } catch { case e: Throwable =>
           s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}"
-        val line =
-          if (census) {
-            val counts =
-              try {
-                val df = fn(spark, sfDir)
-                df.collect()
-                exchanges(df.queryExecution.executedPlan).mkString("\t")
-              } catch { case e: Throwable => failed(e).replaceAll("\\s+", " ") }
-            Some(s"$name\t$counts")
-          } else {
-            val text =
-              try fn(spark, sfDir).queryExecution.optimizedPlan.toString
-              catch { case e: Throwable => failed(e) + "\n" }
-            Files.writeString(Paths.get(s"$outDir/$name.txt"), normalize(text))
-            None
-          }
-        spark.catalog.clearCache()
-        line
-      }
-    if (census)
-      Files.writeString(Paths.get(s"$outDir/exchanges.tsv"),
-        (("name" +: exchangeKinds).mkString("\t") +: lines)
-          .mkString("", "\n", "\n"))
+            .replaceAll("\\s+", " ") }
+      spark.catalog.clearCache()
+      s"$name\t$counts"
+    }
+    Files.writeString(Paths.get(s"$outDir/exchanges.tsv"),
+      (("name" +: exchangeKinds).mkString("\t") +: lines.toSeq)
+        .mkString("", "\n", "\n"))
     FrameMemo.release(spark)
     spark.stop()
   }

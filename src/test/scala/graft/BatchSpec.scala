@@ -898,10 +898,13 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     def userExchanges(p: String) = "hashpartitioning\\(user_id".r
       .findAllIn(p).size
-    // where the events scan splits, as a large input does, the windows
-    // and the aggregate share one exchange; the one-split fixture scan
-    // already reports the one partition, so it plans none
-    val s = plan(plans.OnePartition.splitScans(spark))
+    // at a minimum partition size of 1 byte the events scan is planned as
+    // Spark plans it, and the windows and the aggregate share one
+    // exchange; under the default gate the one-split scan already reports
+    // the one partition, so the chain plans none
+    val ranged = spark.newSession()
+    ranged.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    val s = plan(ranged)
     assert(userExchanges(s) == 1, s"expected 1 user_id exchange:\n${s.take(2000)}")
     val one = plan(spark)
     assert(userExchanges(one) == 0, s"one-split scan:\n${one.take(2000)}")
@@ -1360,14 +1363,16 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("the one-split scan form skips a multi-file directory and a " +
-      "streaming file source; a join of one- and multi-split scans " +
+  test("the one-split scan form skips a multi-file directory, a " +
+      "streaming file source, a scan read twice and a scan under a " +
+      "Generate or a join that broadcasts neither side; every form " +
       "gives the forced side's rows") {
     import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array, col, explode, sum}
     object walk extends AdaptiveSparkPlanHelper
     def coalesces(p: SparkPlan) =
       walk.collect(p) { case c: CoalesceExec => c }.size
@@ -1418,19 +1423,40 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
     assert(default.table("one_split_stream").collect()
       .sortBy(_.getLong(0)).toSeq == oneRows)
-    // a one-split side meets a two-split side: it is shuffled to the
-    // other side's partitioning, and the rows are the forced side's
-    def joined(s: SparkSession) = {
-      val df = s.read.parquet(oneFile).as("a")
-        .join(s.read.parquet(twoFiles).as("b"), col("a.v") === col("b.v"))
-        .groupBy(col("a.k")).count()
+    def run(s: SparkSession, build: SparkSession => DataFrame) = {
+      val df = build(s)
       (df.collect().sortBy(_.getLong(0)).toSeq, df.queryExecution.executedPlan)
     }
-    val (joinRows, joinPlan) = joined(default)
-    val (forcedJoinRows, forcedJoinPlan) = joined(forced)
-    assert(coalesces(joinPlan) == 1 && shuffles(joinPlan) > 0, joinPlan)
-    assert(coalesces(forcedJoinPlan) == 0, forcedJoinPlan)
-    assert(joinRows.nonEmpty && joinRows == forcedJoinRows)
+    // each shape on the default side against the forced side; `form` is
+    // whether the one-file scan takes the one-partition form
+    def same(s: SparkSession, build: SparkSession => DataFrame, form: Boolean) = {
+      val (rows, plan) = run(s, build)
+      val (forcedRows, forcedPlan) = run(forced, build)
+      assert(coalesces(plan) == (if (form) 1 else 0), plan)
+      assert(coalesces(forcedPlan) == 0, forcedPlan)
+      assert(rows.nonEmpty && rows == forcedRows)
+      plan
+    }
+    def one(s: SparkSession) = s.read.parquet(oneFile)
+    // an explode above the scan: its exchange spreads the exploded rows
+    val exploded = same(default, s => one(s)
+      .select(col("k"), explode(array(col("v"), col("v") + 1)).as("w"))
+      .groupBy("k").agg(sum("w")), form = false)
+    assert(shuffles(exploded) > 0, exploded)
+    // the same aggregate read twice: one exchange serves both reads
+    val twice = same(default, { s =>
+      val c = one(s).groupBy("k").count()
+      c.union(c) }, form = false)
+    assert(shuffles(twice) > 0, twice)
+    // a one-split side meets a two-split side in a shuffled join: the
+    // join keeps the exchanges where AQE may re-plan it
+    def joined(s: SparkSession) = one(s).as("a")
+      .join(s.read.parquet(twoFiles).as("b"), col("a.v") === col("b.v"))
+      .groupBy(col("a.k")).count()
+    val shuffled = same(default, joined, form = false)
+    assert(shuffles(shuffled) > 0, shuffled)
+    // and in a broadcast join, where the one-split side takes the form
+    same(spark.newSession(), joined, form = true)
   }
 
   test("serving rows leaves the one-partition sort strategy in the " +
