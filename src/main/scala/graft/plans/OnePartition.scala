@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.planning.ScanOperation
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, ReturnAnswer, Sort}
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
@@ -44,12 +44,12 @@ import org.apache.spark.sql.internal.SQLConf
   * scale the measured input is large and the range sort stays.
   *
   * `CoalesceExec` runs the sort's input stage, back to the previous
-  * exchange, in one task too. A one-split scan carries its single task up
-  * to the first exchange, which is why the scan case also reads the shape
-  * of the plan above the scan ([[oneTaskReads]]): an exchange that
-  * spreads a `Generate` over the cores, that runtime reuse shares between
-  * two reads of the same scan, or where AQE re-plans a shuffled join, is
-  * worth more than the task it costs.
+  * exchange, in one task too. A `Generate` can make that stage much
+  * larger than the input bytes say. A one-split scan carries its single
+  * task up to the first exchange, which is why the scan case also reads
+  * the shape of the plan above the scan ([[oneTaskReads]]): an exchange
+  * that runtime reuse shares between two reads of the same scan, or where
+  * AQE re-plans a shuffled join, is worth more than the task it costs.
   */
 object OnePartition extends Strategy with JoinSelectionHelper {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -73,8 +73,8 @@ object OnePartition extends Strategy with JoinSelectionHelper {
     * planner hands that node to the strategies before any node under it. */
   private val oneTask = ThreadLocal.withInitial[Seq[LogicalRelation]](() => Nil)
 
-  /** The file relations `root` reads once, from a scan with no `Generate`
-    * above it and no join above it that broadcasts neither side.
+  /** The file relations `root` reads once, from a scan with no join above
+    * it that broadcasts neither side.
     * Reads are compared as whole scans (the relation with the projections
     * and filters over it), canonicalized: two equal scans are where
     * runtime reuse makes one exchange serve both. Subqueries are planned
@@ -84,7 +84,6 @@ object OnePartition extends Strategy with JoinSelectionHelper {
     def visit(p: LogicalPlan, spread: Boolean): Unit = p match {
       case ScanOperation(_, _, _, r @ LogicalRelation(_: HadoopFsRelation, _, _, _, _)) =>
         scans += ((p.canonicalized, r, spread))
-      case _: Generate => p.children.foreach(visit(_, spread = true))
       case j: Join if !broadcast(j) => p.children.foreach(visit(_, spread = true))
       case _ => p.children.foreach(visit(_, spread))
     }

@@ -1364,9 +1364,9 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the one-split scan form skips a multi-file directory, a " +
-      "streaming file source, a scan read twice and a scan under a " +
-      "Generate or a join that broadcasts neither side; every form " +
-      "gives the forced side's rows") {
+      "streaming file source, a scan read twice and a scan under a join " +
+      "that broadcasts neither side; every form gives the forced side's " +
+      "rows") {
     import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -1438,11 +1438,12 @@ class BatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       plan
     }
     def one(s: SparkSession) = s.read.parquet(oneFile)
-    // an explode above the scan: its exchange spreads the exploded rows
+    // an explode above the scan runs in the scan's task on either side,
+    // and the scan takes the form
     val exploded = same(default, s => one(s)
       .select(col("k"), explode(array(col("v"), col("v") + 1)).as("w"))
-      .groupBy("k").agg(sum("w")), form = false)
-    assert(shuffles(exploded) > 0, exploded)
+      .groupBy("k").agg(sum("w")), form = true)
+    assert(shuffles(exploded) == 0, exploded)
     // the same aggregate read twice: one exchange serves both reads
     val twice = same(default, { s =>
       val c = one(s).groupBy("k").count()
