@@ -26,7 +26,8 @@ import org.apache.spark.sql.execution.SparkPlan
   *  - [[OnePartition]] — a global sort over an input AQE packs into
   *    one partition sorts in that partition, and a scan of one file of
   *    at most that size, which is one split anyway, reports its one
-  *    partition, so no exchange is planned above it (`SparkEntry.queries`
+  *    partition, so no exchange is planned above it, unless the plan
+  *    reads it twice or joins it without a broadcast (`SparkEntry.queries`
   *    installs it in a session whose planner lacks it);
   *  - [[LevenshteinBandRule]] — an optimizer rule conjoining the implied
   *    `|len(a)−len(b)| ≤ k` band onto bounded-levenshtein predicates;
