@@ -75,6 +75,68 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
+  /** A document's tokens: `text` split on single spaces, so a doubled
+    * space yields an empty token and the count is the number of spaces
+    * plus one, as the oracle's `string_split(text, ' ')` counts. Every
+    * batch row and both streaming paths (`StreamingOps.curateStream`,
+    * `StreamDedup`) read this one tokenizer; a token count is
+    * `size(tokens)`. */
+  val tokens: Column = split(col("text"), " ")
+
+  /** The seven stopwords the quality and relevance rows exclude or
+    * count, in the order their SQL `IN` lists name them. */
+  val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
+
+  /** [[Stopwords]] as the SQL list `('the','a',...)`, for a lambda in
+    * SQL text (`t -> t IN $stopwordsSql`), where a Column cannot stand
+    * in without renaming the lambda variable. */
+  val stopwordsSql: String = Stopwords.map(w => s"'$w'").mkString("(", ",", ")")
+
+  /** The content-dedup key, `lower(trim(text))`: two documents whose
+    * texts differ only in case or surrounding whitespace are one. */
+  val contentKey: Column = lower(trim(col("text")))
+
+  /** The 256-bit SHA-2 digest of [[contentKey]]: the bounded-width key
+    * the batch dedup rows and `StreamingOps.curateStream` group by. */
+  val contentDigest: Column = sha2(contentKey, 256)
+
+  /** `docs` with its [[tokens]] as `tk` and their count as `n_tok`. */
+  def withTokens(docs: DataFrame): DataFrame =
+    docs.withColumn("tk", tokens).withColumn("n_tok", size(col("tk")))
+
+  /** The quality ratios over the columns of [[withTokens]]: the
+    * type-token ratio `ttr` (distinct tokens over `n_tok`) and the
+    * [[Stopwords]] share `stop_ratio`. Apart from [[withTokens]] so that
+    * a row which de-duplicates between the two steps scores only the
+    * survivors. */
+  def withQualityRatios(df: DataFrame): DataFrame =
+    df.withColumn("ttr",
+        size(array_distinct(col("tk"))) / col("n_tok").cast("double"))
+      .withColumn("stop_ratio", expr(
+        s"""size(filter(tk, t -> t IN $stopwordsSql))
+          |  / CAST(size(tk) AS DOUBLE)""".stripMargin))
+
+  /** A document frame's quality features `tk`, `n_tok`, `ttr` and
+    * `stop_ratio`: what the batch quality rows (`LlmOps.qualityScore`,
+    * `LlmOps.datasetCard`, `ModelPrep.qualityLogreg`) score and what
+    * `StreamingOps.curateStream` gates on. */
+  def qualityFeatures(docs: DataFrame): DataFrame =
+    withQualityRatios(withTokens(docs))
+
+  /** The per-document token stream: one `(doc_id, tok)` row per token. */
+  def docTokens(spark: SparkSession, dir: String): DataFrame =
+    documents(spark, dir).select(col("doc_id"), explode(tokens).as("tok"))
+
+  /** The per-document term-frequency census `(doc_id, tok, tf)`. */
+  def termFreqs(spark: SparkSession, dir: String): DataFrame =
+    docTokens(spark, dir)
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"))
+
+  /** The per-language token stream: one `(lang, tok)` row per token. */
+  def langTokens(spark: SparkSession, dir: String): DataFrame =
+    documents(spark, dir).select(col("lang"), explode(tokens).as("tok"))
+
   /** Session-memoized row count of fixture table `name`: one count job
     * per session (a parquet-footer read) under the key `"$name-rows"`.
     * The document-count gates, the skew-join sizing and [[rowsGate]]
@@ -179,6 +241,14 @@ object Tables {
     * `CAST(floor(c * 100 + 0.5) AS BIGINT)`, the form both engines
     * evaluate identically. */
   def cents(c: String): Column = expr(s"CAST(floor($c * 100 + 0.5) AS BIGINT)")
+
+  /** A double rounded half up to 4 decimals, `floor(c * 1e4 + 0.5) / 1e4`
+    * in plain double arithmetic, which both engines evaluate
+    * identically. Spark's `round()` goes through the double's shortest
+    * decimal form while DuckDB rounds the binary value, so exact
+    * half-way cases (common for small-rational scores like k/80) land on
+    * different sides. */
+  def r4(c: Column): Column = floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
   /** The inactivity gap that closes a user session: the batch rule
     * (`Reshape.sessionEvents`), `StreamingOps.sessionize`'s

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * extraction / resize / frame-sampling as batch-shaped distributed
   * transforms.
   *
-  * Two codec tiers (round 5):
+  * Two codec tiers:
   *   1. REAL public codecs from the JDK — PNG/BMP/GIF/JPEG via
   *      `javax.imageio.ImageIO` and WAV PCM via `javax.sound.sampled`
   *      (both ship with Java 17, zero new dependencies). Grayscale PNG
@@ -127,7 +127,7 @@ object Multimodal {
     }
   }
 
-  // ============ real video codec path (round 9, PATH-gated) ============
+  // ============ real video codec path (PATH-gated) ============
 
   /** True when an `ffmpeg` binary is reachable on PATH — the
     * cluster-image case. This offline build cannot BUNDLE a video
@@ -151,7 +151,7 @@ object Multimodal {
     * signature to IEND and return the exclusive end offset, or None on
     * truncated/malformed input — a length-aware split that cannot be
     * fooled by signature bytes occurring inside compressed IDAT
-    * payload, unlike a blind magic-byte scan (ADVICE r9). */
+    * payload, unlike a blind magic-byte scan. */
   private[graft] def pngEnd(buf: Array[Byte], start: Int): Option[Int] = {
     var p = start + PngMagic.length
     while (p + 8 <= buf.length) {
@@ -195,7 +195,7 @@ object Multimodal {
           .redirectError(ProcessBuilder.Redirect.DISCARD).start()
         val out = p.getInputStream.readAllBytes()
         // a failed/partial decode must NOT masquerade as a zero-frame
-        // video (ADVICE r9): drop the row on nonzero exit status
+        // video: drop the row on nonzero exit status
         if (p.waitFor() != 0) Iterator.empty
         else {
           // split the concatenated-PNG pipe by WALKING each PNG's
@@ -222,7 +222,7 @@ object Multimodal {
     }
   }
 
-  // ===================== real JDK codecs (round 5) =====================
+  // ===================== real JDK codecs =====================
 
   case class ImageDecoded(media_id: Long, width: Int, height: Int,
       valid: Boolean, hist: String)
@@ -232,7 +232,7 @@ object Multimodal {
   case class DHash(media_id: Long, n_px: Int, hash_hi: Long,
     hash_lo: Long, n_up: Long)
   /** Decoded grayscale pixels, the shared intermediate of the decode +
-    * aHash rows (round 8): ImageIO runs once, both rows project it. */
+    * aHash rows: ImageIO runs once, both rows project it. */
   case class DecodedPx(media_id: Long, w: Int, h: Int, valid: Boolean,
       px: Array[Int])
 
@@ -504,7 +504,7 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Memoized synthetic media fixtures (round 8). The enrolled codec
+  /** Memoized synthetic media fixtures. The enrolled codec
     * rows SYNTHESIZE their input corpus (text bytes → PNG/WAV blobs)
     * because the harness ships no binary media table — but in
     * production the blobs sit in a parquet binary column and no query
@@ -527,8 +527,8 @@ object Multimodal {
       build: => org.apache.spark.sql.Dataset[Media]): DataFrame =
     memoizedFrame(spark, dir, variant)(build.toDF())
 
-  /** The decode+aHash rows' SHARED decoded-pixel frame (round 8,
-    * verdict #7): PNG encode AND ImageIO decode both run exactly once
+  /** The decode+aHash rows' SHARED decoded-pixel frame: PNG encode AND
+    * ImageIO decode both run exactly once
     * per (application, sfDir); the two enrolled rows are pure integer
     * projections of these pinned pixels — the minhash `sigs` pattern
     * applied to the codec pass. At 100 TB this is a persisted
@@ -562,7 +562,7 @@ object Multimodal {
       .as[(Long, String)]
   }
 
-  /** Enrolled (round 5): REAL PNG round-trip — text bytes → grayscale
+  /** Enrolled: REAL PNG round-trip — text bytes → grayscale
     * PNG via the JDK's actual PNG encoder → ImageIO decode → pixel
     * histogram. Grayscale-8 PNG is lossless, so the DuckDB twin can
     * recompute the histogram from character codes and hash-match; any
@@ -572,7 +572,7 @@ object Multimodal {
   def mmImageDecode(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    // histogram from the SHARED decoded pixels (round 8): no codec in
+    // histogram from the SHARED decoded pixels: no codec in
     // this row's own plan — identical output to decodeImages over the
     // same media (same pixels, same 16-bin >> 4 binning)
     decodedPng(spark, dir).as[DecodedPx].mapPartitions { it =>
@@ -611,14 +611,14 @@ object Multimodal {
       dir: String): DataFrame =
     decodeWavs(wavMedia(spark, dir)).toDF().orderBy(col("media_id"))
 
-  /** Enrolled (round 5): perceptual aHash over really-decoded PNG
+  /** Enrolled: perceptual aHash over really-decoded PNG
     * pixels — the image-near-dup fingerprint. All arithmetic after the
     * decode is exact integer (chunk boundaries i·64 div n, floor-div
     * means), so DuckDB replicates it bit-for-bit from char codes. */
   def mmImageAHash(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    // aHash from the SHARED decoded pixels (round 8): same bits as
+    // aHash from the SHARED decoded pixels: same bits as
     // imageAHash over the same media (one ahashBits definition), with
     // the codec pass paid once across the decode + aHash rows
     decodedPng(spark, dir).as[DecodedPx].mapPartitions(_.flatMap { d =>
@@ -631,7 +631,7 @@ object Multimodal {
 
   case class WHash(media_id: Long, n_px: Int, whash: Long, n_pos: Long)
 
-  /** The wHash bit math (J76, round 9): a Walsh–Hadamard SIGN hash —
+  /** The wHash bit math (J76): a Walsh–Hadamard SIGN hash —
     * the frequency-domain perceptual hash (the pHash idea) built on
     * the ±1 Hadamard basis instead of the DCT cosine basis, so every
     * coefficient is an EXACT integer (a float DCT would hang hash
@@ -681,7 +681,7 @@ object Multimodal {
     }).toDF().orderBy(col("media_id"))
   }
 
-  /** Enrolled (round 6): image NEAR-DUP PAIRS via banded Hamming
+  /** Enrolled: image NEAR-DUP PAIRS via banded Hamming
     * buckets over the perceptual aHash — the join the aHash scaladoc
     * promises, exactly the text-SimHash machinery (4 chunks of the
     * 64-bit hash as equi-join keys; pigeonhole: Hamming ≤ 3 ⇒ at least
@@ -748,7 +748,7 @@ object Multimodal {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Enrolled (round 8): video frame sampling through [[sampleFrames]] —
+  /** Enrolled: video frame sampling through [[sampleFrames]] —
     * each ASCII doc becomes a GRFT "video" blob (payload = text bytes),
     * split into 16-byte frames, keep every 2nd (frame_no keeps the
     * ORIGINAL index — the temporal position survives sampling), then a
@@ -908,7 +908,7 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Foreground run-length census (J87, round 11): binarize the
+  /** Foreground run-length census (J87): binarize the
     * REALLY-decoded pixel strip at its own integer mean (the aHash
     * threshold), then count maximal above-mean runs, the longest run,
     * and the foreground share — the 1-D segmentation/blob census
@@ -943,7 +943,7 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Enrolled (round 8): nearest-neighbor resize of the REALLY-decoded
+  /** Enrolled: nearest-neighbor resize of the REALLY-decoded
     * PNG pixel rows to a fixed 16-pixel strip — the thumbnail/
     * normalize step every vision-data pipeline runs before feature
     * extraction. Sample j of the output is source pixel (j·n) div 16
@@ -969,7 +969,7 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Enrolled (round 8): histogram equalization over the really-decoded
+  /** Enrolled: histogram equalization over the really-decoded
     * PNG pixels — the classic contrast-normalization preprocessing
     * (OpenCV equalizeHist semantics in pure integers): p′ =
     * (cdf(p) − cdf_min)·255 div max(n − cdf_min, 1), all from the
@@ -1013,7 +1013,7 @@ object Multimodal {
   case class ImgEntropy(media_id: Long, n_px: Long, n_bins: Long,
     h_e3: Long, low_contrast: Boolean)
 
-  /** Per-image histogram entropy (round 8): Shannon entropy of the
+  /** Per-image histogram entropy: Shannon entropy of the
     * 16-bin pixel histogram (the image_decode binning), H =
     * Σ (c/n)·ln(n/c) in e3 nats — the companion screen to
     * mmImageStats: m2 catches LOW-VARIANCE frames, entropy catches
@@ -1051,7 +1051,7 @@ object Multimodal {
       }.toDF().orderBy(col("media_id"))
   }
 
-  /** Per-image brightness/contrast statistics (round 8): exact pixel
+  /** Per-image brightness/contrast statistics: exact pixel
     * count, floored mean (the abTest m2 discipline — mean = Σp div n,
     * a shared quantization), the exact second central moment about
     * that floored mean, and min/max — the exposure/contrast screen a
@@ -1182,8 +1182,8 @@ object Multimodal {
   case class ImgSharp(media_id: Long, n_px: Long, grad_sum: Long,
     sharp_e3: Long)
 
-  /** Per-image sharpness via mean |Laplacian| (J80, round 10 — the
-    * blur gate): grad_sum = Σ |2·p(i) − p(i−1) − p(i+1)| over interior
+  /** Per-image sharpness via mean |Laplacian| (J80, the blur gate):
+    * grad_sum = Σ |2·p(i) − p(i−1) − p(i+1)| over interior
     * pixels (the 1-D Laplacian of the row-major strip; on W×H images
     * the same kernel runs per axis), sharp_e3 = grad_sum·10³ div
     * (n−2). The third member of the image-quality screen beside

@@ -223,7 +223,7 @@ object Analytics {
     // clearCache/unpersist responsibility (same contract as
     // LlmOps.shingles).
     val sets = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"), expr(shingleExpr).as("ts"))
       .cache()
     // sz rides the explode as size(ts) — the set size is already in
@@ -341,8 +341,7 @@ object Analytics {
     * TakeOrderedAndProject. */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .select(col("doc_id"), explode(array_distinct(tokens)).as("tok"))
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("df"),
         sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -410,7 +409,7 @@ object Analytics {
     * side — at corpus scale that side is tiny (broadcastable), so the
     * vocab never shuffles twice. */
   def pmiCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val toks = documents(spark, dir).withColumn("tk", split(col("text"), " "))
+    val toks = documents(spark, dir).withColumn("tk", tokens)
     val uni = toks.select(explode(col("tk")).as("w"))
     val uc = uni.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val nTok = uni.agg(count(lit(1)).as("n_tok"))
@@ -561,7 +560,7 @@ object Analytics {
   def textrank(spark: SparkSession, dir: String): DataFrame = {
     val edges = graft.FrameMemo.cached(spark, dir, "textrank-edges") {
       val bg = documents(spark, dir)
-        .withColumn("tk", split(col("text"), " "))
+        .withColumn("tk", tokens)
         .filter(size(col("tk")) >= 2)
         .select(explode(expr(
           """transform(sequence(1, size(tk) - 1),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.VectorExprs
 
-/** SURVEY.md §2 round-7 widening (J9): the quality-gate / tokenizer /
+/** SURVEY.md §2 (J9): the quality-gate / tokenizer /
   * retrieval-compression rows a production training-data pipeline runs
   * between ingestion and packing — published-heuristic quality rules
   * (Gopher/C4-style), tokenizer fertility diagnostics, language-ID
@@ -26,8 +26,6 @@ import graft.functions.VectorExprs
   */
 object Curation {
 
-  private val stop7 = "('the','a','of','and','to','in','is')"
-
   /** Gopher-style quality rule gate: per-document rule flags + the
     * composite keep decision. The four rules are the public
     * Gopher/MassiveText heuristics expressible over whitespace tokens —
@@ -41,14 +39,14 @@ object Curation {
     * Scale: one columnar pass, no shuffle before the output sort. */
   def gopherRules(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("n_words"),
         expr("aggregate(tk, CAST(0 AS BIGINT), (a, t) -> a + length(t))")
           .as("sum_len"),
         expr("CAST(size(filter(tk, t -> t rlike '[A-Za-z]')) AS BIGINT)")
           .as("n_alpha"),
-        expr(s"CAST(size(filter(tk, t -> t IN $stop7)) AS BIGINT)")
+        expr(s"CAST(size(filter(tk, t -> t IN $stopwordsSql)) AS BIGINT)")
           .as("n_stop"))
       .select(col("doc_id"), col("n_words"),
         (col("n_words") >= 5 && col("n_words") <= 10000).as("r_nwords"),
@@ -101,8 +99,7 @@ object Curation {
     * Integer rates ×10⁴; partial-aggregable lang-keyed sums. */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("lang"),
-        size(split(col("text"), " ")).cast("long").as("n_ws"),
+      .select(col("lang"), size(tokens).cast("long").as("n_ws"),
         size(expr("regexp_extract_all(text, '\\\\S{1,4}', 0)"))
           .cast("long").as("n_bpe"),
         length(col("text")).cast("long").as("n_chars"))
@@ -111,7 +108,7 @@ object Curation {
         sum(col("n_bpe")).as("bpe_tokens"), sum(col("n_chars")).as("chars"))
       .select(col("lang"), col("n_docs"), col("ws_tokens"),
         col("bpe_tokens"), col("chars"),
-        // greatest(x,1) guards (round 8, advisor): on a degenerate
+        // greatest(x,1) guards: on a degenerate
         // all-empty-text language Spark's div yields NULL while the
         // oracle's // raises — the guard (0 div 1 = 0) gives BOTH
         // engines the same defined value (oracle carries the twin)
@@ -188,7 +185,7 @@ object Curation {
     * count; joins are vocab-sized on hashed keys. */
   def knBigram(spark: SparkSession, dir: String): DataFrame = {
     val bg = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 2)
       .select(explode(expr(
         """transform(sequence(1, size(tk) - 1),
@@ -214,7 +211,7 @@ object Curation {
       .limit(50)
   }
 
-  /** Jelinek–Mercer interpolated bigram LM (round 8, λ = 0.7) — the
+  /** Jelinek–Mercer interpolated bigram LM (λ = 0.7) — the
     * fourth smoothing family next to add-one MLE (q_llm_bigram_lm),
     * Kneser–Ney ([[knBigram]]) and stupid backoff (q_llm_trigram_sbo):
     * p(w2|w1) = λ·c12/c1 + (1−λ)·cu(w2)/N, the linear blend of bigram
@@ -236,7 +233,7 @@ object Curation {
     * explode, vocab-sized groupBys, 1-row total broadcast. */
   def jmInterp(spark: SparkSession, dir: String): DataFrame = {
     val docs = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
     val bg = docs
       .filter(size(col("tk")) >= 2)
       .select(explode(expr(
@@ -300,7 +297,7 @@ object Curation {
       .reduce(_ unionAll _)
       .crossJoin(broadcast(denom))
       .select(col("dim"), col("n_hits"),
-        // greatest-guard (round 9, carried ADVICE): an empty full-rank
+        // greatest-guard: an empty full-rank
         // frame (degenerate store: <2 vectors) makes total = 0 — Spark
         // div would yield NULL where the oracle's // may error; both
         // arms guard identically (0 div 1 = 0). The zero-hit DIM case
@@ -373,7 +370,7 @@ object Curation {
     * source-keyed partial aggregation. */
   def domainKl(spark: SparkSession, dir: String): DataFrame = {
     val tok = documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .select(col("source"), explode(tokens).as("w"))
     val top = tok.groupBy(col("w")).agg(count(lit(1)).as("c_cnt"))
       .withColumn("r", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -399,7 +396,7 @@ object Curation {
       .orderBy(col("source"))
   }
 
-  /** RAG context packing (round 7 part 3): fill a 2 000-token context
+  /** RAG context packing: fill a 2 000-token context
     * budget greedily down the BM25 ranking — the assembly step between
     * retrieval and the prompt. Output = the packed docs with their
     * rank, token cost, and running total; the first doc that would
@@ -418,8 +415,7 @@ object Curation {
       .withColumn("rank", row_number().over(
         w.orderBy(col("bm25").desc, col("doc_id"))))
     val toks = documents(spark, dir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_ws"))
+      .select(col("doc_id"), size(tokens).cast("long").as("n_ws"))
     ranked.join(toks, "doc_id")
       .withColumn("cum_tokens", sum(col("n_ws")).over(
         w.orderBy(col("rank"))
@@ -430,7 +426,7 @@ object Curation {
       .orderBy(col("rank"))
   }
 
-  /** Speculative-decoding acceptance proxy (round 7 part 3): predict
+  /** Speculative-decoding acceptance proxy: predict
     * every next token with the corpus bigram argmax (the cheapest
     * draft model) and measure the per-language acceptance rate — the
     * number that says how much a 1-gram draft would speed this corpus
@@ -444,7 +440,7 @@ object Curation {
     * partial-aggregable lang groupBy. */
   def specNgram(spark: SparkSession, dir: String): DataFrame = {
     val pos = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 2)
       .select(col("lang"), explode(expr(
         """transform(sequence(2, size(tk)),
@@ -467,7 +463,7 @@ object Curation {
       .orderBy(col("lang"))
   }
 
-  /** Systematic resampling (round 7 part 3): the low-variance
+  /** Systematic resampling: the low-variance
     * resampler (particle filters, data re-weighting) — N = 100
     * equally-spaced picks through the cumulative weight line, weight =
     * doc length in chars. n_picks(doc) = ⌊cum·N/W⌋ − ⌊(cum−w)·N/W⌋,
@@ -497,7 +493,7 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** Quality-gate ablation (round 7 part 4): per Gopher rule, how many
+  /** Quality-gate ablation: per Gopher rule, how many
     * docs fail it, how many it UNIQUELY kills (all other rules pass),
     * and the gate's keep-count with the rule removed — the audit a
     * curation owner reads before tuning a threshold (a rule with zero
@@ -557,7 +553,7 @@ object Curation {
       .orderBy(col("bucket"))
   }
 
-  /** Eval-set n-gram coverage (round 7 part 4): per eval doc (the
+  /** Eval-set n-gram coverage: per eval doc (the
     * doc_id%10 slice of q_llm_decontaminate), the fraction of its
     * distinct 13-gram hashes that appear ANYWHERE in the train slice —
     * the coverage twin of decontamination (leakage asks "is eval in
@@ -565,7 +561,7 @@ object Curation {
     * gram hashing, partial-aggregable counts, one hash equi-join. */
   def ngramCoverage(spark: SparkSession, dir: String): DataFrame = {
     val grams = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"), explode(expr(
         s"""CASE WHEN size(tk) >= 13
            |THEN transform(sequence(1, size(tk) - 12),
@@ -586,7 +582,7 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** Heaps-law fit (round 7 part 4): vocabulary growth V = k·N^β over
+  /** Heaps-law fit: vocabulary growth V = k·N^β over
     * 8 NESTED corpus subsets (docs with doc_id%8 < b — monotone by
     * construction, so the curve is a true growth curve without any
     * sequential scan). V_b comes from ONE vocab groupBy keeping each
@@ -597,8 +593,7 @@ object Curation {
     * near β≈0.5; the synthetic fixture's value is the diagnostic. */
   def heapsFit(spark: SparkSession, dir: String): DataFrame = {
     val tok = documents(spark, dir)
-      .select((col("doc_id") % 8).as("b"),
-        explode(split(col("text"), " ")).as("w"))
+      .select((col("doc_id") % 8).as("b"), explode(tokens).as("w"))
     val nb = tok.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
     val vb = tok.groupBy(col("w")).agg(min(col("b")).as("mb"))
       .groupBy(col("mb")).agg(count(lit(1)).as("vnew"))
@@ -620,7 +615,7 @@ object Curation {
           |              CAST(1 AS BIGINT))""".stripMargin).as("beta_e6"))
   }
 
-  /** Vocabulary tail mass (round 7 part 4): hapax/dis-legomena counts
+  /** Vocabulary tail mass: hapax/dis-legomena counts
     * and their share of vocabulary and of token mass — the third leg
     * of the corpus-health trio (zipf exponent = head shape, Heaps β =
     * growth, tail mass = how much of the long tail is noise). A
@@ -630,7 +625,7 @@ object Curation {
     * end to end. */
   def tailTokens(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("n_vocab"),
         sum(col("c")).as("n_tokens"),
@@ -643,7 +638,7 @@ object Curation {
         expr("((n_hapax + 2 * n_dis) * 10000) div n_tokens")
           .as("tail_mass_e4"))
 
-  /** Content-defined chunking (round 8) — the FastCDC idea over token
+  /** Content-defined chunking — the FastCDC idea over token
     * streams: a token is a CUT POINT when its 60-bit hash ≡ 0 mod 16
     * (expected chunk ≈ 16 tokens), so chunk boundaries depend only on
     * LOCAL content — an insertion early in a document shifts at most
@@ -659,7 +654,7 @@ object Curation {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
     documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " "))
+      .select(col("doc_id"), posexplode(tokens)
         .as(Seq("pos", "tok")))
       .withColumn("b", (expr(
         s"CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)")
@@ -679,7 +674,7 @@ object Curation {
       .orderBy(col("doc_id"))
   }
 
-  /** Stupid-backoff trigram scoring (round 8) — the web-scale LM
+  /** Stupid-backoff trigram scoring — the web-scale LM
     * smoothing (Brants et al.: no normalization, fixed 0.4 backoff
     * weight; at corpus scale it matches Kneser–Ney at a fraction of
     * the cost). For the 20 most frequent bigram contexts (w1,w2), the
@@ -693,7 +688,7 @@ object Curation {
     * broadcast (t*), and a 20-row driver-bounded output join. */
   def trigramSbo(spark: SparkSession, dir: String): DataFrame = {
     val tk = documents(spark, dir)
-      .select(split(col("text"), " ").as("tk"))
+      .select(tokens.as("tk"))
     val uni = tk.select(explode(col("tk")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val tstar = uni.orderBy(col("c1").desc, col("w")).limit(1)
@@ -748,7 +743,7 @@ object Curation {
       .partitionBy(col("source")).orderBy(col("doc_id"))
     val cum = documents(spark, dir)
       .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
+        size(tokens).cast("long").as("n_tok"))
       .withColumn("cum", sum(col("n_tok")).over(w))
     val budgets = Seq(1000L, 4000L, 16000L).toDF("budget")
     cum.crossJoin(broadcast(budgets))
@@ -775,8 +770,7 @@ object Curation {
     * aggregable aggregate (df via countDistinct over doc_id) →
     * bounded top-20. */
   def burstiness(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    docTokens(spark, dir)
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("cf"), countDistinct(col("doc_id")).as("df"))
       .withColumn("burst_e4", expr("cf * 10000 div df"))
@@ -800,7 +794,7 @@ object Curation {
     val truth = LlmOps.minhashLsh(spark, dir)
       .select(col("a_id"), col("b_id")).localCheckpoint()
     val keyed = documents(spark, dir).select(col("doc_id"),
-      expr("split(text, ' ')[0]").as("k_first"),
+      tokens(0).as("k_first"),
       expr("concat(source, '|', lang)").as("k_srclang"),
       expr("CAST(n_chars div 100 AS STRING)").as("k_lenband"))
     val strategies = Seq("first_token" -> "k_first",
@@ -839,8 +833,7 @@ object Curation {
     * with la < lb — the join is vocab-keyed (Heaps-bounded), never
     * corpus-sized; per-lang sizes broadcast back. */
   def langOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val lv = documents(spark, dir)
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
+    val lv = langTokens(spark, dir)
       .distinct()
     val sizes = lv.groupBy(col("lang")).agg(count(lit(1)).as("v"))
     val inter = lv.as("a")
@@ -858,7 +851,7 @@ object Curation {
       .orderBy(col("la"), col("lb"))
   }
 
-  /** Block-MATTR lexical diversity (round 8): the moving-average
+  /** Block-MATTR lexical diversity: the moving-average
     * type-token ratio, the standard fix for raw TTR's length bias (a
     * longer text ALWAYS has a lower TTR, so corpus-level TTR mostly
     * measures document length). Tumbling 50-token blocks (the
@@ -878,7 +871,7 @@ object Curation {
   def mattr(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
       .select(col("lang"), col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
+        posexplode(tokens).as(Seq("pos", "tok")))
     val blocks = toks
       .withColumn("blk", expr("pos div 50"))
       .groupBy(col("lang"), col("doc_id"), col("blk"), col("tok"))
@@ -904,7 +897,7 @@ object Curation {
       .orderBy(col("lang"))
   }
 
-  /** Vocabulary-budget coverage curve (round 8): for vocab budgets
+  /** Vocabulary-budget coverage curve: for vocab budgets
     * N ∈ {4, 8, 16, 32}, the share of all token OCCURRENCES covered by
     * the top-N most frequent types — the curve a tokenizer designer
     * reads to pick a vocab size (complement of q_llm_tail_tokens'
@@ -924,7 +917,7 @@ object Curation {
   def vocabBudget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cnt = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+      .select(explode(tokens).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val tot = cnt.agg(sum(col("c")).as("big_n"))
     val wr = org.apache.spark.sql.expressions.Window
@@ -948,7 +941,7 @@ object Curation {
       .orderBy(col("budget"))
   }
 
-  /** RAKE keyphrase extraction (round 8, Rose et al. 2010): candidate
+  /** RAKE keyphrase extraction (Rose et al. 2010): candidate
     * phrases are maximal stopword-free token runs; a word scores
     * deg/freq (deg = Σ length of phrases containing it, freq = its
     * occurrence count — favors words that live in long collocations);
@@ -974,14 +967,12 @@ object Curation {
     * sort_array(collect_list(struct(pos,tok))) ≡ string_agg ORDER BY,
     * then vocab-sized word joins. Never corpus × corpus. */
   def rakeKeywords(spark: SparkSession, dir: String): DataFrame = {
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
     val toks = documents(spark, dir)
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
+      .select(col("doc_id"), posexplode(tokens).as(Seq("pos", "tok")))
       .withColumn("isstop",
-        when(col("tok").isin(stop: _*), 1L).otherwise(0L))
+        when(col("tok").isin(Stopwords: _*), 1L).otherwise(0L))
     val words = toks
       .withColumn("gid", sum(col("isstop")).over(w))
       .filter(col("isstop") === 0L)
@@ -998,7 +989,7 @@ object Curation {
       .agg(sum(col("plen")).as("deg"), count(lit(1)).as("freq"))
       .withColumn("s_e4", expr("deg * 10000 div freq"))
     val occScore = words
-      // vocab-sized score table — unhinted (round-10 sweep): AQE
+      // vocab-sized score table — unhinted: AQE
       // runtime-broadcasts while small, co-partitions past that
       .join(wscore.select(col("tok"), col("s_e4")), Seq("tok"))
       .groupBy(col("doc_id"), col("gid"))
@@ -1012,7 +1003,7 @@ object Curation {
       .limit(15)
   }
 
-  /** Count-of-counts spectrum over TRIGRAMS (round 8): N_c = how many
+  /** Count-of-counts spectrum over TRIGRAMS: N_c = how many
     * trigram types occur exactly c times, for c ∈ 1..10 plus the ≥11
     * head — the INPUT table of Good–Turing smoothing (its estimate
     * r* = (r+1)·N_{r+1}/N_r is a ratio of these exact integers; the
@@ -1032,7 +1023,7 @@ object Curation {
     * ≤11 rows). */
   def freqOfFreqs(spark: SparkSession, dir: String): DataFrame = {
     val cnt = documents(spark, dir)
-      .select(split(col("text"), " ").as("tk"))
+      .select(tokens.as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(explode(expr(
         "transform(sequence(1, size(tk) - 2)," +
@@ -1052,7 +1043,7 @@ object Curation {
       .orderBy(col("c_capped"))
   }
 
-  /** UMass topic coherence (round 8, Mimno et al. 2011): per
+  /** UMass topic coherence (Mimno et al. 2011): per
     * embedding-cluster "topic", the top-5 in-cluster terms and
     * Σ_{i<j} ln((D_ij+1)/D_j) over their ordered pairs — the standard
     * automatic answer to "are these clusters topics or noise" (a
@@ -1074,8 +1065,7 @@ object Curation {
     val docterm = documents(spark, dir)
       .join(embeddings(spark, dir)
         .select(col("vec_id").as("doc_id"), col("label")), Seq("doc_id"))
-      .select(col("doc_id"), col("label"),
-        explode(split(col("text"), " ")).as("tok"))
+      .select(col("doc_id"), col("label"), explode(tokens).as("tok"))
       .distinct()
     val top5 = docterm.groupBy(col("label"), col("tok"))
       .agg(count(lit(1)).as("c"))
@@ -1099,7 +1089,7 @@ object Curation {
     val terms = pairs
       .join(dij, Seq("label", "wi", "wj"), "left")
       .withColumn("dij", coalesce(col("dij"), lit(0L)))
-      // vocab-sized df table — unhinted (round-10 sweep)
+      // vocab-sized df table — unhinted
       .join(dfGlobal.select(col("tok").as("wj"),
         col("dj")), Seq("wj"))
       .withColumn("t_e3", expr(
@@ -1118,7 +1108,7 @@ object Curation {
       .orderBy(col("label"))
   }
 
-  /** Length-bias audit of the quality judge (round 8): per source, is
+  /** Length-bias audit of the quality judge: per source, is
     * the logreg score correlated with document LENGTH once you look
     * pairwise? Kendall τ-a over (n_tok, score) pairs inside a FIXED-
     * SIZE deterministic sample — the 40 lowest md5-h60 doc hashes per
@@ -1139,7 +1129,7 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     val s40 = documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_tok"))
+        size(tokens).cast("long").as("n_tok"))
       .join(ModelPrep.qualityLogreg(spark, dir)
         .select(col("doc_id"),
           expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)").as("s_e4")),
@@ -1173,7 +1163,7 @@ object Curation {
       .orderBy(col("source"))
   }
 
-  /** Stopword discovery audit (round 8): which terms does the CORPUS
+  /** Stopword discovery audit: which terms does the CORPUS
     * itself treat as stopwords (highest document frequency)? The
     * finding IS the row: none of the authored stop7 appear in the
     * top-10 df terms — this synthetic corpus has no English-stopword
@@ -1186,21 +1176,20 @@ object Curation {
     * Shape: distinct (doc, term) fold → df census → TakeOrdered
     * top-10 with broadcast corpus size. */
   def stopwordDiscovery(spark: SparkSession, dir: String): DataFrame = {
-    val dfs = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val dfs = docTokens(spark, dir)
       .distinct()
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = documents(spark, dir).agg(count(lit(1)).as("n"))
     dfs.crossJoin(broadcast(n))
       .select(col("tok").as("term"), col("df"),
         expr("df * 10000 div n").as("df_share_e4"),
-        col("tok").isin("the", "a", "of", "and", "to", "in", "is")
+        col("tok").isin(Stopwords: _*)
           .as("in_stop7"))
       .orderBy(col("df").desc, col("term"))
       .limit(10)
   }
 
-  /** Leave-one-out source influence (round 8): how much does each
+  /** Leave-one-out source influence: how much does each
     * source move the corpus quality mean? LOO BY ALGEBRA — the
     * without-source mean is (T − t_s)/(N − n_s) from ONE pass of
     * per-source sums, never 20 recomputations (the 100 TB form of
@@ -1253,8 +1242,7 @@ object Curation {
     * of each text, the same cost class as the token census rows. */
   def readability(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("source"),
-        expr("size(split(text, ' '))").as("w"),
+      .select(col("source"), size(tokens).as("w"),
         expr("size(regexp_extract_all(text, '[aeiouy]+', 0))").as("syl"),
         expr("size(filter(split(text, ' '), " +
           "x -> size(regexp_extract_all(x, '[aeiouy]+', 0)) >= 3))")
@@ -1337,7 +1325,7 @@ object Curation {
     * per-source vocab-sized fold. No window, no join. */
   def simpsonDiversity(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .select(col("source"), explode(tokens).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("vocab"), sum(col("c")).as("n_tok"),
@@ -1392,8 +1380,8 @@ object Curation {
       .groupBy(col("source"), col("pr")).agg(count(lit(1)).as("n"))
       .withColumn("c1", expr("substring(pr, 1, 1)"))
       .withColumn("c2", expr("substring(pr, 2, 1)"))
-    // NO localCheckpoint on the census, measured deliberately (round
-    // 15, VERDICT r14 #8): the census feeds four consumer branches and
+    // NO localCheckpoint on the census, measured deliberately: the
+    // census feeds four consumer branches and
     // the STATIC plan re-derives the corpus-scale explode+census
     // pipeline 5× (5 parquet scans / 32 Exchange nodes), but runtime
     // exchange reuse dedupes all five copies — the A/B (checkpointed:
@@ -1449,7 +1437,7 @@ object Curation {
     * that bounded frame. */
   def burrowsDelta(spark: SparkSession, dir: String): DataFrame = {
     val tok = documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .select(col("source"), explode(tokens).as("w"))
     val top = tok.groupBy(col("w")).agg(count(lit(1)).as("cw"))
       .orderBy(col("cw").desc, col("w")).limit(20).select(col("w"))
     val stot = tok.groupBy(col("source")).agg(count(lit(1)).as("n_tok"))
@@ -1493,8 +1481,7 @@ object Curation {
   def templateCensus(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
       .select(col("source"),
-        expr("concat_ws(' ', slice(split(text, ' '), 1, 8))")
-          .as("prefix"))
+        concat_ws(" ", slice(tokens, 1, 8)).as("prefix"))
       .groupBy(col("source"), col("prefix"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("source"))
@@ -1528,16 +1515,14 @@ object Curation {
     * Shape: doc-sized feature frame (map-only) → 3× value census →
     * 3×3 broadcast boundary rows → cell census → feature fold. */
   def miFeature(spark: SparkSession, dir: String): DataFrame = {
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is")
-      .map("'" + _ + "'").mkString(",")
     val f = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .filter(size(col("tk")) > 0)
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("len"),
         expr("size(array_distinct(tk)) * 1000000 div size(tk)")
           .as("ttr_e6"),
-        expr(s"size(filter(tk, t -> t IN ($stop))) * 1000000" +
+        expr(s"size(filter(tk, t -> t IN $stopwordsSql)) * 1000000" +
           " div size(tk)").as("stop_e6"))
     val long = f.select(col("doc_id"), (col("len") >= 50).as("lbl"),
       expr("stack(3, 'len', len, 'ttr', ttr_e6, 'stop', stop_e6)" +
@@ -1654,7 +1639,7 @@ object Curation {
     * back token-keyed, per-doc fold → TakeOrdered. */
   def rareDocRank(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .select(col("doc_id"), explode(tokens).as("w"))
     val rare = toks.select(col("doc_id"), col("w")).distinct()
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 2).select(col("w"))
@@ -1684,15 +1669,13 @@ object Curation {
     * Shape: one doc-sized feature pass → unpivoted pair moments →
     * 3-row fold. */
   def featureCollinearity(spark: SparkSession, dir: String): DataFrame = {
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is")
-      .map("'" + _ + "'").mkString(",")
     val f = documents(spark, dir)
-      .select(split(col("text"), " ").as("tk"))
+      .select(tokens.as("tk"))
       .filter(size(col("tk")) > 0)
       .select(size(col("tk")).cast("long").as("len"),
         expr("size(array_distinct(tk)) * 1000000 div size(tk)")
           .as("ttr"),
-        expr(s"size(filter(tk, t -> t IN ($stop))) * 1000000" +
+        expr(s"size(filter(tk, t -> t IN $stopwordsSql)) * 1000000" +
           " div size(tk)").as("stp"))
     val pairs = f.select(expr(
       """stack(3,
@@ -1735,7 +1718,7 @@ object Curation {
     * shuffle), full-outer vocab join, vocab-sized fold. */
   def jsdSources(spark: SparkSession, dir: String): DataFrame = {
     val byTok = documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .select(col("source"), explode(tokens).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
     val top2 = byTok.groupBy(col("source"))
       .agg(sum(col("c")).as("tot"))
@@ -1774,7 +1757,7 @@ object Curation {
         expr("(kl1_e3 + kl2_e3) div 2").as("jsd_e3"))
   }
 
-  /** IDF drift between corpus halves (J84, round 11): tokens whose
+  /** IDF drift between corpus halves (J84): tokens whose
     * document-frequency SHARE moved most between the first and second
     * half of the ingestion order (cut = max doc_id div 2) — the
     * vocabulary-drift detector that catches a changed upstream scraper
@@ -1796,7 +1779,7 @@ object Curation {
         .as("n_late"))
     d.crossJoin(broadcast(cut))
       .select((col("doc_id") <= col("cut")).as("early"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
+        explode(array_distinct(tokens)).as("tok"))
       .groupBy(col("tok"))
       .agg(sum(when(col("early"), 1L).otherwise(0L)).as("df_early"),
         sum(when(!col("early"), 1L).otherwise(0L)).as("df_late"))
@@ -1813,7 +1796,7 @@ object Curation {
       .limit(15)
   }
 
-  /** Leave-one-source-out bigram cross-entropy (J84, round 11): for
+  /** Leave-one-source-out bigram cross-entropy (J84): for
     * each source, the add-one-smoothed bigram LM trained on every
     * OTHER source scores the source's own bigram stream — the domain
     * TRANSFER audit (which corpus slice is least predictable from the
@@ -1837,7 +1820,7 @@ object Curation {
     * equi-joins; output is |sources| rows. */
   def looXent(spark: SparkSession, dir: String): DataFrame = {
     val bg = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 2)
       .select(col("source"), explode(expr(
         """transform(sequence(1, size(tk) - 1),
@@ -1882,7 +1865,7 @@ object Curation {
       .orderBy(col("source"))
   }
 
-  /** Chao1 species-richness estimate per source (J89, round 11): how
+  /** Chao1 species-richness estimate per source (J89): how
     * many word TYPES does a source's TRUE vocabulary hold, estimated
     * from what was sampled — the bias-corrected Chao1 lower bound
     * V + f1(f1−1)/(2(f2+1)) over the singleton/doubleton counts, plus
@@ -1903,7 +1886,7 @@ object Curation {
     * exact shape — no window, no join. */
   def chao1Richness(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .select(col("source"), explode(tokens).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("vocab"), sum(col("c")).as("n_tok"),
@@ -1979,7 +1962,7 @@ object Curation {
        |   CAST(list_sum([length(t) for t in tk]) AS BIGINT) AS sum_len,
        |   CAST(len([t for t in tk
        |     if regexp_matches(t, '[A-Za-z]')]) AS BIGINT) AS n_alpha,
-       |   CAST(len([t for t in tk if t IN $stop7]) AS BIGINT) AS n_stop
+       |   CAST(len([t for t in tk if t IN ('the','a','of','and','to','in','is')]) AS BIGINT) AS n_stop
        |  FROM d),
        |flags AS (SELECT doc_id, n_words,
        |  n_words >= 5 AND n_words <= 10000 AS r_nwords,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
-/** SURVEY.md §2 round-7 widening, part 2 (J10): retrieval EVALUATION
+/** SURVEY.md §2 (J10): retrieval EVALUATION
   * metrics — the numbers a search/RAG owner actually reports (nDCG@10,
   * MRR) — computed over the enrolled BM25 ranking with content-derived
   * graded relevance, so the metric rows can never disagree with the
@@ -22,7 +22,7 @@ object Evaluation {
     * the document contains — derived from content, shared by both
     * metric rows. */
   private def relevance(spark: SparkSession, dir: String): DataFrame =
-    // map-only view of the memoized bm25-perdoc frame (round 9):
+    // map-only view of the memoized bm25-perdoc frame:
     // rel = how many of the three query terms the doc contains —
     // identical values to the former per-row tokenize, zero shuffles
     LlmOps.bm25PerDoc(spark, dir).select(col("doc_id"),
@@ -64,7 +64,7 @@ object Evaluation {
       .agg(count(lit(1)).as("n_rel"))
     nRel.crossJoin(broadcast(dcg)).crossJoin(broadcast(ideal))
       .select(col("n_rel"), col("dcg_e6"), col("idcg_e6"),
-        // greatest-guard (round 8, advisor): zero relevant docs makes
+        // greatest-guard: zero relevant docs makes
         // idcg_e6 = 0 — Spark div would yield NULL where the oracle's
         // // raises; both arms guard identically (0 div 1 = 0)
         expr("(dcg_e6 * 10000) div greatest(idcg_e6, 1)").as("ndcg_e4"))
@@ -81,8 +81,7 @@ object Evaluation {
     val Seq(t1, t2, t3) = LlmOps.bm25Terms
     val scored = LlmOps.bm25Scored(spark, dir).localCheckpoint()
     val rel = relevance(spark, dir)
-    val toks = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val toks = docTokens(spark, dir)
     def arm(q: String): DataFrame = {
       val has = toks.filter(col("tok") === q)
         .select(col("doc_id")).distinct()
@@ -92,7 +91,7 @@ object Evaluation {
             .orderBy(col("bm25").desc, col("doc_id"))))
         .filter(col("rn") === 1)
         .select(col("doc_id").as("b_id"), col("bm25").as("b_score"))
-      // groupBy(b_id), not a global agg (round 8, advisor): a term
+      // groupBy(b_id), not a global agg: a term
       // matching NO document leaves `best` empty, and a global
       // count-over-empty-crossJoin would still emit one row
       // (first_rank=1) while the oracle emits none — grouping on a
@@ -135,7 +134,7 @@ object Evaluation {
         lead(col("doc_id"), 1).over(w).as("b"))
       .filter(col("b").isNotNull)
     val bgs = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .filter(size(col("tk")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(tk) - 2)," +
@@ -173,12 +172,11 @@ object Evaluation {
     * context_pack idiom — never a corpus-wide row_number). */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val scored = LlmOps.bm25Scored(spark, dir).localCheckpoint()
-    val toks = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val toks = docTokens(spark, dir)
     val arms = LlmOps.bm25Terms.map { t =>
       val has = toks.filter(col("tok") === t)
         .select(col("doc_id")).distinct()
-      // doc-sized term-presence set — unhinted (round-10 sweep)
+      // doc-sized term-presence set — unhinted
       scored.join(has, Seq("doc_id"), "left_anti")
         .orderBy(col("bm25").desc, col("doc_id")).limit(5)
         .withColumn("rank", row_number().over(
@@ -190,7 +188,7 @@ object Evaluation {
     arms.reduce(_ unionAll _).orderBy(col("term"), col("rank"))
   }
 
-  /** BLEU-2 components (round 8) over the same consecutive-same-source
+  /** BLEU-2 components over the same consecutive-same-source
     * pairs as rougeBigram — candidate a, reference b. Unlike ROUGE's
     * set overlap, BLEU uses CLIPPED MULTIPLICITY counts: per n-gram g,
     * min(count_a(g), count_b(g)), so a candidate repeating one
@@ -214,7 +212,7 @@ object Evaluation {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("doc_id"))
     val toks = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .filter(size(col("tk")) >= 2)
     val lens = toks.select(col("doc_id"),
       size(col("tk")).cast("long").as("len"))
@@ -258,7 +256,7 @@ object Evaluation {
       .limit(20)
   }
 
-  /** Rank-biased overlap @10, p = 0.9 (round 8): how much do two
+  /** Rank-biased overlap @10, p = 0.9: how much do two
     * enrolled doc rankers agree — the heuristic quality score
     * (LlmOps.qualityScore) vs the logreg probability
     * (ModelPrep.qualityLogreg)? RBO is THE top-weighted list-compare
@@ -311,7 +309,7 @@ object Evaluation {
       .orderBy(col("depth"))
   }
 
-  /** Cohen's κ between two enrolled keep-judges (round 8): the logreg
+  /** Cohen's κ between two enrolled keep-judges: the logreg
     * gate (score ≥ 0.76) vs the fixed-weight heuristic gate
     * (quality ≥ 0.64) — thresholds authored at each judge's fixture
     * median so BOTH gates have variance (z ≥ 0 and quality ≥ 0.75 are
@@ -352,7 +350,7 @@ object Evaluation {
           | AS BIGINT)""".stripMargin).as("kappa_e4"))
   }
 
-  /** Deterministic Poisson bootstrap CI (round 8): the error bar every
+  /** Deterministic Poisson bootstrap CI: the error bar every
     * reported corpus metric needs — B = 100 resampled means of the
     * logreg score, percentile CI from the replicate order statistics
     * (rank 3 / rank 98 of 100 ≈ the 95% interval). Replicate weights
@@ -393,7 +391,7 @@ object Evaluation {
         col("mean_full_e4"), col("ci_lo_e4"), col("ci_hi_e4"))
   }
 
-  /** Metric stability curve (round 8): how big a sample does the
+  /** Metric stability curve: how big a sample does the
     * corpus metric need? The mean logreg score over NESTED
     * deterministic samples — the n ∈ {50,100,200,400} lowest
     * md5-h60 doc hashes (each arm a superset of the last, so the
@@ -425,7 +423,7 @@ object Evaluation {
       .orderBy(col("n"))
   }
 
-  /** Feature-separation audit of the keep-gate (round 8): which of
+  /** Feature-separation audit of the keep-gate: which of
     * the three quality features actually separates kept from dropped
     * docs at the enrolled operating point (score ≥ 0.76, judgeKappa's
     * j1)? Per feature: class means and the squared Cohen's d —
@@ -445,12 +443,12 @@ object Evaluation {
     * two grouped passes (means, then moments) → 3-row fold. */
   def featureSeparation(spark: SparkSession, dir: String): DataFrame = {
     val ft = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"),
         expr("CAST(floor((1.0 * size(array_distinct(tk)) / size(tk))" +
           " * 10000 + 0.5) AS BIGINT)").as("ttr_e4"),
-        expr("""CAST(floor((1.0 * size(filter(tk, t -> t IN
-          |('the','a','of','and','to','in','is'))) / size(tk))
+        expr(s"""CAST(floor((1.0 * size(filter(tk, t -> t IN
+          |$stopwordsSql)) / size(tk))
           |* 10000 + 0.5) AS BIGINT)""".stripMargin).as("stop_e4"),
         expr("CAST(floor(least(size(tk) / 100.0, 1.0) * 10000 + 0.5)" +
           " AS BIGINT)").as("len_e4"))
@@ -491,7 +489,7 @@ object Evaluation {
       .orderBy(col("feature"))
   }
 
-  /** Exact AUC by rank-sum (round 8): AUC of a scalar score against a
+  /** Exact AUC by rank-sum: AUC of a scalar score against a
     * binary label WITHOUT ranking a single row — the support-census
     * idiom (dqKsTest/abUTest's family): group by distinct score
     * value, one ordered pass accumulates negatives below, and
@@ -609,7 +607,7 @@ object Evaluation {
       .orderBy(col("rank"))
   }
 
-  /** Mean Average Precision@10 (J75, round 9): per query term, AP@10
+  /** Mean Average Precision@10 (J75): per query term, AP@10
     * of the combined BM25 top-10 — Σ over relevant ranks r of
     * (hits-so-far@r / r), normalized by min(n_rel, 10) — plus the MAP
     * summary row (the leaderboard scalar). Relevance for term q is
@@ -633,8 +631,8 @@ object Evaluation {
     * corpus n_rel is one partial-aggregable fold. */
   def mapAt10(spark: SparkSession, dir: String): DataFrame = {
     val Seq(t1, t2, t3) = LlmOps.bm25Terms
-    // topicality flags off the memoized bm25-perdoc frame (round 9,
-    // review): no per-row corpus tokenize
+    // topicality flags off the memoized bm25-perdoc frame: no per-row
+    // corpus tokenize
     val flags = LlmOps.bm25PerDoc(spark, dir)
       .select(col("doc_id"),
         when(col("tf1") >= 4, 1L).otherwise(0L).as("r1"),
@@ -672,7 +670,7 @@ object Evaluation {
       .orderBy(col("query"))
   }
 
-  /** Rank-biased precision (J89, round 11; Moffat & Zobel 2008): the
+  /** Rank-biased precision (J89; Moffat & Zobel 2008): the
     * geometric-patience user model — the reader inspects rank k with
     * probability p^(k−1) and RBP = (1−p)·Σ rel_k·p^(k−1), here p = 0.8
     * over the shared BM25 top-10 with the pr_at_k binary relevance
@@ -770,7 +768,7 @@ object Evaluation {
           .as("fleiss_e4"))
   }
 
-  /** Dawid–Skene one-EM-step label aggregation (J93, round 11): where
+  /** Dawid–Skene one-EM-step label aggregation (J93): where
     * q_llm_fleiss_kappa MEASURES how much the three keep-judges agree,
     * this row does what a labeling pipeline actually needs — ESTIMATE
     * the true label and each judge's reliability (Dawid & Skene 1979,

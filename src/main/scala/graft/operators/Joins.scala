@@ -203,7 +203,7 @@ object Joins {
       .filter(col("x") >= col("lo") && col("x") <= col("hi"))
       .groupBy(col("iv_id"))
       .agg(count(lit(1)).as("n_pts"),
-        (floor(sum(col("x")) * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("sum_x"))
+        r4(sum(col("x"))).as("sum_x"))
       .orderBy(col("iv_id"))
   }
 

@@ -49,7 +49,7 @@ object LlmOps {
     * fan-out (≤ 50² candidate pairs per shingle) and keeps stop-shingles
     * out of the MinHash signatures — the CCNet/Gopher boilerplate
     * trick. The oracle CTE applies the identical cap. */
-  /** Memoized per (application, sfDir) like [[minhashSigs]] (round 8):
+  /** Memoized per (application, sfDir) like [[minhashSigs]]:
     * the df-capped shingle frame is the substrate of shingleJaccard,
     * the signature-memo build, and the two sampled audits — each
     * previously re-ran the explode + df-cap anti-join. At 100 TB this
@@ -57,7 +57,7 @@ object LlmOps {
   private def shingles(spark: SparkSession, dir: String): DataFrame =
     graft.FrameMemo.cached(spark, dir, "shingles") {
       val raw = documents(spark, dir)
-        .withColumn("tk", split(col("text"), " "))
+        .withColumn("tk", tokens)
         .select(col("doc_id"), explode(array_distinct(expr(
           """CASE WHEN size(tk) >= 5
             |THEN transform(sequence(1, size(tk) - 4),
@@ -76,7 +76,7 @@ object LlmOps {
   /** Exact dedup: normalize → sha256 → group; keep min doc_id. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .groupBy(sha2(lower(trim(col("text"))), 256).as("text_hash"))
+      .groupBy(contentDigest.as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
       .orderBy(col("text_hash"))
 
@@ -127,7 +127,7 @@ object LlmOps {
   }
 
   /** Memoized per (application, sfDir) with an eager localCheckpoint
-    * (round 8): EIGHT enrolled rows consume these signatures
+    *: EIGHT enrolled rows consume these signatures
     * (minhash_lsh, containment, edit_neardup, dup_clusters,
     * decontaminate_fuzzy, dedup_cascade, minhash_est, minhash_1bit),
     * and each previously re-ran the full shingle → 16-perm build.
@@ -139,7 +139,7 @@ object LlmOps {
       minhashSigsFrom(shingles(spark, dir)))
 
   /** Signatures + collected shingle sets from a caller-owned shingle
-    * frame — the kernel of [[minhashSigs]], factored out (round 8) so
+    * frame — the kernel of [[minhashSigs]], factored out so
     * [[lshRecall]] can run the full LSH arm over the SAMPLED shingle
     * frame. Caller owns caching. */
   private def minhashSigsFrom(sh: DataFrame): DataFrame =
@@ -166,7 +166,7 @@ object LlmOps {
     * sf0.1 that was ~80 MB of array payload through the exchange. */
   /** The 8×2 (doc_id, band, sig) frame from a signature frame — the
     * shared banding of [[minhashCandidates]] and the bucket-skew audit
-    * (q_llm_lsh_bucket_skew), factored out (round 11) so the skew row
+    * (q_llm_lsh_bucket_skew), factored out so the skew row
     * measures the EXACT buckets the candidate join shuffles on. */
   private[operators] def minhashBandFrame(sigs: DataFrame): DataFrame = {
     val bandStructs = (0 until 8).map { b =>
@@ -301,7 +301,7 @@ object LlmOps {
       .orderBy(col("a_id"), col("b_id"))
 
   /** Edit-distance near-dup verify on the LSH candidate pairs
-    * (round 8): exact character-level Levenshtein similarity
+    *: exact character-level Levenshtein similarity
     * (gl − lev)·10⁴ div gl, gl = max(len), kept at ≥ 0.9 — the
     * measure that catches small in-place edits shingle-Jaccard
     * dilutes and containment ignores. Candidates come from the SAME
@@ -328,7 +328,7 @@ object LlmOps {
   }
 
   /** Out-of-vocabulary rate per language against the corpus top-1000
-    * vocabulary (round 8): the tokenizer-coverage health number a
+    * vocabulary: the tokenizer-coverage health number a
     * multilingual curation pass thresholds on (a lang whose tokens
     * fall outside the shared vocab gets shredded into bytes at
     * training time). Vocab selection is deterministic (count DESC,
@@ -338,8 +338,7 @@ object LlmOps {
     * is still 1000 rows — the only corpus-sized work is the token
     * count, one shuffle. */
   def oovRate(spark: SparkSession, dir: String): DataFrame = {
-    val toks = documents(spark, dir)
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
+    val toks = langTokens(spark, dir)
     val vocab = toks.groupBy(col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok"))
@@ -354,7 +353,7 @@ object LlmOps {
       .orderBy(col("lang"))
   }
 
-  /** Square-root-smoothed language sampling weights (round 8): the
+  /** Square-root-smoothed language sampling weights: the
     * classic multilingual mixture rule (sample ∝ n^α, α = 0.5 — the
     * mBERT/XLM exponential-smoothing recipe) that up-weights tail
     * languages without drowning the head. All arithmetic is integer-
@@ -375,7 +374,7 @@ object LlmOps {
       .orderBy(col("lang"))
   }
 
-  /** Near-dup SOURCE mixing matrix (round 8): the verified LSH pair
+  /** Near-dup SOURCE mixing matrix: the verified LSH pair
     * set aggregated to (source_a, source_b) counts — which corpora
     * duplicate into which (the cross-source view a curation owner
     * reads before deciding per-source dedup policy; the within-source
@@ -411,7 +410,7 @@ object LlmOps {
   /** SimHash fingerprints → 4×15-bit chunk-banded candidate pairs
     * with Hamming distance — the shared kernel of q_llm_simhash
     * (fixed d ≤ 3 gate) and q_llm_simhash_sweep (the d census),
-    * factored out (round 11) so the two rows can never band
+    * factored out so the two rows can never band
     * differently. */
   private def simhashCands(spark: SparkSession,
       dir: String): DataFrame = {
@@ -443,7 +442,7 @@ object LlmOps {
       .select(col("a_id"), col("b_id"), col("hamming"))
       .orderBy(col("a_id"), col("b_id"))
 
-  /** SimHash distance-threshold sweep (J100, round 11): the band_sweep
+  /** SimHash distance-threshold sweep (J100): the band_sweep
     * discipline applied to the OTHER near-dup fingerprint — per
     * Hamming radius d ∈ 0..4, the exact-distance pair census and the
     * cumulative ≤ d candidate yield over the shared banded frame,
@@ -539,7 +538,7 @@ object LlmOps {
       .orderBy(col("probe_id"), col("rank"))
   }
 
-  /** Filtered ANN (J101, round 11): the filtered-vector-search
+  /** Filtered ANN (J101): the filtered-vector-search
     * problem every production store faces — top-5 by cosine AMONG
     * candidates sharing the probe's label, emitted WITH each hit's
     * rank in the unfiltered list. That second column is the
@@ -623,7 +622,7 @@ object LlmOps {
       .orderBy(col("probe_id"))
   }
 
-  /** Label-noise estimate (round 8): share of audited vectors whose
+  /** Label-noise estimate: share of audited vectors whose
     * 5-NN majority label disagrees with their own — the standard
     * cheap noise-rate probe run before training a classifier on
     * harvested labels (Northcutt's confident-learning intuition at
@@ -645,7 +644,7 @@ object LlmOps {
         expr("n_mismatch * 10000 div n_probes").as("noise_share_e4"))
   }
 
-  /** Hard-triplet mining (round 6): per probe, the hardest positive
+  /** Hard-triplet mining: per probe, the hardest positive
     * (same label, LOWEST cosine — the in-class example the model finds
     * least similar) and the hardest negative (different label, HIGHEST
     * cosine — the impostor it finds most similar), plus the margin
@@ -694,7 +693,7 @@ object LlmOps {
       .orderBy(col("probe_id"))
   }
 
-  /** DSIR-style importance weighting (round 6): score every document by
+  /** DSIR-style importance weighting: score every document by
     * how target-domain-like its hashed-bigram distribution is — the
     * data-selection method behind quality-filtered pretraining mixes
     * (importance resampling on hashed n-gram features). Target here =
@@ -715,7 +714,7 @@ object LlmOps {
     * the DSIR shape by construction. */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), col("lang"), tokens.as("toks"))
     val bg = d
       .select(col("doc_id"), col("lang"),
         explode(expr("transform(sequence(1, size(toks) - 1), " +
@@ -743,7 +742,7 @@ object LlmOps {
       .select(col("doc_id"), col("dsir_e6"), col("n_bigrams"))
   }
 
-  /** MMR diversified re-ranking (round 6): maximal marginal relevance
+  /** MMR diversified re-ranking: maximal marginal relevance
     * over the dense top-10 for probe 7 — pick 5 results where each next
     * pick maximizes λ·rel − (1−λ)·max(sim to already-picked), λ=0.7.
     * THE selection step between retrieval and a RAG context window:
@@ -814,9 +813,9 @@ object LlmOps {
     for (k <- 2 to 5) {
       // checkpoint each 1-row pick: step k references sel (which holds
       // every earlier step's subtree), so without the cut the unrolled
-      // plan doubles per step — 2⁵ copies of the join tail (measured
-      // round 14: 207 KB formatted plan / 320 Exchanges → 3 KB / 2,
-      // warm 2.26 → 1.22 s). Four extra 1-row materializations; same
+      // plan doubles per step — 2⁵ copies of the join tail (320
+      // Exchanges without the cut, 2 with it). Four extra 1-row
+      // materializations; same
       // k-sized discipline as cand/sims above.
       val sk = step(sel, k).localCheckpoint()
       out = out.union(sk)
@@ -929,7 +928,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** SoftDeDup weighting (round 8) — the keep-everything alternative to
+  /** SoftDeDup weighting — the keep-everything alternative to
     * dropping near-duplicates: every member of a near-dup cluster of
     * size s gets training weight 1/s (×10⁴ integer), so boilerplate
     * stops dominating the loss while no text is discarded. Reported as
@@ -961,7 +960,7 @@ object LlmOps {
       .orderBy(col("group_size"))
   }
 
-  /** Near-dup cluster SIZE distribution (round 8): how much of the
+  /** Near-dup cluster SIZE distribution: how much of the
     * duplication mass sits in pairs vs big boilerplate clusters — the
     * number a dedup owner reads before choosing keep-one-per-cluster
     * vs cap-per-cluster. Pure rollup of [[dupClusters]] (which rides
@@ -977,7 +976,7 @@ object LlmOps {
         min(col("cluster_id")).as("min_cluster"))
       .orderBy(col("cluster_size").desc, col("min_cluster"))
 
-  /** Dedup survivorship audit (round 8): when min-id survivorship
+  /** Dedup survivorship audit: when min-id survivorship
     * drops the other members of each near-dup cluster, what QUALITY
     * walks out the door? Per multi-member cluster: the kept doc's
     * logreg score vs the dropped docs' scores, rolled up to one row —
@@ -1014,7 +1013,7 @@ object LlmOps {
           .as("n_kept_suboptimal"))
   }
 
-  /** Cluster-inflation audit (round 8): how many pairs does
+  /** Cluster-inflation audit: how many pairs does
     * TRANSITIVE closure add beyond the direct LSH evidence? Near-dup
     * dedup treats every within-cluster pair as duplicate, but only
     * the direct pairs carried Jaccard ≥ τ evidence — the difference
@@ -1214,7 +1213,7 @@ object LlmOps {
       .select(col("probe_id"), col("vec_id"), col("pn"))
   }
 
-  /** IVF-PQ composite search (round 4 part 2): the FAISS-style
+  /** IVF-PQ composite search: the FAISS-style
     * memory-bound ANN path — coarse quantizer (ivfAnn's 16 sampled
     * centroids) narrows the search to one inverted list, then ranking
     * uses ONLY the candidates' 8 one-byte PQ codes via asymmetric
@@ -1236,7 +1235,7 @@ object LlmOps {
       .select(col("probe_id"), col("rank"), col("vec_id"), col("adc"))
       .orderBy(col("probe_id"), col("rank"))
 
-  /** Two-stage PQ search (round 6): ADC SHORTLIST → exact re-rank —
+  /** Two-stage PQ search: ADC SHORTLIST → exact re-rank —
     * the production FAISS pattern. Plain ADC top-3 honestly scores
     * recall@3 = 2166 e4 on the scoreboard: the 64-bit code budget (8
     * bytes/vector) can't rank near-random 64-dim embeddings finely, and
@@ -1297,7 +1296,7 @@ object LlmOps {
           .orderBy(col("adc"), col("vec_id"))))
   }
 
-  /** Multi-table sign-bit LSH ANN (round 5): the standard public fix
+  /** Multi-table sign-bit LSH ANN: the standard public fix
     * for single-table LSH's low recall (the scoreboard measured
     * lsh_8bit at 3 % — one 8-bit bucketing is too selective). L=4
     * independent tables, table t bucketing on the sign bits of dims
@@ -1354,7 +1353,7 @@ object LlmOps {
       tables: Int): DataFrame =
     lshKeyPairs(lshTableKeys(spark, dir, tables), dedup = true)
 
-  /** LSH banding quality scoreboard (round 5): MinHash-LSH's verified
+  /** LSH banding quality scoreboard: MinHash-LSH's verified
     * pair set against the exact all-pairs τ=0.8 baseline
     * ([[shingleJaccard]], same df-capped vocabulary, so the comparison
     * is apples-to-apples). Because LSH candidates are verified with
@@ -1364,8 +1363,8 @@ object LlmOps {
     * band, i.e. the banding's miss rate, THE knob-tuning number for
     * (bands, rows-per-band). Exact integer arithmetic throughout.
     *
-    * SAMPLED (round 8, closing the round-7 verdict's one quadratic cost
-    * law): like [[bandSweep]], the WHOLE audit — exact baseline and LSH
+    * SAMPLED (the exact baseline is quadratic otherwise): like
+    * [[bandSweep]], the WHOLE audit — exact baseline and LSH
     * arm both — runs over the deterministic 60 % doc sample
     * (md5-h60(doc_id) % 5 < 3), because this row is a quality AUDIT,
     * not a production pair pass: its job is the recall/precision
@@ -1404,7 +1403,7 @@ object LlmOps {
           " ELSE 10000 END").as("precision_e4"))
   }
 
-  /** LSH band-parameter SWEEP (round 5): the S-curve made measurable.
+  /** LSH band-parameter SWEEP: the S-curve made measurable.
     * The same 16 minhashes re-banded as 8×2 / 4×4 / 2×8 (bands ×
     * rows-per-band), reporting per config the PRE-verify candidate
     * count (the cost axis — every candidate pays an exact
@@ -1424,7 +1423,7 @@ object LlmOps {
     * over (doc, band, sig) triples per config, never a signature
     * recompute.
     *
-    * SAMPLED (round 6): the whole sweep — exact baseline AND per-config
+    * SAMPLED: the whole sweep — exact baseline AND per-config
     * candidates — runs over a 60 % deterministic doc sample
     * (md5-h60(doc_id) % 5 < 3, the q_llm_split_assign trick), because
     * the sweep is an S-curve AUDIT, not a production pair pass: the
@@ -1491,7 +1490,7 @@ object LlmOps {
     perConfig.reduce(_.unionAll(_)).orderBy(col("rows_per_band"))
   }
 
-  /** Dedup CASCADE scoreboard (round 5): the production corpus-dedup
+  /** Dedup CASCADE scoreboard: the production corpus-dedup
     * flow as ONE auditable row — stage 1 exact dedup (content-hash
     * groups, keep min doc_id), stage 2 MinHash-LSH near-dup clusters
     * over the survivors (keep the cluster minimum), reporting per-stage
@@ -1516,7 +1515,7 @@ object LlmOps {
     // localCheckpoint (the CC loop's lineage truncation), so its two
     // consumer branches replay only the cheap tail, and an explicit
     // cache just adds a blocking InMemoryRelation materialization —
-    // the same lesson as the round-5 pagerank rewrite
+    // the same lesson as the pagerank rewrite
     val keepers = exactDedup(spark, dir).select(col("keep_id").as("doc_id"))
     val cl = dupClusters(spark, dir)
     val cmins = cl.groupBy(col("cluster_id"))
@@ -1536,7 +1535,7 @@ object LlmOps {
         expr("n_final_kept * 10000 div n_docs").as("retention_e4"))
   }
 
-  /** ANN recall@3 scoreboard (round 5): every approximate method (sign-
+  /** ANN recall@3 scoreboard: every approximate method (sign-
     * bit LSH single- and multi-table, IVF nprobe=1/2/4, IVF-PQ) scored
     * against the brute-force top-3 baseline in ONE query — the number a
     * user tuning nprobe or bucket bits actually needs. Recall is exact integer arithmetic
@@ -1546,7 +1545,7 @@ object LlmOps {
     * that scales — only the 20-probe baseline side is quadratic, and it
     * is the documented exact baseline.
     *
-    * THE PRODUCTION OPERATING POINT (round 6): **ivf_probe4** —
+    * THE PRODUCTION OPERATING POINT: **ivf_probe4** —
     * measured recall@3 = 9000 e4 at sf0.01 and 9166 e4 at sf0.1, at a
     * candidate cost of ~24-25 % of brute force (the cost axis is the
     * enrolled [[annCost]] twin, q_llm_ann_cost). ivf_probe1/2 sit at
@@ -1556,9 +1555,8 @@ object LlmOps {
     * allows — both knob directions are now demonstrated rows, not
     * extrapolations. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    // Shared-frame composition (round 7; supersedes the round-5 "no
-    // cache" A/B, which predates the probe4 + pq_r20 arms — the driver
-    // measured the 7-arm uncached form at 5.66 s, a 1.9× regression):
+    // Shared-frame composition (the 7-arm uncached form measured
+    // 5.66 s, 1.9× this one):
     //  - the three IVF arms are pn-filters of ONE ivfAnnCandsPn(4)
     //    frame, so the centroid crossJoin + assignment window runs once;
     //  - the two PQ arms share ONE ADC ranking (ivf_pq reads its top-3
@@ -1566,7 +1564,7 @@ object LlmOps {
     //  - tagged/brute/the shared frames are localCheckpoint'd ids-only
     //    tables (≤ a few hundred rows after the rank filters), cutting
     //    every per-method pipeline to exactly one evaluation. cache()
-    //    stays out (the round-5 lesson about the blocking
+    //    stays out (the lesson about the blocking
     //    InMemoryRelation round-trip holds; a lineage cut is cheaper).
     // Measured at sf0.1 local[4], min-of-3: 5.51 s (uncached 7-arm) →
     // 4.39 s (checkpoint only) → 4.2–4.5 s shared-frame (run noise
@@ -1619,7 +1617,7 @@ object LlmOps {
       .orderBy(col("method"))
   }
 
-  /** ANN COST scoreboard (round 6) — the other axis of [[annRecall]]:
+  /** ANN COST scoreboard — the other axis of [[annRecall]]:
     * per method, the PRE-verification candidate-pair count (every
     * candidate pays one exact cosine), per-probe average, and the
     * fraction of the brute-force candidate count (20·(n−1)) ×10⁴.
@@ -1654,7 +1652,7 @@ object LlmOps {
       .orderBy(col("method"))
   }
 
-  /** PII scrubbing (round 2): redact emails and phone numbers before a
+  /** PII scrubbing: redact emails and phone numbers before a
     * corpus ships to training — pure codegen'd regexp_replace, one
     * columnar pass, no UDF. The fixture plants one deterministic email
     * and phone per document (the synthetic corpus has none), so the
@@ -1683,7 +1681,7 @@ object LlmOps {
   /** Corpus stats per language. */
   def textStats(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("n_tok", size(split(col("text"), " ")))
+      .withColumn("n_tok", size(tokens))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         r4(avg(col("n_chars"))).as("avg_chars"),
@@ -1696,8 +1694,7 @@ object LlmOps {
     val docs = documents(spark, dir)
     val nDocs = docs.count() // tiny scalar; computed once (metadata count)
     val tf = docs
-      .select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("token"))
+      .select(col("doc_id"), col("lang"), explode(tokens).as("token"))
       .groupBy(col("doc_id"), col("lang"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val df_ = tf.groupBy(col("token"))
@@ -1714,7 +1711,7 @@ object LlmOps {
       .orderBy(col("lang"), col("rank"))
   }
 
-  /** Sparse tf-idf cosine RETRIEVAL (J77, round 9): 10 probe docs
+  /** Sparse tf-idf cosine RETRIEVAL (J77): 10 probe docs
     * (doc_id < 10) ranked against the corpus by full tf·idf cosine,
     * computed entirely through the inverted index — the SPARSE twin of
     * q_llm_cosine_topk's dense brute-force and the doc-as-query
@@ -1728,8 +1725,8 @@ object LlmOps {
     * probe-retrieval shape keeps the work bounded by the PROBE side
     * (10 broadcast docs × their terms) instead of a df cap; on a real
     * Zipf vocabulary the standard stop-listing cap (drop df > 50%
-    * postings) is one WHERE on the same plan. Round 10 re-enrolled the
-    * measured pair-join variant on the trigram-SHINGLE vocabulary,
+    * postings) is one WHERE on the same plan. The measured pair-join
+    * variant is enrolled on the trigram-SHINGLE vocabulary,
     * which IS Zipf-shaped on this fixture — see [[rareShinglePairs]]
     * (q_llm_rare_shingle_pairs).
     *
@@ -1744,10 +1741,7 @@ object LlmOps {
     * + one partial-aggregable (probe, doc) fold; per-probe top-3 via a
     * 10-partition window. */
   def tfidfCosine(spark: SparkSession, dir: String): DataFrame = {
-    val tf = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(spark, dir)
     val df_ = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct(col("doc_id")).as("n"))
     val inv = tf.join(df_, "tok").crossJoin(broadcast(n))
@@ -1769,7 +1763,7 @@ object LlmOps {
       .agg(count(lit(1)).as("n_shared"),
         sum(expr("pw * w")).as("dot"))
     dots
-      // no hint on the DOC-sized norms frame (round-10 sweep): dots is
+      // no hint on the DOC-sized norms frame: dots is
       // probe-bounded small, so AQE broadcasts the correct (left) side
       .join(norms.select(col("doc_id").as("probe_id"),
         col("s2").as("sa")), "probe_id")
@@ -1791,10 +1785,10 @@ object LlmOps {
       .orderBy(col("probe_id"), col("rank"))
   }
 
-  /** Rare-shingle candidate pair join (J79, round 10): the MEASURED
+  /** Rare-shingle candidate pair join (J79): the MEASURED
     * variant of the rare-term pair join [[tfidfCosine]]'s scaladoc
     * records as cut — re-enrolled on a derived vocabulary that is
-    * actually Zipf-shaped (VERDICT r9 #6). Terms are word TRIGRAM
+    * actually Zipf-shaped. Terms are word TRIGRAM
     * shingles: the 31-token synthetic unigram vocabulary is universal
     * (min df 25 over 500 docs — no unigram is rare at any cap), but
     * its trigram composition is sparse by construction (measured at
@@ -1850,7 +1844,7 @@ object LlmOps {
   private[graft] def rareShinglePairsImpl(spark: SparkSession, dir: String,
       hashKeys: Boolean): DataFrame = {
     val tri0 = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 3) // sequence(1,0) is DESCENDING, guard
       .select(col("doc_id"), explode(expr(
         """transform(sequence(1, size(tk) - 2),
@@ -1883,8 +1877,8 @@ object LlmOps {
       .limit(20)
   }
 
-  /** Feature-hashing collision census (J80, round 10 — the hashing
-    * trick, measured): the df-capped shingle VOCABULARY hashed into
+  /** Feature-hashing collision census (J80, the hashing trick,
+    * measured): the df-capped shingle VOCABULARY hashed into
     * 4096 buckets with the house md5 h60 idiom; output is the
     * balls-in-bins load histogram (load → bucket count, vocab mass,
     * mass share, collided flag) — the census that sizes the feature
@@ -2015,7 +2009,7 @@ object LlmOps {
         max(col("j_e4")).as("max_j_e4"))
       .orderBy(col("bucket"))
 
-  /** ColBERT-style MaxSim late interaction (J81, round 10): each
+  /** ColBERT-style MaxSim late interaction (J81): each
     * 64-dim embedding is read as 8 sub-vectors of 8 dims (the
     * documented derived multi-vector fixture — same parquet, PQ's
     * subspace view), and a probe scores a candidate by
@@ -2025,7 +2019,7 @@ object LlmOps {
     * single-vector cosine (q_llm_cosine_topk) and token-free lexical
     * (BM25). Probes vec_id < 5, top-3 per probe.
     *
-    * Exactness: every chunk cosine rides the house round-6 grid; the
+    * Exactness: every chunk cosine rides the house e6 grid; the
     * 8 per-chunk maxes are pivoted to COLUMNS and summed explicitly
     * t0+…+t7 (the ivfPq ADC fixed-association discipline — a float
     * sum() over rows would be partition-order-dependent).
@@ -2076,7 +2070,7 @@ object LlmOps {
       .orderBy(col("probe_id"), col("rank"))
   }
 
-  /** Diversity-stratified uncertainty sampling (J81, round 10): the
+  /** Diversity-stratified uncertainty sampling (J81): the
     * active-learning BATCH builder — plain uncertainty sampling
     * (q_llm_uncertainty_sample) floods the batch with near-duplicates
     * from the densest region; stratifying by the IVF coarse bucket
@@ -2227,7 +2221,7 @@ object LlmOps {
     * [[rankerTau]]. Columns: (doc_id, ql_e3). */
   private def qlScoredAll(spark: SparkSession, dir: String): DataFrame = {
     // Rides the session-memoized per-doc (dl, tf1..tf3) frame the whole
-    // BM25 family shares (round 11, ADVICE r10): re-deriving it here
+    // BM25 family shares: re-deriving it here
     // paid an extra full-corpus tokenize pass per rankerTau run and
     // duplicated tokenization logic that could drift from the single
     // source in [[bm25PerDoc]].
@@ -2244,7 +2238,7 @@ object LlmOps {
       .select(col("doc_id"), col("ql_e3"))
   }
 
-  /** Ranker rank-correlation (J80, round 10): Kendall tau between the
+  /** Ranker rank-correlation (J80): Kendall tau between the
     * BM25 and Dirichlet-QL rankings over the UNION of their top-20s —
     * the quantified version of ql_dirichlet's in_bm25_top10 audit
     * column (that row shows WHERE the rankers disagree; this one says
@@ -2328,7 +2322,7 @@ object LlmOps {
       |  round(${bm25Term(1)} + ${bm25Term(2)} + ${bm25Term(3)}, 4) AS bm25
       | FROM perdoc CROSS JOIN stats WHERE tf1 + tf2 + tf3 > 0)""".stripMargin
 
-  /** BM25 top-20 retrieval (round 6): Robertson/Sparck-Jones idf
+  /** BM25 top-20 retrieval: Robertson/Sparck-Jones idf
     * (ln((N−df+0.5)/(df+0.5)+1)) with tf saturation and doc-length
     * normalization — the ranking function behind every lexical search
     * engine, over the whitespace-token corpus the inverted-index row
@@ -2346,7 +2340,7 @@ object LlmOps {
     * only full-data move is the single tokenize shuffle, which an
     * inverted index (the companion row) would amortize across queries. */
   private[operators] def bm25Scored(spark: SparkSession, dir: String): DataFrame =
-    // MEMOIZED (round 9): ~12 enrolled retrieval/eval rows (bm25, mrr,
+    // MEMOIZED: ~12 enrolled retrieval/eval rows (bm25, mrr,
     // ndcg, pr@k, err, map, snippet, both fusion rows + their sweeps,
     // dedup-savings) each re-ran the corpus tokenize + per-doc tf
     // shuffle; at 100 TB this is the persisted lexical-score table
@@ -2357,21 +2351,27 @@ object LlmOps {
 
   /** Per-doc (dl, tf₁..tf₃) for the three query terms — the single
     * corpus tokenize under the whole BM25-composed family, MEMOIZED
-    * (round 9, review): bm25 scoring, the (k1,b) sweep, the graded
+    * (review): bm25 scoring, the (k1,b) sweep, the graded
     * relevance table, and the MAP topicality flags are all map-only
     * projections of this one frame. */
   private[operators] def bm25PerDoc(spark: SparkSession,
       dir: String): DataFrame =
     graft.FrameMemo.cached(spark, dir, "bm25-perdoc") {
-      val Seq(t1, t2, t3) = bm25Terms
-      documents(spark, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("dl"),
-          sum(when(col("tok") === t1, 1L).otherwise(0L)).as("tf1"),
-          sum(when(col("tok") === t2, 1L).otherwise(0L)).as("tf2"),
-          sum(when(col("tok") === t3, 1L).otherwise(0L)).as("tf3"))
+      bm25PerDocFold(spark, dir)
     }
+
+  /** The uncached fold under [[bm25PerDoc]]: per document, its length
+    * `dl` and the counts `tf1..tf3` of the three query terms.
+    * [[qlDirichlet]] reads it directly, so its plan keeps the fold. */
+  private def bm25PerDocFold(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(t1, t2, t3) = bm25Terms
+    docTokens(spark, dir)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("dl"),
+        sum(when(col("tok") === t1, 1L).otherwise(0L)).as("tf1"),
+        sum(when(col("tok") === t2, 1L).otherwise(0L)).as("tf2"),
+        sum(when(col("tok") === t3, 1L).otherwise(0L)).as("tf3"))
+  }
 
   /** The one-row BM25 corpus stats over a [[bm25PerDoc]] frame: n docs,
     * avgdl and each query term's df (df1..df3) — the scalars every
@@ -2407,7 +2407,7 @@ object LlmOps {
     * (next(prev) is ONE row per prev after the rank filter). */
   def greedyDecode(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " "))
+      .select(col("doc_id"), posexplode(tokens)
         .as(Seq("p", "w")))
     val big = toks.as("a").join(toks.as("b"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -2428,7 +2428,7 @@ object LlmOps {
     var out = seed
     (1 to 8).foreach { i =>
       // broadcast the 1-row WALKER, not the vocab-sized LM table
-      // (round-10 sweep: the hint sat on the data-sized side)
+      // (the hint sat on the data-sized side)
       cur = broadcast(cur).join(nextTab,
           cur("tok") === nextTab("prev"))
         .select(col("next").as("tok"), lit(i.toLong).as("step"))
@@ -2457,7 +2457,7 @@ object LlmOps {
     * counts), 3 widths × vocab-sized folds, 3-row output. */
   def cmsWidthSweep(spark: SparkSession, dir: String): DataFrame = {
     val tru = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
     def arm(width: Int): DataFrame = {
@@ -2480,7 +2480,7 @@ object LlmOps {
       .orderBy(col("width"))
   }
 
-  /** Bloom-filter FPR sizing sweep (J90, round 11): the dedup
+  /** Bloom-filter FPR sizing sweep (J90): the dedup
     * membership sketch measured like cms_width_sweep measures
     * count-min — insert the corpus's distinct content hashes into an
     * m-bit / k=3 Bloom filter for m ∈ {1024, 4096, 16384}, probe with
@@ -2585,7 +2585,7 @@ object LlmOps {
       |  fill_e4 * fill_e4 * fill_e4 // 100000000 AS fpr_pred_e4
       |FROM fin ORDER BY m_bits""".stripMargin
 
-  /** LSH band-bucket skew audit (J92, round 11): per band, the bucket
+  /** LSH band-bucket skew audit (J92): per band, the bucket
     * census of the EXACT (band, sig) keys the dedup candidate join
     * shuffles on — bucket count, singleton share, the largest bucket,
     * and Σ C(c,2) candidate pairs per band. At 100 TB the candidate
@@ -2722,7 +2722,7 @@ object LlmOps {
        |ORDER BY term""".stripMargin
   }
 
-  /** Token-multiset F1 over the LSH candidates (J95, round 11): the
+  /** Token-multiset F1 over the LSH candidates (J95): the
     * SQuAD-style overlap F1 — Σ_t min(tf_a, tf_b) doubled over the
     * length sum — computed beside the exact shingle-set Jaccard on
     * the SAME candidate pairs. The two metrics disagree by design
@@ -2739,9 +2739,7 @@ object LlmOps {
     * a-side token census and inner-joins the b-side on (doc, tok) —
     * keyed equi-joins, bounded by pair-count × doc length. */
   def tokenF1(spark: SparkSession, dir: String): DataFrame = {
-    val tf = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(spark, dir)
     val lens = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
     val pairs = minhashScored(spark, dir).filter(col("i") >= 1)
       .select(col("a_id"), col("b_id"),
@@ -2806,7 +2804,7 @@ object LlmOps {
        | JOIN lens lb ON lb.doc_id = s.b_id
        |ORDER BY s.a_id, s.b_id""".stripMargin
 
-  /** Source-mixing temperature sweep (J95, round 11): the sampling
+  /** Source-mixing temperature sweep (J95): the sampling
     * weights w ∝ n^(1/T) for T ∈ {1, 2, 4} over the language census —
     * the knob every multilingual/multi-source pretraining mix turns
     * (T = 1 mirrors the data, T → ∞ is uniform; XLM-R popularized the
@@ -2878,7 +2876,7 @@ object LlmOps {
     * the loop variable. */
   def beamDecode(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " "))
+      .select(col("doc_id"), posexplode(tokens)
         .as(Seq("p", "w")))
     val big = toks.as("a").join(toks.as("b"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -2903,7 +2901,7 @@ object LlmOps {
         lit(0L).as("score_e3"))
     (1 to 3).foreach { _ =>
       // broadcast the 2-row BEAM, not the vocab-sized LM table
-      // (round-10 sweep: the hint sat on the data-sized side)
+      // (the hint sat on the data-sized side)
       beam = broadcast(beam).join(top2,
           beam("last") === top2("prev"))
         .select(concat(col("seq"), lit(" "), col("next")).as("seq"),
@@ -3038,7 +3036,7 @@ object LlmOps {
   def dedupSavings(spark: SparkSession, dir: String): DataFrame = {
     val tok = documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
+        size(tokens).cast("long").as("n_tok"))
     val rem = dupClusters(spark, dir)
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"), lit(true).as("rm"))
@@ -3074,8 +3072,7 @@ object LlmOps {
           .orderBy(col("bm25").desc, col("doc_id"))))
       .select(col("doc_id"), col("rank"))
     val dtk = documents(spark, dir).join(broadcast(top3), "doc_id")
-      .select(col("doc_id"), col("rank"),
-        split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), col("rank"), tokens.as("tk"))
     val hits = dtk
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("p", "tok")))
       .filter(col("tok").isin(t1, t2, t3))
@@ -3123,7 +3120,7 @@ object LlmOps {
     * count, never cross-doc → per-doc fold → TakeOrdered bottom-20. */
   def docCohesion(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"),
         explode(expr("sequence(0, (size(tk) - 1) div 32)")).as("ch"),
         col("tk"))
@@ -3173,7 +3170,7 @@ object LlmOps {
   def termPosition(spark: SparkSession, dir: String): DataFrame = {
     val Seq(t1, t2, t3) = bm25Terms
     val hits = documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .select(size(col("tk")).as("dl"),
         posexplode(col("tk")).as(Seq("p", "tok")))
       .filter(col("tok").isin(t1, t2, t3))
@@ -3217,14 +3214,7 @@ object LlmOps {
     * bm25Scored), a scalar stats broadcast, map-only scoring, two
     * TakeOrderedAndProject top-10s, and a 10-row broadcast join. */
   def qlDirichlet(spark: SparkSession, dir: String): DataFrame = {
-    val Seq(t1, t2, t3) = bm25Terms
-    val perDoc = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("dl"),
-        sum(when(col("tok") === t1, 1L).otherwise(0L)).as("tf1"),
-        sum(when(col("tok") === t2, 1L).otherwise(0L)).as("tf2"),
-        sum(when(col("tok") === t3, 1L).otherwise(0L)).as("tf3"))
+    val perDoc = bm25PerDocFold(spark, dir)
     val qst = perDoc.agg(sum(col("dl")).as("cc"),
       sum(col("tf1")).as("cf1"), sum(col("tf2")).as("cf2"),
       sum(col("tf3")).as("cf3"))
@@ -3249,7 +3239,7 @@ object LlmOps {
       .orderBy(col("rank"))
   }
 
-  /** Pseudo-relevance-feedback expansion (round 8): the Rocchio-lite
+  /** Pseudo-relevance-feedback expansion: the Rocchio-lite
     * step after BM25 — take the top-5 retrieved docs, rank the terms
     * they contain (query terms and stopwords excluded) by
     * tf_top · idfE3 (idfE3 = lnE3(N) − lnE3(df), the floor-once
@@ -3264,10 +3254,8 @@ object LlmOps {
     val top5 = bm25Scored(spark, dir)
       .orderBy(col("bm25").desc, col("doc_id")).limit(5)
       .select(col("doc_id"))
-    val toks = documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    val excluded = bm25Terms ++
-      Seq("the", "a", "of", "and", "to", "in", "is")
+    val toks = docTokens(spark, dir)
+    val excluded = bm25Terms ++ Stopwords
     val tfTop = toks.join(broadcast(top5), "doc_id")
       .filter(!col("tok").isin(excluded: _*))
       .groupBy(col("tok")).agg(count(lit(1)).as("tf_top"))
@@ -3283,7 +3271,7 @@ object LlmOps {
       .limit(5)
   }
 
-  /** Chunk boundary loss (round 8): how many 5-gram shingles does
+  /** Chunk boundary loss: how many 5-gram shingles does
     * fixed-32-token chunking DESTROY? A shingle straddling a chunk
     * boundary exists in the document but in neither chunk — the
     * retrieval blind spot q_llm_chunk_split's plain split silently
@@ -3298,7 +3286,7 @@ object LlmOps {
     * 1-row fold). */
   def chunkBoundaryLoss(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n"))
+      .select(size(tokens).cast("long").as("n"))
       .select(col("n"),
         expr("greatest(n - 4, 0)").as("shingles"),
         expr("""aggregate(filter(sequence(1, 100), k -> k * 32 < n),
@@ -3314,7 +3302,7 @@ object LlmOps {
         expr("crossing_shingles * 10000" +
           " div greatest(total_shingles, 1)").as("loss_share_e4"))
 
-  /** Prompt prefix-cache analysis (round 8): how much prefill compute
+  /** Prompt prefix-cache analysis: how much prefill compute
     * would a prefix cache save on this corpus? Docs sharing an exact
     * 10-token prefix (md5-grouped) re-use the first 10 tokens'
     * KV-cache after the first member — savings = Σ (group−1)·10
@@ -3328,7 +3316,7 @@ object LlmOps {
     * Shape: map-side prefix hash → one groupBy census → 1-row fold. */
   def prefixCache(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 10)
       .select(col("doc_id"), size(col("tk")).cast("long").as("n_tok"),
         expr(h60("array_join(slice(tk, 1, 10), ' ')")).as("p"))
@@ -3353,7 +3341,7 @@ object LlmOps {
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(20)
 
-  /** Hybrid retrieval via reciprocal-rank fusion (round 6): the lexical
+  /** Hybrid retrieval via reciprocal-rank fusion: the lexical
     * BM25 arm and a dense cosine arm (probe = vec 7's embedding) each
     * contribute 1/(60+rank) for their top-50; docs absent from an arm
     * contribute 0 from it (standard RRF). Rank — not score — fusion is
@@ -3401,7 +3389,7 @@ object LlmOps {
       .select(col("vec_id").as("doc_id"), col("dense_rank"))
   }
 
-  /** Retrieve-then-rerank cascade (J86, round 11): BM25 supplies
+  /** Retrieve-then-rerank cascade (J86): BM25 supplies
     * RECALL (its top-20 lexical candidates), the dense arm supplies
     * PRECISION (exact cosine re-rank of ONLY those 20 against the
     * arms' shared probe, vec 7) — the two-stage serving default of
@@ -3521,7 +3509,7 @@ object LlmOps {
       .limit(15)
   }
 
-  /** RRF k-constant sensitivity sweep (J77, round 9): how much does
+  /** RRF k-constant sensitivity sweep (J77): how much does
     * the fused top-10 MOVE when the reciprocal-rank constant leaves
     * the enrolled k=60 default — the sharp k=10 (rank-1 dominance)
     * and the flat k=200 (near-Borda) corners? The bm25_sweep
@@ -3569,8 +3557,7 @@ object LlmOps {
   def langId(spark: SparkSession, dir: String): DataFrame = {
     val docs = documents(spark, dir)
     val profile = docs
-      .select(col("lang").as("p_lang"),
-        explode(split(col("text"), " ")).as("token"))
+      .select(col("lang").as("p_lang"), explode(tokens).as("token"))
       .groupBy(col("p_lang"), col("token"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("rn", row_number().over(
@@ -3579,7 +3566,7 @@ object LlmOps {
       .filter(col("rn") <= 20)
       .select(col("p_lang"), col("token"))
     val docToks = docs.select(col("doc_id"), col("lang"),
-      explode(array_distinct(split(col("text"), " "))).as("token"))
+      explode(array_distinct(tokens)).as("token"))
     docToks.join(broadcast(profile), "token")
       .groupBy(col("doc_id"), col("lang"), col("p_lang"))
       .agg(count(lit(1)).as("score"))
@@ -3593,25 +3580,9 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** IEEE-deterministic 4-decimal rounding: floor(x·10⁴ + 0.5)/10⁴ in
-    * plain double ops, bit-identical across engines. Spark's round()
-    * goes through the double's shortest DECIMAL representation
-    * (BigDecimal.valueOf) while DuckDB rounds the binary value — exact
-    * half-way cases (common for small-rational scores like k/80) land
-    * on different sides. */
-  private def r4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
-
   /** Quality scoring: type-token ratio, stopword ratio, length prior. */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .withColumn("n_tok", size(col("tk")))
-      .withColumn("ttr",
-        size(array_distinct(col("tk"))) / col("n_tok").cast("double"))
-      .withColumn("stop_ratio", expr(
-        """size(filter(tk, t -> t IN ('the','a','of','and','to','in','is')))
-          |  / CAST(size(tk) AS DOUBLE)""".stripMargin))
+    qualityFeatures(documents(spark, dir))
       .withColumn("quality", r4(
         lit(0.4) * col("ttr") + lit(0.3) * (lit(1) - col("stop_ratio")) +
           lit(0.3) * least(col("n_tok") / 100.0, lit(1.0))))
@@ -3619,7 +3590,7 @@ object LlmOps {
         r4(col("stop_ratio")).as("stop_ratio"), col("quality"))
       .orderBy(col("doc_id"))
 
-  /** Benchmark decontamination (round 3): flag training docs that share
+  /** Benchmark decontamination: flag training docs that share
     * any 13-token gram with the held-out benchmark slice (here:
     * doc_id % 10 == 0 stands in for the eval set) — the standard
     * n-gram overlap pass run before a corpus ships to training
@@ -3629,7 +3600,7 @@ object LlmOps {
     * distinct gram hashes of the (small) eval set — is the build side,
     * broadcast- or bloom-prunable at 100 TB while the corpus side
     * streams through map-side. */
-  /** FUZZY benchmark decontamination (round 6): [[decontaminate]]'s
+  /** FUZZY benchmark decontamination: [[decontaminate]]'s
     * exact 13-gram pass misses PARAPHRASED leakage — an eval doc with a
     * few tokens edited shares no 13-gram with its twin but is still
     * contamination. This row flags training docs NEAR-DUP (MinHash-LSH
@@ -3660,7 +3631,7 @@ object LlmOps {
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val grams = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"), explode(expr(
         s"""CASE WHEN size(tk) >= 13
            |THEN transform(sequence(1, size(tk) - 12),
@@ -3676,14 +3647,14 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Gopher-style repetition signal (round 3): fraction of duplicate
+  /** Gopher-style repetition signal: fraction of duplicate
     * 3-grams per document, 1 - distinct/total — boilerplate and
     * degenerate-generation text scores high and gets filtered before
     * training. Pure per-row array expressions, zero shuffles before the
     * final presentation sort. */
   def repetitionRatio(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .withColumn("g3", expr(
         """CASE WHEN size(tk) >= 3
           |THEN transform(sequence(1, size(tk) - 2),
@@ -3697,7 +3668,7 @@ object LlmOps {
           .as("rep_ratio"))
       .orderBy(col("doc_id"))
 
-  /** End-to-end corpus curation composite (round 3): the pipeline a
+  /** End-to-end corpus curation composite: the pipeline a
     * training-data user actually runs, as ONE declarative plan —
     * (1) exact dedup keeping the min doc_id per normalized text,
     * (2) quality gates (≥20 tokens, composite quality ≥ 0.55 — the
@@ -3710,19 +3681,11 @@ object LlmOps {
     * per group bounds any skew). */
   def curationPipeline(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val docs = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .withColumn("n_tok", size(col("tk")))
-    val deduped = docs
+    val deduped = withTokens(documents(spark, dir))
       .withColumn("keep_id",
-        min(col("doc_id")).over(w.partitionBy(lower(trim(col("text"))))))
+        min(col("doc_id")).over(w.partitionBy(contentKey)))
       .filter(col("doc_id") === col("keep_id"))
-    val scored = deduped
-      .withColumn("ttr",
-        size(array_distinct(col("tk"))) / col("n_tok").cast("double"))
-      .withColumn("stop_ratio", expr(
-        """size(filter(tk, t -> t IN ('the','a','of','and','to','in','is')))
-          |  / CAST(size(tk) AS DOUBLE)""".stripMargin))
+    val scored = withQualityRatios(deduped)
       .withColumn("quality", r4(
         lit(0.4) * col("ttr") + lit(0.3) * (lit(1) - col("stop_ratio")) +
           lit(0.3) * least(col("n_tok") / 100.0, lit(1.0))))
@@ -3755,19 +3718,12 @@ object LlmOps {
     * aggregation order never arises); dup rate is integer-derived. */
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val docs = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .withColumn("n_tok", size(col("tk")))
-      .withColumn("ttr",
-        size(array_distinct(col("tk"))) / col("n_tok").cast("double"))
-      .withColumn("stop_ratio", expr(
-        """size(filter(tk, t -> t IN ('the','a','of','and','to','in','is')))
-          |  / CAST(size(tk) AS DOUBLE)""".stripMargin))
+    val docs = qualityFeatures(documents(spark, dir))
       .withColumn("q_e4", expr(
         """CAST(floor((0.4 * ttr + 0.3 * (1 - stop_ratio)
           |  + 0.3 * least(n_tok / 100.0, 1.0)) * 10000.0) AS BIGINT)"""
           .stripMargin))
-      .withColumn("h", sha2(lower(trim(col("text"))), 256))
+      .withColumn("h", contentDigest)
     val stats = docs.groupBy(col("lang"), col("h"))
       .agg(count(lit(1)).as("n"), sum(col("n_tok").cast("long")).as("t"),
         sum(col("q_e4")).as("q"))
@@ -3798,8 +3754,7 @@ object LlmOps {
     * (regex '\S{1,4}' ≡ per-token ceil(len/4) chunking). */
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).as("n_ws"),
+      .select(col("doc_id"), size(tokens).as("n_ws"),
         size(expr("regexp_extract_all(text, '\\\\S{1,4}', 0)")).as("n_bpe"),
         length(col("text")).as("n_chars_calc"))
       .orderBy(col("doc_id"))
@@ -3808,7 +3763,7 @@ object LlmOps {
     * hashes, fold (h*31 + tok_h) mod p — identical in DuckDB list_reduce. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"), expr(
         s"""aggregate(transform(tk, t -> ${h60("t")} % $P),
            |          CAST(0 AS BIGINT),
@@ -3816,7 +3771,7 @@ object LlmOps {
         .as("fp"))
       .orderBy(col("doc_id"))
 
-  /** Zipf exponent fit (round 6): OLS slope of ln(count) vs ln(rank)
+  /** Zipf exponent fit: OLS slope of ln(count) vs ln(rank)
     * over the top-1000 tokens — the corpus-health diagnostic (natural
     * text ≈ −1; template/boilerplate corpora flatten toward 0 — this
     * fixture reads −0.18, which is exactly what the row should expose
@@ -3833,7 +3788,7 @@ object LlmOps {
     * then a scalar moment aggregate. */
   def zipfFit(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .withColumn("r", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -3850,7 +3805,7 @@ object LlmOps {
           | div greatest((n * sxx - sx * sx) div 1000000,
           |              CAST(1 AS BIGINT))""".stripMargin).as("alpha_e6"))
 
-  /** Count-min sketch (round 6): d=4 rows × w=16 buckets of token
+  /** Count-min sketch: d=4 rows × w=16 buckets of token
     * counts, plus the point-query audit — ĉ(w) = min over rows of the
     * w's bucket, joined against the exact count so the one-sided error
     * (ĉ ≥ c, overcount = collision mass) is an enrolled NUMBER, not
@@ -3872,7 +3827,7 @@ object LlmOps {
     * the exact side folds tokens directly, same cells. */
   def countMin(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
     val tru = toks.groupBy(col("w")).agg(count(lit(1)).as("c_true"))
     val cms = tru
       .select(col("w"), col("c_true"),
@@ -3891,7 +3846,7 @@ object LlmOps {
       .orderBy(col("c_true").desc, col("w"))
   }
 
-  /** Winnowing fingerprint selection (round 6): per doc, the min 3-gram
+  /** Winnowing fingerprint selection: per doc, the min 3-gram
     * rolling hash in every sliding window of 4 consecutive grams,
     * deduplicated — the MOSS document-fingerprint scheme that
     * guarantees any shared run of ≥ 6 tokens leaves at least one
@@ -3907,7 +3862,7 @@ object LlmOps {
     * aggregable groupBy — ONE shuffle of the gram stream. */
   def winnowFp(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"), posexplode(expr(
         s"""transform(sequence(1, size(tk) - 2),
@@ -3926,7 +3881,7 @@ object LlmOps {
         (sum(col("fp")) % lit(P)).as("fp_sum"))
       .orderBy(col("doc_id"))
 
-  /** Add-1-smoothed bigram language model (round 6): the top bigrams
+  /** Add-1-smoothed bigram language model: the top bigrams
     * with their conditional probability P(w2|w1) = (c(w1,w2)+1) /
     * (c(w1)+V) kept as an integer RATIONAL (p_num, p_den) — no float
     * ever materializes, so the row is bit-reproducible and the
@@ -3940,7 +3895,7 @@ object LlmOps {
     * a one-row V crossJoin. The top-k is TakeOrderedAndProject. */
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     val bg = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 2)
       .select(explode(expr(
         """transform(sequence(1, size(tk) - 1),
@@ -3961,7 +3916,7 @@ object LlmOps {
       .limit(50)
   }
 
-  /** Per-doc n-gram novelty (round 6): the fraction of a doc's distinct
+  /** Per-doc n-gram novelty: the fraction of a doc's distinct
     * 8-gram hashes whose corpus-wide FIRST occurrence (min doc_id) is
     * this doc — the "how much new text does this shard add"
     * contribution score used to order crawl snapshots before dedup.
@@ -3973,7 +3928,7 @@ object LlmOps {
     * doc_id. No all-pairs anything. */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val g = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .filter(size(col("tk")) >= 8)
       .select(col("doc_id"), explode(expr(
         s"""array_distinct(transform(sequence(1, size(tk) - 7),
@@ -3989,7 +3944,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Sequence packing (round 3): greedy contiguous fill of per-language
+  /** Sequence packing: greedy contiguous fill of per-language
     * token budget bins (1024 tokens) — the sample-packing step that turns
     * a curated corpus into fixed-size training batches. Bin assignment is
     * the EXCLUSIVE running token sum div the budget, so each worker can
@@ -4000,7 +3955,7 @@ object LlmOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
     documents(spark, dir)
-      .withColumn("n_tok", size(split(col("text"), " ")))
+      .withColumn("n_tok", size(tokens))
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("bin", expr("(cum - n_tok) div 1024"))
       .groupBy(col("lang"), col("bin"))
@@ -4009,7 +3964,7 @@ object LlmOps {
       .orderBy(col("lang"), col("bin"))
   }
 
-  /** Context-length packing sweep (round 8): the seqPack bin
+  /** Context-length packing sweep: the seqPack bin
     * assignment evaluated at THREE context budgets {512, 1024, 2048}
     * in one pass — per budget, bins needed and fill utilization ×10⁴.
     * This is the capacity-planning curve behind the context-length
@@ -4026,7 +3981,7 @@ object LlmOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
     val base = documents(spark, dir)
-      .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tok", size(tokens).cast("long"))
       .withColumn("cum", sum(col("n_tok")).over(w))
     val ctx = Seq(512L, 1024L, 2048L).toDF("context")
     base.crossJoin(broadcast(ctx))
@@ -4041,7 +3996,7 @@ object LlmOps {
       .orderBy(col("context"))
   }
 
-  /** Domain-mixture resampling (round 3): downsample every language to
+  /** Domain-mixture resampling: downsample every language to
     * the smallest language's document count via a DETERMINISTIC content
     * hash threshold — the mixture-rebalancing step before training. The
     * keep decision is integer cross-multiplication (h*n_docs <
@@ -4050,7 +4005,7 @@ object LlmOps {
     * corpus side is a map-only filter (no shuffle of the data itself). */
   def domainMix(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir)
-      .withColumn("n_tok", size(split(col("text"), " ")))
+      .withColumn("n_tok", size(tokens))
       .withColumn("h",
         expr(s"${h60("CAST(doc_id AS STRING)")} % 1000000"))
     val counts = d.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
@@ -4066,7 +4021,7 @@ object LlmOps {
       .orderBy(col("lang"))
   }
 
-  /** Bigram-LM perplexity scoring (round 3, CCNet-style): train add-one-
+  /** Bigram-LM perplexity scoring (CCNet-style): train add-one-
     * smoothed bigram counts on the corpus itself, score each doc by mean
     * negative log-likelihood — the fluency filter between heuristic
     * quality scores and a real LM. Bigrams travel as single
@@ -4077,7 +4032,7 @@ object LlmOps {
     * full vocab fits. */
   def perplexity(spark: SparkSession, dir: String): DataFrame = {
     val toks = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
     val uni = toks
       .select(explode(col("tk")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
@@ -4098,7 +4053,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** CCNet-style perplexity bucketing (round 6): ntile(3) each language's
+  /** CCNet-style perplexity bucketing: ntile(3) each language's
     * docs by bigram-LM NLL into head/middle/tail — the quality gate
     * CCNet applies before training (keep head, drop or re-weight tail).
     * Composes [[perplexity]]'s score unchanged; the tertile is
@@ -4123,7 +4078,7 @@ object LlmOps {
       .orderBy(col("lang"), col("bucket"))
   }
 
-  /** Character-level Shannon entropy (round 6): per doc,
+  /** Character-level Shannon entropy: per doc,
     * H = −Σ_c (n_c/N)·log₂(n_c/N) — the cheapest gibberish/boilerplate
     * detector (random bytes score high, repeated padding scores low);
     * the quality-score family's information-theoretic member. Each
@@ -4153,7 +4108,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Context-window chunking (round 3): split each doc into 32-token
+  /** Context-window chunking: split each doc into 32-token
     * chunks at stride 24 (8-token overlap) — the chunking step for
     * context-window packing and RAG indexing. Emits the chunk's start
     * offset, token count and 60-bit content hash (not the text — at
@@ -4161,7 +4116,7 @@ object LlmOps {
     * lazily). Pure generator fan-out: no shuffle before the sort. */
   def chunkSplit(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"),
         explode(expr("sequence(1, greatest(size(tk), 1), 24)")).as("start"),
         col("tk"))
@@ -4171,7 +4126,7 @@ object LlmOps {
         expr(h60("ch")).as("chunk_h"))
       .orderBy(col("doc_id"), col("start"))
 
-  /** Product quantization (round 3): compress 64-dim float embeddings to
+  /** Product quantization: compress 64-dim float embeddings to
     * 8 one-byte codes — 8 subspaces × 8 dims, each subvector assigned to
     * its nearest of 8 sampled centroids (vec_id < 8, the same
     * deterministic sampling as ivfAnn's coarse quantizer). Emits the
@@ -4206,7 +4161,7 @@ object LlmOps {
       .orderBy(col("vec_id"), col("sub"))
   }
 
-  /** Heavy-hitter tokens via the Misra-Gries sketch (round 3): per-lang
+  /** Heavy-hitter tokens via the Misra-Gries sketch: per-lang
     * frequent-token detection with `FreqSketch.agg(tok, 64)` — O(k) state
     * per group instead of an exact full-token shuffle. The sketch's
     * counter content is input-order-dependent, so the enrolled output is
@@ -4216,8 +4171,7 @@ object LlmOps {
     * an overcount). The exact count join-back here plays the oracle's
     * role — at 100 TB it would run only on the tiny reported set. */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val toks = documents(spark, dir)
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
+    val toks = langTokens(spark, dir)
     val cnts = toks.groupBy(col("lang"), col("tok"))
       .agg(count(lit(1)).as("true_cnt"))
     val totals = cnts.groupBy(col("lang")).agg(sum(col("true_cnt")).as("n"))
@@ -4235,7 +4189,7 @@ object LlmOps {
       .orderBy(col("lang"), col("tok"))
   }
 
-  /** HTML boilerplate stripping (round 3): tag removal + entity decode +
+  /** HTML boilerplate stripping: tag removal + entity decode +
     * whitespace collapse over documents wrapped in a deterministic HTML
     * shell — the extraction step between a raw web crawl and every
     * other operator here. Chained codegen `regexp_replace` (the
@@ -4269,7 +4223,7 @@ object LlmOps {
         expr(h60("stripped")).as("clean_h"))
       .orderBy(col("doc_id"))
 
-  /** Incremental-ingest dedup (round 3): a NEW batch (doc_id >= 400
+  /** Incremental-ingest dedup: a NEW batch (doc_id >= 400
     * stands in) admitted only if its content hash is absent from the
     * existing corpus — the anti-join every continuously-ingesting
     * training pipeline runs per batch. Hash-first: both sides shuffle
@@ -4279,7 +4233,7 @@ object LlmOps {
     * doc's within-batch dup count (batches dedup internally first). */
   def incrDedup(spark: SparkSession, dir: String): DataFrame = {
     val hashed = documents(spark, dir)
-      .withColumn("h", sha2(lower(trim(col("text"))), 256))
+      .withColumn("h", contentDigest)
     val corpus = hashed.filter(col("doc_id") < 400).select(col("h"))
     hashed.filter(col("doc_id") >= 400)
       .groupBy(col("h"))
@@ -4289,7 +4243,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Span-level dedup (round 3): C4-style sub-document deduplication.
+  /** Span-level dedup: C4-style sub-document deduplication.
     * Documents are cut into fixed 20-token spans; only the globally
     * FIRST occurrence of each span survives (ordered by doc_id, then
     * span start), and each document is reassembled from its surviving
@@ -4306,7 +4260,7 @@ object LlmOps {
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spans = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .select(col("doc_id"),
         explode(expr("sequence(1, greatest(size(tk), 1), 20)")).as("start"),
         col("tk"))
@@ -4327,7 +4281,7 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Blocked fuzzy entity-resolution join (round 3): near-identical
+  /** Blocked fuzzy entity-resolution join: near-identical
     * part names within an edit distance of 3. The realistic ER shape at
     * scale: collapse EXACT duplicates first (the name vocabulary is
     * orders of magnitude smaller than the row count), then fuzzy-match
@@ -6403,7 +6357,7 @@ object LlmOps {
        |   // (SELECT count(*) FROM documents) AS BIGINT) AS retention_e4
        |""".stripMargin
 
-  /** Sampled twin of the Spark arm (round 8): the identical 60 % doc
+  /** Sampled twin of the Spark arm: the identical 60 % doc
     * sample (md5-h60 % 5 < 3) applied to the shingle frame, df-cap
     * still full-corpus (shingleCte first, sample on its output — same
     * order of operations as the Spark side and [[bandSweepOracle]]).
@@ -6448,8 +6402,8 @@ object LlmOps {
        |   AS precision_e4""".stripMargin
 
   /** Band-sweep oracle: the mh CTE re-banded per config via `j // r` —
-    * the SQL twin of the Spark side's shared-signature sweep. Round 6:
-    * the whole chain (mh, exact baseline, candidates) reads the SAMPLED
+    * the SQL twin of the Spark side's shared-signature sweep. The whole
+    * chain (mh, exact baseline, candidates) reads the SAMPLED
     * shingle frame `shs` (md5-h60(doc_id) % 5 < 3 — the identical
     * predicate [[bandSweep]] applies), with the df-cap still computed
     * over the FULL corpus (sample filter applied to `sh`'s output, not

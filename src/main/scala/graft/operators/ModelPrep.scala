@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.VectorExprs
 
-/** SURVEY.md §2-J4 — model-preparation operators (round 4): the steps
+/** SURVEY.md §2-J4 — model-preparation operators: the steps
   * between a curated corpus and a training run. Sketch-quality
   * measurement (MinHash signature estimate vs exact Jaccard), linear
   * quality-classifier scoring, URL canonicalization, one exact-arithmetic
@@ -32,10 +32,6 @@ import graft.functions.VectorExprs
   * - bpe_merge / url_canon: pure integer counts / string rewrites.
   */
 object ModelPrep {
-
-  /** IEEE-deterministic 4-decimal rounding (see LlmOps.r4). */
-  private def r4(c: Column): Column =
-    floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
   /** MinHash estimate quality: for every banded-LSH candidate pair,
     * the signature-based Jaccard estimate (matching slots / 16) next to
@@ -73,14 +69,7 @@ object ModelPrep {
     * the same way). No exp(): softsign is pure IEEE arithmetic, so the
     * oracle matches bit-for-bit (see object scaladoc). */
   def qualityLogreg(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .withColumn("n_tok", size(col("tk")))
-      .withColumn("ttr",
-        size(array_distinct(col("tk"))) / col("n_tok").cast("double"))
-      .withColumn("stop_ratio", expr(
-        """size(filter(tk, t -> t IN ('the','a','of','and','to','in','is')))
-          |  / CAST(size(tk) AS DOUBLE)""".stripMargin))
+    qualityFeatures(documents(spark, dir))
       .withColumn("z",
         lit(-1.5) + lit(2.2) * col("ttr") +
           lit(1.1) * (lit(1.0) - col("stop_ratio")) +
@@ -90,6 +79,16 @@ object ModelPrep {
       .select(col("doc_id"), r4(col("z")).as("z"),
         r4(col("score")).as("score"), (col("z") >= 0).as("keep"))
       .orderBy(col("doc_id"))
+
+  /** [[qualityLogreg]]'s rows joined to each document's token count
+    * `n_tok` (BIGINT), with the document columns `extra` between
+    * `doc_id` and `n_tok`: the input of every row that weighs a score
+    * by document length. */
+  private def scoredTokens(spark: SparkSession, dir: String,
+      extra: String*): DataFrame =
+    qualityLogreg(spark, dir).join(documents(spark, dir).select(
+      col("doc_id") +: extra.map(col) :+
+        size(tokens).cast("long").as("n_tok"): _*), "doc_id")
 
   /** URL canonicalization: strip fragment, default :443 port, trailing
     * slash and utm_* tracking params from minted dirty URLs; lowercase
@@ -178,7 +177,7 @@ object ModelPrep {
       .orderBy(col("cluster"), col("dim"))
   }
 
-  /** SemDeDup-style semantic dedup (round 4): pairwise cosine checks
+  /** SemDeDup-style semantic dedup: pairwise cosine checks
     * run ONLY within a k-means cluster — the published trick that makes
     * embedding-level dedup tractable (in-cluster pairs ≈ N²/k instead
     * of N²; measured 15.6k vs 500k at sf0.01). A vector is dropped when
@@ -218,7 +217,7 @@ object ModelPrep {
     * iteration after the first scan is cheap. */
   def bpeMerge(spark: SparkSession, dir: String): DataFrame = {
     val vocab = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+      .select(explode(tokens).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     vocab
       .filter(length(col("tok")) >= 2)
@@ -233,7 +232,7 @@ object ModelPrep {
       .orderBy(col("rank"))
   }
 
-  /** WordPiece-style merge ranking (round 8, Schuster & Nakajima 2012):
+  /** WordPiece-style merge ranking (Schuster & Nakajima 2012):
     * the same weighted char-pair counts as [[bpeMerge]], but candidates
     * rank by the LIKELIHOOD score c(ab)/(c(a)·c(b)) instead of raw
     * frequency — WordPiece picks the merge that most increases corpus
@@ -253,7 +252,7 @@ object ModelPrep {
     * broadcast. */
   def wordpieceMerge(spark: SparkSession, dir: String): DataFrame = {
     val vocab = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+      .select(explode(tokens).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val pairCnt = vocab.filter(length(col("tok")) >= 2)
       .select(col("cnt"), explode(expr(
@@ -282,7 +281,7 @@ object ModelPrep {
       .orderBy(col("rank"))
   }
 
-  /** Deterministic train/val/test split (round 4): every corpus release
+  /** Deterministic train/val/test split: every corpus release
     * needs a split that is (a) stable under repartitioning/reruns —
     * membership is a pure function of the doc id, not of row order or
     * sampling state — and (b) computable at any scale with zero extra
@@ -305,7 +304,7 @@ object ModelPrep {
         min(col("doc_id")).as("min_doc"))
       .orderBy(col("lang"), col("split"))
 
-  /** Top principal component by integer power iteration (round 6): two
+  /** Top principal component by integer power iteration: two
     * unrolled steps of v ← Σ_x x·(xᵀv) over milli-unit embeddings, the
     * PCA direction used for embedding whitening / ABTT ("all-but-the-
     * top") before similarity search. The covariance matrix NEVER
@@ -363,7 +362,7 @@ object ModelPrep {
       .select((col("i0") + 1).cast("int").as("dim"), col("v_e6"))
       .orderBy(col("dim"))
 
-  /** All-but-the-top whitening (round 6): remove each embedding's
+  /** All-but-the-top whitening: remove each embedding's
     * projection on the dominant PCA direction — the post-processing
     * that strips the corpus-common component before similarity search
     * (isotropy correction). Pure integers end to end: with x in milli
@@ -480,7 +479,7 @@ object ModelPrep {
     * is identical. */
   def spanCorrupt(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .withColumn("n_tok", size(col("tk")).cast("long"))
       // span starts: i in [0, n) with i % 7 == 3; each masks tokens
       // i and i+1 (the second truncated at the tail)
@@ -518,9 +517,7 @@ object ModelPrep {
     *
     * Shape: doc-sized join + 10-key partial-aggregable groupBy. */
   def scoreCalibration(spark: SparkSession, dir: String): DataFrame =
-    qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")), "doc_id")
+    scoredTokens(spark, dir)
       .withColumn("bin", expr(
         "least(CAST(9 AS BIGINT), CAST(floor(score * 10) AS BIGINT))"))
       .groupBy(col("bin"))
@@ -534,7 +531,7 @@ object ModelPrep {
         expr("score_e4_sum div n_docs").as("mean_score_e4"))
       .orderBy(col("bin"))
 
-  /** Brier score with the Murphy decomposition (J88, round 11):
+  /** Brier score with the Murphy decomposition (J88):
     * Brier = REL − RES + UNC over the SAME 10 score bins and weak
     * label (doc ≥ 50 tokens) as [[scoreCalibration]] — the proper-
     * scoring-rule summary of the reliability diagram: REL (how far
@@ -558,10 +555,7 @@ object ModelPrep {
     * integer subtraction. Shape: doc-sized projection → 10-bin
     * partial-aggregable fold → 1-row algebra. */
   def brierDecomp(spark: SparkSession, dir: String): DataFrame = {
-    val base = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val base = scoredTokens(spark, dir)
       .select(
         expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)").as("p_e4"),
         when(col("n_tok") >= 50, lit(10000L)).otherwise(lit(0L))
@@ -601,9 +595,7 @@ object ModelPrep {
     * (the rfm discipline), 5-key rollup; the effective-share ratio
     * rides a 1-row broadcast of the global effective sum. */
   def epochSchedule(spark: SparkSession, dir: String): DataFrame = {
-    val sc = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")), "doc_id")
+    val sc = scoredTokens(spark, dir)
       .withColumn("quintile", ntile(5).over(
         Window.orderBy(col("score").desc, col("doc_id"))))
     val per = sc.groupBy(col("quintile"))
@@ -638,7 +630,7 @@ object ModelPrep {
         s" i < $hi THEN CAST(i + 1 AS BIGINT) * length(tk[i])" +
         " ELSE CAST(0 AS BIGINT) END)").as(s"cs_$name"))
     documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"), tokens.as("tk"))
       .withColumn("n_tok", size(col("tk")).cast("long"))
       .filter(col("n_tok") >= 3)
       .withColumn("p_end", expr("n_tok div 3"))
@@ -737,7 +729,7 @@ object ModelPrep {
     * bounded top-20-contexts output. */
   def topPVocab(spark: SparkSession, dir: String): DataFrame = {
     val bg = documents(spark, dir)
-      .select(split(col("text"), " ").as("tk"))
+      .select(tokens.as("tk"))
       .filter(size(col("tk")) >= 2)
       .select(explode(expr(
         "transform(sequence(0, size(tk) - 2)," +
@@ -822,7 +814,7 @@ object ModelPrep {
     }.reduce(_ unionAll _).orderBy(col("n"))
   }
 
-  /** Pairwise win-rate matrix (round 8): the leaderboard primitive
+  /** Pairwise win-rate matrix: the leaderboard primitive
     * behind every model comparison — per source pair (the pseudo-
     * "models"), over the 20-doc pseudo-prompt groups where both
     * fielded an entry, who scored higher, how often, and the tie
@@ -864,7 +856,7 @@ object ModelPrep {
       .orderBy(col("a"), col("b"))
   }
 
-  /** Bradley–Terry strength fit (round 8): the leaderboard step AFTER
+  /** Bradley–Terry strength fit: the leaderboard step AFTER
     * the pairwise win-rate matrix — turn the antisymmetric wins table
     * into a single per-model strength so non-shared-prompt models
     * become comparable. Two unrolled minorization–maximization
@@ -890,9 +882,8 @@ object ModelPrep {
     // localCheckpoint: the MM iterations below reference this frame
     // through sym/tot/w1/w2 so many times that the WHOLE pairwiseWins→
     // qualityLogreg pipeline replicated ~10× in the physical plan
-    // (measured round 14: 276 KB formatted plan / 422 Exchanges →
-    // 33 KB / 38 with the cut; warm 2.60 → 2.16 s on a noisy box —
-    // the tail's remaining cost is ~25 micro-stages over ≤190-row
+    // (422 Exchanges without the cut, 38 with it; the tail's remaining
+    // cost is ~25 micro-stages over ≤190-row
     // frames, which AQE broadcasts either way). The frame is
     // ≤ roster²/2 rows (190 here) — the k-sized cache-the-frontier
     // discipline from mmrRerank/connectedComponents, never corpus-sized.
@@ -907,9 +898,8 @@ object ModelPrep {
     // tot/w2 are roster-sized (≤ 20 rows) and each referenced by 2–3
     // downstream branches; without the cuts the MM tail re-planned
     // every reference's whole subtree — 38 Exchanges / ~25 micro-stages
-    // at round-14 close (round 15: → 3 Exchanges in the final plan
-    // plus two k-sized checkpoint jobs; isolated warm min 1.90 →
-    // 1.47 s, plans/r15/q_llm_bradley_terry_{before,after}.txt).
+    // without them, 3 Exchanges plus two k-sized checkpoint jobs with
+    // them (plans/r15/q_llm_bradley_terry_{before,after}.txt).
     // localCheckpoint (not reliable checkpoint) is deliberate for these
     // k-sized frames: executor-loss exposure on ≤20 cached rows is
     // negligible and a reliable checkpoint would add a filesystem
@@ -924,8 +914,8 @@ object ModelPrep {
     // 5·10⁵, so the div has zero remainder and equals n·500000), hence
     // den₁(i) = Σ_j n_ij·500000 = games(i)·500000 — algebraically
     // identical to the old per-term-div groupBy over sym, bit-for-bit,
-    // but derived from tot with no extra shuffle + join (round 15,
-    // guide §2.4: one exchange instead of two plus a join).
+    // but derived from tot with no extra shuffle + join (one exchange
+    // instead of two plus a join).
     val w1 = tot.select(col("i"),
       expr("wins * 1000000000000" +
         " div greatest(games * 500000, 1)").as("w"))
@@ -946,7 +936,7 @@ object ModelPrep {
       .orderBy(col("source"))
   }
 
-  /** Embedding-space outlier scan (round 8): the vectors farthest
+  /** Embedding-space outlier scan: the vectors farthest
     * from their OWN label's centroid — the mislabeled-candidate /
     * corrupt-vector queue an embedding pipeline reviews before
     * training a classifier on the labels. Exact integers: dims
@@ -1046,10 +1036,7 @@ object ModelPrep {
     * Shape (100 TB): doc-sized score pass → score-grid census
     * (≤ 10⁴ cells) → window cum on THAT census → 1-row pick. */
   def budgetThreshold(spark: SparkSession, dir: String): DataFrame = {
-    val d = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val d = scoredTokens(spark, dir)
       .select(expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)")
         .as("s_e4"), col("n_tok"))
     val cen = d.groupBy(col("s_e4"))
@@ -1087,10 +1074,7 @@ object ModelPrep {
     * Shape (100 TB): doc-sized score pass (map-only model) → source
     * fold → 20-row window. */
   def greedyMix(spark: SparkSession, dir: String): DataFrame = {
-    val perSrc = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val perSrc = scoredTokens(spark, dir, "source")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"),
         expr("sum(CAST(floor(score * 10000 + 0.5) AS BIGINT))" +
@@ -1123,8 +1107,7 @@ object ModelPrep {
   def shardBalance(spark: SparkSession, dir: String): DataFrame = {
     val sh = documents(spark, dir)
       .select(expr(s"${LlmOps.h60("CAST(doc_id AS STRING)")} % 8")
-        .as("shard"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
+        .as("shard"), size(tokens).cast("long").as("n_tok"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
     val tot = sh.agg(sum(col("n_tokens")).as("tt"),
@@ -1165,7 +1148,7 @@ object ModelPrep {
         max(abs(col("err_e6"))).as("max_abs_err_e6"))
       .orderBy(col("label"))
 
-  /** Unit-norm precondition audit (round 8): ARE the embeddings
+  /** Unit-norm precondition audit: ARE the embeddings
     * normalized? The check every vector store runs before choosing
     * dot-product over cosine (they coincide iff norms are constant) —
     * and on this corpus they are: norm² ∈ [1 − 10⁻⁶, 1 + 10⁻⁶], so
@@ -1218,7 +1201,7 @@ object ModelPrep {
         expr(s"${LlmOps.h60("CAST(doc_id AS STRING)")} % 1000"))
       .filter(col("bucket") < 990)
       .withColumn("s", expr("CASE WHEN bucket < 980 THEN 0 ELSE 1 END"))
-      .select(col("s"), explode(split(col("text"), " ")).as("w"))
+      .select(col("s"), explode(tokens).as("w"))
       .groupBy(col("w"))
       .agg(sum(when(col("s") === 0, 1L).otherwise(0L)).as("tc"),
         sum(when(col("s") === 1, 1L).otherwise(0L)).as("vc"))
@@ -1239,8 +1222,8 @@ object ModelPrep {
         expr("(num + tv * 1000000) div tv - 1000000").as("kl_e3"))
   }
 
-  /** SIF token down-weights (J75, round 9 — Arora et al.'s smooth
-    * inverse frequency): w(t) = a / (a + p(t)) with a = 10⁻³, the
+  /** SIF token down-weights (J75, Arora et al.'s smooth inverse
+    * frequency): w(t) = a / (a + p(t)) with a = 10⁻³, the
     * weighting that turns bag-of-embedding averages into the classic
     * "tough-to-beat" sentence embedding (frequent tokens contribute
     * almost nothing, rare tokens fully). The companion table to
@@ -1259,7 +1242,7 @@ object ModelPrep {
     * count, 1-row total broadcast, map-only weight + top-k. */
   def sifWeights(spark: SparkSession, dir: String): DataFrame = {
     val cnt = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val n = cnt.agg(sum(col("c")).as("n_tok"))
     cnt.crossJoin(broadcast(n))
@@ -1269,8 +1252,8 @@ object ModelPrep {
       .limit(50)
   }
 
-  /** One unigram-LM EM step (J76, round 9 — the SentencePiece/Kudo
-    * estimator's inner loop): over a bounded segmentation lattice
+  /** One unigram-LM EM step (J76, the SentencePiece/Kudo estimator's
+    * inner loop): over a bounded segmentation lattice
     * (each distinct token ≤ 8 chars contributes its WHOLE form plus
     * every 2-way split), E-step computes each segmentation's posterior
     * under the occurrence-estimate p₀ (the uniform-posterior M-step),
@@ -1294,7 +1277,7 @@ object ModelPrep {
     * weight, never as a row count. */
   def unigramEm(spark: SparkSession, dir: String): DataFrame = {
     val tk = documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
+      .select(explode(tokens).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       .filter(length(col("w")).between(1, 8))
       .localCheckpoint() // vocab-sized; seeds lattice + both steps
@@ -1345,7 +1328,7 @@ object ModelPrep {
       .limit(30)
   }
 
-  /** pass@k (J88, round 11): the unbiased Codex estimator
+  /** pass@k (J88): the unbiased Codex estimator
     * 1 − C(n−c, k)/C(n, k) over fixed n = 16 pseudo-samples per task
     * (doc_id div 16 groups; "correct" = logreg score ≥ the global p75,
     * an exact support-census quantile), averaged over full tasks for
@@ -1395,7 +1378,7 @@ object ModelPrep {
       .orderBy(col("k"))
   }
 
-  /** Expected calibration error (J91, round 11): ECE = Σ (n_b/N)·
+  /** Expected calibration error (J91): ECE = Σ (n_b/N)·
     * |p̄_b − ȳ_b| with MCE = max_b |p̄_b − ȳ_b| over the SAME 10 bins
     * and weak label as q_llm_score_calibration / q_llm_brier_decomp —
     * the L1 member of the calibration family and THE number model
@@ -1411,10 +1394,7 @@ object ModelPrep {
     * Shape (100 TB): doc-sized projection → 10-bin partial-aggregable
     * fold → 1-row algebra. */
   def ece(spark: SparkSession, dir: String): DataFrame = {
-    val base = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val base = scoredTokens(spark, dir)
       .select(
         expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)").as("p_e4"),
         when(col("n_tok") >= 50, 10000L).otherwise(0L).as("y_e4"),
@@ -1434,7 +1414,7 @@ object ModelPrep {
         expr("(sg + 1000000 * n) div n - 1000000").as("overconf_e4"))
   }
 
-  /** F1-optimal threshold (J96, round 11): sweep EVERY distinct score
+  /** F1-optimal threshold (J96): sweep EVERY distinct score
     * as a candidate gate over the (score, label) support census —
     * cumulative TP/FP/FN via one descending window, F1 cross-
     * multiplied — and emit the argmax beside the ENROLLED 0.76
@@ -1454,10 +1434,7 @@ object ModelPrep {
     * (grid-bounded ≤ 10⁴ rows at ANY corpus size) → windows on the
     * census → 2 rows. */
   def f1Threshold(spark: SparkSession, dir: String): DataFrame = {
-    val census = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val census = scoredTokens(spark, dir)
       .select(expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)")
         .as("s_e4"),
         when(col("n_tok") >= 50, 1L).otherwise(0L).as("y"))
@@ -1488,7 +1465,7 @@ object ModelPrep {
     best.unionAll(gate).orderBy(col("arm"))
   }
 
-  /** Per-source ECE (J99, round 11): the calibration-by-slice table
+  /** Per-source ECE (J99): the calibration-by-slice table
     * model cards actually publish — the q_llm_ece computation
     * partitioned by provenance: a score can be globally calibrated
     * while badly MIScalibrated on one source (bin mixtures cancel),
@@ -1502,10 +1479,7 @@ object ModelPrep {
     * Shape (100 TB): doc-sized projection → (source × 10)-bin
     * partial-aggregable fold → |sources| rows. */
   def eceBySource(spark: SparkSession, dir: String): DataFrame = {
-    val base = qualityLogreg(spark, dir)
-      .join(documents(spark, dir).select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tok")),
-        "doc_id")
+    val base = scoredTokens(spark, dir, "source")
       .select(col("source"),
         expr("CAST(floor(score * 10000 + 0.5) AS BIGINT)").as("p_e4"),
         when(col("n_tok") >= 50, 10000L).otherwise(0L).as("y_e4"),
@@ -1525,7 +1499,7 @@ object ModelPrep {
       .orderBy(col("source"))
   }
 
-  /** Embedding-cluster drift (J100, round 11): per cluster label, the
+  /** Embedding-cluster drift (J100): per cluster label, the
     * population share in the first vs second half of the vector-store
     * ingestion order (cut = max vec_id div 2) with the signed share
     * drift — the CLUSTER-level drift monitor beside q_llm_idf_drift's
@@ -1566,7 +1540,7 @@ object ModelPrep {
       .orderBy(col("label"))
   }
 
-  /** Int4 group-wise quantization sweep (J102, round 11): symmetric
+  /** Int4 group-wise quantization sweep (J102): symmetric
     * 4-bit quantization with PER-GROUP max scaling at group sizes
     * g ∈ {16, 64} — the GPTQ/NF4-era compression default int8_quant
     * (global scale, 8 bits) only gestures at. Per (g, label): MSE and

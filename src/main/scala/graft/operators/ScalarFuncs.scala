@@ -34,7 +34,7 @@ object ScalarFuncs {
       .select(col("doc_id"),
         substring_index(col("text"), " ", 1).as("first_tok"),
         regexp_extract(col("text"), "^(\\w+)", 1).as("re_tok"),
-        size(split(col("text"), " ")).as("n_tok"))
+        size(tokens).as("n_tok"))
       .orderBy(col("doc_id"))
 
   /** Epoch-nano → timestamp conversions and date part extraction. */
@@ -59,22 +59,19 @@ object ScalarFuncs {
       .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** Array family over tokenized document text. */
-  def arrayFuncs(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
+  def arrayFuncs(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(col("doc_id"),
-        size(toks).as("n_tok"),
-        array_contains(toks, "spark").as("has_spark"),
-        array_join(slice(sort_array(array_distinct(toks)), 1, 3), ",")
+      .select(col("doc_id"), size(tokens).as("n_tok"),
+        array_contains(tokens, "spark").as("has_spark"),
+        array_join(slice(sort_array(array_distinct(tokens)), 1, 3), ",")
           .as("first3"),
-        size(array_distinct(toks)).as("n_distinct"))
+        size(array_distinct(tokens)).as("n_distinct"))
       .orderBy(col("doc_id"))
-  }
 
   /** Generator/UDTF-shaped: explode tokens → global top-20 counts. */
   def arrayExplode(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("token"))
+      .select(explode(tokens).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))

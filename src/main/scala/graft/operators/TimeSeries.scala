@@ -29,12 +29,6 @@ import graft.Tables._
   */
 object TimeSeries {
 
-  /** Parity rounding — same arithmetic as LlmOps.r4 (Spark's round()
-    * HALF_UPs the decimal repr; DuckDB rounds the binary value —
-    * floor(x·1e4 + 0.5) is IEEE-identical on both). */
-  private def r4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
-
   /** Resample each user's event stream onto a daily grid spanning that
     * user's own activity window; gap days carry n_ev = 0 and a
     * last-observation-carried-forward copy of the daily value. */

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Tables.tokens
 import graft.functions.BloomFuncs
 
 /** Streaming near-dup GATE — the map-side first pass of a production
@@ -30,7 +31,7 @@ object StreamDedup {
 
   private def withMinsCols(df: DataFrame): DataFrame = {
     val withHs = df
-      .withColumn("tk", split(col("text"), " "))
+      .withColumn("tk", tokens)
       .withColumn("hs", expr(
         s"""transform(
           |  CASE WHEN size(tk) >= 5

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.Tables.{contentDigest, qualityFeatures}
 import graft.functions.FreqSketch
 
 /** Event-stream shape shared by batch (`events` table) and streaming
@@ -184,7 +185,7 @@ object StreamingOps {
     * parity. State is one (key, window) row per group, watermark-
     * bounded, keyed exactly as the batch shuffle partitions.
     *
-    * Parity granularity caveat (round 8, advisor): this tie-break
+    * Parity granularity caveat: this tie-break
     * orders on the µs-truncated `ts` while the batch row orders on
     * full-precision `ts_ns` — the claim of row-identical output
     * assumes a µs-granular fixture (what Tables.events documents and
@@ -225,26 +226,25 @@ object StreamingOps {
   def enrichWithStatic(events: DataFrame, dim: DataFrame): DataFrame =
     events.join(broadcast(dim), Seq("user_id"), "left")
 
-  /** Streaming twin of the batch curation pipeline (round 3,
-    * `LlmOps.curationPipeline`): content-hash dedup WITHIN the watermark
+  /** Streaming twin of the batch curation pipeline
+    * (`LlmOps.curationPipeline`): content-hash dedup WITHIN the watermark
     * horizon → per-row quality gate (≥5 tokens, type-token ratio ≥ 0.5)
     * — documents curate incrementally as they arrive instead of in a
     * nightly batch. State is the in-horizon digest set only (bounded by
     * the watermark); the quality gate is stateless per-row arithmetic
-    * AFTER dedup so rejected dups never pay scoring. Expects columns
-    * (doc_id, ts, text, lang). */
+    * AFTER dedup so rejected dups never pay scoring. The digest and the
+    * features are the batch rows' own (`Tables.contentDigest`,
+    * `Tables.qualityFeatures`), so stream and batch cannot tokenize or
+    * de-duplicate apart. Expects columns (doc_id, ts, text, lang). */
   def curateStream(docs: DataFrame): DataFrame =
-    docs.withColumn("h", sha2(lower(trim(col("text"))), 256))
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("h")
-      .withColumn("tk", split(col("text"), " "))
-      .withColumn("n_tok", size(col("tk")))
-      .withColumn("ttr", round(
-        size(array_distinct(col("tk"))) / col("n_tok").cast("double"), 4))
+    qualityFeatures(docs.withColumn("h", contentDigest)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("h"))
+      .withColumn("ttr", round(col("ttr"), 4))
       .filter(col("n_tok") >= 5 && col("ttr") >= 0.5)
       .select(col("doc_id"), col("lang"), col("n_tok"), col("ttr"))
 
-  /** Streaming hour-of-day census (round 8, J66-s): the streaming twin
+  /** Streaming hour-of-day census (J66-s): the streaming twin
     * of q_events_hour_profile's core — a stateless event-time groupBy
     * whose Complete-mode table converges to the batch census under ANY
     * arrival order, because counting is commutative. That is the
@@ -438,8 +438,8 @@ object StreamingOps {
   }
 
   /** Registered processing-time TIMERS on the transformWithState API
-    * (s_timer_session_close, round 14 — VERDICT r13 #5's sanctioned
-    * widening): the v2 twin of [[lifecycleFsm]]'s timeout arm. The
+    * (s_timer_session_close): the v2 twin of [[lifecycleFsm]]'s timeout
+    * arm. The
     * GroupState API expresses "close the session when the key goes
     * quiet" as `GroupStateTimeout` + `state.hasTimedOut` — one implicit
     * timeout per key, re-armed wholesale. The v2 surface is explicit:
@@ -663,8 +663,8 @@ object StreamingOps {
           // stage advances require a STRICTLY greater timestamp — the
           // batch twin (q_funnel_stages) takes min(purchase ts > signup
           // ts), so an equal-ts signup/purchase pair must NOT convert
-          // here either (round-5 ADVICE fix; previously equal-ts events
-          // advanced in event_id order and the two results diverged).
+          // here either (advancing equal-ts events in event_id order
+          // made the two results diverge).
           // Residual precision caveat: batch compares microseconds,
           // this FSM compares Timestamp.getTime milliseconds — events
           // distinct at µs but tied at ms still differ between the two.

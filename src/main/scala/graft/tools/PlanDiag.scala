@@ -1,8 +1,12 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import graft.{FrameMemo, Sessions, SparkEntry}
@@ -14,7 +18,8 @@ import graft.{FrameMemo, Sessions, SparkEntry}
   * code (`diff -r`) show which rows a change re-planned; a row that fails
   * to build gets its exception as the file body. Rows are built in
   * `SparkEntry.queries` order, as `graft.Verify` runs them. Timing a
-  * subset of rows is `graft.Bench <query...>`. Whether a global sort
+  * subset of rows is `graft.Bench <query...>`. The dump is logical
+  * throughout, cached frames included ([[dump]]). Whether a global sort
   * runs as a range sort or in one partition, and whether a scan reports
   * one partition, are physical-planning choices
   * ([[graft.plans.OnePartition]]), so they do not show here: read them in
@@ -37,6 +42,23 @@ object PlanDiag {
     .replaceAll("plan_id=\\d+", "plan_id=N")
     .replaceAll("\\$+Lambda[$/\\w.]*", "\\$Lambda")
     .replaceAll("@[0-9a-f]{4,}\\b", "@H")
+
+  /** A cached frame in a [[dump]]: the relation's output over the
+    * optimized logical plan it caches. */
+  private case class Cached(output: Seq[Attribute], child: LogicalPlan)
+      extends UnaryNode {
+    override protected def withNewChildInternal(c: LogicalPlan): Cached =
+      copy(child = c)
+  }
+
+  /** The [[normalize]]d optimized logical plan of `df`. An
+    * `InMemoryRelation` prints the physical plan it caches, so each one is
+    * shown as the logical plan it was built from (`cacheBuilder
+    * .logicalPlan`): a physical-only change leaves the dump as it was. */
+  def dump(df: DataFrame): String = normalize(
+    df.queryExecution.optimizedPlan.transformDownWithSubqueries {
+      case r: InMemoryRelation => Cached(r.output, r.cacheBuilder.logicalPlan)
+    }.toString)
 
   val exchangeKinds = Seq("range", "hash", "single", "other", "broadcast")
 
@@ -67,10 +89,11 @@ object PlanDiag {
       Files.createDirectories(Paths.get(outDir))
       rows(subset.toSet).foreach { case (name, fn) =>
         val text =
-          try fn(spark, sfDir).queryExecution.optimizedPlan.toString
+          try dump(fn(spark, sfDir))
           catch { case e: Throwable =>
-            s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}\n" }
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), normalize(text))
+            normalize(
+              s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}\n") }
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), text)
         spark.catalog.clearCache()
       }
       FrameMemo.release(spark)

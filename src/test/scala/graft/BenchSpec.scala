@@ -1,14 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.PlanDiag
 import scala.jdk.CollectionConverters._
 
-/** The tools' pure parts, with no Spark session: Bench's end-of-run
-  * confirm pass and closing stdout lines, and PlanDiag's plan
-  * normalization. */
-class BenchSpec extends AnyFunSuite {
+/** The tools: Bench's end-of-run confirm pass and closing stdout lines,
+  * PlanDiag's plan normalization and dump, and the source guards. */
+class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = Sessions.local()
+
+  override def afterAll(): Unit = { spark.catalog.clearCache(); spark.stop() }
+
   private val budget = 5.0
 
   test("confirm: a breach whose re-time reads under budget clears") {
@@ -64,5 +71,33 @@ class BenchSpec extends AnyFunSuite {
     // a user column that merely ends in digits keeps them
     assert(PlanDiag.normalize("[x_common_expr_2#5, day_7#6]") ==
       "[x_common_expr_2#N, day_7#N]")
+  }
+
+  test("PlanDiag.dump: a cached frame dumps as its logical plan") {
+    // whole-stage codegen changes only the physical plan, so a frame over
+    // a cached frame dumps alike with it on and off
+    val dumps = Seq("true", "false").map { wholeStage =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val base = s.range(0, 100).withColumn("g", col("id") % 7).persist()
+      try PlanDiag.dump(base.groupBy("g").agg(sum("id").as("s")))
+      finally base.unpersist(blocking = true)
+    }
+    assert(dumps.head.contains("Range (0, 100"))
+    assert(dumps.head == dumps.last)
+  }
+
+  test("tokenizer guard: the whitespace split is written once, in Tables") {
+    // the batch rows and both streaming paths read Tables.tokens; a
+    // second copy of the literal is a tokenizer that can drift
+    val literal = "split(col(\"text\"), \" \")"
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = files.flatMap { f =>
+      Files.readString(f).split(java.util.regex.Pattern.quote(literal), -1)
+        .tail.map(_ => f.getFileName.toString)
+    }
+    assert(hits == Seq("Tables.scala"),
+      s"copies per file: ${hits.groupMapReduce(identity)(_ => 1)(_ + _)}")
   }
 }

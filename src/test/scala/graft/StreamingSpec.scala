@@ -649,12 +649,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = MemoryStream[(Long, Timestamp, String, String)]
     val docs = in.toDF().toDF("doc_id", "ts", "text", "lang")
     val q = runQuery(StreamingOps.curateStream(docs), "curate", "append")
-    in.addData(
+    val first = Seq(
       (1L, ts(0), "the cat sat on the mat today", "en"), // good
       (2L, ts(1), "the cat sat on the mat today", "en"), // dup content
       (3L, ts(2), "a a a a a a", "en"),                  // low TTR
       (4L, ts(3), "hi there", "en"),                     // too short
       (5L, ts(4), "every token here is fully distinct", "en")) // good
+    in.addData(first: _*)
     q.processAllAvailable()
     // later batch, same content modulo case/trim: still inside the
     // watermark horizon, so the digest state drops it
@@ -664,6 +665,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getInt(2))).toMap
     assert(got.keySet == Set(1L, 5L), s"got $got")
     assert(got(1L) == 7 && got(5L) == 6)
+    // batch and stream read one tokenizer: a kept doc's n_tok and ttr
+    // are the shared batch quality features of the same row
+    val kept = spark.table("curate").collect()
+      .map(r => r.getLong(0) -> (r.getInt(2), r.getDouble(3))).toMap
+    val batch = Tables.qualityFeatures(first.toDF("doc_id", "ts", "text",
+        "lang").filter($"doc_id".isin(1L, 5L)))
+      .select($"doc_id", $"n_tok",
+        org.apache.spark.sql.functions.round($"ttr", 4))
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap
+    assert(kept == batch, s"stream $kept, batch $batch")
     q.stop()
   }
 
